@@ -4,12 +4,15 @@ package graft
 /** Plan auditor: prints the formatted physical plan of each query so
   * scan pruning (PushedFilters/ReadSchema), join strategies and
   * WholeStageCodegen spans can be reviewed. `runMain graft.Explain
-  * [names...]`.
+  * [names...]`; `SPARK_GRAFT_CPUS` sets the local parallelism (default
+  * 4), as for [[Verify]].
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
+    // same parallelism as Verify, so plans match what the oracle run executes
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -455,7 +455,7 @@ object Soak {
       val ids = spark.range(5000L * m).select(col("id").as("doc_id"))
       m -> timed(iters) {
         graft.ops.Dedup
-          .imageDHashPairs(
+          .imageHashPairs(graft.ops.ImageHash.DHash64)(
             graft.ops.Multimodal.synthGrayImages(ids, "doc_id", nClasses = 97 * m),
             maxHamming = 10)
           .count()
@@ -473,7 +473,7 @@ object Soak {
       val ids = spark.range(5000L * m).select(col("id").as("doc_id"))
       m -> timed(iters) {
         graft.ops.Dedup
-          .imagePHashPairs(
+          .imageHashPairs(graft.ops.ImageHash.PHash256)(
             graft.ops.Multimodal.synthGrayImagesWide(ids, "doc_id", nClasses = 97 * m),
             maxHamming = 24)
           .count()

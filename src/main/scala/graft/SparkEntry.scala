@@ -2668,7 +2668,7 @@ object SparkEntry {
     // simulated at 5000 docs). ImageDedupSpec pins the at-rest bucketed
     // index probe == this inline form.
     "q169_image_dhash_pairs" -> ((s, dir) =>
-      Dedup.imageDHashPairs(
+      Dedup.imageHashPairs(ImageHash.DHash64)(
         Multimodal.synthGrayImages(t(s, dir, "documents"), "doc_id"),
         maxHamming = 10
       )),
@@ -2694,7 +2694,7 @@ object SparkEntry {
     // hash+band+hamming+clustering is pinned end to end.
     "q171_image_dedup_clusters" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.imageDHashPairs(
+      val pairs = Dedup.imageHashPairs(ImageHash.DHash64)(
         Multimodal.synthGrayImages(docs, "doc_id"), maxHamming = 10)
       Dedup.dedupCorpus(docs.select(col("doc_id")), "doc_id", pairs)
     }),
@@ -2740,7 +2740,7 @@ object SparkEntry {
     // hamming directly. ImagePHashSpec pins the at-rest index probe ==
     // this inline form and the dHash↔pHash fail-closed contract.
     "q174_image_phash_pairs" -> ((s, dir) =>
-      Dedup.imagePHashPairs(
+      Dedup.imageHashPairs(ImageHash.PHash256)(
         Multimodal.synthGrayImagesWide(t(s, dir, "documents"), "doc_id"),
         maxHamming = 24
       )),

@@ -530,6 +530,8 @@ object Dedup {
   /** SimHash near-dup pairs: band the 64 bits into 4 x 16-bit keys
     * (pigeonhole: hamming distance <= 3 guarantees one identical band),
     * bucket-join, then verify hamming distance with bit_count(xor).
+    * A SimHash is banded and compared exactly like a dHash-64, so this
+    * is [[hammingPairs]] under [[ImageHash.DHash64]]'s banding.
     */
   def simHashPairs(
       df: DataFrame,
@@ -540,86 +542,98 @@ object Dedup {
       dropMetrics: Option[Observation] = None,
       tokenHash: Column => Column = t => xxhash64(t)
   ): DataFrame =
-    hamming64Pairs(
-      simHashes(df, textCol, idCol, tokenHash), "simhash", maxHamming, maxBucket, dropMetrics)
+    hammingPairs(
+      simHashes(df, textCol, idCol, tokenHash), "simhash", ImageHash.DHash64,
+      maxHamming, maxBucket, dropMetrics)
 
-  /** One (band, bhash) struct per 16-bit band of a 64-bit hash column —
-    * shared by in-corpus pair generation ([[hamming64Pairs]]) and the
-    * at-rest dHash index, which must band identically or cross-batch
-    * candidates would be missed ([[bandKeyCols]]'s contract). The mask
-    * after the (arithmetic) shift makes keys sign-agnostic — bit 63 set
-    * means a negative long in both engines.
+  /** (doc_id, `hashCol`, band, bhash): one row per band of each non-null
+    * hash, banded by `family` — shared by in-corpus pair generation
+    * ([[hammingPairs]]) and the at-rest index ([[hammingIndexRows]]),
+    * which must band identically or cross-batch candidates would be
+    * missed ([[bandKeyCols]]'s contract). Rows with a null hash are
+    * excluded: an undecodable image must not bucket with other
+    * undecodables.
     */
-  private def hash64BandCols(hashCol: String): Column =
-    array((0 until 4).map { b =>
-      struct(
-        lit(b).as("band"),
-        shiftright(col(hashCol), b * 16).bitwiseAND(0xffffL).as("bhash")
-      )
-    }: _*)
-
-  /** Near-dup pairs of any 64-bit perceptual/content hash column by
-    * 4×16-bit pigeonhole banding (hamming ≤ 3 GUARANTEES a shared band;
-    * larger `maxHamming` keeps the guarantee only for pairs that still
-    * agree on one band — the documented recall trade of [[simHashPairs]],
-    * which this generalizes) + exact `bit_count(xor)` verify. `signed`
-    * is (doc_id, `hashCol`); rows with a null hash are excluded (an
-    * undecodable image must not bucket with other undecodables).
-    */
-  private[ops] def hamming64Pairs(
+  private def hammingBandRows(
       signed: DataFrame,
       hashCol: String,
+      family: ImageHash.Family
+  ): DataFrame =
+    signed
+      .filter(col(hashCol).isNotNull)
+      .select(col("doc_id"), col(hashCol), explode(family.bandKeys(col(hashCol))).as("bk"))
+      .select(col("doc_id"), col(hashCol), col("bk.band").as("band"), col("bk.bhash").as("bhash"))
+
+  /** Near-dup pairs of a perceptual/content hash column by pigeonhole
+    * banding (dHash-64's 4×16 bits: hamming ≤ 3 GUARANTEES a shared
+    * band; pHash-256's 8×32 bits: hamming ≤ 7) + the family's exact
+    * hamming verify. A larger `maxHamming` keeps the guarantee only for
+    * pairs that still agree on one band — the documented recall trade
+    * of [[simHashPairs]]. `signed` is (doc_id, `hashCol`).
+    */
+  private def hammingPairs(
+      signed: DataFrame,
+      hashCol: String,
+      family: ImageHash.Family,
       maxHamming: Int,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket),
-      dropMetrics: Option[Observation] = None
+      maxBucket: Option[Int],
+      dropMetrics: Option[Observation]
   ): DataFrame = {
     // per-bucket posting lists (one shuffle on the band key) rather than
     // a bucket self-join that would scan the signature plan twice
-    val exploded = signed
-      .filter(col(hashCol).isNotNull)
-      .select(col("doc_id"), col(hashCol).as("h64"), explode(hash64BandCols(hashCol)).as("bk"))
-      .select(col("doc_id"), col("h64"), col("bk.band").as("band"), col("bk.bhash").as("bhash"))
-    val postings = exploded
+    val postings = hammingBandRows(signed, hashCol, family)
       .groupBy(col("band"), col("bhash"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("h64")))).as("ids"))
+      .agg(sort_array(collect_list(struct(col("doc_id"), col(hashCol).as("h")))).as("ids"))
       .filter(size(col("ids")) >= 2)
     // hamming verify BEFORE the distinct (r20, guide §2.3 filter-before-
     // exchange): the cross-band duplicate pairs used to ride the distinct
     // shuffle pre-verify — bucket-quadratic candidate rows serialized for
     // nothing (the r20 q169/q174 profile measured the coalesced reduce at
     // 1.0–1.7 s of single-task CPU, almost all of it this distinct).
-    // bit_count is per-row on columns the distinct already keyed (hamming
-    // is a function of (sh_i, sh_j)), so distinct∘filter == filter∘distinct
+    // hamming is per-row on columns the distinct already keyed (it is a
+    // function of (h_i, h_j)), so distinct∘filter == filter∘distinct
     // with the SAME key set and the output multiset is unchanged.
     boundedPostings(postings, maxBucket, dropMetrics, "dropped_buckets")
       .select(explode(pairCombos(col("ids"))).as("p"))
       .select(
         col("p.i.doc_id").as("i"),
         col("p.j.doc_id").as("j"),
-        col("p.i.h64").as("sh_i"),
-        col("p.j.h64").as("sh_j"),
-        bit_count(col("p.i.h64").bitwiseXOR(col("p.j.h64"))).as("hamming")
+        col("p.i.h").as("h_i"),
+        col("p.j.h").as("h_j"),
+        family.hamming(col("p.i.h"), col("p.j.h")).as("hamming")
       )
       .filter(col("hamming") <= maxHamming)
       .distinct()
       .select(col("i"), col("j"), col("hamming"))
   }
 
-  /** Perceptual image dedup: dHash-64 per image
-    * ([[Multimodal.dHash64]] — gradient-sign bits over an exact-integer
-    * 9×8 luminance downscale) + the SimHash pigeonhole banding +
-    * exact-hamming verify. `media` is (doc_id, media binary). dHash ≤ 10
-    * is the conventional near-dup bar (brightness shifts land at 0,
-    * small local edits at 1–8, re-encodes at 0 for lossless formats).
+  /** The (doc_id, hash) frame of `images`: used as is when it already
+    * carries the family's hash column (callers that decoded once, like
+    * [[graft.streaming.ImageIngest]]), hashed from its (doc_id, media)
+    * blobs otherwise.
+    */
+  private def imageHashes(family: ImageHash.Family, images: DataFrame): DataFrame =
+    if (images.columns.contains(family.hashCol)) images else family.hash(images)
+
+  /** Perceptual image dedup under a hash `family`
+    * ([[ImageHash.DHash64]]: gradient-sign bits over an exact-integer
+    * 9×8 luminance downscale; [[ImageHash.PHash256]]: the wide variant
+    * for corpora past dHash's band space) + pigeonhole banding +
+    * exact-hamming verify. `images` is (doc_id, media) or pre-computed
+    * (doc_id, hash) rows ([[imageHashes]]). dHash ≤ 10 is the
+    * conventional near-dup bar (brightness shifts land at 0, small
+    * local edits at 1–8, re-encodes at 0 for lossless formats); each
+    * family's default bar is the same ~9%-of-bits tolerance.
     * Undecodable/tiny images are excluded, never paired.
     */
-  def imageDHashPairs(
-      media: DataFrame,
-      maxHamming: Int = 10,
+  def imageHashPairs(family: ImageHash.Family)(
+      images: DataFrame,
+      maxHamming: Int = family.defaultMaxHamming,
       maxBucket: Option[Int] = Some(DefaultMaxBucket),
       dropMetrics: Option[Observation] = None
   ): DataFrame =
-    hamming64Pairs(Multimodal.dHash64(media), "dhash", maxHamming, maxBucket, dropMetrics)
+    hammingPairs(
+      imageHashes(family, images), family.hashCol, family, maxHamming, maxBucket, dropMetrics)
 
   /** Embedding near-dup: random-hyperplane LSH buckets -> candidate
     * pairs -> exact cosine verify. Hyperplanes are derived from a fixed
@@ -858,14 +872,215 @@ object Dedup {
       ).toAggregateExpression()
     )
 
+  // ------------------------------------------------------------------
+  // At-rest band indexes: "dedup today's batch against the whole corpus
+  // without touching most of it". Five families share one layout and one
+  // protocol — text MinHash, video MinHash, embedding-LSH, and the
+  // dHash-64 / pHash-256 Hamming family. An index holds one (id, value,
+  // band, bhash, bkey) row per band of each document, bucketed by
+  // `bkey = pmod(xxhash64(band, bhash), nBuckets)`. The value — MinHash
+  // signature, embedding, or perceptual hash — rides on every band row
+  // (bands× duplication, the price of a single-join probe): a probe
+  // verifies candidates ENTIRELY inside the pruned buckets, with no
+  // second scan over a doc-keyed table, which at 100 TB would
+  // reintroduce the O(history)-per-batch trap.
+  //
+  // A family supplies only its band rows, its table-contract check and
+  // its verify expression; [[writeBandIndex]], [[appendBandIndex]] and
+  // [[probeBandIndex]] are the shared write, append and probe paths.
+  // ------------------------------------------------------------------
+
+  /** A family's (id, value, band, bhash) rows plus their bucket key. */
+  private def withBucketKey(bandRows: DataFrame, nBuckets: Int): DataFrame =
+    bandRows.withColumn("bkey", pmod(xxhash64(col("band"), col("bhash")), lit(nBuckets.toLong)))
+
+  private def tableMeta(spark: org.apache.spark.sql.SparkSession, table: String) =
+    spark.sessionState.catalog.getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
+
+  /** Record (or backfill) index contract props. Qualified names
+    * (`db.idx`) are parsed like the SQL layer would — one pair of
+    * backticks around the whole name breaks on the dot.
+    */
+  private def setTableProps(
+      spark: org.apache.spark.sql.SparkSession,
+      table: String,
+      props: Map[String, String]
+  ): Unit =
+    spark.sql(
+      s"ALTER TABLE ${graft.sinks.Sinks.parseIdent(spark, table).quotedString} " +
+        s"SET TBLPROPERTIES (${props.map { case (k, v) => s"'$k'='$v'" }.mkString(", ")})"
+    )
+
+  /** The bucket count an existing index was CREATED with — band keys
+    * must keep hashing into the recorded bucket space, so appends and
+    * probes derive it from the catalog's bucketSpec rather than trusting
+    * a caller parameter (an index built at 32 buckets then appended
+    * through a default-64 code path would fail on Spark's bucket-spec
+    * mismatch — or worse, mis-bucket under a laxer writer; probing with
+    * a different modulus would prune to the wrong buckets and silently
+    * miss near-dups).
+    */
+  private def tableNumBuckets(
+      spark: org.apache.spark.sql.SparkSession,
+      table: String
+  ): Int =
+    tableMeta(spark, table).bucketSpec
+      .map(_.numBuckets)
+      .getOrElse(throw new IllegalArgumentException(s"$table is not a bucketed index table"))
+
+  /** Build an index from its rows. Staged publish (round 17, ADVICE
+    * r16): the contract props land on the staging table BEFORE any data
+    * is visible under `table`, so no crash can leave a props-less
+    * data-bearing index for a later caller to backfill with the wrong
+    * parameters — the write-then-ALTER sequence this replaced was worst
+    * for the embedding index (seed/bitsPerBand are not data-pinnable)
+    * and the video index (the legacy fallback classified it as TEXT).
+    */
+  private def writeBandIndex(
+      rows: DataFrame,
+      table: String,
+      nBuckets: Int,
+      props: Map[String, String]
+  ): Unit =
+    graft.sinks.Sinks.writeBucketedWithProps(rows, table, Seq("bkey"), nBuckets, props)
+
+  /** Append a batch's band rows — the steady-state ingest path: indexing
+    * the day's batch is O(batch), never a corpus rewrite; probes see
+    * appended rows immediately. `rows` builds the batch's index rows for
+    * a bucket count: `nBuckets` only applies when this append CREATES
+    * the table, an existing index keeps the count its catalog entry
+    * records ([[tableNumBuckets]]). `validate` is the family's contract
+    * check against the existing index.
+    */
+  private def appendBandIndex(
+      spark: org.apache.spark.sql.SparkSession,
+      table: String,
+      rows: Int => DataFrame,
+      nBuckets: Int,
+      props: Map[String, String],
+      validate: => Unit
+  ): Unit = {
+    // a crashed staged publish leaves the index only at __retire —
+    // restore it so the existence check below sees it (dropping into the
+    // create path here would discard the whole pre-crash index)
+    graft.sinks.Sinks.recoverStagedPublish(spark, table)
+    if (!spark.catalog.tableExists(table))
+      // first append CREATES the table: staged publish stamps the
+      // contract props before any data is visible (ADVICE r16 — the
+      // create-then-ALTER window let a crash leave a props-less index)
+      writeBandIndex(rows(nBuckets), table, nBuckets, props)
+    else {
+      // heal BEFORE validating: a legacy no-props index caught in a
+      // compaction crash window would otherwise fail the validation's
+      // data scan (missing live dir) instead of healing first. Read-only
+      // heal here; appendBucketed below still does the clearStaleOld pass.
+      graft.sinks.Sinks.recoverBucketedSwap(spark, table)
+      validate
+      val n = tableNumBuckets(spark, table)
+      graft.sinks.Sinks.appendBucketed(rows(n), table, Seq("bkey"), n)
+    }
+  }
+
+  /** Near-dups of a NEW batch against an at-rest index. The batch's band
+    * keys map to at most nBuckets distinct `bkey`s (driver-safe to
+    * collect — bounded by the bucket count, not the batch), which prune
+    * the index scan to matching buckets only; the batch side broadcasts
+    * into the band join ([[joinBands]]), so the history never shuffles.
+    *
+    * `rows` builds the batch's index rows for the catalog's bucket
+    * count; `validate` is the family's contract check, run after the
+    * crash heals and before any band is hashed; `idCol`/`valCol` name
+    * the index's id and carried value; `verify` scores a (history,
+    * batch) value pair and `keep` filters on that score.
+    */
+  private def probeBandIndex(
+      spark: org.apache.spark.sql.SparkSession,
+      table: String,
+      rows: Int => DataFrame,
+      validate: => Unit,
+      idCol: String,
+      valCol: String,
+      verify: (Column, Column) => Column,
+      keep: Column,
+      broadcastRowLimit: Long,
+      dropSameId: Boolean
+  ): DataFrame = {
+    import spark.implicits._
+    // a crashed staged PUBLISH (index only at __retire) and a crashed
+    // COMPACTION (data dir only at `.old`) must both heal restore-only
+    // before the scan
+    graft.sinks.Sinks.recoverStagedPublish(spark, table)
+    graft.sinks.Sinks.recoverBucketedSwap(spark, table)
+    val nBuckets = tableNumBuckets(spark, table)
+    validate
+    // probed twice: bkey collect + bucket join
+    val batchRows = Materialize(batchSide(rows(nBuckets), idCol, valCol))
+    val bkeys = batchRows.select(col("bkey")).distinct().as[Long].collect().sorted
+    // empty batch (or all-null values): prune to nothing with lit(false)
+    // rather than an early return — the result schema then derives from
+    // the SAME plan as every other day (i carries the index's id type, j
+    // the batch's; a hardcoded empty (long, long) frame made string-keyed
+    // callers' unionByName fail only on empty-batch days)
+    val pruned = spark
+      .table(table)
+      .filter(if (bkeys.isEmpty) lit(false) else col("bkey").isin(bkeys.toIndexedSeq: _*))
+    joinBands(
+      pruned, batchRows.drop("bkey"), idCol, valCol, verify, keep, broadcastRowLimit, dropSameId)
+  }
+
+  /** A batch's band rows with its id and value renamed to the (j, v_j)
+    * of [[joinBands]]' batch side — renamed BEFORE the caller pins the
+    * rows, so the join reads the pinned blocks directly.
+    */
+  private def batchSide(rows: DataFrame, idCol: String, valCol: String): DataFrame =
+    rows.withColumnsRenamed(Map(idCol -> "j", valCol -> "v_j"))
+
+  /** The join-and-verify half of every index probe ([[probeBandIndex]])
+    * and of the inline two-frame form ([[semanticNearDupsAgainst]]):
+    * join history band rows (idCol, valCol, band, bhash) to batch band
+    * rows ([[batchSide]]: j, v_j, band, bhash) on (band, bhash), de-dup
+    * multi-band matches, verify, filter. Returns (i = history id, j =
+    * batch id, score).
+    *
+    * The broadcast is size-guarded (same pattern as `Scd2.merge`): a
+    * backfill-sized batch past `broadcastRowLimit` band rows falls back
+    * to a shuffle join — still over the PRUNED buckets only, so the
+    * shuffled history side stays O(matched buckets), not O(index).
+    */
+  private def joinBands(
+      history: DataFrame,
+      batch: DataFrame,
+      idCol: String,
+      valCol: String,
+      verify: (Column, Column) => Column,
+      keep: Column,
+      broadcastRowLimit: Long,
+      dropSameId: Boolean
+  ): DataFrame = {
+    val probe = math.min(broadcastRowLimit + 1, Int.MaxValue.toLong).toInt
+    val fits = batch.limit(probe).count() <= broadcastRowLimit
+    val joined = history.join(if (fits) broadcast(batch) else batch, Seq("band", "bhash"))
+    // a replayed batch probing an index it was already appended to must
+    // not match itself — unless the caller WANTS the same-id hits
+    // (CorpusIngest uses dropSameId = false to detect replays: an (i==j)
+    // match means this id is already indexed)
+    val selfFiltered = if (dropSameId) joined.filter(col(idCol) =!= col("j")) else joined
+    selfFiltered
+      .select(col(idCol).as("i"), col("j"), col(valCol).as("v_i"), col("v_j"))
+      .distinct() // a pair can match in several bands
+      .select(col("i"), col("j"), verify(col("v_i"), col("v_j")))
+      .filter(keep)
+  }
+
+  // ------------------------------------------------------------------
+  // MinHash index (text and video): index rows carry the doc's FULL
+  // signature; a probe's similarity is the standard MinHash ESTIMATE
+  // (fraction of agreeing signature slots). Run [[verifyJaccard]] against
+  // stored shingle sets when exactness is worth a second table.
+  // ------------------------------------------------------------------
+
   /** Write the at-rest MinHash LSH index for cross-batch NEAR-dup
-    * dedup: one row per (doc, band) holding the band's bucket hash and
-    * the doc's FULL signature, bucketed by `bkey = pmod(xxhash64(band,
-    * bhash), nBuckets)`. Carrying the signature in the index row (a few
-    * hundred bytes, x bands) is what lets a later probe verify
-    * candidates ENTIRELY inside the pruned buckets — no second scan
-    * over a doc-keyed table, which at 100 TB would reintroduce the
-    * O(history)-per-batch trap.
+    * dedup ([[incrementalNearDups]] probes it).
     */
   def writeMinHashIndex(
       corpus: DataFrame,
@@ -877,14 +1092,10 @@ object Dedup {
       bands: Int = 8,
       nBuckets: Int = 64
   ): Unit =
-    // staged publish (round 17, ADVICE r16): the contract props land on
-    // the staging table BEFORE any data is visible under `table`, so no
-    // crash can leave a props-less data-bearing index for a later
-    // caller to backfill with the wrong modality
-    graft.sinks.Sinks.writeBucketedWithProps(
-      minHashIndexRows(corpus, textCol, idCol, shingleSize, numHashes, bands, nBuckets),
+    writeBandIndex(
+      minHashIndexRows(
+        shingleSets(corpus, textCol, idCol, shingleSize), numHashes, bands, nBuckets),
       table,
-      Seq("bkey"),
       nBuckets,
       indexProps(numHashes, bands, TextSource)
     )
@@ -923,21 +1134,6 @@ object Dedup {
       SourceProp -> source
     )
 
-  private def setIndexProps(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      numHashes: Int,
-      bands: Int,
-      source: String
-  ): Unit =
-    // parse qualified names (`db.idx`) like the SQL layer would — one
-    // pair of backticks around the whole name breaks on the dot
-    spark.sql(
-      s"ALTER TABLE ${graft.sinks.Sinks.parseIdent(spark, table).quotedString} " +
-        s"SET TBLPROPERTIES ('$NumHashesProp'='$numHashes', '$BandsProp'='$bands', " +
-        s"'$SourceProp'='$source')"
-    )
-
   /** Fail fast when the caller's (numHashes, bands) disagree with what
     * the index records. An index without the properties (created by a
     * legacy build, or by an [[appendToMinHashIndex]] first append that
@@ -957,9 +1153,7 @@ object Dedup {
       bands: Int,
       source: String
   ): Unit = {
-    val props = spark.sessionState.catalog
-      .getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
-      .properties
+    val props = tableMeta(spark, table).properties
     // modality first: an absent source property means a legacy TEXT
     // index — only text callers may touch it (see [[SourceProp]])
     require(
@@ -982,7 +1176,7 @@ object Dedup {
         // there would let a probe run with defaults poison a table
         // intended for different parameters before its first real append.
         if (pinParamsFromData(spark, table, numHashes, bands))
-          setIndexProps(spark, table, numHashes, bands, source)
+          setTableProps(spark, table, indexProps(numHashes, bands, source))
     }
   }
 
@@ -1020,10 +1214,9 @@ object Dedup {
     }
   }
 
-  /** Append a new batch's band rows to an existing index — the
-    * steady-state ingest path: indexing the day's crawl is O(batch),
-    * never a corpus rewrite. The bucket spec must match the original
-    * write (Spark validates); probes see appended docs immediately.
+  /** Append a new batch's band rows to an existing index (created on
+    * first use) — [[appendBandIndex]]: O(batch), the index keeps its
+    * recorded bucket count.
     */
   def appendToMinHashIndex(
       batch: DataFrame,
@@ -1034,29 +1227,24 @@ object Dedup {
       numHashes: Int = 32,
       bands: Int = 8,
       nBuckets: Int = 64
+  ): Unit =
+    appendMinHashIndex(
+      shingleSets(batch, textCol, idCol, shingleSize), table, numHashes, bands, nBuckets,
+      TextSource)
+
+  private def appendMinHashIndex(
+      shingled: DataFrame,
+      table: String,
+      numHashes: Int,
+      bands: Int,
+      nBuckets: Int,
+      source: String
   ): Unit = {
-    val spark = batch.sparkSession
-    // a crashed staged publish leaves the index only at __retire —
-    // restore it so `existed` below sees it (dropping into the create
-    // path here would discard the whole pre-crash index)
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    val existed = spark.catalog.tableExists(table)
-    val rows = minHashIndexRows(batch, textCol, idCol, shingleSize, numHashes, bands, nBuckets)
-    if (!existed)
-      // first append CREATES the table: staged publish stamps the
-      // contract props before any data is visible (ADVICE r16 — the
-      // create-then-ALTER window let a crash leave a props-less index)
-      graft.sinks.Sinks.writeBucketedWithProps(
-        rows, table, Seq("bkey"), nBuckets, indexProps(numHashes, bands, TextSource))
-    else {
-      // heal BEFORE validating: a legacy no-props index caught in a
-      // compaction crash window would otherwise fail validateIndexParams'
-      // data scan (missing live dir) instead of healing first. Read-only
-      // heal here; appendBucketed below still does the clearStaleOld pass.
-      graft.sinks.Sinks.recoverBucketedSwap(spark, table)
-      validateIndexParams(spark, table, numHashes, bands, TextSource)
-      graft.sinks.Sinks.appendBucketed(rows, table, Seq("bkey"), nBuckets)
-    }
+    val spark = shingled.sparkSession
+    appendBandIndex(
+      spark, table, n => minHashIndexRows(shingled, numHashes, bands, n), nBuckets,
+      indexProps(numHashes, bands, source),
+      validateIndexParams(spark, table, numHashes, bands, source))
   }
 
   /** Compact a TEXT MinHash index ([[graft.sinks.Sinks.compactBucketed]])
@@ -1129,72 +1317,41 @@ object Dedup {
     // heal both crash protocols before validate touches data
     graft.sinks.Sinks.recoverStagedPublish(spark, table)
     graft.sinks.Sinks.recoverBucketedSwap(spark, table, clearStaleOld = true)
-    val tblProps = spark.sessionState.catalog
-      .getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
-      .properties
-    if (!tblProps.contains(SourceProp)) {
+    if (!tableMeta(spark, table).properties.contains(SourceProp)) {
       if (pinParamsFromData(spark, table, numHashes, bands))
-        setIndexProps(spark, table, numHashes, bands, source)
+        setTableProps(spark, table, indexProps(numHashes, bands, source))
     } else
       // propped index: the caller's full contract must match it
       validateIndexParams(spark, table, numHashes, bands, source)
   }
 
-  /** Index rows from a pre-computed (doc_id, shingles) frame — the
-    * shared core text ([[shingleSets]]) and video ([[videoShingles]])
-    * index writers both feed.
+  /** (doc_id, sig, band, bhash, bkey) index rows from a pre-computed
+    * (doc_id, shingles) frame — text ([[shingleSets]]) and video
+    * ([[videoShingles]]) indexes both feed it. Identical band hashing to
+    * [[lshCandidates]] (shared `bandKeyCols`), so probing the index
+    * finds exactly the cross pairs in-corpus banding would — pinned in
+    * DedupSimilaritySpec.
     */
-  private def minHashIndexRowsFromShingles(
+  private def minHashIndexRows(
       shingled: DataFrame,
       numHashes: Int,
       bands: Int,
       nBuckets: Int
   ): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    minHashSignatures(shingled, numHashes)
-      .select(col("doc_id"), col("sig"), explode(bandKeyCols(bands, numHashes / bands)).as("bk"))
-      .select(
-        col("doc_id"),
-        col("sig"),
-        col("bk.band").as("band"),
-        col("bk.bhash").as("bhash"),
-        pmod(xxhash64(col("bk.band"), col("bk.bhash")), lit(nBuckets.toLong)).as("bkey")
-      )
+    withBucketKey(
+      minHashSignatures(shingled, numHashes)
+        .select(col("doc_id"), col("sig"), explode(bandKeyCols(bands, numHashes / bands)).as("bk"))
+        .select(col("doc_id"), col("sig"), col("bk.band").as("band"), col("bk.bhash").as("bhash")),
+      nBuckets
+    )
   }
-
-  private def minHashIndexRows(
-      corpus: DataFrame,
-      textCol: String,
-      idCol: String,
-      shingleSize: Int,
-      numHashes: Int,
-      bands: Int,
-      nBuckets: Int
-  ): DataFrame =
-    minHashIndexRowsFromShingles(
-      shingleSets(corpus, textCol, idCol, shingleSize), numHashes, bands, nBuckets)
 
   /** Near-dup candidates of a NEW batch against the at-rest index
     * ([[writeMinHashIndex]]) — "dedup today's crawl against the whole
-    * corpus" without touching most of it. The batch's band keys map to
-    * at most nBuckets distinct `bkey`s (driver-safe to collect, bounded
-    * by the bucket count, not the batch), which prune the index scan to
-    * matching buckets only; the batch side broadcasts into the bucket
-    * join, so the history never shuffles. Similarity is the standard
-    * MinHash ESTIMATE (fraction of agreeing signature slots — the
-    * in-index verification the carried signatures buy; run
-    * [[verifyJaccard]] against stored shingle sets when exactness is
-    * worth a second table). Returns (i = history doc, j = batch doc,
-    * est_jaccard >= threshold).
-    *
-    * The broadcast is size-guarded (same pattern as `Scd2.merge`): a
-    * backfill-sized batch past `broadcastRowLimit` band rows falls back
-    * to a shuffle join — still over the PRUNED buckets only, so the
-    * shuffled history side stays O(matched buckets), not O(index).
-    *
-    * Identical band hashing to [[lshCandidates]] (shared
-    * `bandKeyCols`), so probing the index finds exactly the cross pairs
-    * in-corpus banding would — pinned in DedupSimilaritySpec.
+    * corpus" without touching most of it ([[probeBandIndex]]).
+    * Similarity is the MinHash ESTIMATE from the carried signatures.
+    * Returns (i = history doc, j = batch doc, est_jaccard >= threshold).
     */
   def incrementalNearDups(
       spark: org.apache.spark.sql.SparkSession,
@@ -1209,15 +1366,14 @@ object Dedup {
       broadcastRowLimit: Long = 4000000L,
       dropSameId: Boolean = true
   ): DataFrame =
-    incrementalNearDupsFromShingles(
+    probeMinHashIndex(
       spark, shingleSets(newBatch, textCol, idCol, shingleSize), table,
       numHashes, bands, threshold, broadcastRowLimit, dropSameId, TextSource)
 
-  /** [[incrementalNearDups]] from a pre-computed (doc_id, shingles)
-    * frame — the shared probe core; `source` must match the index's
-    * recorded modality ([[SourceProp]]).
+  /** The MinHash probe from a pre-computed (doc_id, shingles) frame;
+    * `source` must match the index's recorded modality ([[SourceProp]]).
     */
-  private def incrementalNearDupsFromShingles(
+  private def probeMinHashIndex(
       spark: org.apache.spark.sql.SparkSession,
       shingled: DataFrame,
       table: String,
@@ -1229,76 +1385,33 @@ object Dedup {
       source: String
   ): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    import spark.implicits._
-    // a crashed staged PUBLISH (index only at __retire) and a crashed
-    // COMPACTION (data dir only at `.old`) must both heal restore-only
-    // before the scan
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    graft.sinks.Sinks.recoverBucketedSwap(spark, table)
-    // bucket count comes from the CATALOG, never the caller: probing
-    // with a different modulus than the index was written with would
-    // prune to the wrong buckets and silently miss near-dups
-    val nBuckets = spark.sessionState.catalog
-      .getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
-      .bucketSpec
-      .map(_.numBuckets)
-      .getOrElse(throw new IllegalArgumentException(s"$table is not a bucketed index table"))
-    // a (numHashes, bands) mismatch vs the index would silently corrupt
-    // band hashing and the estimator denominator; the index records its
-    // contract as table properties (validateIndexParams)
-    validateIndexParams(spark, table, numHashes, bands, source)
-    val signed = minHashSignatures(shingled, numHashes)
-    val batchBands = Materialize(
-      signed
-        .select(col("doc_id").as("j"), col("sig").as("sig_j"),
-          explode(bandKeyCols(bands, numHashes / bands)).as("bk"))
-        .select(
-          col("j"),
-          col("sig_j"),
-          col("bk.band").as("band"),
-          col("bk.bhash").as("bhash"),
-          pmod(xxhash64(col("bk.band"), col("bk.bhash")), lit(nBuckets.toLong)).as("bkey")
-        )
-    ) // probed twice: bkey collect + bucket join
-    val bkeys = batchBands.select(col("bkey")).distinct().as[Long].collect().sorted
-    if (bkeys.isEmpty) {
-      return spark.emptyDataFrame
-        .select(lit(0L).as("i"), lit(0L).as("j"), lit(0.0).as("est_jaccard"))
-        .limit(0)
-    }
-    val pruned = spark.table(table).filter(col("bkey").isin(bkeys.toIndexedSeq: _*))
-    val probe = math.min(broadcastRowLimit + 1, Int.MaxValue.toLong).toInt
-    val fits = batchBands.limit(probe).count() <= broadcastRowLimit
-    val batchHinted =
-      if (fits) broadcast(batchBands.drop("bkey")) else batchBands.drop("bkey")
-    val joined = pruned.join(batchHinted, Seq("band", "bhash"))
-    // a replayed batch probing an index it was already appended to must
-    // not match itself — unless the caller WANTS the same-id hits
-    // (CorpusIngest uses dropSameId = false to detect replays: an (i==j)
-    // match means this doc_id is already indexed)
-    val selfFiltered = if (dropSameId) joined.filter(col("doc_id") =!= col("j")) else joined
-    selfFiltered
-      .select(col("doc_id").as("i"), col("j"), col("sig"), col("sig_j"))
-      .distinct() // a pair can match in several bands
-      .select(
-        col("i"),
-        col("j"),
+    probeBandIndex(
+      spark,
+      table,
+      n => minHashIndexRows(shingled, numHashes, bands, n),
+      // a (numHashes, bands) mismatch vs the index would silently
+      // corrupt band hashing and the estimator denominator
+      validateIndexParams(spark, table, numHashes, bands, source),
+      idCol = "doc_id",
+      valCol = "sig",
+      verify = (s, t) =>
         (aggregate(
-          zip_with(col("sig"), col("sig_j"), (x, y) => when(x === y, 1L).otherwise(0L)),
+          zip_with(s, t, (x, y) => when(x === y, 1L).otherwise(0L)),
           lit(0L),
           (acc, v) => acc + v
-        ).cast("double") / numHashes).as("est_jaccard")
-      )
-      .filter(col("est_jaccard") >= threshold)
+        ).cast("double") / numHashes).as("est_jaccard"),
+      keep = col("est_jaccard") >= threshold,
+      broadcastRowLimit,
+      dropSameId
+    )
   }
 
   // ------------------------------------------------------------------
-  // At-rest embedding-LSH index — the semantic analogue of the MinHash
-  // index block above, completing the dedup at-rest/streaming matrix:
-  // exact has the Bloom incremental, substring has the gram index,
-  // MinHash has writeMinHashIndex — this gives hyperplane-LSH semantic
-  // dedup the same "dedup today's embeddings against the whole corpus
-  // without touching most of it" shape.
+  // Embedding-LSH index — the semantic analogue of the MinHash index,
+  // completing the dedup at-rest/streaming matrix: exact has the Bloom
+  // incremental, substring has the gram index, MinHash has
+  // writeMinHashIndex — this gives hyperplane-LSH semantic dedup the
+  // same shape. Verification is the EXACT cosine of the carried vectors.
   // ------------------------------------------------------------------
 
   /** The hyperplane parameters an embedding-LSH index was WRITTEN with,
@@ -1330,20 +1443,6 @@ object Dedup {
       EmbSeedProp -> seed.toString
     )
 
-  private def setEmbIndexProps(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      dim: Int,
-      bands: Int,
-      bitsPerBand: Int,
-      seed: Long
-  ): Unit =
-    spark.sql(
-      s"ALTER TABLE ${graft.sinks.Sinks.parseIdent(spark, table).quotedString} " +
-        s"SET TBLPROPERTIES ('$EmbDimProp'='$dim', '$EmbBandsProp'='$bands', " +
-        s"'$EmbBitsProp'='$bitsPerBand', '$EmbSeedProp'='$seed')"
-    )
-
   /** Fail fast when the caller's plane parameters disagree with the
     * index contract. No-props indexes (legacy build, or a first append
     * that crashed between table creation and ALTER TABLE) validate
@@ -1360,9 +1459,7 @@ object Dedup {
       bitsPerBand: Int,
       seed: Long
   ): Unit = {
-    val props = spark.sessionState.catalog
-      .getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
-      .properties
+    val props = tableMeta(spark, table).properties
     (props.get(EmbDimProp), props.get(EmbBandsProp), props.get(EmbBitsProp),
       props.get(EmbSeedProp)) match {
       case (Some(d), Some(b), Some(bits), Some(s)) =>
@@ -1390,54 +1487,45 @@ object Dedup {
             r.getInt(2) == bands - 1,
             s"index $table holds bands 0..${r.getInt(2)}; caller asked for $bands bands"
           )
-          setEmbIndexProps(spark, table, dim, bands, bitsPerBand, seed)
+          setTableProps(spark, table, embIndexProps(dim, bands, bitsPerBand, seed))
         }
     }
   }
 
-  /** One (vec_id, embedding, band, bhash, bkey) row per band per vector
-    * — the embedding rides on every band row (bands× duplication, the
-    * price of a single-join probe; MinHash's index carries its full
-    * signature per band row for the same reason). `bkey` folds the
-    * (band, bhash) key into the bucket modulus so the probe can prune
-    * the scan to matched buckets.
+  /** One (vec_id, embedding, band, bhash) row per band per vector — the
+    * index rows before their bucket key, and both sides of the inline
+    * form [[semanticNearDupsAgainst]].
     */
-  private def embeddingLshIndexRows(
-      corpus: DataFrame,
+  private def embeddingBandRows(
+      df: DataFrame,
       vecCol: String,
       idCol: String,
       dim: Int,
       bands: Int,
       bitsPerBand: Int,
-      seed: Long,
-      nBuckets: Int
-  ): DataFrame = {
-    val planes = hyperplanes(dim, bands * bitsPerBand, seed)
-    corpus
-      .select(
-        col(idCol).as("vec_id"),
-        col(vecCol).as("embedding"),
-        posexplode(
-          graft.plans.HyperplaneBands.hyperplaneBands(col(vecCol), planes, bitsPerBand)
-        ).as(Seq("band", "bhash"))
-      )
-      .select(
-        col("vec_id"),
-        col("embedding"),
-        col("band"),
-        col("bhash"),
-        pmod(xxhash64(col("band"), col("bhash")), lit(nBuckets.toLong)).as("bkey")
-      )
-  }
+      seed: Long
+  ): DataFrame =
+    df.select(
+      col(idCol).as("vec_id"),
+      col(vecCol).as("embedding"),
+      posexplode(
+        graft.plans.HyperplaneBands.hyperplaneBands(
+          col(vecCol), hyperplanes(dim, bands * bitsPerBand, seed), bitsPerBand)
+      ).as(Seq("band", "bhash"))
+    )
+
+  /** The exact-cosine verify of the embedding family (native single-loop
+    * [[graft.plans.CosineSimilarity]] — the hot loop of the probe).
+    */
+  private val cosineVerify: (Column, Column) => Column =
+    (a, b) => Fns.cosine(a, b).as("cosine")
 
   /** Build the at-rest embedding-LSH index: band rows bucketed on
-    * `bkey` (probes prune to matched buckets — the
-    * [[writeMinHashIndex]] layout), plane parameters recorded as table
-    * properties. SIZING: `bitsPerBand` must scale with the corpus —
-    * 2^bitsPerBand ≳ N / targetBucketSize (the [[embeddingNearDupPairs]]
-    * lesson, measured in the round-12 soak); an undersized band key
-    * makes every posting bucket huge and the probe join quadratic in
-    * the bucket.
+    * `bkey`, plane parameters recorded as table properties. SIZING:
+    * `bitsPerBand` must scale with the corpus — 2^bitsPerBand ≳ N /
+    * targetBucketSize (the [[embeddingNearDupPairs]] lesson, measured in
+    * the round-12 soak); an undersized band key makes every posting
+    * bucket huge and the probe join quadratic in the bucket.
     */
   def writeEmbeddingLshIndex(
       corpus: DataFrame,
@@ -1450,22 +1538,17 @@ object Dedup {
       seed: Long = 42L,
       nBuckets: Int = 64
   ): Unit =
-    // staged publish (round 17): seed/bitsPerBand are NOT data-pinnable,
-    // so the old write-then-ALTER crash window was the worst of the
-    // family — a props-less index would silently adopt the next
-    // caller's plane parameters. Props now land before visibility.
-    graft.sinks.Sinks.writeBucketedWithProps(
-      embeddingLshIndexRows(corpus, vecCol, idCol, dim, bands, bitsPerBand, seed, nBuckets),
+    writeBandIndex(
+      withBucketKey(
+        embeddingBandRows(corpus, vecCol, idCol, dim, bands, bitsPerBand, seed), nBuckets),
       table,
-      Seq("bkey"),
       nBuckets,
       embIndexProps(dim, bands, bitsPerBand, seed)
     )
 
-  /** Append a new batch's band rows — the steady-state ingest path:
-    * indexing the day's embeddings is O(batch), never a corpus rewrite.
-    * Heals a crashed compaction swap first, validates the plane
-    * contract, and records it when this append CREATES the table.
+  /** Append a new batch's band rows ([[appendBandIndex]]): O(batch),
+    * validated against the plane contract, which is recorded when this
+    * append CREATES the table.
     */
   def appendToEmbeddingLshIndex(
       batch: DataFrame,
@@ -1479,64 +1562,22 @@ object Dedup {
       nBuckets: Int = 64
   ): Unit = {
     val spark = batch.sparkSession
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    val existed = spark.catalog.tableExists(table)
-    if (!existed)
-      // first append CREATES the table: staged publish stamps the plane
-      // contract before any data is visible (the round-17 discipline)
-      graft.sinks.Sinks.writeBucketedWithProps(
-        embeddingLshIndexRows(batch, vecCol, idCol, dim, bands, bitsPerBand, seed, nBuckets),
-        table, Seq("bkey"), nBuckets, embIndexProps(dim, bands, bitsPerBand, seed))
-    else {
-      graft.sinks.Sinks.recoverBucketedSwap(spark, table)
+    appendBandIndex(
+      spark,
+      table,
+      n => withBucketKey(embeddingBandRows(batch, vecCol, idCol, dim, bands, bitsPerBand, seed), n),
+      nBuckets,
+      embIndexProps(dim, bands, bitsPerBand, seed),
       validateEmbIndexParams(spark, table, dim, bands, bitsPerBand, seed)
-      graft.sinks.Sinks.appendBucketed(
-        embeddingLshIndexRows(batch, vecCol, idCol, dim, bands, bitsPerBand, seed, nBuckets),
-        table,
-        Seq("bkey"),
-        nBuckets
-      )
-    }
-  }
-
-  /** The cross-frame candidate+verify core shared by the at-rest probe
-    * ([[incrementalSemanticNearDups]]) and the inline two-frame form
-    * ([[semanticNearDupsAgainst]]): join history band rows to batch
-    * band rows on (band, bhash), de-dup multi-band matches, verify with
-    * the native exact cosine, filter to `>= threshold`. The batch side
-    * broadcasts under `broadcastRowLimit` band rows (size-guarded, the
-    * [[incrementalNearDups]] pattern) so the history side never
-    * shuffles.
-    */
-  private def crossEmbeddingNearDups(
-      histBands: DataFrame, // (vec_id, embedding, band, bhash)
-      batchBands: DataFrame, // (j, v_j, band, bhash)
-      threshold: Double,
-      broadcastRowLimit: Long,
-      dropSameId: Boolean
-  ): DataFrame = {
-    val probe = math.min(broadcastRowLimit + 1, Int.MaxValue.toLong).toInt
-    val fits = batchBands.limit(probe).count() <= broadcastRowLimit
-    val batchHinted = if (fits) broadcast(batchBands) else batchBands
-    val joined = histBands.join(batchHinted, Seq("band", "bhash"))
-    val selfFiltered = if (dropSameId) joined.filter(col("vec_id") =!= col("j")) else joined
-    selfFiltered
-      .select(col("vec_id").as("i"), col("j"), col("embedding").as("v_i"), col("v_j"))
-      .distinct() // a pair can match in several bands
-      .select(col("i"), col("j"), Fns.cosine(col("v_i"), col("v_j")).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    )
   }
 
   /** Near-dups of a NEW embedding batch against the at-rest index
-    * ([[writeEmbeddingLshIndex]]) — "dedup today's embeddings against
-    * the whole corpus" without touching most of it. The batch's band
-    * keys map to at most nBuckets distinct `bkey`s (driver-safe to
-    * collect — bounded by the bucket count, not the batch), which prune
-    * the index scan to matching buckets; the batch side broadcasts into
-    * the bucket join. Verification is the EXACT cosine of the stored
-    * vectors (the index carries them — no second corpus join, unlike
-    * MinHash whose in-index check is the signature estimate). Returns
-    * (i = history id, j = batch id, cosine >= threshold).
+    * ([[writeEmbeddingLshIndex]], probed by [[probeBandIndex]]).
+    * Verification is the EXACT cosine of the stored vectors (the index
+    * carries them — no second corpus join, unlike MinHash whose
+    * in-index check is the signature estimate). Returns (i = history
+    * id, j = batch id, cosine >= threshold).
     *
     * Plane parameters are read from the table contract
     * ([[validateEmbIndexParams]]); `dropSameId = false` turns same-id
@@ -1556,52 +1597,28 @@ object Dedup {
       threshold: Double = 0.9,
       broadcastRowLimit: Long = 4000000L,
       dropSameId: Boolean = true
-  ): DataFrame = {
-    import spark.implicits._
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    graft.sinks.Sinks.recoverBucketedSwap(spark, table)
-    val nBuckets = spark.sessionState.catalog
-      .getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
-      .bucketSpec
-      .map(_.numBuckets)
-      .getOrElse(throw new IllegalArgumentException(s"$table is not a bucketed index table"))
-    validateEmbIndexParams(spark, table, dim, bands, bitsPerBand, seed)
-    val planes = hyperplanes(dim, bands * bitsPerBand, seed)
-    val batchBands = Materialize(
-      newBatch
-        .select(
-          col(idCol).as("j"),
-          col(vecCol).as("v_j"),
-          posexplode(
-            graft.plans.HyperplaneBands.hyperplaneBands(col(vecCol), planes, bitsPerBand)
-          ).as(Seq("band", "bhash"))
-        )
-        .withColumn("bkey", pmod(xxhash64(col("band"), col("bhash")), lit(nBuckets.toLong)))
-    ) // probed twice: bkey collect + bucket join
-    val bkeys = batchBands.select(col("bkey")).distinct().as[Long].collect().sorted
-    // empty batch (or all-null vectors): prune to nothing with lit(false)
-    // rather than an early return — the result schema then derives from
-    // the SAME plan as every other day (i carries the index's vec_id
-    // type, j the batch's idCol type; a hardcoded empty (long, long)
-    // frame used to make string-keyed callers' unionByName fail only on
-    // empty-batch days)
-    val pruned = spark
-      .table(table)
-      .filter(
-        if (bkeys.isEmpty) lit(false) else col("bkey").isin(bkeys.toIndexedSeq: _*)
-      )
-      .select(col("vec_id"), col("embedding"), col("band"), col("bhash"))
-    crossEmbeddingNearDups(
-      pruned, batchBands.drop("bkey"), threshold, broadcastRowLimit, dropSameId)
-  }
+  ): DataFrame =
+    probeBandIndex(
+      spark,
+      table,
+      n => withBucketKey(
+        embeddingBandRows(newBatch, vecCol, idCol, dim, bands, bitsPerBand, seed), n),
+      validateEmbIndexParams(spark, table, dim, bands, bitsPerBand, seed),
+      idCol = "vec_id",
+      valCol = "embedding",
+      verify = cosineVerify,
+      keep = col("cosine") >= threshold,
+      broadcastRowLimit,
+      dropSameId
+    )
 
   /** Inline two-frame form of the index probe: band `history` on the
     * fly and find its near-dups of `batch` — semantically IDENTICAL to
     * [[incrementalSemanticNearDups]] over an index built from `history`
-    * (spec-pinned), which is what makes the at-rest path's results
-    * oracle-checkable (driver q148 replays this in DuckDB). Use the
-    * index form in production; this form costs a full history banding
-    * pass per call.
+    * (spec-pinned; both run [[joinBands]]), which is what makes the
+    * at-rest path's results oracle-checkable (driver q148 replays this
+    * in DuckDB). Use the index form in production; this form costs a
+    * full history banding pass per call.
     */
   def semanticNearDupsAgainst(
       history: DataFrame,
@@ -1616,76 +1633,57 @@ object Dedup {
       broadcastRowLimit: Long = 4000000L,
       dropSameId: Boolean = true
   ): DataFrame = {
-    val planes = hyperplanes(dim, bands * bitsPerBand, seed)
-    def bandRows(df: DataFrame, id: String, vec: String) =
-      df.select(
-        col(idCol).as(id),
-        col(vecCol).as(vec),
-        posexplode(
-          graft.plans.HyperplaneBands.hyperplaneBands(col(vecCol), planes, bitsPerBand)
-        ).as(Seq("band", "bhash"))
-      )
-    crossEmbeddingNearDups(
-      bandRows(history, "vec_id", "embedding"),
-      // pinned like the index path's batchBands: the broadcast-fit probe
+    def bandRows(df: DataFrame) =
+      embeddingBandRows(df, vecCol, idCol, dim, bands, bitsPerBand, seed)
+    joinBands(
+      bandRows(history),
+      // pinned like the index path's batch rows: the broadcast-fit probe
       // counts these rows, and an unmaterialized plan would re-run the
       // batch's hyperplane banding once for the count and again for the
       // join
-      Materialize(bandRows(batch, "j", "v_j")),
-      threshold,
+      Materialize(batchSide(bandRows(batch), "vec_id", "embedding")),
+      idCol = "vec_id",
+      valCol = "embedding",
+      verify = cosineVerify,
+      keep = col("cosine") >= threshold,
       broadcastRowLimit,
       dropSameId
     )
   }
 
   // ------------------------------------------------------------------
-  // At-rest dHash index (round 14) — the image analogue of the MinHash
-  // / embedding-LSH index blocks above, completing the dedup at-rest
-  // matrix for the multimodal column family: "dedup today's image batch
-  // against the whole corpus without touching most of it". Rows are the
-  // 4×16-bit band keys of each image's dHash, bucketed by
-  // pmod(xxhash64(band, bhash), nBuckets) so a batch probe prunes the
-  // index scan to at most nBuckets buckets (the incrementalNearDups
-  // shape, bucket pruning plan-pinned in ImageDedupSpec).
+  // Hamming index (dHash-64 and pHash-256, parameterised by
+  // [[ImageHash.Family]]) — the image analogue of the MinHash /
+  // embedding-LSH indexes, completing the dedup at-rest matrix for the
+  // multimodal column family. Rows are the family's band keys of each
+  // image's hash (dHash-64: 4×16 bits; pHash-256: 8×32 bits, whose 2³²
+  // key space keeps the cross-class collision term dHash's soak
+  // measured — pairs ∝ nClasses²/2¹⁶ per band, exponent 1.28 at 9.7k
+  // classes — flat out past 10⁸ classes). Verification is the exact
+  // hamming of the carried hashes, no second table. The two families'
+  // indexes fail closed against each other: different props keys AND a
+  // max(band) data pin (3 vs 7).
   // ------------------------------------------------------------------
 
-  /** The banding an index was WRITTEN with. dHash banding is currently
-    * fixed (4×16 bits of a 64-bit hash), but the contract is recorded
-    * anyway: a future wider perceptual hash (pHash-256) would change
-    * the banding, and probing across that change must fail fast, not
-    * silently miss near-dups.
+  /** Fail fast unless the index was written with `family`'s banding.
+    * `backfill` gates the legacy-props ALTER TABLE: only WRITE-side
+    * entry points ([[appendToImageHashIndex]]) may mutate catalog
+    * metadata — the probe path is nominally read-only and must stay
+    * runnable against a read-only/permission-restricted metastore, so
+    * it validates via the same max(band) data pin WITHOUT persisting it.
     */
-  private val DHashBandsProp = "graft.dhash.bands"
-  private val DHashBandsValue = "4" // 4×16-bit bands of the 64-bit hash
-
-  private def setDHashIndexProps(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String
-  ): Unit =
-    spark.sql(
-      s"ALTER TABLE ${graft.sinks.Sinks.parseIdent(spark, table).quotedString} " +
-        s"SET TBLPROPERTIES ('$DHashBandsProp'='$DHashBandsValue')"
-    )
-
-  /** `backfill` gates the legacy-props ALTER TABLE: only WRITE-side
-    * entry points ([[appendToDHashIndex]]) may mutate catalog metadata —
-    * the probe path is nominally read-only and must stay runnable
-    * against a read-only/permission-restricted metastore, so it
-    * validates via the same max(band) data pin WITHOUT persisting it.
-    */
-  private def validateDHashIndexParams(
+  private def validateHammingIndex(
       spark: org.apache.spark.sql.SparkSession,
       table: String,
+      family: ImageHash.Family,
       backfill: Boolean
-  ): Unit = {
-    val props = spark.sessionState.catalog
-      .getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
-      .properties
-    props.get(DHashBandsProp) match {
+  ): Unit =
+    tableMeta(spark, table).properties.get(family.bandsProp) match {
       case Some(b) =>
         require(
-          b.toInt == 4,
-          s"index $table was written with $b dHash bands; this engine probes 4×16-bit banding"
+          b.toInt == family.bands,
+          s"index $table was written with $b ${family.name} bands; " +
+            s"this engine probes ${family.bands}-band ${family.name}"
         )
       case None =>
         // data-pin like validateIndexParams: every indexed image emits
@@ -1693,397 +1691,80 @@ object Dedup {
         val r = spark.table(table).agg(max(col("band"))).head()
         if (!r.isNullAt(0)) {
           require(
-            r.getInt(0) == 3,
-            s"index $table holds bands 0..${r.getInt(0)}; this engine probes 4 bands"
+            r.getInt(0) == family.bands - 1,
+            s"index $table holds bands 0..${r.getInt(0)}; this engine probes ${family.bands} bands"
           )
-          if (backfill) setDHashIndexProps(spark, table)
+          if (backfill) setTableProps(spark, table, hammingIndexProps(family))
         }
     }
-  }
 
-  /** The bucket count an existing index was CREATED with — band keys
-    * must keep hashing into the recorded bucket space, so appends and
-    * probes derive it from the catalog's bucketSpec rather than trusting
-    * a caller parameter (an index built at 32 buckets then appended
-    * through a default-64 code path would fail on Spark's bucket-spec
-    * mismatch — or worse, mis-bucket under a laxer writer).
-    */
-  private def tableNumBuckets(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String
-  ): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
-      .bucketSpec
-      .map(_.numBuckets)
-      .getOrElse(throw new IllegalArgumentException(s"$table is not a bucketed index table"))
+  private def hammingIndexProps(family: ImageHash.Family): Map[String, String] =
+    Map(family.bandsProp -> family.bands.toString)
 
-  /** Band/bucket rows from PRE-COMPUTED hashes (doc_id, dhash non-null)
-    * — the decode-free shape batch ingest threads one dHash pass
-    * through ([[graft.streaming.ImageIngest]] hashes each image exactly
-    * once per micro-batch and feeds pairing, probing, and the index
-    * append from the same frame).
-    */
-  private def dHashIndexRowsFromHashes(hashed: DataFrame, nBuckets: Int): DataFrame =
-    hashed
-      .filter(col("dhash").isNotNull)
-      .select(col("doc_id"), col("dhash"), explode(hash64BandCols("dhash")).as("bk"))
-      .select(
-        col("doc_id"),
-        col("dhash"),
-        col("bk.band").as("band"),
-        col("bk.bhash").as("bhash"),
-        pmod(xxhash64(col("bk.band"), col("bk.bhash")), lit(nBuckets.toLong)).as("bkey")
-      )
-
-  private def dHashIndexRows(media: DataFrame, nBuckets: Int): DataFrame =
-    dHashIndexRowsFromHashes(Multimodal.dHash64(media), nBuckets)
-
-  /** [[hamming64Pairs]] over pre-computed (doc_id, dhash) rows — the
-    * in-batch pairing stage for callers that already hold the hashes.
-    */
-  def dHashPairsFromHashes(
+  /** (doc_id, hash, band, bhash, bkey) index rows of non-null hashes. */
+  private def hammingIndexRows(
+      family: ImageHash.Family,
       hashed: DataFrame,
-      maxHamming: Int = 10,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket),
-      dropMetrics: Option[Observation] = None
+      nBuckets: Int
   ): DataFrame =
-    hamming64Pairs(hashed, "dhash", maxHamming, maxBucket, dropMetrics)
+    withBucketKey(hammingBandRows(hashed, family.hashCol, family), nBuckets)
 
-  /** Build the at-rest dHash index from an image corpus (staged
-    * publish, round 17: the banding prop lands before visibility).
+  /** Build the at-rest index of `family` from (doc_id, media) images or
+    * pre-computed (doc_id, hash) rows (staged publish: the banding prop
+    * lands before visibility).
     */
-  def writeDHashIndex(media: DataFrame, table: String, nBuckets: Int = 64): Unit =
-    graft.sinks.Sinks.writeBucketedWithProps(
-      dHashIndexRows(media, nBuckets), table, Seq("bkey"), nBuckets,
-      Map(DHashBandsProp -> DHashBandsValue))
-
-  /** Append a batch's band rows — O(batch) ingest, never a corpus
-    * rewrite; probes see appended images immediately. `nBuckets` only
-    * applies when the append CREATES the table; an existing index keeps
-    * the bucket count its catalog entry records ([[tableNumBuckets]]).
-    */
-  def appendToDHashIndex(media: DataFrame, table: String, nBuckets: Int = 64): Unit =
-    appendToDHashIndexFromHashes(Multimodal.dHash64(media), table, nBuckets)
-
-  /** [[appendToDHashIndex]] from pre-computed (doc_id, dhash) rows. */
-  def appendToDHashIndexFromHashes(
-      hashed: DataFrame,
+  def writeImageHashIndex(family: ImageHash.Family)(
+      images: DataFrame,
       table: String,
       nBuckets: Int = 64
-  ): Unit = {
-    val spark = hashed.sparkSession
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    val existed = spark.catalog.tableExists(table)
-    if (!existed)
-      graft.sinks.Sinks.writeBucketedWithProps(
-        dHashIndexRowsFromHashes(hashed, nBuckets), table, Seq("bkey"), nBuckets,
-        Map(DHashBandsProp -> DHashBandsValue))
-    else {
-      graft.sinks.Sinks.recoverBucketedSwap(spark, table)
-      validateDHashIndexParams(spark, table, backfill = true)
-      val n = tableNumBuckets(spark, table)
-      graft.sinks.Sinks.appendBucketed(dHashIndexRowsFromHashes(hashed, n), table, Seq("bkey"), n)
-    }
-  }
-
-  /** Perceptual near-dups of a NEW image batch against the at-rest
-    * index: the batch's band keys collect to at most nBuckets distinct
-    * `bkey`s (bounded by the bucket count, not the batch), which prune
-    * the index scan to matching buckets only; the batch side broadcasts
-    * into the band equi-join (size-guarded with the
-    * [[incrementalNearDups]] fallback), and only band-matched pairs pay
-    * the exact `bit_count(xor)` hamming verify — which unlike the
-    * MinHash estimate is EXACT from the carried hashes alone, no second
-    * table. Returns (i = indexed image, j = batch image, hamming ≤
-    * `maxHamming`).
-    */
-  def incrementalDHashDups(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      table: String,
-      maxHamming: Int = 10,
-      broadcastRowLimit: Long = 4000000L,
-      dropSameId: Boolean = true
-  ): DataFrame =
-    incrementalDHashDupsFromHashes(
-      spark, Multimodal.dHash64(batch), table, maxHamming, broadcastRowLimit, dropSameId)
-
-  /** [[incrementalDHashDups]] from pre-computed (doc_id, dhash) rows —
-    * the probe stage for callers that already decoded the batch once.
-    */
-  def incrementalDHashDupsFromHashes(
-      spark: org.apache.spark.sql.SparkSession,
-      hashed: DataFrame,
-      table: String,
-      maxHamming: Int = 10,
-      broadcastRowLimit: Long = 4000000L,
-      dropSameId: Boolean = true
-  ): DataFrame = {
-    import spark.implicits._
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    graft.sinks.Sinks.recoverBucketedSwap(spark, table)
-    val nBuckets = tableNumBuckets(spark, table)
-    validateDHashIndexParams(spark, table, backfill = false)
-    val batchBands = Materialize(
-      dHashIndexRowsFromHashes(hashed, nBuckets)
-        .select(col("doc_id").as("j"), col("dhash").as("dh_j"),
-          col("band"), col("bhash"), col("bkey"))
-    ) // probed twice: bkey collect + bucket join
-    val bkeys = batchBands.select(col("bkey")).distinct().as[Long].collect().sorted
-    if (bkeys.isEmpty) {
-      return spark.emptyDataFrame
-        .select(lit(0L).as("i"), lit(0L).as("j"), lit(0).as("hamming"))
-        .limit(0)
-    }
-    val pruned = spark.table(table).filter(col("bkey").isin(bkeys.toIndexedSeq: _*))
-    val probe = math.min(broadcastRowLimit + 1, Int.MaxValue.toLong).toInt
-    val fits = batchBands.limit(probe).count() <= broadcastRowLimit
-    val batchHinted =
-      if (fits) broadcast(batchBands.drop("bkey")) else batchBands.drop("bkey")
-    val joined = pruned.join(batchHinted, Seq("band", "bhash"))
-    val selfFiltered = if (dropSameId) joined.filter(col("doc_id") =!= col("j")) else joined
-    selfFiltered
-      .select(col("doc_id").as("i"), col("j"), col("dhash"), col("dh_j"))
-      .distinct() // a pair can match in several bands
-      .select(
-        col("i"),
-        col("j"),
-        bit_count(col("dhash").bitwiseXOR(col("dh_j"))).as("hamming")
-      )
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  // ------------------------------------------------------------------
-  // pHash-256 pairs + at-rest index (round 15 — verdict r14 #3): the
-  // wide perceptual hash for corpora past dHash-64's band space. Same
-  // operator shapes as the dHash family — posting-list pairs, bucketed
-  // band-key index, pruned probes — with 8×32-bit bands: the pigeonhole
-  // guarantee reaches hamming 7 and the key space is 2³², so the
-  // cross-class collision term dHash's soak measured (pairs ∝
-  // nClasses²/2¹⁶ per band, exponent 1.28 at 9.7k classes) stays flat
-  // out past 10⁸ classes. The two hashes' indexes fail closed against
-  // each other: different props keys AND a max(band) data pin (7 vs 3).
-  // ------------------------------------------------------------------
-
-  /** One (band, bhash) struct per 32-bit band of the 4-long pHash
-    * array: band b = bits [32b, 32b+32) = word b/2 shifted by
-    * (b mod 2)·32. The mask after the arithmetic shift makes keys
-    * sign-agnostic, as in [[hash64BandCols]].
-    */
-  private def phash256BandCols(hashCol: String): Column =
-    array((0 until 8).map { b =>
-      struct(
-        lit(b).as("band"),
-        shiftright(element_at(col(hashCol), b / 2 + 1), (b % 2) * 32)
-          .bitwiseAND(lit(0xffffffffL))
-          .as("bhash")
-      )
-    }: _*)
-
-  /** Exact hamming distance of two 4-long (256-bit) hash arrays. */
-  private def hamming256(a: Column, b: Column): Column =
-    (0 until 4)
-      .map(k => bit_count(element_at(a, k + 1).bitwiseXOR(element_at(b, k + 1))))
-      .reduce(_ + _)
-
-  /** Perceptual near-dup pairs under pHash-256
-    * ([[Multimodal.pHash256]]): 8×32-bit pigeonhole banding (hamming ≤
-    * 7 GUARANTEES a shared band; the default bar 24 ≈ the same 9%-of-
-    * bits tolerance as dHash's 10/64, with the documented recall trade
-    * past the guarantee) + exact 256-bit hamming verify. Null hashes
-    * (undecodable/sub-grid images) are excluded, never paired.
-    */
-  def imagePHashPairs(
-      media: DataFrame,
-      maxHamming: Int = 24,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket),
-      dropMetrics: Option[Observation] = None
-  ): DataFrame =
-    pHashPairsFromHashes(Multimodal.pHash256(media), maxHamming, maxBucket, dropMetrics)
-
-  /** [[imagePHashPairs]] over pre-computed (doc_id, phash) rows — the
-    * in-batch pairing stage for callers that already decoded once
-    * (the [[dHashPairsFromHashes]] shape).
-    */
-  def pHashPairsFromHashes(
-      signed: DataFrame,
-      maxHamming: Int = 24,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket),
-      dropMetrics: Option[Observation] = None
-  ): DataFrame = {
-    val exploded = signed
-      .filter(col("phash").isNotNull)
-      .select(col("doc_id"), col("phash"), explode(phash256BandCols("phash")).as("bk"))
-      .select(col("doc_id"), col("phash"), col("bk.band").as("band"), col("bk.bhash").as("bhash"))
-    val postings = exploded
-      .groupBy(col("band"), col("bhash"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("phash")))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-    // hamming verify BEFORE the distinct — same §2.3 rewrite as
-    // [[hamming64Pairs]] (see the note there): identical output multiset,
-    // the distinct shuffle carries only verified pairs
-    boundedPostings(postings, maxBucket, dropMetrics, "dropped_buckets")
-      .select(explode(pairCombos(col("ids"))).as("p"))
-      .select(
-        col("p.i.doc_id").as("i"),
-        col("p.j.doc_id").as("j"),
-        col("p.i.phash").as("ph_i"),
-        col("p.j.phash").as("ph_j"),
-        hamming256(col("p.i.phash"), col("p.j.phash")).as("hamming")
-      )
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .select(col("i"), col("j"), col("hamming"))
-  }
-
-  /** The banding a pHash index was written with — cross-probing a
-    * dHash index (or vice versa) must fail fast, not silently miss
-    * near-dups: the props keys differ AND the max(band) data pin
-    * disagrees (7 vs 3).
-    */
-  private val PHashBandsProp = "graft.phash.bands"
-  private val PHashBandsValue = "8" // 8×32-bit bands of the 256-bit hash
-
-  private def setPHashIndexProps(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String
   ): Unit =
-    spark.sql(
-      s"ALTER TABLE ${graft.sinks.Sinks.parseIdent(spark, table).quotedString} " +
-        s"SET TBLPROPERTIES ('$PHashBandsProp'='$PHashBandsValue')"
-    )
+    writeBandIndex(
+      hammingIndexRows(family, imageHashes(family, images), nBuckets), table, nBuckets,
+      hammingIndexProps(family))
 
-  private def validatePHashIndexParams(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      backfill: Boolean
-  ): Unit = {
-    val props = spark.sessionState.catalog
-      .getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
-      .properties
-    props.get(PHashBandsProp) match {
-      case Some(b) =>
-        require(
-          b.toInt == 8,
-          s"index $table was written with $b pHash bands; this engine probes 8×32-bit banding"
-        )
-      case None =>
-        val r = spark.table(table).agg(max(col("band"))).head()
-        if (!r.isNullAt(0)) {
-          require(
-            r.getInt(0) == 7,
-            s"index $table holds bands 0..${r.getInt(0)}; this engine probes 8 bands"
-          )
-          if (backfill) setPHashIndexProps(spark, table)
-        }
-    }
-  }
-
-  private def pHashIndexRowsFromHashes(hashed: DataFrame, nBuckets: Int): DataFrame =
-    hashed
-      .filter(col("phash").isNotNull)
-      .select(col("doc_id"), col("phash"), explode(phash256BandCols("phash")).as("bk"))
-      .select(
-        col("doc_id"),
-        col("phash"),
-        col("bk.band").as("band"),
-        col("bk.bhash").as("bhash"),
-        pmod(xxhash64(col("bk.band"), col("bk.bhash")), lit(nBuckets.toLong)).as("bkey")
-      )
-
-  private def pHashIndexRows(media: DataFrame, nBuckets: Int): DataFrame =
-    pHashIndexRowsFromHashes(Multimodal.pHash256(media), nBuckets)
-
-  /** Build the at-rest pHash-256 index from an image corpus (staged
-    * publish, round 17: the banding prop lands before visibility).
+  /** O(batch) append of images' band rows ([[appendBandIndex]]);
+    * `nBuckets` only applies when the append CREATES the table.
     */
-  def writePHashIndex(media: DataFrame, table: String, nBuckets: Int = 64): Unit =
-    graft.sinks.Sinks.writeBucketedWithProps(
-      pHashIndexRows(media, nBuckets), table, Seq("bkey"), nBuckets,
-      Map(PHashBandsProp -> PHashBandsValue))
-
-  /** O(batch) append; an existing index keeps its recorded bucket count
-    * (the [[appendToDHashIndex]] contract).
-    */
-  def appendToPHashIndex(media: DataFrame, table: String, nBuckets: Int = 64): Unit =
-    appendToPHashIndexFromHashes(Multimodal.pHash256(media), table, nBuckets)
-
-  /** [[appendToPHashIndex]] from pre-computed (doc_id, phash) rows. */
-  def appendToPHashIndexFromHashes(
-      hashed: DataFrame,
+  def appendToImageHashIndex(family: ImageHash.Family)(
+      images: DataFrame,
       table: String,
       nBuckets: Int = 64
   ): Unit = {
-    val spark = hashed.sparkSession
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    val existed = spark.catalog.tableExists(table)
-    if (!existed)
-      graft.sinks.Sinks.writeBucketedWithProps(
-        pHashIndexRowsFromHashes(hashed, nBuckets), table, Seq("bkey"), nBuckets,
-        Map(PHashBandsProp -> PHashBandsValue))
-    else {
-      graft.sinks.Sinks.recoverBucketedSwap(spark, table)
-      validatePHashIndexParams(spark, table, backfill = true)
-      val n = tableNumBuckets(spark, table)
-      graft.sinks.Sinks.appendBucketed(pHashIndexRowsFromHashes(hashed, n), table, Seq("bkey"), n)
-    }
+    val spark = images.sparkSession
+    val hashed = imageHashes(family, images)
+    appendBandIndex(
+      spark, table, n => hammingIndexRows(family, hashed, n), nBuckets,
+      hammingIndexProps(family), validateHammingIndex(spark, table, family, backfill = true))
   }
 
-  /** pHash near-dups of a new batch against the at-rest index — the
-    * [[incrementalDHashDups]] shape: bkey collect bounded by the bucket
-    * count prunes the index scan, the batch side broadcasts
-    * (size-guarded), exact 256-bit hamming from the carried hash
-    * arrays. Returns (i = indexed, j = batch, hamming ≤ `maxHamming`).
+  /** Perceptual near-dups of a NEW image batch — (doc_id, media) images
+    * or pre-computed (doc_id, hash) rows — against the at-rest index
+    * ([[probeBandIndex]]); only band-matched pairs pay the exact
+    * hamming verify, which unlike the MinHash estimate is EXACT from
+    * the carried hashes alone. Returns (i = indexed image, j = batch
+    * image, hamming ≤ `maxHamming`).
     */
-  def incrementalPHashDups(
+  def incrementalImageHashDups(family: ImageHash.Family)(
       spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
+      images: DataFrame,
       table: String,
-      maxHamming: Int = 24,
-      broadcastRowLimit: Long = 4000000L,
-      dropSameId: Boolean = true
-  ): DataFrame =
-    incrementalPHashDupsFromHashes(
-      spark, Multimodal.pHash256(batch), table, maxHamming, broadcastRowLimit, dropSameId)
-
-  /** [[incrementalPHashDups]] from pre-computed (doc_id, phash) rows. */
-  def incrementalPHashDupsFromHashes(
-      spark: org.apache.spark.sql.SparkSession,
-      hashed: DataFrame,
-      table: String,
-      maxHamming: Int = 24,
+      maxHamming: Int = family.defaultMaxHamming,
       broadcastRowLimit: Long = 4000000L,
       dropSameId: Boolean = true
   ): DataFrame = {
-    import spark.implicits._
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    graft.sinks.Sinks.recoverBucketedSwap(spark, table)
-    val nBuckets = tableNumBuckets(spark, table)
-    validatePHashIndexParams(spark, table, backfill = false)
-    val batchBands = Materialize(
-      pHashIndexRowsFromHashes(hashed, nBuckets)
-        .select(col("doc_id").as("j"), col("phash").as("ph_j"),
-          col("band"), col("bhash"), col("bkey"))
-    ) // probed twice: bkey collect + bucket join
-    val bkeys = batchBands.select(col("bkey")).distinct().as[Long].collect().sorted
-    if (bkeys.isEmpty) {
-      return spark.emptyDataFrame
-        .select(lit(0L).as("i"), lit(0L).as("j"), lit(0).as("hamming"))
-        .limit(0)
-    }
-    val pruned = spark.table(table).filter(col("bkey").isin(bkeys.toIndexedSeq: _*))
-    val probe = math.min(broadcastRowLimit + 1, Int.MaxValue.toLong).toInt
-    val fits = batchBands.limit(probe).count() <= broadcastRowLimit
-    val batchHinted =
-      if (fits) broadcast(batchBands.drop("bkey")) else batchBands.drop("bkey")
-    val joined = pruned.join(batchHinted, Seq("band", "bhash"))
-    val selfFiltered = if (dropSameId) joined.filter(col("doc_id") =!= col("j")) else joined
-    selfFiltered
-      .select(col("doc_id").as("i"), col("j"), col("phash"), col("ph_j"))
-      .distinct() // a pair can match in several bands
-      .select(col("i"), col("j"), hamming256(col("phash"), col("ph_j")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    val hashed = imageHashes(family, images)
+    probeBandIndex(
+      spark,
+      table,
+      n => hammingIndexRows(family, hashed, n),
+      validateHammingIndex(spark, table, family, backfill = false),
+      idCol = "doc_id",
+      valCol = family.hashCol,
+      verify = (a, b) => family.hamming(a, b).as("hamming"),
+      keep = col("hamming") <= maxHamming,
+      broadcastRowLimit,
+      dropSameId
+    )
   }
 
   // ------------------------------------------------------------------
@@ -2169,16 +1850,12 @@ object Dedup {
   }
 
   // ------------------------------------------------------------------
-  // At-rest video index + incremental probe (round 16 — verdict r15
-  // #3): the index/ingest pair every other dedup modality already has,
-  // for the video family — "dedup today's clips against the whole
-  // video corpus without touching most of it". Rows are the MinHash
-  // index rows of each clip's frame-gram shingle set (signature
-  // carried per band row, the writeMinHashIndex trade), so a probe
-  // verifies candidates inside the pruned buckets via the signature
-  // ESTIMATE — the at-rest contract of the text index; exact Jaccard
-  // needs the frame corpus and is the inline form's job. The index
-  // records source=video_framegram2 ([[SourceProp]]), so text↔video
+  // Video MinHash index (round 16 — verdict r15 #3): the text index's
+  // rows over each clip's frame-gram shingle set, so a probe verifies
+  // candidates inside the pruned buckets via the signature ESTIMATE;
+  // exact Jaccard needs the frame corpus and is the inline form's (or
+  // [[incrementalVideoNearDupsExact]]'s) job. The index records
+  // source=video_framegram2 ([[SourceProp]]), so text↔video
   // cross-probes fail closed even though the row schema matches.
   // ------------------------------------------------------------------
 
@@ -2192,36 +1869,17 @@ object Dedup {
       bands: Int = 8,
       nBuckets: Int = 64
   ): Unit =
-    // staged publish (round 17, ADVICE r16): source=video_framegram2
-    // lands on the staging table BEFORE any data is visible under
-    // `table`. The write-then-ALTER sequence this replaces had a crash
-    // window leaving a props-less video index that the legacy fallback
-    // classified as TEXT — a later text probe would then backfill
-    // source=text permanently, so video probes fail and text appends
-    // are accepted. With the staged publish that state cannot exist.
-    graft.sinks.Sinks.writeBucketedWithProps(
-      minHashIndexRowsFromShingles(videoShingles(frames), numHashes, bands, nBuckets),
+    writeBandIndex(
+      minHashIndexRows(videoShingles(frames), numHashes, bands, nBuckets),
       table,
-      Seq("bkey"),
       nBuckets,
       indexProps(numHashes, bands, VideoSource)
     )
 
-  /** O(batch) append of new clips' band rows; an existing index keeps
-    * its recorded bucket count ([[tableNumBuckets]]).
-    */
-  def appendToVideoMinHashIndex(
-      frames: DataFrame,
-      table: String,
-      numHashes: Int = 32,
-      bands: Int = 8,
-      nBuckets: Int = 64
-  ): Unit =
-    appendToVideoIndexFromShingles(videoShingles(frames), table, numHashes, bands, nBuckets)
-
-  /** [[appendToVideoMinHashIndex]] from a pre-computed (doc_id,
-    * shingles) frame — the shape [[graft.streaming.VideoIngest]]
-    * threads its one shingle pass through.
+  /** O(batch) append of new clips' band rows from a pre-computed
+    * (doc_id, shingles) frame — the shape [[graft.streaming.VideoIngest]]
+    * threads its one shingle pass through; an existing index keeps its
+    * recorded bucket count ([[appendBandIndex]]).
     */
   def appendToVideoIndexFromShingles(
       shingled: DataFrame,
@@ -2229,24 +1887,7 @@ object Dedup {
       numHashes: Int = 32,
       bands: Int = 8,
       nBuckets: Int = 64
-  ): Unit = {
-    val spark = shingled.sparkSession
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    val existed = spark.catalog.tableExists(table)
-    if (!existed)
-      // first append CREATES the table: staged publish stamps the
-      // modality prop before any data is visible (ADVICE r16)
-      graft.sinks.Sinks.writeBucketedWithProps(
-        minHashIndexRowsFromShingles(shingled, numHashes, bands, nBuckets),
-        table, Seq("bkey"), nBuckets, indexProps(numHashes, bands, VideoSource))
-    else {
-      graft.sinks.Sinks.recoverBucketedSwap(spark, table)
-      validateIndexParams(spark, table, numHashes, bands, VideoSource)
-      val n = tableNumBuckets(spark, table)
-      graft.sinks.Sinks.appendBucketed(
-        minHashIndexRowsFromShingles(shingled, numHashes, bands, n), table, Seq("bkey"), n)
-    }
-  }
+  ): Unit = appendMinHashIndex(shingled, table, numHashes, bands, nBuckets, VideoSource)
 
   /** Near-dups of a NEW batch of clips against the at-rest video index
     * — the [[incrementalNearDups]] shape on [[videoShingles]]: the
@@ -2319,7 +1960,7 @@ object Dedup {
     // keeps every banded pair — the same candidate set inline banding
     // yields for cross pairs)
     val cand = Materialize(
-      incrementalNearDupsFromShingles(
+      probeMinHashIndex(
         spark, shingled, table, numHashes, bands, 0.0, broadcastRowLimit,
         dropSameId, VideoSource
       ).select(col("i"), col("j")))
@@ -2367,7 +2008,7 @@ object Dedup {
       broadcastRowLimit: Long = 4000000L,
       dropSameId: Boolean = true
   ): DataFrame =
-    incrementalNearDupsFromShingles(
+    probeMinHashIndex(
       spark, shingled, table, numHashes, bands, threshold, broadcastRowLimit,
       dropSameId, VideoSource)
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
   * struct(i = ids(p), j = ids(l)) — the per-bucket candidate-pair
   * generation behind every banding dedup operator
   * ([[graft.ops.Dedup]]'s lshCandidates / ngramJaccardPairs /
-  * hamming64Pairs / embeddingNearDupPairs / pHashPairsFromHashes).
+  * hammingPairs / embeddingNearDupPairs).
   *
   * Rationale (SURVEY.md §7.3 custom-surface policy, the XorMinSignature
   * case): the composed form

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.{ImageHash, Materialize}
+import graft.ops.{Dedup, ImageHash, Materialize}
 import graft.streaming.CorpusIngest.NearDupIngestStats
 
 /** Streaming perceptual-image dedup ingest (round 14; hash-family
@@ -19,10 +19,13 @@ import graft.streaming.CorpusIngest.NearDupIngestStats
   * BOTH the index (O(batch)) and the image corpus.
   *
   * The hash family ([[ImageHash.DHash64]] default, [[ImageHash.PHash256]]
-  * for corpora past dHash's band space) supplies hashing, pairing,
-  * probe, and append; the protocol here is family-agnostic. Pointing a
-  * family at the OTHER family's index fails closed at the index layer
-  * (distinct props keys + max(band) data pins).
+  * for corpora past dHash's band space) supplies the one-decode hash
+  * and the default bar; pairing, probe and append are Dedup's single
+  * Hamming-family set ([[Dedup.imageHashPairs]],
+  * [[Dedup.incrementalImageHashDups]], [[Dedup.appendToImageHashIndex]])
+  * called with the family, so the protocol here is family-agnostic.
+  * Pointing a family at the OTHER family's index fails closed at the
+  * index layer (distinct props keys + max(band) data pins).
   *
   * Replay safety is the [[CorpusIngest.nearDupIngest]] protocol
   * verbatim: index-before-corpus ordering makes the index over-claim, a
@@ -111,14 +114,14 @@ object ImageIngest {
     // reads the HASH column instead of re-decoding the blob.
     val hashed = Materialize(family.hashWithMedia(idKept))
     // (1b) in-batch near-dup: greedy min-id keeper over band pairs
-    val inBatchPairs = family.pairsFromHashes(hashed.select(col("doc_id"), col(hc)), bar)
+    val inBatchPairs = Dedup.imageHashPairs(family)(hashed.select(col("doc_id"), col(hc)), bar)
     val inBatchDrops = inBatchPairs.select(col("j").as("doc_id")).distinct()
     val batchKept = Materialize(hashed.join(inBatchDrops, Seq("doc_id"), "left_anti"))
     // (2) probe the at-rest index; same-id hits are replays
     val (nearDupIds, replayIds) =
       if (spark.catalog.tableExists(indexTable)) {
         val hits = Materialize(
-          family.probeFromHashes(
+          Dedup.incrementalImageHashDups(family)(
             spark, batchKept.select(col("doc_id"), col(hc)), indexTable, bar,
             dropSameId = false)
         )
@@ -146,7 +149,7 @@ object ImageIngest {
     val freshCnt = freshDecodable.count()
     // (3) index append FIRST (the over-claiming membership structure)
     if (freshCnt > 0)
-      family.appendFromHashes(
+      Dedup.appendToImageHashIndex(family)(
         freshDecodable.select(col("doc_id"), col(hc)), indexTable, nBuckets)
     // (4) corpus append: fresh images + crash-window orphans +
     //     corpus-absent undecodables

@@ -571,6 +571,52 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(fallback === crossWant)
   }
 
+  test("minhash append derives the bucket count from the table's bucketSpec, not the parameter") {
+    spark.sql("DROP TABLE IF EXISTS mh_idx_nb")
+    val hist = docs.filter($"doc_id" % 3 === 0).select($"doc_id", $"text")
+    Dedup.writeMinHashIndex(hist, "text", "doc_id", "mh_idx_nb", nBuckets = 16)
+    // a default-parameter (64) append onto the 16-bucket index — what
+    // CorpusIngest.nearDupIngest does with its default nBuckets — must
+    // keep the recorded spec instead of failing on Spark's bucket mismatch
+    val added = docs.filter($"doc_id" === 1L)
+      .select(($"doc_id" + 600000L).as("doc_id"), $"text")
+    Dedup.appendToMinHashIndex(added, "text", "doc_id", "mh_idx_nb")
+    val spec = spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier("mh_idx_nb"))
+      .bucketSpec
+    assert(spec.map(_.numBuckets) === Some(16))
+    // and the appended rows are probe-visible under the original banding
+    val replay = Dedup.incrementalNearDups(
+      spark, added, "mh_idx_nb", "text", "doc_id", dropSameId = false)
+      .filter($"i" === $"j")
+    assert(replay.count() === 1L)
+    spark.sql("DROP TABLE mh_idx_nb")
+  }
+
+  test("minhash probe of an empty batch returns the non-empty day's schema") {
+    spark.sql("DROP TABLE IF EXISTS mh_idx_str")
+    // a string-keyed index: a hardcoded (i: long, j: long) empty frame
+    // would make a caller unioning daily results fail ONLY on
+    // empty-batch days — both sides' id types must ride through
+    val sDocs = docs.select(concat(lit("doc-"), $"doc_id").as("doc_id"), $"text")
+    Dedup.writeMinHashIndex(sDocs.filter(!$"doc_id".endsWith("0")),
+      "text", "doc_id", "mh_idx_str", nBuckets = 16)
+    val sBatch = sDocs.filter($"doc_id".endsWith("0"))
+    val full = Dedup.incrementalNearDups(
+      spark, sBatch, "mh_idx_str", "text", "doc_id", threshold = 0.0)
+    val empty = Dedup.incrementalNearDups(
+      spark, sBatch.limit(0), "mh_idx_str", "text", "doc_id", threshold = 0.0)
+    assert(empty.count() === 0L)
+    assert(
+      empty.schema.map(f => (f.name, f.dataType)) ===
+        full.schema.map(f => (f.name, f.dataType)),
+      "empty-batch day must union cleanly with every other day"
+    )
+    assert(full.schema("i").dataType === org.apache.spark.sql.types.StringType)
+    assert(full.unionByName(empty).count() === full.count())
+    spark.sql("DROP TABLE mh_idx_str")
+  }
+
   test("decontaminate flags exactly the docs sharing an n-gram with the eval set") {
     val evalSet = docs.filter($"doc_id" % 97 === 0)
     val train = docs.filter($"doc_id" % 97 =!= 0)

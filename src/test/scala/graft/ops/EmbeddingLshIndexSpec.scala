@@ -99,6 +99,27 @@ class EmbeddingLshIndexSpec extends AnyFunSuite {
     assert(eNotBucketed.getMessage.contains("bucketed"))
   }
 
+  test("append derives the bucket count from the table's bucketSpec, not the parameter") {
+    Dedup.writeEmbeddingLshIndex(hist, "embedding", "vec_id", "emb_lsh_nb", dim = 64,
+      nBuckets = 16)
+    // a default-parameter (64) append onto the 16-bucket index — what
+    // CorpusIngest.semanticDedupIngest does with its default nBuckets —
+    // must keep the recorded spec instead of failing on Spark's bucket
+    // mismatch
+    val added = batch.filter($"vec_id" === 5L)
+      .select(($"vec_id" + 900000L).as("vec_id"), $"embedding")
+    Dedup.appendToEmbeddingLshIndex(added, "embedding", "vec_id", "emb_lsh_nb", dim = 64)
+    val spec = spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier("emb_lsh_nb"))
+      .bucketSpec
+    assert(spec.map(_.numBuckets) === Some(16))
+    // and the appended row is probe-visible under the original banding
+    val replay = Dedup.incrementalSemanticNearDups(
+      spark, added, "emb_lsh_nb", "embedding", "vec_id", dim = 64, dropSameId = false)
+      .filter($"i" === $"j")
+    assert(replay.count() === 1L)
+  }
+
   test("autoBandBits: smallest width holding expected bucket size under target") {
     assert(Dedup.autoBandBits(2000) === 7) // 2000/20=100 -> 2^7
     assert(Dedup.autoBandBits(20000) === 10)

@@ -67,7 +67,7 @@ class ImageDedupSpec extends AnyFunSuite {
       (3L, "also not an image".getBytes("UTF-8"))
     ).toDF("doc_id", "media")
     assert(Multimodal.dHash64(junk).filter($"dhash".isNotNull).count() === 0L)
-    assert(Dedup.imageDHashPairs(junk).count() === 0L)
+    assert(Dedup.imageHashPairs(ImageHash.DHash64)(junk).count() === 0L)
     // a 4x4 image is narrower than the 9x8 grid
     val tiny = new java.awt.image.BufferedImage(
       4, 4, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
@@ -79,7 +79,7 @@ class ImageDedupSpec extends AnyFunSuite {
 
   test("imageDHashPairs finds every same-class pair, zero cross-class noise") {
     val ids = (0L until 300L)
-    val got = Dedup.imageDHashPairs(synth(ids), maxHamming = 10)
+    val got = Dedup.imageHashPairs(ImageHash.DHash64)(synth(ids), maxHamming = 10)
       .select($"i", $"j", $"hamming").as[(Long, Long, Int)].collect()
     assert(got.nonEmpty)
     assert(got.forall { case (i, j, _) => i % 97 == j % 97 }, "cross-class pair leaked")
@@ -97,9 +97,9 @@ class ImageDedupSpec extends AnyFunSuite {
     val ids = (0L until 300L)
     val hist = synth(ids.filter(_ % 5 != 0))
     val batch = synth(ids.filter(_ % 5 == 0))
-    Dedup.writeDHashIndex(hist, "dhash_idx", nBuckets = 32)
+    Dedup.writeImageHashIndex(ImageHash.DHash64)(hist, "dhash_idx", nBuckets = 32)
 
-    val got = Dedup.incrementalDHashDups(spark, batch, "dhash_idx", maxHamming = 10)
+    val got = Dedup.incrementalImageHashDups(ImageHash.DHash64)(spark, batch, "dhash_idx", maxHamming = 10)
     got.collect() // finalize AQE so the executed plan is inspectable
     val plan = got.queryExecution.executedPlan.toString
     val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
@@ -109,7 +109,7 @@ class ImageDedupSpec extends AnyFunSuite {
 
     val gotSet = got.select($"i", $"j", $"hamming").as[(Long, Long, Int)].collect().toSet
     // cross pairs of the in-corpus form, orientation (hist, batch)
-    val unionPairs = Dedup.imageDHashPairs(synth(ids), maxHamming = 10)
+    val unionPairs = Dedup.imageHashPairs(ImageHash.DHash64)(synth(ids), maxHamming = 10)
       .select($"i", $"j", $"hamming").as[(Long, Long, Int)].collect()
     val crossWant = unionPairs.collect {
       case (a, b, hm) if a % 5 != 0 && b % 5 == 0 => (a, b, hm)
@@ -119,13 +119,13 @@ class ImageDedupSpec extends AnyFunSuite {
     assert(gotSet.nonEmpty)
 
     // shuffle fallback returns the identical pairs
-    val fb = Dedup.incrementalDHashDups(spark, batch, "dhash_idx",
+    val fb = Dedup.incrementalImageHashDups(ImageHash.DHash64)(spark, batch, "dhash_idx",
       maxHamming = 10, broadcastRowLimit = 0L)
     assert(fb.select($"i", $"j", $"hamming").as[(Long, Long, Int)].collect().toSet === gotSet)
 
     // append the batch: a replay probe with dropSameId=false sees itself
-    Dedup.appendToDHashIndex(batch, "dhash_idx", nBuckets = 32)
-    val replay = Dedup.incrementalDHashDups(spark, batch, "dhash_idx",
+    Dedup.appendToImageHashIndex(ImageHash.DHash64)(batch, "dhash_idx", nBuckets = 32)
+    val replay = Dedup.incrementalImageHashDups(ImageHash.DHash64)(spark, batch, "dhash_idx",
       maxHamming = 10, dropSameId = false)
       .filter($"i" === $"j")
     assert(replay.count() === batch.count())
@@ -134,16 +134,16 @@ class ImageDedupSpec extends AnyFunSuite {
 
   test("append derives the bucket count from the table's bucketSpec, not the parameter") {
     spark.sql("DROP TABLE IF EXISTS dhash_idx_nb")
-    Dedup.writeDHashIndex(synth(Seq(1L, 2L, 3L)), "dhash_idx_nb", nBuckets = 8)
+    Dedup.writeImageHashIndex(ImageHash.DHash64)(synth(Seq(1L, 2L, 3L)), "dhash_idx_nb", nBuckets = 8)
     // a default-parameter (64) append onto the 8-bucket index must keep
     // the recorded spec instead of failing on Spark's bucket mismatch
-    Dedup.appendToDHashIndex(synth(Seq(4L, 5L)), "dhash_idx_nb")
+    Dedup.appendToImageHashIndex(ImageHash.DHash64)(synth(Seq(4L, 5L)), "dhash_idx_nb")
     val spec = spark.sessionState.catalog
       .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier("dhash_idx_nb"))
       .bucketSpec
     assert(spec.map(_.numBuckets) === Some(8))
     // and the appended rows are probe-visible under the original banding
-    val replay = Dedup.incrementalDHashDups(spark, synth(Seq(4L)), "dhash_idx_nb",
+    val replay = Dedup.incrementalImageHashDups(ImageHash.DHash64)(spark, synth(Seq(4L)), "dhash_idx_nb",
       dropSameId = false).filter($"i" === $"j")
     assert(replay.count() === 1L)
     spark.sql("DROP TABLE dhash_idx_nb")
@@ -151,7 +151,7 @@ class ImageDedupSpec extends AnyFunSuite {
 
   test("the probe path never mutates catalog metadata (props backfill is write-side only)") {
     spark.sql("DROP TABLE IF EXISTS dhash_idx_ro")
-    Dedup.writeDHashIndex(synth(Seq(1L, 2L)), "dhash_idx_ro", nBuckets = 8)
+    Dedup.writeImageHashIndex(ImageHash.DHash64)(synth(Seq(1L, 2L)), "dhash_idx_ro", nBuckets = 8)
     val ident = spark.sessionState.sqlParser.parseTableIdentifier("dhash_idx_ro")
     // simulate a legacy index written before the props contract
     spark.sql("ALTER TABLE dhash_idx_ro UNSET TBLPROPERTIES ('graft.dhash.bands')")
@@ -159,11 +159,11 @@ class ImageDedupSpec extends AnyFunSuite {
       .properties.contains("graft.dhash.bands"))
     // probe validates via the max(band) data pin but must NOT write the
     // prop back — a read-only metastore would reject the ALTER
-    Dedup.incrementalDHashDups(spark, synth(Seq(1L)), "dhash_idx_ro").collect()
+    Dedup.incrementalImageHashDups(ImageHash.DHash64)(spark, synth(Seq(1L)), "dhash_idx_ro").collect()
     assert(!spark.sessionState.catalog.getTableMetadata(ident)
       .properties.contains("graft.dhash.bands"), "probe issued an ALTER TABLE")
     // the next APPEND backfills it
-    Dedup.appendToDHashIndex(synth(Seq(7L)), "dhash_idx_ro")
+    Dedup.appendToImageHashIndex(ImageHash.DHash64)(synth(Seq(7L)), "dhash_idx_ro")
     assert(spark.sessionState.catalog.getTableMetadata(ident)
       .properties.get("graft.dhash.bands") === Some("4"))
     spark.sql("DROP TABLE dhash_idx_ro")
@@ -173,7 +173,7 @@ class ImageDedupSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS dhash_bare")
     Seq((1L, 2L)).toDF("a", "b").write.saveAsTable("dhash_bare")
     val e = intercept[IllegalArgumentException] {
-      Dedup.incrementalDHashDups(spark, synth(Seq(1L)), "dhash_bare")
+      Dedup.incrementalImageHashDups(ImageHash.DHash64)(spark, synth(Seq(1L)), "dhash_bare")
     }
     assert(e.getMessage.contains("not a bucketed index"))
     spark.sql("DROP TABLE dhash_bare")

@@ -70,12 +70,12 @@ class ImagePHashSpec extends AnyFunSuite {
     javax.imageio.ImageIO.write(tiny, "png", bos)
     val tdf = Seq((9L, bos.toByteArray)).toDF("doc_id", "media")
     assert(Multimodal.pHash256(tdf).filter($"phash".isNotNull).count() === 0L)
-    assert(Dedup.imagePHashPairs(tdf).count() === 0L)
+    assert(Dedup.imageHashPairs(ImageHash.PHash256)(tdf).count() === 0L)
   }
 
   test("imagePHashPairs finds every same-class pair, zero cross-class noise") {
     val ids = (0L until 300L)
-    val got = Dedup.imagePHashPairs(synth(ids), maxHamming = 24)
+    val got = Dedup.imageHashPairs(ImageHash.PHash256)(synth(ids), maxHamming = 24)
       .select($"i", $"j", $"hamming").as[(Long, Long, Int)].collect()
     assert(got.nonEmpty)
     assert(got.forall { case (i, j, _) => i % 97 == j % 97 }, "cross-class pair leaked")
@@ -91,9 +91,9 @@ class ImagePHashSpec extends AnyFunSuite {
     val ids = (0L until 300L)
     val hist = synth(ids.filter(_ % 5 != 0))
     val batch = synth(ids.filter(_ % 5 == 0))
-    Dedup.writePHashIndex(hist, "phash_idx", nBuckets = 32)
+    Dedup.writeImageHashIndex(ImageHash.PHash256)(hist, "phash_idx", nBuckets = 32)
 
-    val got = Dedup.incrementalPHashDups(spark, batch, "phash_idx", maxHamming = 24)
+    val got = Dedup.incrementalImageHashDups(ImageHash.PHash256)(spark, batch, "phash_idx", maxHamming = 24)
     got.collect()
     val plan = got.queryExecution.executedPlan.toString
     val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
@@ -102,7 +102,7 @@ class ImagePHashSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), "batch side must broadcast")
 
     val gotSet = got.select($"i", $"j", $"hamming").as[(Long, Long, Int)].collect().toSet
-    val unionPairs = Dedup.imagePHashPairs(synth(ids), maxHamming = 24)
+    val unionPairs = Dedup.imageHashPairs(ImageHash.PHash256)(synth(ids), maxHamming = 24)
       .select($"i", $"j", $"hamming").as[(Long, Long, Int)].collect()
     val crossWant = unionPairs.collect {
       case (a, b, hm) if a % 5 != 0 && b % 5 == 0 => (a, b, hm)
@@ -112,12 +112,12 @@ class ImagePHashSpec extends AnyFunSuite {
     assert(gotSet.nonEmpty)
 
     // append with a mismatched default parameter keeps the 32-bucket spec
-    Dedup.appendToPHashIndex(batch, "phash_idx")
+    Dedup.appendToImageHashIndex(ImageHash.PHash256)(batch, "phash_idx")
     val spec = spark.sessionState.catalog
       .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier("phash_idx"))
       .bucketSpec
     assert(spec.map(_.numBuckets) === Some(32))
-    val replay = Dedup.incrementalPHashDups(spark, batch, "phash_idx",
+    val replay = Dedup.incrementalImageHashDups(ImageHash.PHash256)(spark, batch, "phash_idx",
       maxHamming = 24, dropSameId = false).filter($"i" === $"j")
     assert(replay.count() === batch.count())
     spark.sql("DROP TABLE phash_idx")
@@ -128,16 +128,16 @@ class ImagePHashSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS xhash_d")
     val imgs = synth(Seq(1L, 2L, 3L))
     val imgsSmall = Multimodal.synthGrayImages(Seq(1L, 2L, 3L).toDF("doc_id"), "doc_id")
-    Dedup.writePHashIndex(imgs, "xhash_p", nBuckets = 8)
-    Dedup.writeDHashIndex(imgsSmall, "xhash_d", nBuckets = 8)
+    Dedup.writeImageHashIndex(ImageHash.PHash256)(imgs, "xhash_p", nBuckets = 8)
+    Dedup.writeImageHashIndex(ImageHash.DHash64)(imgsSmall, "xhash_d", nBuckets = 8)
     // a dHash probe against the 8-band pHash index: the props key is
     // absent, the data pin reads bands 0..7 and refuses
     val e1 = intercept[IllegalArgumentException] {
-      Dedup.incrementalDHashDups(spark, imgsSmall, "xhash_p").collect()
+      Dedup.incrementalImageHashDups(ImageHash.DHash64)(spark, imgsSmall, "xhash_p").collect()
     }
     assert(e1.getMessage.contains("bands"))
     val e2 = intercept[IllegalArgumentException] {
-      Dedup.incrementalPHashDups(spark, imgs, "xhash_d").collect()
+      Dedup.incrementalImageHashDups(ImageHash.PHash256)(spark, imgs, "xhash_d").collect()
     }
     assert(e2.getMessage.contains("bands"))
     spark.sql("DROP TABLE xhash_p")

@@ -121,7 +121,7 @@ class ImageIngestSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(corpusIds(corpus) === Set(0L, 1L, 2L))
       val hits =
-        Dedup.incrementalPHashDups(spark, synthWide(Seq(97L * 3)), "img_phash_stream_idx")
+        Dedup.incrementalImageHashDups(ImageHash.PHash256)(spark, synthWide(Seq(97L * 3)), "img_phash_stream_idx")
       assert(hits.select($"i").as[Long].collect().toSet === Set(0L))
     } finally q.stop()
     spark.sql("DROP TABLE img_phash_stream_idx")
@@ -173,7 +173,7 @@ class ImageIngestSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(corpusIds(corpus) === Set(0L, 1L, 2L))
       // the freshly streamed corpus answers an incremental probe
-      val hits = Dedup.incrementalDHashDups(spark, synth(Seq(97L * 3)), "img_stream_idx")
+      val hits = Dedup.incrementalImageHashDups(ImageHash.DHash64)(spark, synth(Seq(97L * 3)), "img_stream_idx")
       assert(hits.select($"i").as[Long].collect().toSet === Set(0L))
     } finally q.stop()
     spark.sql("DROP TABLE img_stream_idx")
