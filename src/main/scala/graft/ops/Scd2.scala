@@ -35,12 +35,33 @@ object Scd2 {
       payloadCol: String = "new_values",
       eventIdCol: String = "event_id",
       eventTypeCol: String = "event_type"
+  ): DataFrame =
+    versionChain(events.dropDuplicates(eventIdCol), keys, tsCol, payloadCol, eventIdCol, eventTypeCol)
+
+  /** The version chain itself, over already-deduplicated events: per
+    * `partitionCols` group, ordered by (ts, event_id), each event becomes
+    * a version `[valid_from, valid_to)` whose `valid_to` is the next
+    * event's ts, current when it is the last one and not a delete.
+    * Output: `partitionCols` followed by event_id, event_type, data,
+    * valid_from, valid_to, is_current.
+    *
+    * [[apply]] partitions by the record keys; `CdcStream`'s sink
+    * partitions by `bucket +: keys`, so the window reuses the sink's
+    * bucket exchange instead of adding its own. This is the one
+    * definition of the chain both share.
+    */
+  private[graft] def versionChain(
+      events: DataFrame,
+      partitionCols: Seq[String],
+      tsCol: String = "ts",
+      payloadCol: String = "new_values",
+      eventIdCol: String = "event_id",
+      eventTypeCol: String = "event_type"
   ): DataFrame = {
     val w = Window
-      .partitionBy(keys.map(col): _*)
+      .partitionBy(partitionCols.map(col): _*)
       .orderBy(col(tsCol), col(eventIdCol))
     events
-      .dropDuplicates(eventIdCol)
       .withColumn("valid_from", col(tsCol))
       .withColumn("valid_to", lead(col(tsCol), 1).over(w))
       .withColumn(
@@ -50,7 +71,7 @@ object Scd2 {
         col("valid_to").isNull && col(eventTypeCol) =!= "delete"
       )
       .select(
-        keys.map(col) ++ Seq(
+        partitionCols.map(col) ++ Seq(
           col(eventIdCol),
           col(eventTypeCol),
           col(payloadCol).as("data"),
@@ -66,10 +87,20 @@ object Scd2 {
     */
   def currentState(scd2: DataFrame): DataFrame = scd2.filter(col("is_current"))
 
-  /** Incremental merge for streaming `foreachBatch`: recompute the version
-    * chain only for keys touched by the batch (reference J2 point-lookup
-    * generalized to a set-wise merge; no Delta jar in this environment so
-    * this is the MERGE equivalent).
+  /** Incremental merge of a batch of events into an existing version
+    * table: recompute the version chain only for keys touched by the
+    * batch (reference J2 point-lookup generalized to a set-wise merge; no
+    * Delta jar in this environment so this is the MERGE equivalent). The
+    * result is the whole table: untouched rows plus the touched keys'
+    * re-windowed chains.
+    *
+    * Not the streaming path: `CdcStream.applyBatchToState` refolds whole
+    * touched state buckets instead (one exchange, no joins), because it
+    * rewrites each touched bucket dir in full anyway. This is the
+    * table-level form for callers that hold `existing` as one frame; no
+    * code in this repository calls it any more, only `Scd2Spec` covers
+    * it (ROADMAP.md records the follow-up: delete it or name the caller
+    * that needs it).
     *
     * Scale: `existing` is only scanned for the touched keys (a broadcast
     * semi-join when the batch is small), and only those groups re-window.

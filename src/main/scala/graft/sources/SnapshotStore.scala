@@ -1,9 +1,12 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import scala.util.Try
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.sinks.Dfs
 
 /** Snapshot versioning (SURVEY.md S14/O4): the reference rotates
   * `current/` + timestamped `archive/` copies (`app/app.py:365-386`) and
@@ -12,20 +15,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directories `v=NNNNNN` under one root — append-only, time-travelable,
   * concurrency-safe enough for a single writer (a real deployment puts a
   * transaction log in front; the read path is identical).
+  *
+  * Every listing, move and delete goes through the Hadoop `FileSystem`
+  * resolved from `root` ([[Dfs]]), so `file:`, `hdfs:` and `s3a:` roots
+  * work like bare local paths.
   */
 object SnapshotStore {
 
-  private def versionsOf(root: String): Seq[Long] = {
-    val p = Paths.get(root)
-    if (!Files.exists(p)) Seq.empty
-    else
-      Files.list(p).iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong)
-        .toSeq
-        .sorted
-  }
+  /** The FileSystem owning `root`, configured from the active session
+    * when there is one (the read-only entry points take no session).
+    */
+  private def fsOf(root: String): FileSystem =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
+      case Some(spark) => Dfs.fs(spark, root)
+      case None => new Path(root).getFileSystem(new Configuration())
+    }
+
+  private def versionsOf(root: String): Seq[Long] =
+    Dfs
+      .listDirs(fsOf(root), new Path(root))
+      .map(_.getName)
+      .filter(_.startsWith("v="))
+      .map(_.stripPrefix("v=").toLong)
+      .sorted
 
   /** O4: current max version (-1 when empty). */
   def maxVersion(root: String): Long = versionsOf(root).lastOption.getOrElse(-1L)
@@ -42,7 +54,7 @@ object SnapshotStore {
     val next = maxVersion(root) + 1
     val staging = s"${root}/_tmp_v=$next"
     df.write.mode("overwrite").parquet(staging) // overwrite clears a crashed writer's leftovers
-    Files.move(Paths.get(staging), Paths.get(s"$root/v=$next"))
+    Dfs.move(Dfs.fs(df.sparkSession, root), new Path(staging), new Path(s"$root/v=$next"))
     next
   }
 
@@ -54,17 +66,14 @@ object SnapshotStore {
     * being reported gone while a partial directory lingers.
     */
   def vacuum(root: String, keep: Int): Seq[Long] = {
+    val fs = fsOf(root)
     versionsOf(root)
       .dropRight(math.max(keep, 1))
-      .filter(v => rmTree(new java.io.File(s"$root/v=$v")))
-  }
-
-  /** Recursive delete; true only if everything (incl. `f`) is gone. */
-  private def rmTree(f: java.io.File): Boolean = {
-    val childrenOk =
-      if (f.isDirectory) Option(f.listFiles).forall(_.forall(rmTree))
-      else true
-    childrenOk && (f.delete() || !f.exists())
+      .filter { v =>
+        val dir = new Path(s"$root/v=$v")
+        Try(fs.delete(dir, true)) // a partial failure returns false or throws
+        !fs.exists(dir)
+      }
   }
 
   /** W1/O1: latest snapshot (the reference's sort-by-mtime-take-newest,

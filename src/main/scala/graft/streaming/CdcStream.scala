@@ -4,10 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import graft.sinks.Dfs
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Scd2
 
@@ -111,26 +112,34 @@ object CdcStream {
     pmod(xxhash64(keys.map(col): _*), lit(numBuckets.toLong)).cast("int")
 
   /** ST3: apply each micro-batch of events to the SCD2 state table
-    * transactionally — merge only touched KEYS, rewrite only touched
-    * PARTITIONS.
+    * transactionally, rewriting only the touched state BUCKETS.
     *
     * State layout: `statePath/bucket=<pmod(xxhash64(keys), numBuckets)>/`
-    * parquet dirs. Per micro-batch the sink (1) collects the batch's
-    * touched bucket ids (≤ numBuckets ints — driver-safe), (2) reads ONLY
-    * those bucket dirs as `existing`, (3) runs the touched-key
-    * [[Scd2.merge]], (4) writes the result partitioned by bucket to a
-    * staging dir, (5) swaps each touched bucket dir individually. I/O per
-    * batch is O(touched buckets), not O(total state) — the property that
-    * survives 100 TB of SCD2 state (the reference rewrites per EVENT,
-    * `consumer.py:152-197`; round 2 of this sink rewrote per BATCH; both
-    * are O(state)). On a cluster the same dataflow is `replaceWhere`
-    * (Delta) or dynamic-partition overwrite; the bucket column doubles as
-    * the pruning predicate.
+    * parquet dirs, one data file per bucket. Each micro-batch is a
+    * bucket refold ([[applyBatchToState]]): the batch's touched buckets
+    * are read whole, their stored versions are replayed as events next
+    * to the batch's events, and the version chain is folded again per
+    * bucket, then each touched bucket dir is swapped for its new one.
+    *
+    * Cost model: read, shuffle and write bytes are all the bytes stored
+    * in the touched buckets plus the batch, not O(total state) — the
+    * property that survives 100 TB of SCD2 state (the reference rewrites
+    * per EVENT, `consumer.py:152-197`; round 2 of this sink rewrote per
+    * BATCH; both are O(state)). The figure to watch is stored bucket
+    * bytes per touched key: every row of a touched bucket, untouched
+    * keys included, crosses the one exchange (on the bucket id), and one
+    * task sorts and writes each touched bucket as one file, so write
+    * parallelism is the number of touched buckets. A batch that touches
+    * few keys in big buckets therefore pays for the whole buckets;
+    * `numBuckets` trades that against files at rest ([[rebucketState]]
+    * changes it). On a cluster the same dataflow is `replaceWhere`
+    * (Delta) or dynamic-partition overwrite; the bucket column doubles
+    * as the pruning predicate.
     *
     * Crash recovery: each bucket swap is the two-move `.old` protocol; a
     * crash at any point leaves every bucket either fully old or fully
     * new, [[recoverState]] restores moved-aside buckets on the next
-    * batch, and the idempotent event_id merge makes the checkpoint's
+    * batch, and the idempotent event_id refold makes the checkpoint's
     * replayed batch safe against partially-applied buckets.
     */
   def scd2Sink(
@@ -149,8 +158,36 @@ object CdcStream {
       .start()
 
   /** One micro-batch of [[scd2Sink]], exposed for batch-mode use and
-    * direct testing (CdcStreamSpec asserts a single-bucket batch rewrites
-    * exactly one partition directory).
+    * direct testing: a bucket refold of the touched buckets.
+    *
+    *  1. The batch, deduplicated on event_id and tagged with its
+    *     [[stateBucket]], is cached once, so the source scan and decode
+    *     run once: the job that fills the cache also observes the touched
+    *     bucket ids (at most numBuckets ints), and the write reads it. The
+    *     cache is dropped when the batch ends, applied or not, so a
+    *     long-running sink holds no block (and writes no checkpoint
+    *     file) past its current batch.
+    *  1. The touched bucket dirs are read with the state schema (the
+    *     fold's output schema, so no schema-inference job) and their
+    *     versions map back to events: `data` → payload, `valid_from` →
+    *     ts.
+    *  1. Stored and batch events are repartitioned by bucket, deduped on
+    *     (bucket, keys, event_id) and folded with [[Scd2.versionChain]]
+    *     over (bucket, keys). Both key sets contain the bucket, so the
+    *     repartition is the only exchange, and the window's sort already
+    *     orders the rows by bucket for the partitioned write: one task
+    *     writes each touched bucket, as one file.
+    *  1. The result is staged under `<statePath>.tmp` and each touched
+    *     bucket dir is swapped in individually.
+    *
+    * The dedup key is equivalent to [[Scd2.apply]]'s event_id dedup over
+    * the same events: the pinned batch is already unique on event_id, and
+    * the versions stored for one key carry distinct event ids, so the
+    * only duplicates are batch events replayed onto a key that already
+    * holds them — exactly what `Scd2.apply(stored ∪ batch)` removes.
+    * Re-applying an already-applied batch therefore leaves every bucket's
+    * content unchanged, and untouched keys in a touched bucket refold to
+    * the identical rows.
     */
   def applyBatchToState(
       batch: DataFrame,
@@ -165,34 +202,55 @@ object CdcStream {
     Dfs.mkdirs(fs, root)
     recoverState(fs, root)
     checkBucketMarker(fs, root, numBuckets)
-    val deduped = batch.dropDuplicates("event_id")
-    val touched = deduped
-      .select(stateBucket(keys, numBuckets).as("b"))
-      .distinct()
-      .collect()
-      .map(_.getInt(0))
-      .sorted
-    if (touched.isEmpty) return
-    val existingDirs = touched
-      .map(b => new HPath(root, s"bucket=$b"))
-      .filter(fs.exists(_))
-      .map(_.toString)
-    val existing =
-      if (existingDirs.nonEmpty) spark.read.parquet(existingDirs.toIndexedSeq: _*)
-      else Scd2.apply(deduped.limit(0), keys) // empty frame with target schema
-    val merged = Scd2.merge(existing, deduped, keys)
-    val tmp = statePath + ".tmp"
-    merged
-      .withColumn("bucket", stateBucket(keys, numBuckets))
-      .write
-      .mode("overwrite")
-      .partitionBy("bucket")
-      .parquet(tmp)
-    touched.foreach { b =>
-      val fresh = new HPath(s"$tmp/bucket=$b")
-      if (fs.exists(fresh)) swapDir(fs, new HPath(root, s"bucket=$b"), fresh)
-    }
-    Dfs.rmTree(fs, new HPath(tmp))
+    val eventCols = keys ++ Seq("event_id", "event_type", "new_values", "ts")
+    val touchedObs = Observation("touched_buckets")
+    val pinned = batch
+      .dropDuplicates("event_id")
+      .select(eventCols.map(col) :+ stateBucket(keys, numBuckets).as("bucket"): _*)
+      .observe(touchedObs, collect_set(col("bucket")).as("buckets"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // fills the cache in one pass, and the observation fires on it
+      pinned.write.format("noop").mode("overwrite").save()
+      val touched = touchedObs.get("buckets").asInstanceOf[scala.collection.Seq[Int]].sorted
+      if (touched.isEmpty) return
+      val existingDirs = touched
+        .map(b => new HPath(root, s"bucket=$b"))
+        .filter(fs.exists(_))
+        .map(_.toString)
+      val events =
+        if (existingDirs.isEmpty) pinned
+        else
+          spark.read
+            .schema(Scd2.versionChain(pinned.drop("bucket"), keys).schema) // no inference job
+            .parquet(existingDirs.toIndexedSeq: _*)
+            .select(
+              keys.map(col) ++ Seq(
+                col("event_id"),
+                col("event_type"),
+                col("data").as("new_values"),
+                col("valid_from").as("ts"),
+                stateBucket(keys, numBuckets).as("bucket")
+              ): _*
+            )
+            .unionByName(pinned)
+      val partition = "bucket" +: keys
+      val tmp = statePath + ".tmp"
+      Scd2
+        .versionChain(
+          events.repartition(col("bucket")).dropDuplicates(partition :+ "event_id"),
+          partition
+        )
+        .write
+        .mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(tmp)
+      touched.foreach { b =>
+        val fresh = new HPath(s"$tmp/bucket=$b")
+        if (fs.exists(fresh)) swapDir(fs, new HPath(root, s"bucket=$b"), fresh)
+      }
+      Dfs.rmTree(fs, new HPath(tmp))
+    } finally pinned.unpersist(blocking = false) // a long-running sink must not accumulate pins
   }
 
   /** Read back the SCD2 state table. A PURE snapshot read — safe to run

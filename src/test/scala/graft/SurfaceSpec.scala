@@ -40,6 +40,19 @@ class SurfaceSpec extends AnyFunSuite {
     assert(SnapshotStore.readLatest(spark, root).get.select("v").as[String].head() === "c")
   }
 
+  test("snapshot store works on a file:// root, not only a bare local path") {
+    val root = Files.createTempDirectory("store-uri").toUri.toString.stripSuffix("/") + "/snaps"
+    assert(root.startsWith("file:"))
+    assert(SnapshotStore.maxVersion(root) === -1L)
+    Seq("a", "b", "c").foreach(v => SnapshotStore.write(Seq(("k1", v)).toDF("k", "v"), root))
+    assert(SnapshotStore.maxVersion(root) === 2L)
+    assert(SnapshotStore.readLatest(spark, root).get.select("v").as[String].head() === "c")
+    assert(SnapshotStore.readPrevious(spark, root).get.select("v").as[String].head() === "b")
+    assert(SnapshotStore.vacuum(root, keep = 1) === Seq(0L, 1L))
+    assert(SnapshotStore.maxVersion(root) === 2L)
+    assert(!Files.exists(java.nio.file.Paths.get(new java.net.URI(s"$root/v=0"))))
+  }
+
   test("event-log sink: partitioned append + pruned readback") {
     val path = Files.createTempDirectory("evlog").toString + "/events"
     val events = Seq(

@@ -179,6 +179,169 @@ class CdcStreamSpec extends AnyFunSuite {
     )
   }
 
+  private val stateKeys = Seq("company_id", "table_name", "key_value")
+
+  /** Every column of an SCD2 table, as comparable strings. */
+  private def fullRows(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
+    df.select(
+      (stateKeys ++ Seq("event_id", "event_type")).map(col) ++ Seq(
+        to_json(col("data")),
+        col("valid_from").cast("string"),
+        col("valid_to").cast("string"),
+        col("is_current").cast("string")
+      ): _*
+    ).collect().map(_.toSeq.map(v => String.valueOf(v))).toSet
+
+  private def bucketOf(keyValue: String, numBuckets: Int): Int =
+    Seq(("c1", "t1", keyValue)).toDF(stateKeys: _*)
+      .select(CdcStream.stateBucket(stateKeys, numBuckets)).as[Int].head()
+
+  test("a rewritten bucket holds exactly one data file, untouched keys included") {
+    val statePath = Files.createTempDirectory("onefile").toString + "/state"
+    val batch1 = mkEvents((1 to 20).map { i =>
+      (s"e$i", "insert", "c1", "t1", s"k$i", ts(f"2024-01-01 00:${i}%02d:00"))
+    }: _*)
+    CdcStream.applyBatchToState(batch1, statePath, numBuckets = 2)
+    val b = bucketOf("k1", 2)
+    val others = (2 to 20).count(i => bucketOf(s"k$i", 2) == b)
+    assert(others > 0, "precondition: k1's bucket also holds untouched keys")
+
+    CdcStream.applyBatchToState(
+      mkEvents(("e99", "update", "c1", "t1", "k1", ts("2024-01-02 00:00:00"))),
+      statePath, numBuckets = 2)
+    val files = new java.io.File(s"$statePath/bucket=$b").listFiles.map(_.getName)
+      .filter(_.endsWith(".parquet"))
+    assert(files.length === 1, s"bucket=$b data files: ${files.mkString(", ")}")
+    assert(CdcStream.readState(spark, statePath).count() === 21)
+  }
+
+  test("a micro-batch leaves no cached block and no checkpoint file behind") {
+    val tmp = Files.createTempDirectory("nopin").toString
+    val statePath = s"$tmp/state"
+    val ckptDir = new java.io.File(s"$tmp/ckpt")
+    val ckptConf = graft.ops.Materialize.CheckpointDirConf
+    val lastRddBefore = spark.sparkContext.parallelize(Seq(1)).id
+    spark.conf.set(ckptConf, ckptDir.toURI.toString)
+    try {
+      CdcStream.applyBatchToState(mkEvents((1 to 8).map { i =>
+        (s"e$i", "insert", "c1", "t1", s"k$i", ts(f"2024-01-01 00:0$i:00"))
+      }: _*), statePath, numBuckets = 4)
+      // the second batch also reads stored buckets
+      CdcStream.applyBatchToState(
+        mkEvents(("e9", "update", "c1", "t1", "k1", ts("2024-01-02 00:00:00"))),
+        statePath, numBuckets = 4)
+    } finally spark.conf.unset(ckptConf)
+    val pinned = spark.sparkContext.getPersistentRDDs.keys.filter(_ > lastRddBefore)
+    assert(pinned.isEmpty, s"RDDs still persisted: $pinned")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f)
+    val written = if (ckptDir.exists) files(ckptDir) else Seq.empty
+    assert(written.isEmpty, s"checkpoint files: ${written.mkString(", ")}")
+    assert(CdcStream.readState(spark, statePath).count() === 9)
+  }
+
+  for (numBuckets <- Seq(1, 4)) {
+    test(s"bucket refold keeps the merge guarantees (numBuckets = $numBuckets)") {
+      val statePath = Files.createTempDirectory("refold").toString + "/state"
+      val batch1 = mkEvents(
+        (1 to 12).map { i =>
+          (s"a$i", "insert", "c1", "t1", s"k$i", ts(f"2024-01-01 00:${i}%02d:00"))
+        } ++ Seq(
+          ("u1", "update", "c1", "t1", "k1", ts("2024-01-03 00:00:00")),
+          ("u2", "update", "c1", "t1", "k2", ts("2024-01-02 00:00:00")),
+          ("d3", "delete", "c1", "t1", "k3", ts("2024-01-02 00:00:00"))
+        ): _*
+      )
+      CdcStream.applyBatchToState(batch1, statePath, numBuckets = numBuckets)
+      val before = CdcStream.readState(spark, statePath)
+
+      // batch 2: a late k1 event between its two versions, a new k2
+      // version, and a replayed batch-1 event
+      val batch2 = mkEvents(
+        ("late", "update", "c1", "t1", "k1", ts("2024-01-02 00:00:00")),
+        ("u2b", "update", "c1", "t1", "k2", ts("2024-01-04 00:00:00")),
+        ("u1", "update", "c1", "t1", "k1", ts("2024-01-03 00:00:00"))
+      )
+      val touchedBuckets = Set(bucketOf("k1", numBuckets), bucketOf("k2", numBuckets))
+      val untouched = (3 to 12).map(i => s"k$i").filter(k => touchedBuckets(bucketOf(k, numBuckets)))
+      assert(untouched.nonEmpty, "precondition: the touched buckets hold untouched keys")
+      val beforeUntouched = fullRows(before.filter(col("key_value").isin(untouched: _*)))
+
+      CdcStream.applyBatchToState(batch2, statePath, numBuckets = numBuckets)
+      val after = CdcStream.readState(spark, statePath)
+
+      // untouched keys in a touched bucket come back identical
+      assert(fullRows(after.filter(col("key_value").isin(untouched: _*))) === beforeUntouched)
+
+      // the late event lands mid-chain with both neighbours' valid_to right
+      val k1 = after.filter(col("key_value") === "k1").orderBy("valid_from")
+        .select("event_id", "valid_to", "is_current").as[(String, Option[Timestamp], Boolean)]
+        .collect().toSeq
+      assert(k1 === Seq(
+        ("a1", Some(ts("2024-01-02 00:00:00")), false),
+        ("late", Some(ts("2024-01-03 00:00:00")), false),
+        ("u1", None, true)
+      ))
+
+      // the final state is the batch fold over every event
+      val expected = fullRows(Scd2.apply(batch1.unionByName(batch2), stateKeys))
+      assert(fullRows(after) === expected)
+
+      // re-applying the same batch is a no-op
+      CdcStream.applyBatchToState(batch2, statePath, numBuckets = numBuckets)
+      assert(fullRows(CdcStream.readState(spark, statePath)) === expected)
+    }
+  }
+
+  test("the sink write plans one exchange, on the bucket, and no sort of its own") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    val statePath = Files.createTempDirectory("sinkplan").toString + "/state"
+    CdcStream.applyBatchToState(mkEvents((1 to 12).map { i =>
+      (s"e$i", "insert", "c1", "t1", s"k$i", ts(f"2024-01-01 00:${i}%02d:00"))
+    }: _*), statePath, numBuckets = 4)
+
+    val helper = new AdaptiveSparkPlanHelper {}
+    val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (helper.find(qe.executedPlan) {
+              case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+                c.outputPath.getName == "state.tmp"
+              case _ => false
+            }.isDefined) writes.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // a second batch, so the write reads stored buckets as well
+      CdcStream.applyBatchToState(mkEvents(
+        ("e99", "update", "c1", "t1", "k1", ts("2024-01-02 00:00:00")),
+        ("e98", "insert", "c1", "t1", "k13", ts("2024-01-02 00:00:00"))
+      ), statePath, numBuckets = 4)
+      val qe = writes.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(qe != null, "the sink write was not observed")
+      val plan = qe.executedPlan
+      val exchanges = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size === 1, s"exchanges:\n$plan")
+      assert(exchanges.head.outputPartitioning.toString.startsWith("hashpartitioning(bucket#"),
+        s"exchange is not on the bucket:\n$plan")
+      // the dedup's sort (a map payload rules out a hash aggregate) and
+      // the window's, which leads with the bucket; none on the bucket
+      // alone, the ordering the partitioned write would add
+      val sortKeys = helper.collect(plan) { case s: SortExec => s }
+        .map(_.sortOrder.map(_.child.references.head.name))
+      assert(sortKeys.size === 2, s"sorts:\n$plan")
+      assert(sortKeys.contains(Seq("bucket") ++ stateKeys ++ Seq("ts", "event_id")), s"sorts:\n$plan")
+      assert(!sortKeys.contains(Seq("bucket")), s"the write added a sort of its own:\n$plan")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("rebucketState grows the modulus without changing content; streamed==batch holds after; single-key batch rewrites one NEW-modulus bucket") {
     val tmp = Files.createTempDirectory("rebucket").toString
     val srcDir = s"$tmp/events"
