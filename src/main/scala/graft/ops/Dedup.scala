@@ -1042,9 +1042,9 @@ object Dedup {
     * multi-band matches, verify, filter. Returns (i = history id, j =
     * batch id, score).
     *
-    * The broadcast is size-guarded (same pattern as `Scd2.merge`): a
-    * backfill-sized batch past `broadcastRowLimit` band rows falls back
-    * to a shuffle join — still over the PRUNED buckets only, so the
+    * The broadcast is size-guarded: a backfill-sized batch past
+    * `broadcastRowLimit` band rows (counted through a clamped `limit`,
+    * so an over-Int limit cannot wrap) falls back to a shuffle join — still over the PRUNED buckets only, so the
     * shuffled history side stays O(matched buckets), not O(index).
     */
   private def joinBands(
@@ -2541,7 +2541,8 @@ object Dedup {
   }
 
   /** Append a batch's partial gram counts (O(batch); creates the index
-    * when absent, validates the recorded gram length when present).
+    * when absent with `nBuckets`, validates the recorded gram length and
+    * keeps the recorded bucket count ([[tableNumBuckets]]) when present).
     * ORDER CONTRACT: probe the batch FIRST ([[incrementalDuplicateSpans]]),
     * then append it — appending first would make the batch's own grams
     * count as history and mark every position duplicated. Replay
@@ -2576,7 +2577,7 @@ object Dedup {
         gramIndexRows(batch, textCol, idCol, k),
         table,
         Seq("gram"),
-        nBuckets
+        tableNumBuckets(spark, table)
       )
     }
   }

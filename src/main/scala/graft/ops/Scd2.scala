@@ -87,70 +87,6 @@ object Scd2 {
     */
   def currentState(scd2: DataFrame): DataFrame = scd2.filter(col("is_current"))
 
-  /** Incremental merge of a batch of events into an existing version
-    * table: recompute the version chain only for keys touched by the
-    * batch (reference J2 point-lookup generalized to a set-wise merge; no
-    * Delta jar in this environment so this is the MERGE equivalent). The
-    * result is the whole table: untouched rows plus the touched keys'
-    * re-windowed chains.
-    *
-    * Not the streaming path: `CdcStream.applyBatchToState` refolds whole
-    * touched state buckets instead (one exchange, no joins), because it
-    * rewrites each touched bucket dir in full anyway. This is the
-    * table-level form for callers that hold `existing` as one frame; no
-    * code in this repository calls it any more, only `Scd2Spec` covers
-    * it (ROADMAP.md records the follow-up: delete it or name the caller
-    * that needs it).
-    *
-    * Scale: `existing` is only scanned for the touched keys (a broadcast
-    * semi-join when the batch is small), and only those groups re-window.
-    * A backfill batch can carry more keys than the driver can broadcast,
-    * so the hint is size-guarded: past `broadcastKeyLimit` distinct keys
-    * the joins fall back to shuffle semi/anti joins (AQE may still
-    * upgrade them at runtime if the actual build side turns out small).
-    * The touched-key set is materialized once ([[Materialize]]) so the
-    * guard's count and both joins reuse it instead of re-running the
-    * batch's distinct three times per micro-batch.
-    */
-  def merge(
-      existing: DataFrame,
-      batch: DataFrame,
-      keys: Seq[String],
-      tsCol: String = "ts",
-      payloadCol: String = "new_values",
-      broadcastKeyLimit: Long = 4000000L
-  ): DataFrame = {
-    val touched = Materialize(batch.select(keys.map(col): _*).distinct())
-    // limit() takes an Int — clamp so an over-Int limit can neither make
-    // it negative (AnalysisException) nor wrap and falsely pass the guard
-    val probe = math.min(broadcastKeyLimit + 1, Int.MaxValue.toLong).toInt
-    val fitsBroadcast = touched.limit(probe).count() <= broadcastKeyLimit
-    val touchedHinted = if (fitsBroadcast) broadcast(touched) else touched
-    val untouched = existing.join(touchedHinted, keys, "left_anti")
-    // rebuild events for touched keys from their existing versions + batch
-    val replay = existing
-      .join(touchedHinted, keys, "left_semi")
-      .select(
-        keys.map(col) ++ Seq(
-          col("event_id"),
-          col("event_type"),
-          col("data").as(payloadCol),
-          col("valid_from").as(tsCol)
-        ): _*
-      )
-      .unionByName(
-        batch.select(
-          keys.map(col) ++ Seq(
-            col("event_id"),
-            col("event_type"),
-            col(payloadCol),
-            col(tsCol)
-          ): _*
-        )
-      )
-    untouched.unionByName(apply(replay, keys, tsCol, payloadCol))
-  }
-
   /** Point-in-time lookup: the version valid at `at` (temporal query over
     * the interval table; reference has only is_current lookups, J2).
     */

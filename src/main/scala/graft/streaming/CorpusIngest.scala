@@ -144,7 +144,8 @@ object CorpusIngest {
     * image/video/semantic ingest analogues: rows that survived
     * (`kept`), rows dropped as duplicates — exact in-batch, near
     * in-batch, or near-dup vs the corpus (`nearDups`) — replays whose
-    * id was already indexed (`replays`), rows REJECTED by the
+    * id was already indexed, or unindexable rows the corpus already
+    * holds ([[NearDupIngest]]; `replays`), rows REJECTED by the
     * identity contract before any dedup ran (`rejected` — null id, or
     * an in-batch duplicate id where the id is the identity; round 17,
     * ADVICE r16: these used to surface inside `nearDups`; null vec_id
@@ -185,17 +186,13 @@ object CorpusIngest {
     * batch hashes into, never the whole index), and (3) the survivors are
     * appended to BOTH the index ([[Dedup.appendToMinHashIndex]], O(batch))
     * and the text corpus. The corpus only ever accretes docs that are not
-    * near-duplicates of anything kept before them.
+    * near-duplicates of anything kept before them. Docs with fewer than
+    * `shingleSize` tokens have no gram set and never index.
     *
-    * Replay safety (at-least-once delivery → exactly-once corpus): the
-    * INDEX is appended before the corpus, so the index over-claims
-    * membership exactly like the exact-ingest bloom. A replayed doc finds
-    * its own indexed copy as a same-id probe hit (`dropSameId = false`)
-    * and is CONFIRMED against the corpus: present → dropped entirely;
-    * absent (the crash window — index appended, corpus append lost) → the
-    * doc is appended to the corpus only, never re-indexed. The reverse
-    * order would re-index replayed docs (duplicate index rows) or lose
-    * crash-window docs silently.
+    * Replay safety (at-least-once delivery → exactly-once corpus) is the
+    * [[NearDupIngest]] loop's: index before corpus, a same-id probe hit
+    * is a replay confirmed against the corpus, crash-window orphans
+    * append to the corpus only.
     */
   def nearDupIngest(
       docs: DataFrame,
@@ -225,17 +222,10 @@ object CorpusIngest {
   /** One near-dup-ingest micro-batch (see [[nearDupIngest]]). Exposed for
     * batch-mode reuse and the spec's streamed==batch comparison.
     *
-    * `compactFanout` is the auto-compaction cadence: when the index
-    * table's files-per-bucket ([[graft.sinks.Sinks.bucketFileFanout]] —
-    * one flat LIST, no data read) exceeds it after this batch's append,
-    * the batch ends with a [[graft.sinks.Sinks.compactBucketed]] pass.
-    * Without it the steady-state ingest appends one file-set per batch
+    * `compactFanout` is the auto-compaction cadence ([[NearDupIngest]]):
+    * without it the steady-state ingest appends one file-set per batch
     * forever — probe latency and LIST cost grow linearly until the index
-    * is an N-files-per-bucket small-file swamp. Safe inline: the
-    * foreachBatch loop IS the index's single writer, so between-batch
-    * compaction is exactly the maintenance window the swap protocol
-    * assumes (crash mid-compact heals on the next entry). `<= 0`
-    * disables.
+    * is an N-files-per-bucket small-file swamp. `<= 0` disables.
     */
   def ingestNearDupBatch(
       batch: DataFrame,
@@ -251,121 +241,46 @@ object CorpusIngest {
       idBloomItems: Long = 1000000L
   ): NearDupIngestStats = {
     val spark = batch.sparkSession
-    // bloom-fronted corpus-id gate (r19 — see [[CorpusIdGate]]): with a
-    // path configured, the unshingleable/orphan membership checks stop
-    // scanning the corpus id column in the steady no-replay state
-    val gate = new CorpusIdGate(spark, corpusPath, "doc_id", idBloomPath, idBloomItems)
-    val rawCnt = batch.count()
-    // identity contract (round 18 — ADVICE r17's null-vec_id finding
-    // generalized to every id-keyed ingest): this loop's replay
-    // detection is the same-id index hit and every dedup decision is an
-    // id-keyed anti-join, and null keys don't join — pre-fix a
-    // null-doc_id (or null-text) row skipped them all and re-appended
-    // on every delivery. Such rows are contract REJECTIONS.
-    val valid = batch
-      .select(col("doc_id"), col("text"))
-      .filter(col("doc_id").isNotNull && col("text").isNotNull)
-    // (1a) in-batch exact dedup, deterministic keeper (smallest doc_id)
-    val wFp = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col("text")))
-      .orderBy(col("doc_id"))
-    val exactKept = valid
-      .withColumn("__rn", row_number().over(wFp))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    // (1b) in-batch near-dup: greedy min-id keeper — a doc pairing with
-    // ANY smaller-id doc is dropped (deterministic; over-drops only on
-    // chains a~b~c with a≁c, the standard conservative LSH-dedup rule).
-    // Default posting-list caps apply: a boilerplate-heavy batch stays
-    // bounded.
-    val inBatchPairs =
-      Dedup.minHashLshPairs(exactKept, "text", "doc_id", shingleSize, numHashes, bands, threshold)
-    val inBatchDrops = inBatchPairs.select(col("j").as("doc_id")).distinct()
-    val batchKept = graft.ops.Materialize(
-      exactKept.join(inBatchDrops, Seq("doc_id"), "left_anti")
-    ) // feeds probe + two appends: compute once
-    // (2) probe the at-rest index; same-id hits are replays, not near-dups
-    val (nearDupIds, replayIds) =
-      if (spark.catalog.tableExists(indexTable)) {
-        val hits = graft.ops.Materialize(
-          Dedup.incrementalNearDups(
-            spark, batchKept, indexTable, "text", "doc_id",
-            shingleSize, numHashes, bands, threshold, dropSameId = false)
-        )
-        (
-          hits.filter(col("i") =!= col("j")).select(col("j").as("doc_id")).distinct(),
-          hits.filter(col("i") === col("j")).select(col("j").as("doc_id")).distinct()
-        )
-      } else {
-        val none = batchKept.select(col("doc_id")).limit(0)
-        (none, none)
-      }
-    // UNSHINGLEABLE docs (fewer than shingleSize tokens — round 18,
-    // the video ingest's unshingleable-clip rule applied to text): no
-    // gram set means no index entry, so the same-id replay path can
-    // NEVER fire for them and a redelivery would re-append to the
-    // corpus forever. Like sub-2-frame clips, they idempote via the
-    // corpus anti-join instead: append only if the corpus does not
-    // hold their id; a corpus-present copy counts as a replay. The
-    // grammability flag is computed ONCE, inside the pinned block —
-    // the splits below read it instead of re-tokenizing the hot path.
-    val fresh = graft.ops.Materialize(
-      batchKept
-        .join(nearDupIds, Seq("doc_id"), "left_anti")
-        .join(replayIds, Seq("doc_id"), "left_anti")
-        .withColumn(
-          "__gram",
-          size(graft.functions.Fns.tokens(col("text"))) >= shingleSize)
-    )
-    val freshCnt = fresh.count()
-    def anti(df: DataFrame): DataFrame = gate.absent(df)
-    val unshFresh = fresh.filter(!col("__gram")).select(col("doc_id"), col("text"))
-    val unshFreshCnt = unshFresh.count()
-    val unshAppend =
-      if (unshFreshCnt == 0L) unshFresh else graft.ops.Materialize(anti(unshFresh))
-    val unshReplays = unshFreshCnt - unshAppend.count()
-    // (3) index append FIRST (the over-claiming membership structure —
-    // see the replay-safety scaladoc), then corpus; unshingleable rows
-    // produce no index rows by construction
-    if (freshCnt > 0)
-      Dedup.appendToMinHashIndex(
-        fresh.select(col("doc_id"), col("text")),
-        "text", "doc_id", indexTable, shingleSize, numHashes, bands, nBuckets)
-    // (4) corpus append: fresh docs (minus corpus-present unshingleable
-    // redeliveries) + crash-window orphans (indexed under their own id
-    // but missing from the corpus)
-    val orphans = graft.ops.Materialize(
-      anti(batchKept.join(replayIds, Seq("doc_id"), "left_semi")))
-    val toCorpus =
-      (if (unshReplays == 0L) fresh.select(col("doc_id"), col("text"))
-       else fresh.filter(col("__gram")).select(col("doc_id"), col("text"))
-         .unionByName(unshAppend))
-        .unionByName(orphans)
-    if (freshCnt - unshReplays + orphans.count() > 0) {
-      // bloom BEFORE the corpus append (the over-claiming direction —
-      // see [[CorpusIdGate]]); toCorpus unions pinned frames, so the
-      // id projection reads materialized blocks, not a re-run
-      gate.update(toCorpus.select(col("doc_id")))
-      toCorpus.select(col("doc_id"), col("text")).write.mode(SaveMode.Append).parquet(corpusPath)
-    }
-    // (5) cadence-guarded maintenance: compact the index when append
-    // fanout crosses the threshold (see scaladoc). The MinHash-aware
-    // entry point also stamps the contract props on a legacy index
-    // during the same pass (verdict r16 #6).
-    if (compactFanout > 0 && spark.catalog.tableExists(indexTable) &&
-      graft.sinks.Sinks.bucketFileFanout(spark, indexTable) > compactFanout)
-      Dedup.compactTextMinHashIndex(spark, indexTable, numHashes, bands)
-    val replayCnt = replayIds.count()
-    // LEDGER: kept + nearDups + replays + rejected == batch.count() —
-    // corpus-present unshingleable redeliveries move from kept to
-    // replays, identity-null rows land in rejected
-    val validCnt = valid.count()
-    NearDupIngestStats(
-      kept = freshCnt - unshReplays,
-      nearDups = validCnt - freshCnt - replayCnt,
-      replays = replayCnt + unshReplays,
-      rejected = rawCnt - validCnt
-    )
+    NearDupIngest.ingestBatch(batch, corpusPath, indexTable, compactFanout,
+      idBloomPath, idBloomItems, NearDupIngest.Spec(
+        idCol = "doc_id",
+        admit = { b =>
+          // identity contract (round 18): replay detection is the
+          // same-id index hit and every dedup decision an id-keyed
+          // anti-join, and null keys don't join — a null doc_id (or
+          // null text) would re-append on every delivery, so such rows
+          // are contract REJECTIONS
+          val valid = b
+            .select(col("doc_id"), col("text"))
+            .filter(col("doc_id").isNotNull && col("text").isNotNull)
+          // in-batch exact dedup, deterministic keeper (smallest doc_id);
+          // its losers count as near-dups
+          val wFp = org.apache.spark.sql.expressions.Window
+            .partitionBy(md5(col("text")))
+            .orderBy(col("doc_id"))
+          val exactKept = valid
+            .withColumn("__rn", row_number().over(wFp))
+            .filter(col("__rn") === 1)
+            .drop("__rn")
+          val validCnt = valid.count()
+          NearDupIngest.Admitted(exactKept, validCnt, validCnt)
+        },
+        // fewer than shingleSize tokens: no gram set, no index entry
+        indexable = Some(size(graft.functions.Fns.tokens(col("text"))) >= shingleSize),
+        // default posting-list caps apply: a boilerplate-heavy batch
+        // stays bounded
+        pairs = Dedup.minHashLshPairs(
+          _, "text", "doc_id", shingleSize, numHashes, bands, threshold),
+        probe = (u, dropSameId) => Dedup.incrementalNearDups(
+          spark, u, indexTable, "text", "doc_id",
+          shingleSize, numHashes, bands, threshold, dropSameId = dropSameId),
+        appendIndex = Dedup.appendToMinHashIndex(
+          _, "text", "doc_id", indexTable, shingleSize, numHashes, bands, nBuckets),
+        // the MinHash-aware entry point also stamps the contract props on
+        // a legacy index during the same pass (verdict r16 #6)
+        compact = () => Dedup.compactTextMinHashIndex(spark, indexTable, numHashes, bands),
+        corpusRows = _.select(col("doc_id"), col("text"))
+      ))
   }
 
   /** Streaming SEMANTIC-dedup ingest — [[nearDupIngest]]'s embedding
@@ -380,12 +295,8 @@ object CorpusIngest {
     * index ([[Dedup.appendToEmbeddingLshIndex]], O(batch)) and the
     * vector corpus.
     *
-    * Replay safety is the [[nearDupIngest]] protocol verbatim:
-    * index-before-corpus ordering makes the index over-claim, a
-    * replayed vector finds its own indexed copy as a same-id hit
-    * (`dropSameId = false`) and is confirmed against the corpus —
-    * present → dropped, absent (crash window) → corpus-only append,
-    * never re-indexed.
+    * Replay safety is the [[NearDupIngest]] loop's, like
+    * [[nearDupIngest]]'s; every admitted vector indexes.
     *
     * SIZING: `bitsPerBand` follows the constant-bucket rule
     * ([[Dedup.embeddingNearDupPairs]] scaladoc) against the CORPUS the
@@ -437,96 +348,42 @@ object CorpusIngest {
       idBloomItems: Long = 1000000L
   ): NearDupIngestStats = {
     val spark = batch.sparkSession
-    // bloom-fronted corpus-id gate (r19 — see [[CorpusIdGate]]): with a
-    // path configured, the crash-window orphan check stops scanning the
-    // corpus id column in the steady no-replay state
-    val gate = new CorpusIdGate(spark, corpusPath, "vec_id", idBloomPath, idBloomItems)
-    // (1a) identity contract + in-batch id dedup (a batch can carry the
-    // same vec_id twice — deterministic keeper: first by id, then any
-    // one row; ids are the identity here, unlike text where the
-    // fingerprint is). A NULL vec_id is a contract rejection (ADVICE
-    // r17): it would survive dropDuplicates but never match the
-    // id-keyed anti-joins or the i===j replay check (null keys don't
-    // join), so pre-fix it was counted as kept and RE-APPENDED to the
-    // index and corpus on every batch that carried one. A DEGENERATE
-    // embedding — null, wrong width, or with a null element — is the
-    // same class (ADVICE r18): it derives no LSH band keys, so the row
-    // is never indexed, never replay-detected, and re-appended on every
-    // redelivery; reject it into `rejected` like the null id.
-    // Materialized: it feeds the in-batch pairing, the batchKept
-    // anti-join, AND the ledger count — unpinned, the scan+dedup
-    // shuffle would run thrice.
-    val idKept = graft.ops.Materialize(
-      batch
-        .select(col("vec_id"), col("embedding"))
-        .filter(
-          col("vec_id").isNotNull &&
-            col("embedding").isNotNull && size(col("embedding")) === dim &&
-            !exists(col("embedding"), v => v.isNull)
-        )
-        .dropDuplicates("vec_id"))
-    // (1b) in-batch near-dup: greedy min-id keeper over LSH pairs
-    val inBatchPairs = Dedup.embeddingNearDupPairs(
-      idKept, "embedding", "vec_id", dim, bands, bitsPerBand, threshold, seed)
-    val inBatchDrops = inBatchPairs.select(col("j").as("vec_id")).distinct()
-    val batchKept = graft.ops.Materialize(
-      idKept.join(inBatchDrops, Seq("vec_id"), "left_anti")
-    ) // feeds probe + two appends: compute once
-    // (2) probe the at-rest index; same-id hits are replays
-    val (nearDupIds, replayIds) =
-      if (spark.catalog.tableExists(indexTable)) {
-        val hits = graft.ops.Materialize(
-          Dedup.incrementalSemanticNearDups(
-            spark, batchKept, indexTable, "embedding", "vec_id",
-            dim, bands, bitsPerBand, seed, threshold, dropSameId = false)
-        )
-        (
-          hits.filter(col("i") =!= col("j")).select(col("j").as("vec_id")).distinct(),
-          hits.filter(col("i") === col("j")).select(col("j").as("vec_id")).distinct()
-        )
-      } else {
-        val none = batchKept.select(col("vec_id")).limit(0)
-        (none, none)
-      }
-    val fresh = graft.ops.Materialize(
-      batchKept
-        .join(nearDupIds, Seq("vec_id"), "left_anti")
-        .join(replayIds, Seq("vec_id"), "left_anti")
-    )
-    val freshCnt = fresh.count()
-    // (3) index append FIRST (the over-claiming membership structure)
-    if (freshCnt > 0)
-      Dedup.appendToEmbeddingLshIndex(
-        fresh, "embedding", "vec_id", indexTable, dim, bands, bitsPerBand, seed, nBuckets)
-    // (4) corpus append: fresh vectors + crash-window orphans
-    val orphans = graft.ops.Materialize(
-      gate.absent(batchKept.join(replayIds, Seq("vec_id"), "left_semi"))
-    )
-    val toCorpus = fresh.unionByName(orphans)
-    if (freshCnt + orphans.count() > 0) {
-      // bloom BEFORE the corpus append (the over-claiming direction —
-      // see [[CorpusIdGate]])
-      gate.update(toCorpus.select(col("vec_id")))
-      toCorpus
-        .select(col("vec_id"), col("embedding"))
-        .write.mode(SaveMode.Append).parquet(corpusPath)
-    }
-    // (5) cadence-guarded index compaction
-    if (compactFanout > 0 && spark.catalog.tableExists(indexTable) &&
-      graft.sinks.Sinks.bucketFileFanout(spark, indexTable) > compactFanout)
-      graft.sinks.Sinks.compactBucketed(spark, indexTable)
-    val replayCnt = replayIds.count()
-    // LEDGER (round 17 — the ImageIngest ADVICE r16 fix applied to the
-    // same shape here): vec_id is the identity, so the losers of the
-    // in-batch id dedup are contract rejections, not near-dups.
-    // kept + nearDups + replays + rejected == batch.count().
-    val idKeptCnt = idKept.count()
-    NearDupIngestStats(
-      kept = freshCnt,
-      nearDups = idKeptCnt - freshCnt - replayCnt,
-      replays = replayCnt,
-      rejected = batch.count() - idKeptCnt
-    )
+    NearDupIngest.ingestBatch(batch, corpusPath, indexTable, compactFanout,
+      idBloomPath, idBloomItems, NearDupIngest.Spec(
+        idCol = "vec_id",
+        admit = { b =>
+          // identity contract + in-batch id dedup: vec_id is the identity
+          // (unlike text, where the fingerprint is), so in-batch
+          // duplicate ids are contract rejections; deterministic keeper:
+          // first by id, then any one row. A NULL vec_id (ADVICE r17)
+          // never matches the id-keyed anti-joins or the replay check,
+          // and a DEGENERATE embedding — null, wrong width, or with a
+          // null element (ADVICE r18) — derives no LSH band keys; either
+          // would re-append on every redelivery, so both are rejected.
+          // Pinned: it feeds the in-batch pairing, the keeper join and
+          // the ledger count.
+          val idKept = graft.ops.Materialize(
+            b.select(col("vec_id"), col("embedding"))
+              .filter(
+                col("vec_id").isNotNull &&
+                  col("embedding").isNotNull && size(col("embedding")) === dim &&
+                  !exists(col("embedding"), v => v.isNull)
+              )
+              .dropDuplicates("vec_id"))
+          val idKeptCnt = idKept.count()
+          NearDupIngest.Admitted(idKept, idKeptCnt, idKeptCnt)
+        },
+        indexable = None, // degenerate embeddings were rejected above
+        pairs = Dedup.embeddingNearDupPairs(
+          _, "embedding", "vec_id", dim, bands, bitsPerBand, threshold, seed),
+        probe = (u, dropSameId) => Dedup.incrementalSemanticNearDups(
+          spark, u, indexTable, "embedding", "vec_id",
+          dim, bands, bitsPerBand, seed, threshold, dropSameId = dropSameId),
+        appendIndex = Dedup.appendToEmbeddingLshIndex(
+          _, "embedding", "vec_id", indexTable, dim, bands, bitsPerBand, seed, nBuckets),
+        compact = () => graft.sinks.Sinks.compactBucketed(spark, indexTable),
+        corpusRows = _.select(col("vec_id"), col("embedding"))
+      ))
   }
 
   /** Existence through Hadoop's FileSystem API — resolves against

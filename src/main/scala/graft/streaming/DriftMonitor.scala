@@ -177,22 +177,6 @@ object DriftMonitor {
       curPath
     )
 
-  /** Streaming loop over [[ingestGroupedDriftBatch]]. */
-  def groupedDriftIngest(
-      rows: DataFrame,
-      groupCol: String,
-      keyCol: String,
-      curPath: String,
-      checkpoint: String
-  ): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestGroupedDriftBatch(batch, batchId, groupCol, keyCol, curPath)
-        ()
-      }
-      .start()
-
   /** Freeze the grouped reference count table (group, key, n). */
   def writeGroupedReference(
       reference: DataFrame,

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous maintenance of a BOUNDED at-rest heavy-hitter summary —
   * the streaming companion to [[graft.ops.Sketches.heavyHitters]]'s
@@ -76,24 +75,6 @@ object HeavyHitterIngest {
       path,
       finish = m => mgPrune(m, itemCol, capacity)
     )
-
-  /** The streaming loop. `rows` must contain `itemCol` (one row per
-    * item occurrence — pre-explode tokens upstream).
-    */
-  def heavyHitterIngest(
-      rows: DataFrame,
-      itemCol: String,
-      capacity: Int,
-      path: String,
-      checkpoint: String
-  ): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestHeavyHitterBatch(batch, batchId, itemCol, capacity, path)
-        ()
-      }
-      .start()
 
   /** Snapshot read of the live summary (heals a mid-swap crash first,
     * like every at-rest reader in the engine).

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -27,14 +27,13 @@ import graft.streaming.CorpusIngest.NearDupIngestStats
   * Pointing a family at the OTHER family's index fails closed at the
   * index layer (distinct props keys + max(band) data pins).
   *
-  * Replay safety is the [[CorpusIngest.nearDupIngest]] protocol
-  * verbatim: index-before-corpus ordering makes the index over-claim, a
-  * replayed image finds its own indexed copy as a same-id hit
-  * (`dropSameId = false`) and is confirmed against the corpus —
-  * present → dropped, absent (crash window) → corpus-only append,
-  * never re-indexed. Undecodable images hash to null, never index, and
-  * pass straight to the corpus append (dropping them silently would
-  * lose rows; flagging is quality scoring's job, not dedup's).
+  * Replay safety is the [[NearDupIngest]] loop's: index-before-corpus
+  * ordering, a same-id probe hit is a replay confirmed against the
+  * corpus, crash-window orphans append to the corpus only. Undecodable
+  * images hash to null and never index; like every unindexable unit
+  * they append once through the corpus membership check (dropping them
+  * silently would lose rows; flagging is quality scoring's job, not
+  * dedup's), and a redelivered one the corpus holds counts as a replay.
   *
   * DETERMINISM (ADVICE r15): the (doc_id, media, hash) frame comes
   * from ONE `mapPartitions` pass over the deduped batch
@@ -93,98 +92,34 @@ object ImageIngest {
       idBloomItems: Long = 1000000L
   ): NearDupIngestStats = {
     val spark = batch.sparkSession
-    // bloom-fronted corpus-id gate (r19 — see [[CorpusIngest.CorpusIdGate]]):
-    // with a path configured, the orphan/undecodable membership checks
-    // stop scanning the corpus id column in the steady no-replay state
-    val gate =
-      new CorpusIngest.CorpusIdGate(spark, corpusPath, "doc_id", idBloomPath, idBloomItems)
     val bar = maxHamming.getOrElse(family.defaultMaxHamming)
     val hc = family.hashCol
-    // (1a) identity + in-batch id dedup. doc_id is the replay key — a
-    // row without one cannot be idempotent and is excluded here, by
-    // contract (see scaladoc), not dropped by a join's null semantics.
-    val idKept = batch
-      .select(col("doc_id"), col("media"))
-      .filter(col("doc_id").isNotNull)
-      .dropDuplicates("doc_id")
-    // ONE decode per kept image per batch, hash derived from the row
-    // being stored (single mapPartitions pass — no join back onto a
-    // nondeterministic keeper); every later stage — in-batch pairing,
-    // the index probe, the undecodable split, and the index append —
-    // reads the HASH column instead of re-decoding the blob.
-    val hashed = Materialize(family.hashWithMedia(idKept))
-    // (1b) in-batch near-dup: greedy min-id keeper over band pairs
-    val inBatchPairs = Dedup.imageHashPairs(family)(hashed.select(col("doc_id"), col(hc)), bar)
-    val inBatchDrops = inBatchPairs.select(col("j").as("doc_id")).distinct()
-    val batchKept = Materialize(hashed.join(inBatchDrops, Seq("doc_id"), "left_anti"))
-    // (2) probe the at-rest index; same-id hits are replays
-    val (nearDupIds, replayIds) =
-      if (spark.catalog.tableExists(indexTable)) {
-        val hits = Materialize(
-          Dedup.incrementalImageHashDups(family)(
-            spark, batchKept.select(col("doc_id"), col(hc)), indexTable, bar,
-            dropSameId = false)
-        )
-        (
-          hits.filter(col("i") =!= col("j")).select(col("j").as("doc_id")).distinct(),
-          hits.filter(col("i") === col("j")).select(col("j").as("doc_id")).distinct()
-        )
-      } else {
-        val none = batchKept.select(col("doc_id")).limit(0)
-        (none, none)
-      }
-    val fresh = Materialize(
-      batchKept
-        .join(nearDupIds, Seq("doc_id"), "left_anti")
-        .join(replayIds, Seq("doc_id"), "left_anti")
-    )
-    // Undecodable images never enter the index, so the same-id replay
-    // protocol cannot see their redelivery — without a direct corpus
-    // membership check a replayed undecodable row would APPEND TWICE.
-    // Split them out: decodable fresh rows are replay-safe through the
-    // index; undecodable ones idempote via the corpus anti-join (the
-    // orphan path's mechanism).
-    val undecodable = Materialize(fresh.filter(col(hc).isNull))
-    val freshDecodable = Materialize(fresh.filter(col(hc).isNotNull))
-    val freshCnt = freshDecodable.count()
-    // (3) index append FIRST (the over-claiming membership structure)
-    if (freshCnt > 0)
-      Dedup.appendToImageHashIndex(family)(
-        freshDecodable.select(col("doc_id"), col(hc)), indexTable, nBuckets)
-    // (4) corpus append: fresh images + crash-window orphans +
-    //     corpus-absent undecodables
-    val orphans = Materialize(
-      gate.absent(batchKept.join(replayIds, Seq("doc_id"), "left_semi"))
-        .unionByName(gate.absent(undecodable))
-    )
-    val toCorpus = freshDecodable.unionByName(orphans)
-    if (freshCnt + orphans.count() > 0) {
-      // bloom BEFORE the corpus append (the over-claiming direction —
-      // see [[CorpusIngest.CorpusIdGate]])
-      gate.update(toCorpus.select(col("doc_id")))
-      toCorpus
-        .select(col("doc_id"), col("media"))
-        .write.mode(SaveMode.Append).parquet(corpusPath)
-    }
-    // (5) cadence-guarded index compaction
-    if (compactFanout > 0 && spark.catalog.tableExists(indexTable) &&
-      graft.sinks.Sinks.bucketFileFanout(spark, indexTable) > compactFanout)
-      graft.sinks.Sinks.compactBucketed(spark, indexTable)
-    val replayCnt = replayIds.count()
-    // LEDGER (round 17 — ADVICE r16 / verdict #2): the dedup arithmetic
-    // is based on the POST-contract-filter count (hashed == idKept, one
-    // row per non-null doc_id), so contract-rejected rows surface as
-    // `rejected`, never as phantom near-dups. kept counts decodable
-    // appends plus undecodable pass-throughs (observability on the
-    // replay edge: a replayed undecodable row recounts as kept even
-    // though the corpus anti-join makes its append a no-op).
-    // kept + nearDups + replays + rejected == batch.count().
-    val idKeptCnt = hashed.count()
-    NearDupIngestStats(
-      kept = freshCnt + undecodable.count(),
-      nearDups = idKeptCnt - freshCnt - undecodable.count() - replayCnt,
-      replays = replayCnt,
-      rejected = batch.count() - idKeptCnt
-    )
+    NearDupIngest.ingestBatch(batch, corpusPath, indexTable, compactFanout,
+      idBloomPath, idBloomItems, NearDupIngest.Spec(
+        idCol = "doc_id",
+        admit = { b =>
+          // identity + in-batch id dedup: doc_id is the replay key — a
+          // row without one cannot be idempotent and is excluded here,
+          // by contract (see scaladoc), not dropped by a join's null
+          // semantics. Then ONE decode per kept image, the hash derived
+          // from the row being stored (single mapPartitions pass — no
+          // join back onto a nondeterministic keeper); every later stage
+          // reads the HASH column instead of re-decoding the blob.
+          val hashed = Materialize(family.hashWithMedia(
+            b.select(col("doc_id"), col("media"))
+              .filter(col("doc_id").isNotNull)
+              .dropDuplicates("doc_id")))
+          val idKeptCnt = hashed.count()
+          NearDupIngest.Admitted(hashed, idKeptCnt, idKeptCnt)
+        },
+        indexable = Some(col(hc).isNotNull), // undecodable images hash to null
+        pairs = u => Dedup.imageHashPairs(family)(u.select(col("doc_id"), col(hc)), bar),
+        probe = (u, dropSameId) => Dedup.incrementalImageHashDups(family)(
+          spark, u.select(col("doc_id"), col(hc)), indexTable, bar, dropSameId = dropSameId),
+        appendIndex = u => Dedup.appendToImageHashIndex(family)(
+          u.select(col("doc_id"), col(hc)), indexTable, nBuckets),
+        compact = () => graft.sinks.Sinks.compactBucketed(spark, indexTable),
+        corpusRows = _.select(col("doc_id"), col("media"))
+      ))
   }
 }

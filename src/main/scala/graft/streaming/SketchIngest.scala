@@ -178,25 +178,6 @@ object SketchIngest {
       }
       .start()
 
-  /** Streaming loop over [[ingestAdditiveBatch]] — continuous
-    * maintenance of a multi-measure materialized aggregate.
-    */
-  def additiveIngest(
-      rows: DataFrame,
-      fold: DataFrame => DataFrame,
-      keyCols: Seq[String],
-      measureCols: Seq[String],
-      path: String,
-      checkpoint: String
-  ): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestAdditiveBatch(batch, batchId, fold, keyCols, measureCols, path)
-        ()
-      }
-      .start()
-
   /** Restore a complete live dir after a crash mid-swap: a missing live
     * dir with `.new` beside it promotes `.new` (complete by protocol
     * order); missing live with only `.old` restores the previous

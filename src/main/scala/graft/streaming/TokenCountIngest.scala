@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Bpe
 
@@ -58,22 +57,4 @@ object TokenCountIngest {
       measureCols = Seq("n_docs", "n_bpe"),
       path = path
     )
-
-  /** Streaming loop over [[ingestTokenCountBatch]]. */
-  def tokenCountIngest(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      groupCol: String,
-      modelTable: String,
-      path: String,
-      checkpoint: String
-  ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestTokenCountBatch(batch, batchId, textCol, idCol, groupCol, modelTable, path)
-        ()
-      }
-      .start()
 }

@@ -80,15 +80,13 @@ import graft.streaming.CorpusIngest.NearDupIngestStats
   * previous union+dropDuplicates kept an arbitrary copy (and with it
   * a nondeterministic gram set) if the redelivered bytes differed.
   *
-  * Replay safety is the [[CorpusIngest.nearDupIngest]] protocol
-  * verbatim at CLIP granularity: index-before-corpus ordering makes
-  * the index over-claim, a replayed clip finds its own indexed copy as
-  * a same-id hit (`dropSameId = false`) and is confirmed against the
-  * corpus — present → dropped, absent (crash window) → corpus-only
-  * append, never re-indexed. Clips with fewer than two DECODABLE
-  * frames have no gram set ([[Dedup.videoShingles]] excludes them), so
-  * like undecodable images they never enter the index and idempote via
-  * the corpus anti-join instead.
+  * Replay safety is the [[NearDupIngest]] loop's at CLIP granularity:
+  * index-before-corpus ordering, a same-id probe hit is a replay
+  * confirmed against the corpus, crash-window orphans append to the
+  * corpus only. Clips with fewer than two DECODABLE frames have no gram
+  * set ([[Dedup.videoShingles]] excludes them), so like undecodable
+  * images they never enter the index and idempote through the corpus
+  * membership check instead.
   *
   * DETERMINISM (the ImageIngest ADVICE-r15 contract): the kept frame
   * rows are MATERIALIZED before shingling, so the grams — and the
@@ -174,15 +172,6 @@ object VideoIngest {
       idBloomItems: Long = 1000000L
   ): NearDupIngestStats = {
     val spark = batch.sparkSession
-    // bloom-fronted corpus-CLIP-id gate (r19 — see
-    // [[CorpusIngest.CorpusIdGate]]): the corpus stores frame rows, so
-    // the membership checks probe clip ids against the video_id column;
-    // with a path configured, the unshingleable/orphan checks (and the
-    // completeness gate's stale check, via its own view below) stop
-    // scanning the corpus in the steady no-replay state
-    val gate = new CorpusIngest.CorpusIdGate(
-      spark, corpusPath, "doc_id", idBloomPath, idBloomItems,
-      corpusIdCol = "video_id", distinctCorpusIds = true)
     pendingMaxAgeBatches.foreach(k =>
       require(k >= 1, s"pendingMaxAgeBatches must be >= 1 (a clip always gets at least " +
         s"its arrival batch plus one to complete), got $k"))
@@ -196,7 +185,6 @@ object VideoIngest {
       "pendingMaxAgeBatches is set but the stream has no expected_frames column — " +
         "the completeness gate (and therefore the age bound) only runs on streams that " +
         "declare it; drop the bound or add the column")
-    val rawCnt = batch.count()
     // (1a) identity + in-batch frame dedup, materialized so every
     // later stage (shingles, index, corpus append) reads the SAME rows
     val contractCols = Seq(col("video_id"), col("frame_idx"), col("media")) ++
@@ -208,10 +196,9 @@ object VideoIngest {
         .filter(col("video_id").isNotNull)
         .dropDuplicates("video_id", "frame_idx")
     )
-    val rejectedFrames = rawCnt - batchFrames.count()
     // a pre-r17 crash-window video index has no modality prop; the
-    // cross-modality check in step (2)'s probe would brick the loop on
-    // it before any maintenance pass could stamp it — adopt it here,
+    // cross-modality check in the probe would brick the loop on it
+    // before any maintenance pass could stamp it — adopt it here,
     // owner-declared (verdict r16 #6)
     if (spark.catalog.tableExists(indexTable))
       Dedup.stampVideoMinHashIndexIfLegacy(spark, indexTable, numHashes, bands)
@@ -227,85 +214,37 @@ object VideoIngest {
       if (hasExpected)
         Materialize(workFrames.select(col("video_id"), col("frame_idx"), col("media")))
       else workFrames
-    val batchClips = keptFrames.select(col("video_id").as("doc_id")).distinct()
-    // ONE decode+gram pass per batch; everything downstream reads grams
-    val shingled = Materialize(Dedup.videoShingles(keptFrames))
-    // clips too short/undecodable to gram: corpus-only, never indexed
-    val unshingleable = Materialize(
-      batchClips.join(shingled.select(col("doc_id")), Seq("doc_id"), "left_anti"))
-    // (1c) in-batch near-dup: greedy min-id keeper over EXACT-verified
-    // pairs (the inline form — both gram sets are in the batch)
-    val inBatchPairs =
-      Dedup.videoNearDupPairsFromShingles(shingled, threshold, numHashes, bands)
-    val inBatchDrops = inBatchPairs.select(col("j").as("doc_id")).distinct()
-    val batchKept = Materialize(shingled.join(inBatchDrops, Seq("doc_id"), "left_anti"))
-    // (2) probe the at-rest index; same-id hits are replays
-    val (nearDupIds, replayIds) =
-      if (spark.catalog.tableExists(indexTable)) {
-        val hits = Materialize(
-          Dedup.incrementalVideoNearDupsFromShingles(
-            spark, batchKept, indexTable, numHashes, bands, threshold, dropSameId = false)
-        )
-        (
-          hits.filter(col("i") =!= col("j")).select(col("j").as("doc_id")).distinct(),
-          hits.filter(col("i") === col("j")).select(col("j").as("doc_id")).distinct()
-        )
-      } else {
-        val none = batchKept.select(col("doc_id")).limit(0)
-        (none, none)
-      }
-    val fresh = Materialize(
-      batchKept
-        .join(nearDupIds, Seq("doc_id"), "left_anti")
-        .join(replayIds, Seq("doc_id"), "left_anti")
-    )
-    val freshCnt = fresh.count()
-    // (3) index append FIRST (the over-claiming membership structure)
-    if (freshCnt > 0)
-      Dedup.appendToVideoIndexFromShingles(fresh, indexTable, numHashes, bands, nBuckets)
-    // (4) corpus append (frame rows of kept clips): fresh clips +
-    //     crash-window orphans + corpus-absent unshingleable clips
-    def corpusAnti(clips: DataFrame): DataFrame = gate.absent(clips)
-    // unshingleable clips idempote via the corpus anti-join; a
-    // corpus-PRESENT one is a redelivery and counts as a REPLAY, not a
-    // keep (round 18 — ledger parity with the text surface: pre-fix a
-    // source stuck re-sending a short clip read as steady-state
-    // kept=1/replays=0, the opposite of the redelivery signal the
-    // counters exist to expose)
-    val unshCnt = unshingleable.count()
-    val unshAppend =
-      if (unshCnt == 0L) unshingleable else Materialize(corpusAnti(unshingleable))
-    val unshReplays = unshCnt - unshAppend.count()
-    val orphanClips = Materialize(
-      corpusAnti(batchKept.join(replayIds, Seq("doc_id"), "left_semi").select(col("doc_id")))
-        .unionByName(unshAppend)
-    )
-    val toCorpusClips =
-      fresh.select(col("doc_id")).unionByName(orphanClips)
-    if (freshCnt + orphanClips.count() > 0) {
-      // bloom BEFORE the corpus append (the over-claiming direction —
-      // see [[CorpusIngest.CorpusIdGate]]); the filter holds CLIP ids
-      gate.update(toCorpusClips)
-      keptFrames
-        .join(toCorpusClips.withColumnRenamed("doc_id", "video_id"), Seq("video_id"),
-          "left_semi")
-        .write.mode(SaveMode.Append).parquet(corpusPath)
-    }
-    // (5) cadence-guarded index compaction; the MinHash-aware entry
-    // point stamps the modality prop on a legacy index (verdict r16 #6)
-    if (compactFanout > 0 && spark.catalog.tableExists(indexTable) &&
-      graft.sinks.Sinks.bucketFileFanout(spark, indexTable) > compactFanout)
-      Dedup.compactVideoMinHashIndex(spark, indexTable, numHashes, bands)
-    val replayCnt = replayIds.count()
-    NearDupIngestStats(
-      kept = freshCnt + unshCnt - unshReplays,
-      nearDups = batchClips.count() - freshCnt - unshCnt - replayCnt,
-      replays = replayCnt + unshReplays,
-      rejected = rejectedFrames,
-      deferred = deferredClips,
-      staleDropped = staleClips,
-      agedOut = agedOutClips
-    )
+    def grams(u: DataFrame): DataFrame = u.select(col("doc_id"), col("shingles"))
+    val stats = NearDupIngest.ingestBatch(batch, corpusPath, indexTable, compactFanout,
+      idBloomPath, idBloomItems, NearDupIngest.Spec(
+        idCol = "doc_id",
+        admit = { _ =>
+          // (1c) ONE decode+gram pass per batch over the clips the gate
+          // released; a clip too short/undecodable to gram keeps a null
+          // gram set
+          val clips = Materialize(
+            keptFrames.select(col("video_id").as("doc_id")).distinct()
+              .join(Dedup.videoShingles(keptFrames), Seq("doc_id"), "left"))
+          NearDupIngest.Admitted(clips, batchFrames.count(), clips.count())
+        },
+        indexable = Some(col("shingles").isNotNull),
+        // EXACT-verified pairs (the inline form — both gram sets are in
+        // the batch)
+        pairs = u => Dedup.videoNearDupPairsFromShingles(grams(u), threshold, numHashes, bands),
+        probe = (u, dropSameId) => Dedup.incrementalVideoNearDupsFromShingles(
+          spark, grams(u), indexTable, numHashes, bands, threshold, dropSameId = dropSameId),
+        appendIndex = u => Dedup.appendToVideoIndexFromShingles(
+          grams(u), indexTable, numHashes, bands, nBuckets),
+        // the MinHash-aware entry point stamps the modality prop on a
+        // legacy index (verdict r16 #6)
+        compact = () => Dedup.compactVideoMinHashIndex(spark, indexTable, numHashes, bands),
+        // the corpus holds the kept clips' FRAME rows; the id gate
+        // probes clip ids against their video_id column
+        corpusRows = u => keptFrames.join(
+          u.select(col("doc_id").as("video_id")), Seq("video_id"), "left_semi"),
+        corpusIdCol = Some("video_id")
+      ))
+    stats.copy(deferred = deferredClips, staleDropped = staleClips, agedOut = agedOutClips)
   }
 
   /** Split this batch's (already contract-filtered) frames into the

@@ -593,6 +593,29 @@ class DedupSimilaritySpec extends AnyFunSuite {
     spark.sql("DROP TABLE mh_idx_nb")
   }
 
+  test("gram append derives the bucket count from the table's bucketSpec, not the parameter") {
+    spark.sql("DROP TABLE IF EXISTS gram_idx_nb")
+    val hist = docs.filter($"doc_id" % 3 === 0).select($"doc_id", $"text")
+    Dedup.writeGramIndex(hist, "text", "doc_id", "gram_idx_nb", nBuckets = 16)
+    // a default-parameter (64) append onto the 16-bucket index — what
+    // CorpusIngest.spanDedupIngest does with its default nBuckets — must
+    // keep the recorded spec instead of failing on Spark's bucket mismatch
+    val added = docs.filter($"doc_id" % 3 === 1)
+      .select(($"doc_id" + 600000L).as("doc_id"), $"text")
+    val rowsBefore = spark.table("gram_idx_nb").count()
+    Dedup.appendToGramIndex(added, "text", "doc_id", "gram_idx_nb")
+    val spec = spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier("gram_idx_nb"))
+      .bucketSpec
+    assert(spec.map(_.numBuckets) === Some(16))
+    assert(spark.table("gram_idx_nb").count() > rowsBefore, "the append landed")
+    // and the appended grams count as history for the next probe
+    val viaIndex = Dedup.incrementalDuplicateSpans(spark, added, "gram_idx_nb", "text", "doc_id")
+      .select($"doc_id").distinct().count()
+    assert(viaIndex > 0L)
+    spark.sql("DROP TABLE gram_idx_nb")
+  }
+
   test("minhash probe of an empty batch returns the non-empty day's schema") {
     spark.sql("DROP TABLE IF EXISTS mh_idx_str")
     // a string-keyed index: a hardcoded (i: long, j: long) empty frame

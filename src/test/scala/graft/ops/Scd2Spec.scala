@@ -48,35 +48,4 @@ class Scd2Spec extends AnyFunSuite {
     assert(at.count() === 1)
     assert(at.select(element_at($"data", "v")).as[String].head() === "2")
   }
-
-  test("incremental merge == full recompute") {
-    val batch1 = events.filter($"event_id".isin("e1", "e2", "e4"))
-    val batch2 = events.filter($"event_id".isin("e3", "e5"))
-    val full = Scd2.apply(events, Seq("record_key"))
-    val merged = Scd2.merge(Scd2.apply(batch1, Seq("record_key")), batch2, Seq("record_key"))
-    val cols = Seq("record_key", "event_id", "valid_from", "valid_to", "is_current")
-    val a = full.select(cols.map(col): _*).as[(String, String, Timestamp, Option[Timestamp], Boolean)].collect().toSet
-    val b = merged.select(cols.map(col): _*).as[(String, String, Timestamp, Option[Timestamp], Boolean)].collect().toSet
-    assert(a === b)
-  }
-
-  test("merge past the broadcast key limit falls back to shuffle joins, same result") {
-    // a "backfill" batch with many distinct keys: limit 0 forces the
-    // non-broadcast path; result must match the broadcast path exactly
-    // and the plan must carry no broadcast hint on the touched-key side
-    val existing = Scd2.apply(events, Seq("record_key"))
-    val backfill = (1 to 500)
-      .map(i => (s"b$i", "insert", s"bk$i", ts("2024-02-01 00:00:00"), Map("v" -> i.toString)))
-      .toDF("event_id", "event_type", "record_key", "ts", "new_values")
-    val viaBroadcast = Scd2.merge(existing, backfill, Seq("record_key"))
-    val viaShuffle = Scd2.merge(existing, backfill, Seq("record_key"), broadcastKeyLimit = 0L)
-    val cols = Seq("record_key", "event_id", "valid_from", "valid_to", "is_current")
-    def setOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(cols.map(col): _*)
-        .as[(String, String, Timestamp, Option[Timestamp], Boolean)]
-        .collect()
-        .toSet
-    assert(setOf(viaShuffle) === setOf(viaBroadcast))
-    assert(!viaShuffle.queryExecution.analyzed.toString.contains("ResolvedHint"))
-  }
 }

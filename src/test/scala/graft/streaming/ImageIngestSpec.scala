@@ -48,7 +48,9 @@ class ImageIngestSpec extends AnyFunSuite {
     // full redelivery of batch 2: corpus and index unchanged — the
     // undecodable row must NOT double (the corpus anti-join path)
     val s3 = ImageIngest.ingestImageBatch(b2, corpus, "img_ingest_idx")
-    assert(s3.replays === 2L, "0 and 2 both find their indexed copies")
+    assert(s3.replays === 3L,
+      "0 and 2 find their indexed copies; the corpus holds undecodable 999")
+    assert(s3.kept === 0L)
     assert(corpusIds(corpus) === Set(0L, 1L, 2L, 999L))
     assert(spark.read.parquet(corpus).count() === 4L, "no duplicate rows after replay")
     spark.sql("DROP TABLE img_ingest_idx")
@@ -83,7 +85,8 @@ class ImageIngestSpec extends AnyFunSuite {
     // full redelivery: corpus and index unchanged
     val s3 = ImageIngest.ingestImageBatch(b2, corpus, "img_phash_ingest_idx",
       ImageHash.PHash256)
-    assert(s3.replays === 2L)
+    assert(s3.replays === 3L)
+    assert(s3.kept === 0L)
     assert(spark.read.parquet(corpus).count() === 4L)
 
     // fail closed: the dHash family probing this pHash index must
@@ -125,6 +128,40 @@ class ImageIngestSpec extends AnyFunSuite {
       assert(hits.select($"i").as[Long].collect().toSet === Set(0L))
     } finally q.stop()
     spark.sql("DROP TABLE img_phash_stream_idx")
+  }
+
+  test("crash between index append and corpus append heals on replay") {
+    val tmp = Files.createTempDirectory("imgcrash").toString
+    val corpus = s"$tmp/corpus"
+    spark.sql("DROP TABLE IF EXISTS img_crash_idx")
+    // 0 and 97 are near-dups (keeper 0); 1 is fresh; 999 is undecodable
+    val batch = synth(Seq(0L, 97L, 1L))
+      .unionByName(Seq((999L, "not an image".getBytes("UTF-8"))).toDF("doc_id", "media"))
+
+    ImageIngest.ingestImageBatch(batch, corpus, "img_crash_idx")
+    assert(corpusIds(corpus) === Set(0L, 1L, 999L))
+    // simulate the crash window: index appended, corpus append lost
+    def deleteRec(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(deleteRec)); f.delete(): Unit
+    }
+    deleteRec(new java.io.File(corpus))
+    val idxRows = spark.table("img_crash_idx").count()
+
+    // replay: the indexed keepers are same-id hits the corpus cannot
+    // confirm -> they append to the CORPUS only; the undecodable row is
+    // absent from the corpus, so it appends again as a keep
+    val s = ImageIngest.ingestImageBatch(batch, corpus, "img_crash_idx")
+    assert((s.kept, s.nearDups, s.replays) === ((1L, 1L, 2L)))
+    assert(corpusIds(corpus) === Set(0L, 1L, 999L))
+    assert(spark.read.parquet(corpus).count() === 3L)
+    assert(spark.table("img_crash_idx").count() === idxRows)
+
+    // third delivery with everything intact: appends nothing anywhere
+    val s3 = ImageIngest.ingestImageBatch(batch, corpus, "img_crash_idx")
+    assert((s3.kept, s3.nearDups, s3.replays) === ((0L, 1L, 3L)))
+    assert(spark.read.parquet(corpus).count() === 3L)
+    assert(spark.table("img_crash_idx").count() === idxRows)
+    spark.sql("DROP TABLE img_crash_idx")
   }
 
   test("duplicate doc_ids with different bytes: indexed hash matches the STORED media; " +
