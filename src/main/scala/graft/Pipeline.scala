@@ -39,23 +39,18 @@ object Pipeline {
   /** R1 per-metric unpivot export (reference `azuredatalake.py:170-221`):
     * wide snapshot -> long (metric, date, value) with sanitized metric
     * names; written `partitionBy("metric")` instead of file-per-metric.
+    * The key alias and the metric name are computed below the unpivot,
+    * once per input row; only the numeric coercion runs per output cell.
     */
   def unpivotExport(snapshot: SnapshotSource.Snapshot, metricCol: String): DataFrame = {
-    val dateCols = snapshot.df.columns.filterNot(c => c == snapshot.keyColumn || c == metricCol)
+    val dateCols = snapshot.df.columns.filterNot(c => c == snapshot.keyColumn || c == metricCol).toSeq
+    val perRow = snapshot.df.select(
+      col(snapshot.keyColumn).as("key") +: Fns.metricSafeName(col(metricCol)).as("metric") +:
+        dateCols.map(col): _*
+    )
     Reshape
-      .unpivot(
-        snapshot.df,
-        idCols = Seq(snapshot.keyColumn, metricCol),
-        valueCols = dateCols.toSeq,
-        metricName = "obs_date",
-        valueName = "value"
-      )
-      .select(
-        col(snapshot.keyColumn).as("key"),
-        Fns.metricSafeName(col(metricCol)).as("metric"),
-        col("obs_date"),
-        Fns.toNumeric(col("value")).as("value")
-      )
+      .unpivot(perRow, Seq("key", "metric"), dateCols, metricName = "obs_date", valueName = "value")
+      .select(col("key"), col("metric"), col("obs_date"), Fns.toNumeric(col("value")).as("value"))
   }
 
   /** The `POST /upload-zip` bulk path (reference `app/app.py:509-646`,

@@ -27,30 +27,100 @@ import org.apache.spark.sql.functions._
   *  (d) comparison happens on STRINGS — every value is cast to string
   *      first, matching the reference's all-string degradation.
   *
-  * Scale notes: a single shuffle on the key column (the full-outer join);
-  * the per-column change map is computed with codegen'd map expressions
-  * (`map_zip_with` + `map_filter`), no UDFs, no driver-side state. At
+  * Scale notes: a single shuffle on the key column (the full-outer join).
+  * What crosses it per row is the key, the row's values as an
+  * `array<string>` in its side's own column order, and the dedup order —
+  * column names stay on the driver. After the join, matched rows whose
+  * value arrays are null-safely equal (`<=>`, the prev array aligned by
+  * name to the new side's columns) are dropped before anything else is
+  * built; that is exactly the "no changed column" condition. Only the
+  * inserts, deletes and real updates left over build their
+  * `old_values`/`new_values` maps (`map_from_arrays` with the names as a
+  * literal) and run the built-in map expressions (`map_zip_with` +
+  * `map_filter`) of the change map: no UDFs, no driver-side state. At
   * 100 TB both sides shuffle-partition on `keyCol`; if one snapshot is
   * dimension-sized the join becomes a broadcast automatically under AQE.
   */
 object SnapshotDiff {
 
-  /** Canonicalize a wide row to (key string, map col->string value). */
-  private def canonical(df: DataFrame, keyCol: String, orderCol: Option[String]): DataFrame = {
-    val dataCols = df.columns.filter(_ != keyCol)
-    val kv = dataCols.flatMap(c => Seq(lit(c), col(c).cast("string")))
+  /** One side of a diff: each wide row canonicalized to (`_key`, `_arr`:
+    * every column outside `keyCols` cast to string, in the side's own
+    * column order), keys deduped last-row-wins (reference
+    * `app/app.py:206-207`). Returns the frame and the names in `_arr`
+    * order.
+    */
+  private def canonical(
+      df: DataFrame,
+      keyCols: Seq[String],
+      key: Column,
+      orderCol: Option[String]
+  ): (DataFrame, Seq[String]) = {
+    val dataCols = df.columns.toSeq.filterNot(keyCols.contains)
     val ord = orderCol.map(col(_).cast("long")).getOrElse(monotonically_increasing_id())
-    df.select(
-      col(keyCol).cast("string").as("_key"),
-      map(kv.toIndexedSeq: _*).as("_vals"),
-      ord.as("_ord")
-    )
+    val w = Window.partitionBy("_key").orderBy(col("_ord").desc)
+    val side = df
+      .select(
+        key.as("_key"),
+        array(dataCols.map(col(_).cast("string")): _*).cast("array<string>").as("_arr"),
+        ord.as("_ord")
+      )
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .drop("_rn", "_ord")
+    (side, dataCols)
   }
 
-  /** Last-row-wins key dedup (reference `app/app.py:206-207`). */
-  private def dedup(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy("_key").orderBy(col("_ord").desc)
-    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn", "_ord")
+  private def emptyMap: Column = map().cast("map<string,string>")
+
+  /** A side's value map, `names` -> `arr` (null when `arr` is null). */
+  private def valueMap(names: Seq[String], arr: Column): Column =
+    map_from_arrays(typedLit(names), arr)
+
+  /** The shared core of [[diff]] and [[diffKeys]]: full-outer join the
+    * canonical sides on `on`, drop the matched rows whose values did not
+    * change, and build on the rest `_kind` (insert/update/delete), `_key`
+    * and the three change columns. The prev array is aligned by name to
+    * `newCols`; a column the prev side lacks compares as null (quirk
+    * (b)), and with equal column lists the alignment is `p._arr` itself.
+    */
+  private def changes(
+      newSide: (DataFrame, Seq[String]),
+      prevSide: (DataFrame, Seq[String]),
+      on: (Column, Column) => Column
+  ): DataFrame = {
+    val (n, newCols) = newSide
+    val (p, prevCols) = prevSide
+    val prevArr = col("p._arr")
+    val aligned =
+      if (prevCols == newCols) prevArr
+      else {
+        val at = prevCols.zipWithIndex.toMap
+        array(newCols.map(c => at.get(c).fold(lit(null).cast("string"))(prevArr.getItem(_))): _*)
+          .cast("array<string>")
+      }
+    val inserted = col("p._key").isNull
+    val deleted = col("n._key").isNull
+    // coalesce the missing side to an empty map so the change map is
+    // total: insert -> every new column, delete -> empty (keys absent
+    // from the new map are filtered), update -> differing columns
+    val newVals = coalesce(valueMap(newCols, col("n._arr")), emptyMap)
+    val oldVals = coalesce(valueMap(prevCols, prevArr), emptyMap)
+    n.as("n")
+      .join(p.as("p"), on(col("n._key"), col("p._key")), "full_outer")
+      // updates with zero changed columns are no-ops, not events
+      // (reference emits an update only `if changes`, app/app.py:233-246)
+      .filter(inserted || deleted || !(col("n._arr") <=> aligned))
+      .select(
+        when(inserted, "insert").when(deleted, "delete").otherwise("update").as("_kind"),
+        coalesce(col("n._key"), col("p._key")).as("_key"),
+        oldVals.as("old_values"),
+        newVals.as("new_values"),
+        // inserts report EVERY new column (a null-valued column is
+        // still "new"); the null-safe compare only applies to updates
+        when(inserted, insertChangedMap(newVals))
+          .otherwise(changedMap(oldVals, newVals))
+          .as("changed")
+      )
   }
 
   /** Diff `newDf` against `prevDf`.
@@ -66,54 +136,32 @@ object SnapshotDiff {
       keyCol: String,
       orderCol: Option[String] = None
   ): DataFrame = {
-    val n = dedup(canonical(newDf, keyCol, orderCol)).as("n")
+    def side(df: DataFrame) = canonical(df, Seq(keyCol), col(keyCol).cast("string"), orderCol)
     prevDf match {
       case None =>
         // missing previous snapshot => every row inserts (app/app.py:156-174)
+        val (n, newCols) = side(newDf)
+        val newVals = valueMap(newCols, col("_arr"))
         n.select(
           lit("insert").as("event_type"),
           lit(keyCol).as("key_column"),
           col("_key").as("key_value"),
-          map().cast("map<string,string>").as("old_values"),
-          col("_vals").as("new_values"),
-          insertChangedMap(col("_vals")).as("changed")
+          emptyMap.as("old_values"),
+          newVals.as("new_values"),
+          insertChangedMap(newVals).as("changed")
         )
       case Some(prev) =>
-        val p = dedup(canonical(prev, keyCol, orderCol)).as("p")
-        val joined = n.join(p, col("n._key") === col("p._key"), "full_outer")
-        val emptyMap = map().cast("map<string,string>")
-        // coalesce the missing side to an empty map so the change map is
-        // total: insert -> every new column, delete -> empty (keys absent
-        // from the new map are filtered), update -> differing columns
-        val newVals = coalesce(col("n._vals"), emptyMap)
-        val oldVals = coalesce(col("p._vals"), emptyMap)
-        val eventType = when(col("p._key").isNull, "insert")
-          .when(col("n._key").isNull, "delete")
-          .otherwise("update")
-        joined
-          .select(
-            eventType.as("event_type"),
-            lit(keyCol).as("key_column"),
-            coalesce(col("n._key"), col("p._key")).as("key_value"),
-            oldVals.as("old_values"),
-            newVals.as("new_values"),
-            // inserts report EVERY new column (a null-valued column is
-            // still "new"); the null-safe compare only applies to updates
-            when(col("p._key").isNull, insertChangedMap(newVals))
-              .otherwise(changedMap(oldVals, newVals))
-              .as("changed")
-          )
-          // updates with zero changed columns are no-ops, not events
-          // (reference emits an update only `if changes`, app/app.py:233-246)
-          .filter(col("event_type") =!= "update" || size(col("changed")) > 0)
+        changes(side(newDf), side(prev), _ === _).select(
+          col("_kind").as("event_type"),
+          lit(keyCol).as("key_column"),
+          col("_key").as("key_value"),
+          col("old_values"),
+          col("new_values"),
+          col("changed")
+        )
     }
   }
 
-  /** Per-column `{old,new}` change map over NEW-row columns only.
-    * `map_zip_with` pairs values by key; entries whose key is absent from
-    * the new map (dropped columns) are filtered out, as are unchanged
-    * pairs (null-safe compare).
-    */
   /** Composite-key diff (engine extension — the reference keys on the
     * single first column only): same insert/update/delete + change-map
     * semantics as [[diff]], keyed on `keyCols`, which come back as
@@ -128,38 +176,16 @@ object SnapshotDiff {
       keyCols: Seq[String],
       orderCol: Option[String] = None
   ): DataFrame = {
-    def canon(df: DataFrame): DataFrame = {
-      val dataCols = df.columns.filterNot(keyCols.contains)
-      val kv = dataCols.flatMap(c => Seq(lit(c), col(c).cast("string")))
-      val ord = orderCol.map(col(_).cast("long")).getOrElse(monotonically_increasing_id())
-      df.select(
-        struct(keyCols.map(c => col(c).cast("string").as(c)): _*).as("_key"),
-        map(kv.toIndexedSeq: _*).as("_vals"),
-        ord.as("_ord")
-      )
-    }
-    val n = dedup(canon(newDf)).as("n")
-    val p = dedup(canon(prevDf)).as("p")
-    val joined = n.join(p, col("n._key") <=> col("p._key"), "full_outer")
-    val emptyMap = map().cast("map<string,string>")
-    val newVals = coalesce(col("n._vals"), emptyMap)
-    val oldVals = coalesce(col("p._vals"), emptyMap)
-    val key = coalesce(col("n._key"), col("p._key"))
-    joined
-      .select(
-        keyCols.map(c => key.getField(c).as(c)) ++ Seq(
-          when(col("p._key").isNull, "insert")
-            .when(col("n._key").isNull, "delete")
-            .otherwise("update")
-            .as("change_type"),
-          oldVals.as("old_values"),
-          newVals.as("new_values"),
-          when(col("p._key").isNull, insertChangedMap(newVals))
-            .otherwise(changedMap(oldVals, newVals))
-            .as("changed")
-        ): _*
-      )
-      .filter(col("change_type") =!= "update" || size(col("changed")) > 0)
+    val key = struct(keyCols.map(c => col(c).cast("string").as(c)): _*)
+    def side(df: DataFrame) = canonical(df, keyCols, key, orderCol)
+    changes(side(newDf), side(prevDf), _ <=> _).select(
+      keyCols.map(c => col("_key").getField(c).as(c)) ++ Seq(
+        col("_kind").as("change_type"),
+        col("old_values"),
+        col("new_values"),
+        col("changed")
+      ): _*
+    )
   }
 
   /** Insert change map: every new column, old side null — including
@@ -169,11 +195,16 @@ object SnapshotDiff {
     */
   private def insertChangedMap(newVals: Column): Column =
     map_zip_with(
-      map().cast("map<string,string>"),
+      emptyMap,
       newVals,
       (_, o, nv) => struct(o.as("old"), nv.as("new"))
     )
 
+  /** Per-column `{old,new}` change map over NEW-row columns only.
+    * `map_zip_with` pairs values by key; entries whose key is absent from
+    * the new map (dropped columns) are filtered out, as are unchanged
+    * pairs (null-safe compare).
+    */
   private def changedMap(oldVals: Column, newVals: Column): Column = {
     val zipped = map_zip_with(
       oldVals,

@@ -31,10 +31,6 @@ object Sinks {
   def writeMetricPartitioned(long: DataFrame, path: String): Unit =
     long.write.mode(SaveMode.Overwrite).partitionBy("metric").parquet(path)
 
-  /** S12: JSON results (anomaly payloads, metadata). */
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
   /** Bucketed table at rest: pre-hash-partition (and sort) the data by
     * its join/agg keys so downstream equi-joins and aggregations on
     * `keys` read co-located buckets and skip the shuffle entirely —

@@ -386,12 +386,6 @@ object CorpusIngest {
       ))
   }
 
-  /** Existence through Hadoop's FileSystem API — resolves against
-    * whatever filesystem the path's scheme names (HDFS/S3A/local), the
-    * same way Spark's own readers do. A driver-local `java.nio`
-    * existence check is always false for `hdfs://`/`s3a://` paths, which
-    * here would silently skip the dedup branch every batch.
-    */
   /** Per-batch accounting returned by [[ingestSpanBatch]]: docs kept,
     * docs dropped for exceeding the duplicated-token bar, replays
     * (fingerprints already in the corpus), and `rejected` (round 18):
@@ -406,36 +400,6 @@ object CorpusIngest {
       replays: Long,
       rejected: Long = 0L)
 
-  /** Streaming SUBSTRING-dedup ingest — the Lee et al. family at
-    * streaming cadence: each micro-batch is (1) exact-deduped in-batch
-    * and against the corpus (fingerprint anti-join — compose with the
-    * bloom prefilter of [[ingestBatch]] if the corpus-side scan ever
-    * dominates), (2) span-scored against the at-rest gram index
-    * ([[Dedup.incrementalDuplicateSpans]]: corpus-total counts =
-    * index history + in-batch, O(batch) shuffle), and (3) docs whose
-    * duplicated-token fraction stays within `maxDupFrac` are appended
-    * to the corpus, then their grams to the index.
-    *
-    * Invariant (spec-pinned): the index always holds exactly the KEPT
-    * corpus's gram counts — `Dedup.writeGramIndex(corpus)` rebuilds it
-    * bit-identically, which is also the recovery story below.
-    *
-    * Ordering contract: probe FIRST, then corpus, then index, and the
-    * index counts KEPT docs only. Probe-before-append is semantic
-    * (appending first would self-poison the batch — every doc's own
-    * grams would read as history and mark the whole batch duplicated).
-    * Corpus-before-index makes every failure mode conservative:
-    *  - replayed delivery, no crash: kept docs are fingerprint-filtered
-    *    out; dropped docs re-probe against the SAME history (their
-    *    grams were never indexed) and drop again — idempotent, no
-    *    double counts;
-    *  - crash between corpus and index append: redelivery skips the
-    *    already-kept docs, so that batch's gram counts are missing from
-    *    the index — future spans can only be UNDER-marked (a bit more
-    *    duplicate text survives; no unique document is ever wrongly
-    *    dropped, which is what the reverse order would do), and
-    *    `writeGramIndex(corpus)` heals the undercount exactly.
-    */
   /** File-based embedding stream (locally testable source: parquet
     * files of (vec_id, embedding) dropped into a directory) — the
     * [[pqIndexIngest]] source.
@@ -688,6 +652,36 @@ object CorpusIngest {
     PqIngestStats(appended, validCnt - appended, rawCnt - validCnt)
   }
 
+  /** Streaming SUBSTRING-dedup ingest — the Lee et al. family at
+    * streaming cadence: each micro-batch is (1) exact-deduped in-batch
+    * and against the corpus (fingerprint anti-join — compose with the
+    * bloom prefilter of [[ingestBatch]] if the corpus-side scan ever
+    * dominates), (2) span-scored against the at-rest gram index
+    * ([[Dedup.incrementalDuplicateSpans]]: corpus-total counts =
+    * index history + in-batch, O(batch) shuffle), and (3) docs whose
+    * duplicated-token fraction stays within `maxDupFrac` are appended
+    * to the corpus, then their grams to the index.
+    *
+    * Invariant (spec-pinned): the index always holds exactly the KEPT
+    * corpus's gram counts — `Dedup.writeGramIndex(corpus)` rebuilds it
+    * bit-identically, which is also the recovery story below.
+    *
+    * Ordering contract: probe FIRST, then corpus, then index, and the
+    * index counts KEPT docs only. Probe-before-append is semantic
+    * (appending first would self-poison the batch — every doc's own
+    * grams would read as history and mark the whole batch duplicated).
+    * Corpus-before-index makes every failure mode conservative:
+    *  - replayed delivery, no crash: kept docs are fingerprint-filtered
+    *    out; dropped docs re-probe against the SAME history (their
+    *    grams were never indexed) and drop again — idempotent, no
+    *    double counts;
+    *  - crash between corpus and index append: redelivery skips the
+    *    already-kept docs, so that batch's gram counts are missing from
+    *    the index — future spans can only be UNDER-marked (a bit more
+    *    duplicate text survives; no unique document is ever wrongly
+    *    dropped, which is what the reverse order would do), and
+    *    `writeGramIndex(corpus)` heals the undercount exactly.
+    */
   def spanDedupIngest(
       docs: DataFrame,
       corpusPath: String,
@@ -1022,6 +1016,12 @@ object CorpusIngest {
     */
   val CmsDepth = 4
 
+  /** Existence through Hadoop's FileSystem API — resolves against
+    * whatever filesystem the path's scheme names (HDFS/S3A/local), the
+    * same way Spark's own readers do. A driver-local `java.nio`
+    * existence check is always false for `hdfs://`/`s3a://` paths, which
+    * here would silently skip the dedup branch every batch.
+    */
   private[streaming] def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)

@@ -72,6 +72,48 @@ class PipelineSpec extends AnyFunSuite {
     assert(hist.filter($"event_type" === "TOTAL").select("n").as[Long].head() === 3L)
   }
 
+  // read from parquet, not a local relation, so the optimizer cannot
+  // fold the per-row projection into the input
+  private lazy val metricSnapshot = {
+    val path = Files.createTempDirectory("metric-snapshot").resolve("s").toString
+    Seq(
+      ("aep", "Cash (Total)", "100", ""),
+      ("aep", "R&D / Other", "n/a", "2.5"),
+      ("duk", "Margin %", " ", "-3")
+    ).toDF("Company", "Metric", "2024-12-31", "2023-12-31").write.parquet(path)
+    SnapshotSource.Snapshot(spark.read.parquet(path), "Company")
+  }
+
+  test("unpivot export: sanitized metric names; blank and non-numeric cells are null") {
+    val long = Pipeline.unpivotExport(metricSnapshot, "Metric")
+    val got = long.as[(String, String, String, Option[Double])].collect().toSet
+    assert(got === Set(
+      ("aep", "Cash_Total", "2024-12-31", Some(100.0)),
+      ("aep", "Cash_Total", "2023-12-31", None),
+      ("aep", "RandD_Other", "2024-12-31", None),
+      ("aep", "RandD_Other", "2023-12-31", Some(2.5)),
+      ("duk", "Margin_pct", "2024-12-31", None),
+      ("duk", "Margin_pct", "2023-12-31", Some(-3.0))
+    ))
+    // the metric name is computed once per input row, below the generator
+    val plan = long.queryExecution.executedPlan.toString
+    val generate = plan.indexOf("Generate")
+    assert(generate >= 0 && plan.indexOf("regexp_replace", generate) > generate, plan)
+  }
+
+  test("unpivot export through the metric-partitioned sink: one metric= partition reads back") {
+    val dir = Files.createTempDirectory("metrics").resolve("long").toString
+    graft.sinks.Sinks.writeMetricPartitioned(Pipeline.unpivotExport(metricSnapshot, "Metric"), dir)
+    val parts = new java.io.File(dir).list().filter(_.startsWith("metric=")).toSet
+    assert(parts === Set("metric=Cash_Total", "metric=RandD_Other", "metric=Margin_pct"))
+    val one = spark.read.parquet(s"$dir/metric=RandD_Other")
+    assert(one.columns.toSeq === Seq("key", "obs_date", "value"))
+    assert(one.as[(String, String, Option[Double])].collect().toSet === Set(
+      ("aep", "2024-12-31", None),
+      ("aep", "2023-12-31", Some(2.5))
+    ))
+  }
+
   test("anomaly scan flags a burst day per (company, table) series") {
     val base = (1 to 29).flatMap { d =>
       val n = if (d == 25) 40 else 2 // burst on day 25

@@ -121,6 +121,36 @@ class SnapshotDiffSpec extends AnyFunSuite {
     assert(got.select(size($"changed")).as[Int].collect().forall(_ === 2))
   }
 
+  test("columns matched by name: same columns in another order, no value changed => no events") {
+    val prev = Seq(("1", "v1", "w1"), ("2", "v2", null)).toDF("k", "a", "b")
+    val next = Seq(("w1", "1", "v1"), (null, "2", "v2")).toDF("b", "k", "a")
+    assert(SnapshotDiff.diff(next, Some(prev), "k").count() === 0)
+  }
+
+  test("a column added in new: a null value is no change, a non-null value is an update") {
+    val prev = Seq(("1", "v1"), ("2", "v2")).toDF("k", "a")
+    val next = Seq(("1", "v1", null), ("2", "v2", "x")).toDF("k", "a", "c")
+    val got = SnapshotDiff.diff(next, Some(prev), "k").collect()
+    assert(got.map(r => (r.getAs[String]("event_type"), r.getAs[String]("key_value"))).toSeq ===
+      Seq(("update", "2")))
+    val m = got.head.getAs[scala.collection.Map[String, Row]]("changed")
+    assert(m.keySet === Set("c"))
+    assert(m("c").getAs[String]("old") === null && m("c").getAs[String]("new") === "x")
+  }
+
+  test("a reordered column and one changed value: exactly that column is changed") {
+    val prev = Seq(("1", "v1", "w1")).toDF("k", "a", "b")
+    val next = Seq(("1", "w1", "CHANGED")).toDF("k", "b", "a")
+    val row = SnapshotDiff.diff(next, Some(prev), "k").head()
+    assert(row.getAs[String]("event_type") === "update")
+    val m = row.getAs[scala.collection.Map[String, Row]]("changed")
+    assert(m.keySet === Set("a"))
+    assert(m("a").getAs[String]("old") === "v1" && m("a").getAs[String]("new") === "CHANGED")
+    // each side's value map keeps its own column order
+    assert(row.getAs[scala.collection.Map[String, String]]("old_values").keys.toSeq === Seq("a", "b"))
+    assert(row.getAs[scala.collection.Map[String, String]]("new_values").keys.toSeq === Seq("b", "a"))
+  }
+
   test("round trip: applying diff to prev reconstructs next (per key)") {
     val prev = snap(("1", "v1", "w1"), ("2", "v2", "w2"), ("4", "v4", "w4"))
     val next = snap(("2", "v2", "CHANGED"), ("3", "v3", "w3"), ("4", "v4", "w4"))
