@@ -27,8 +27,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * HashExpressionsSpec; q21's hash-exact check depends on it). A null
   * vector null-propagates; a null ELEMENT poisons every dot (null > 0 is
   * false in the composed `when`), yielding all-zero keys — matched here.
-  * Interpreted eval (CodegenFallback): the per-row loop is the hot loop;
-  * codegen would inline the same arithmetic.
+  * Codegen: `doGenCode` calls the same `nullSafeEval` through a
+  * reference object, so the enclosing stage stays whole-stage
+  * generated and one implementation serves both paths.
   */
 case class HyperplaneBands(
     child: Expression,

@@ -31,8 +31,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * chain leaves the running hash unchanged on a null argument). The one
   * deliberate divergence: a null INPUT null-propagates (SQL-idiomatic),
   * where the composed form emits an array of nulls as an artifact.
-  * Interpreted eval (CodegenFallback): the per-row loop is the hot
-  * loop; codegen would inline the same arithmetic.
+  * Codegen: `doGenCode` calls the same `nullSafeEval` through a
+  * reference object, so the enclosing stage stays whole-stage
+  * generated and one implementation serves both paths.
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
     extends UnaryExpression {

@@ -6,21 +6,44 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Thin wrappers over the Hadoop `FileSystem` API for the swap/heal
-  * protocols (SCD2 state buckets, bucketed-index compaction, event-log
-  * compaction, ingest bloom state). Everything here resolves the
+/** Hadoop `FileSystem` helpers and the engine's one crash-safe replace
+  * protocol for at-rest state: SCD2 state buckets and root, compacted
+  * event logs and bucketed indexes, sketch and count tables, ingest
+  * blooms and small control files. Everything here resolves the
   * filesystem FROM the path, so `file:`, `hdfs:`, `s3a:` and friends all
-  * work — the `java.nio.Files` versions these replaced were silently
-  * local-only, which made the 100 TB story an asterisk.
+  * work.
   *
-  * Atomicity note, stated once for all callers: `FileSystem.rename` is
-  * atomic on `file:` and `hdfs:` but a COPY+DELETE on S3A. The swap
-  * protocols already tolerate a crash inside any window via their heal
-  * hooks (`recoverBucketedSwap`, `recoverState`, `recoverRootSwap`), so
-  * a non-atomic rename widens a recoverable window rather than adding an
-  * unrecoverable one; installations wanting a truly atomic flip on an
-  * object store should use the metastore-atomic `ALTER TABLE ... SET
-  * LOCATION` variant called out in [[Sinks.compactBucketed]]'s doc.
+  * The protocol is [[swap]] plus [[heal]]:
+  *  - A writer builds the new version aside under a staging name, then
+  *    [[swap]]s it in: drop a stale `<live>.old`, retire live to
+  *    `<live>.old`, promote the staged version to live, drop `.old`.
+  *    A crash leaves live intact (a stray staged version beside it),
+  *    or live missing with the previous version at `.old`, or the new
+  *    live with a leftover `.old`.
+  *  - [[heal]] runs before the next read or write. With live missing it
+  *    rolls forward to `<live>.new` when that exists, otherwise back to
+  *    `<live>.old`. The staging name makes the choice: a writer that
+  *    stages at `<live>.new` (the sketch and count tables, the ingest
+  *    bloom) has finished and closed it before it retires live, so it is
+  *    safe to keep. Every other writer stages elsewhere (`.tmp`,
+  *    `.compact`, `.rebucket`, a staging table), and its crashed swap
+  *    rolls back to the last acknowledged version. A staged version
+  *    beside an intact live is a crash before the retire; the writer
+  *    rebuilds it.
+  *  - Readers heal restore-only: a stale `.old` next to a live version
+  *    never blocks a read, and deleting it would mutate state the writer
+  *    owns. Writers pass `clearStaleOld = true` and drop it. Two readers
+  *    may find the same crashed swap; the one whose rename loses finds
+  *    live restored and counts that as a heal.
+  *  - Single writer per live path, as everywhere in this engine.
+  *
+  * Atomicity: `FileSystem.rename` is atomic on `file:` and `hdfs:`, so
+  * every crash window above is one of the listed states. On S3A a
+  * rename is a copy then a delete; a crash inside one can leave a
+  * partial directory under a name [[heal]] takes for complete. On an
+  * object store, flip a catalog location instead (`ALTER TABLE ... SET
+  * LOCATION`, metastore-atomic) or keep the state in a transactional
+  * table format.
   */
 object Dfs {
 
@@ -39,8 +62,8 @@ object Dfs {
   /** Move `src` over to a NOT-YET-EXISTING `dst`. The existence guard is
     * load-bearing: the local `FileSystem` implements POSIX rename, which
     * would nest `src` INSIDE an existing `dst` directory instead of
-    * failing like HDFS does — every swap protocol clears the target
-    * first, and this turns a protocol violation into a loud error.
+    * failing like HDFS does — this turns a protocol violation into a
+    * loud error.
     */
   def move(fs: FileSystem, src: Path, dst: Path): Unit = {
     require(!fs.exists(dst), s"move target $dst already exists")
@@ -52,51 +75,71 @@ object Dfs {
     ()
   }
 
-  /** Write a small control file (bucket markers) crash-safely: write to
-    * a `.tmp` sibling, retire the live file to `.old`, promote the
-    * `.tmp`, then drop the `.old`. A crash in ANY window leaves a
-    * recoverable state — either the live file is intact, or `.old`
-    * holds the previous acknowledged value and [[heal]] restores it on
-    * the next read. The earlier delete-then-rename version had a window
-    * with NO file at all, which for CdcStream's bucket marker meant a
-    * restarted sink could silently re-adopt a different bucket modulus.
+  private[graft] val RetiredSuffix = ".old"
+
+  /** `<live>.old`, where [[swap]] retires the live version. */
+  private[graft] def retired(live: Path): Path = live.suffix(RetiredSuffix)
+
+  /** `<live>.new`, the one staging name [[heal]] rolls forward from. */
+  private[graft] def staged(live: Path): Path = live.suffix(".new")
+
+  /** Replace `live` (file or directory; absent on a first write) with
+    * the complete version at `fresh` (object scaladoc). The caller
+    * chooses `fresh`: `<live>.new` when a crash after the retire
+    * should keep the new version, any other name when it should roll
+    * back.
+    */
+  def swap(fs: FileSystem, live: Path, fresh: Path): Unit = {
+    val old = retired(live)
+    rmTree(fs, old) // a crash after an earlier promote left it
+    if (fs.exists(live)) move(fs, live, old)
+    move(fs, fresh, live)
+    rmTree(fs, old)
+  }
+
+  /** Repair a [[swap]] that crashed (object scaladoc); true when live
+    * was missing and has been restored. With live present it does
+    * nothing, except that a writer (`clearStaleOld`) drops a leftover
+    * `.old`.
+    */
+  def heal(fs: FileSystem, live: Path, clearStaleOld: Boolean = false): Boolean = {
+    val old = retired(live)
+    if (fs.exists(live)) {
+      if (clearStaleOld) rmTree(fs, old)
+      false
+    } else {
+      val fresh = staged(live)
+      val src =
+        if (fs.exists(fresh)) {
+          rmTree(fs, old) // superseded; dropped first so a racing healer cannot pick it
+          fresh
+        } else if (fs.exists(old)) old
+        else return false
+      // a racing healer that moved `src` first makes this rename fail
+      // (or, on the local FS, throw for the missing source)
+      val moved =
+        try fs.rename(src, live)
+        catch { case _: java.io.FileNotFoundException => false }
+      require(moved || fs.exists(live), s"heal rename $src -> $live failed and $live is still absent")
+      true
+    }
+  }
+
+  /** Write a small control file (bucket markers, batch markers)
+    * crash-safely: write a `.tmp` sibling and [[swap]] it in. `.tmp` is
+    * not `.new`, so [[heal]] never promotes a write that was not
+    * acknowledged to the caller.
     */
   def writeSmall(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val old = new Path(p.getParent, p.getName + ".old")
+    val tmp = p.suffix(".tmp")
     val out = fs.create(tmp, true)
     try out.write(bytes)
     finally out.close()
-    if (fs.exists(p)) {
-      if (fs.exists(old)) fs.delete(old, false)
-      require(fs.rename(p, old), s"rename $p -> $old failed")
-    }
-    require(fs.rename(tmp, p), s"rename $tmp -> $p failed")
-    if (fs.exists(old)) fs.delete(old, false) // best-effort; healed lazily otherwise
+    swap(fs, p, tmp)
   }
 
   def writeSmall(fs: FileSystem, p: Path, content: String): Unit =
     writeSmall(fs, p, content.getBytes(UTF_8))
-
-  /** Recover a [[writeSmall]] target from a crash mid-swap: when the
-    * live file is absent but its `.old` sibling exists, the crash hit
-    * between retire and promote — restore the previous acknowledged
-    * value. (A stray `.tmp` is never promoted: its write was never
-    * acknowledged to the caller.) No-op when the live file exists.
-    */
-  def heal(fs: FileSystem, p: Path): Unit = {
-    val old = new Path(p.getParent, p.getName + ".old")
-    if (!fs.exists(p) && fs.exists(old)) {
-      // Heal is invoked from READ paths, so two concurrent readers can
-      // both observe the crashed-swap state; the loser's rename fails
-      // AFTER the winner already restored the live file. A failed rename
-      // with the live file now present IS a successful heal — only fail
-      // when the target is still absent (a genuine FS error).
-      if (!fs.rename(old, p)) {
-        require(fs.exists(p), s"heal rename $old -> $p failed and $p is still absent")
-      }
-    }
-  }
 
   /** Existence check for a [[writeSmall]] target that heals first — use
     * this (not bare `exists`) to gate reads of swap-protocol files.

@@ -313,21 +313,14 @@ object Sinks {
     Dfs.rmTree(fs, p)
   }
 
-  /** Heal a [[compactBucketed]] root swap left mid-crash. A crash between
-    * compaction's two directory moves leaves the table's data directory
-    * missing (the data is intact at `<loc>.old`); without this hook the
-    * table stays unreadable until someone happens to re-run compaction.
-    * Every entry point that consumes a bucketed index table calls it:
-    * [[appendBucketed]] and [[compactBucketed]] on the write side,
-    * `Dedup.incrementalNearDups` / `Similarity.ivfTopKIndexed` on the
-    * read side.
-    *
-    * Write-side callers pass `clearStaleOld = true` and also drop a
-    * post-swap leftover `.old`. Read-side callers heal restore-only: a
-    * stale `.old` NEXT TO a live dir never blocks a read, and deleting it
-    * from a reader would mutate state the maintenance path owns. Same
-    * single-writer discipline as the SCD2 state swaps: compaction is a
-    * maintenance window, not a concurrent writer.
+  /** Heal a [[compactBucketed]] data-dir swap left mid-crash, with
+    * [[Dfs.heal]] on the table location. Without it the table stays
+    * unreadable until someone happens to re-run compaction, so every
+    * entry point that consumes a bucketed index table calls it:
+    * [[appendBucketed]] and [[compactBucketed]] on the write side
+    * (`clearStaleOld = true`), `Dedup.incrementalNearDups` /
+    * `Similarity.ivfTopKIndexed` on the read side. A heal also refreshes
+    * the table, dropping any cached file listing of the missing dir.
     */
   def recoverBucketedSwap(
       spark: SparkSession,
@@ -338,14 +331,10 @@ object Sinks {
     val ident = parseIdent(spark, table)
     val meta = spark.sessionState.catalog.getTableMetadata(ident)
     val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(Dfs.conf(spark))
-    val oldP = new org.apache.hadoop.fs.Path(loc.getParent, loc.getName + ".old")
-    if (!fs.exists(loc) && fs.exists(oldP)) {
-      Dfs.move(fs, oldP, loc)
-      // drop any cached file listing planned against the missing dir
+    if (Dfs.heal(loc.getFileSystem(Dfs.conf(spark)), loc, clearStaleOld)) {
       spark.sql(s"REFRESH TABLE ${ident.quotedString}")
       ()
-    } else if (clearStaleOld && fs.exists(oldP)) Dfs.rmTree(fs, oldP)
+    }
   }
 
   /** Z-ordered layout at rest: sort the data along an interleaved-bit
@@ -422,10 +411,10 @@ object Sinks {
     * ceil(rows / rowsPerFile) files. Streaming appends produce one file
     * per micro-batch per partition — at 100 TB that's the classic
     * small-file problem (open/seek overhead dominates scans; the
-    * NameNode/objectstore LIST gets slow). Rewrite goes through a
-    * staging dir + rename so readers never see a half-compacted log;
-    * a crash between the two renames is recovered from `.old` at the
-    * start of the next run (same protocol as the scd2 sink swap).
+    * NameNode/objectstore LIST gets slow). The rewrite is staged at
+    * `<path>.compact` and replaced with [[Dfs.swap]], so readers never
+    * see a half-compacted log; a crashed swap rolls back through
+    * [[Dfs.heal]] at the start of the next run.
     */
   def compactEventLog(
       spark: SparkSession,
@@ -436,13 +425,7 @@ object Sinks {
     val live = new Path(path)
     val fs = live.getFileSystem(Dfs.conf(spark))
     val staging = new Path(path + ".compact")
-    val oldP = new Path(path + ".old")
-    // crash recovery mirrors scd2Sink: a crash between the two moves
-    // below leaves the log only at .old — restore it before reading; a
-    // leftover .old NEXT TO a live log is a post-swap crash — clear it
-    // so the swap can run again
-    if (!fs.exists(live) && fs.exists(oldP)) Dfs.move(fs, oldP, live)
-    if (fs.exists(oldP)) Dfs.rmTree(fs, oldP)
+    Dfs.heal(fs, live, clearStaleOld = true)
     spark.read.parquet(path)
       // one shuffle co-locating each partition's rows so the writer emits
       // ceil(rows/rowsPerFile) files per partition instead of one per
@@ -453,9 +436,7 @@ object Sinks {
       .option("maxRecordsPerFile", rowsPerFile)
       .partitionBy("company_id", "table_name", "event_date")
       .parquet(staging.toString)
-    Dfs.move(fs, live, oldP)
-    Dfs.move(fs, staging, live)
-    Dfs.rmTree(fs, oldP)
+    Dfs.swap(fs, live, staging)
   }
 
   /** Compact a bucketed table's accumulated per-append file-sets into
@@ -476,12 +457,11 @@ object Sinks {
     *
     * The swap preserves the table's catalog entry (bucket spec AND table
     * properties — e.g. the MinHash index contract — never move): only
-    * the data directory under the existing location is exchanged,
-    * staging-dir + rename, with the same `.old` crash protocol as
-    * [[compactEventLog]]. On an object store / external metastore,
-    * replace the directory moves with `ALTER TABLE ... SET LOCATION`
-    * (metastore-atomic) — called out here because rename is not atomic
-    * on S3.
+    * the data directory under the existing location is exchanged for a
+    * staging table's, with [[Dfs.swap]], and healed by
+    * [[recoverBucketedSwap]]. On an object store / external metastore,
+    * replace the directory swap with `ALTER TABLE ... SET LOCATION`
+    * (metastore-atomic; [[Dfs]] on rename atomicity).
     *
     * `transform` rewrites the rows on the way through (same schema out,
     * fewer rows) — the hook sum-on-read tables use to FOLD their
@@ -501,12 +481,9 @@ object Sinks {
     val meta = cat.getTableMetadata(ident)
     val spec = meta.bucketSpec.getOrElse(
       throw new IllegalArgumentException(s"$table is not a bucketed table"))
-    // crash recovery (same protocol as compactEventLog), shared with the
-    // read/append entry points via recoverBucketedSwap
     recoverBucketedSwap(spark, table, clearStaleOld = true)
     val loc = new Path(meta.location)
     val fs = loc.getFileSystem(Dfs.conf(spark))
-    val oldP = new Path(loc.getParent, loc.getName + ".old")
     val stagingIdent = TableIdentifier(ident.table + "__compact", ident.database)
     spark.sql(s"DROP TABLE IF EXISTS ${stagingIdent.quotedString}")
     val keys = spec.bucketColumnNames
@@ -519,13 +496,11 @@ object Sinks {
     val sorted = if (sorts.nonEmpty) writer.sortBy(sorts.head, sorts.tail: _*) else writer
     sorted.format("parquet").saveAsTable(stagingIdent.quotedString)
     val stagingLoc = new Path(cat.getTableMetadata(stagingIdent).location)
-    Dfs.move(fs, loc, oldP)
-    Dfs.move(fs, stagingLoc, loc)
+    Dfs.swap(fs, loc, stagingLoc)
     // the staging entry now points at a moved-away dir; give DROP an
     // empty one so its managed-location cleanup succeeds
     Dfs.mkdirs(fs, stagingLoc)
     spark.sql(s"DROP TABLE ${stagingIdent.quotedString}")
-    Dfs.rmTree(fs, oldP)
     spark.sql(s"REFRESH TABLE ${ident.quotedString}")
   }
 

@@ -136,11 +136,13 @@ object CdcStream {
     * (Delta) or dynamic-partition overwrite; the bucket column doubles
     * as the pruning predicate.
     *
-    * Crash recovery: each bucket swap is the two-move `.old` protocol; a
-    * crash at any point leaves every bucket either fully old or fully
-    * new, [[recoverState]] restores moved-aside buckets on the next
-    * batch, and the idempotent event_id refold makes the checkpoint's
-    * replayed batch safe against partially-applied buckets.
+    * Crash recovery: each touched bucket is replaced with
+    * [[graft.sinks.Dfs.swap]] and healed with [[graft.sinks.Dfs.heal]]
+    * ([[recoverState]], before every batch). Buckets stage under
+    * `<statePath>.tmp`, so a crashed swap rolls back; the bucket is then
+    * fully old or fully new, and the idempotent event_id refold makes
+    * the checkpoint's replayed batch safe against partially-applied
+    * buckets.
     */
   def scd2Sink(
       events: DataFrame,
@@ -178,7 +180,8 @@ object CdcStream {
     *     orders the rows by bucket for the partitioned write: one task
     *     writes each touched bucket, as one file.
     *  1. The result is staged under `<statePath>.tmp` and each touched
-    *     bucket dir is swapped in individually.
+    *     bucket dir is swapped in individually ([[scd2Sink]]'s crash
+    *     note).
     *
     * The dedup key is equivalent to [[Scd2.apply]]'s event_id dedup over
     * the same events: the pinned batch is already unique on event_id, and
@@ -247,7 +250,7 @@ object CdcStream {
         .parquet(tmp)
       touched.foreach { b =>
         val fresh = new HPath(s"$tmp/bucket=$b")
-        if (fs.exists(fresh)) swapDir(fs, new HPath(root, s"bucket=$b"), fresh)
+        if (fs.exists(fresh)) Dfs.swap(fs, new HPath(root, s"bucket=$b"), fresh)
       }
       Dfs.rmTree(fs, new HPath(tmp))
     } finally pinned.unpersist(blocking = false) // a long-running sink must not accumulate pins
@@ -277,15 +280,16 @@ object CdcStream {
     // root-level .old fallback (mid-[[rebucketState]] crash): pure, like
     // the per-bucket fallback below — recovery stays with the writer
     val fs = Dfs.fs(spark, statePath)
+    val oldRoot = Dfs.retired(new HPath(statePath))
     val rootDir =
-      if (!hasBucketDirs(fs, new HPath(statePath)) && hasBucketDirs(fs, new HPath(statePath + ".old")))
-        statePath + ".old"
+      if (!hasBucketDirs(fs, new HPath(statePath)) && hasBucketDirs(fs, oldRoot)) oldRoot.toString
       else statePath
     val dirs = Dfs.listDirs(fs, new HPath(rootDir)).filter(_.getName.startsWith("bucket="))
-    val live = dirs.filter(!_.getName.endsWith(".old")).map(_.getName).toSet
+    def isRetired(d: HPath) = d.getName.endsWith(Dfs.RetiredSuffix)
+    val live = dirs.filter(!isRetired(_)).map(_.getName).toSet
     val readable = dirs.collect {
-      case d if !d.getName.endsWith(".old") => d.toString
-      case d if !live.contains(d.getName.stripSuffix(".old")) => d.toString
+      case d if !isRetired(d) => d.toString
+      case d if !live.contains(d.getName.stripSuffix(Dfs.RetiredSuffix)) => d.toString
     }
     if (readable.isEmpty) spark.read.parquet(rootDir).drop("bucket")
     else spark.read.parquet(readable.toIndexedSeq: _*).drop("bucket")
@@ -308,11 +312,13 @@ object CdcStream {
     * the root's `_graft_buckets` marker records the live modulus and
     * [[applyBatchToState]] require()s a match before every batch, so a
     * sink restarted with the stale value fails fast instead of merging
-    * against wrong buckets. Crash safety: staging
-    * dir + two root moves with `.old`; every window is healed by
-    * [[recoverRootSwap]], which both [[applyBatchToState]] and
-    * [[readState]] consult. At cluster scale the same dataflow is a
-    * rewrite to a new table path + catalog/location flip.
+    * against wrong buckets. Crash safety: the new layout is staged at
+    * `<statePath>.rebucket` and the root replaced with
+    * [[graft.sinks.Dfs.swap]]; a crash rolls back through
+    * [[recoverRootSwap]] on the next batch or rebucket, and
+    * [[readState]] reads the `.old` root meanwhile. At cluster scale the
+    * same dataflow is a rewrite to a new table path + catalog/location
+    * flip.
     */
   def rebucketState(
       spark: SparkSession,
@@ -345,27 +351,20 @@ object CdcStream {
     // marker travels INSIDE the staging root so the swap below carries
     // data + contract atomically (and `.old` keeps the old pair)
     writeBucketMarker(fs, staging, newNumBuckets)
-    val old = new HPath(statePath + ".old")
-    Dfs.move(fs, root, old)
-    Dfs.move(fs, staging, root)
-    Dfs.rmTree(fs, old)
+    Dfs.swap(fs, root, staging)
   }
 
-  /** Heal a crash inside [[rebucketState]]'s root swap. A `<state>.old`
-    * root with no live bucket dirs next to it is a crash between the two
-    * moves (the live root is absent, or an empty shell a concurrent
-    * `createDirectories` manufactured) — the `.old` root IS the table;
-    * restore it. A `.old` root NEXT TO a live bucketed root is a
-    * post-swap crash — drop it.
+  /** Heal a crash inside [[rebucketState]]'s root swap with
+    * [[graft.sinks.Dfs.heal]]. The one site-specific step: next to a
+    * `.old` root, a live root with no bucket dirs is an empty shell a
+    * concurrent `mkdirs` manufactured mid-swap, not a table, so it is
+    * removed first and the `.old` root restored.
     */
   private[streaming] def recoverRootSwap(fs: FileSystem, statePath: String): Unit = {
     val root = new HPath(statePath)
-    val old = new HPath(statePath + ".old")
-    if (!fs.exists(old)) return
-    if (!hasBucketDirs(fs, root)) {
-      if (fs.exists(root)) Dfs.rmTree(fs, root)
-      Dfs.move(fs, old, root)
-    } else Dfs.rmTree(fs, old)
+    if (!fs.exists(Dfs.retired(root))) return
+    if (!hasBucketDirs(fs, root)) Dfs.rmTree(fs, root)
+    Dfs.heal(fs, root, clearStaleOld = true)
   }
 
   /** The state table's frozen bucket modulus, recorded at the root as
@@ -399,31 +398,15 @@ object CdcStream {
   private def hasBucketDirs(fs: FileSystem, root: HPath): Boolean =
     Dfs
       .listDirs(fs, root)
-      .exists(p => p.getName.startsWith("bucket=") && !p.getName.endsWith(".old"))
+      .exists(p => p.getName.startsWith("bucket=") && !p.getName.endsWith(Dfs.RetiredSuffix))
 
-  /** Two-move swap of one bucket dir: live -> .old, fresh -> live, drop
-    * .old. Not atomic; every crash window is covered by [[recoverState]].
-    */
-  private def swapDir(fs: FileSystem, live: HPath, fresh: HPath): Unit = {
-    val old = new HPath(live.getParent, live.getName + ".old")
-    if (fs.exists(live)) {
-      if (fs.exists(old)) Dfs.rmTree(fs, old) // stale post-swap crash
-      Dfs.move(fs, live, old)
-      Dfs.move(fs, fresh, live)
-      Dfs.rmTree(fs, old)
-    } else Dfs.move(fs, fresh, live)
-  }
-
-  /** Restore any bucket left mid-swap by a crash: a `bucket=N.old` with
-    * no live `bucket=N` is a crash between the two moves — move it back;
-    * a `.old` NEXT TO a live dir is a crash after the second move — drop
-    * it.
+  /** Heal every bucket a crash left mid-swap ([[graft.sinks.Dfs.heal]]);
+    * the root listing finds them by their `.old` dirs.
     */
   private def recoverState(fs: FileSystem, root: HPath): Unit =
-    Dfs.listDirs(fs, root).filter(_.getName.endsWith(".old")).foreach { oldP =>
-      val live = new HPath(oldP.getParent, oldP.getName.stripSuffix(".old"))
-      if (!fs.exists(live)) Dfs.move(fs, oldP, live)
-      else Dfs.rmTree(fs, oldP)
+    Dfs.listDirs(fs, root).filter(_.getName.endsWith(Dfs.RetiredSuffix)).foreach { oldP =>
+      val live = new HPath(oldP.getParent, oldP.getName.stripSuffix(Dfs.RetiredSuffix))
+      Dfs.heal(fs, live, clearStaleOld = true)
     }
 
   final case class KeyedEvent(company_id: String, table_name: String, event_id: String)

@@ -3,7 +3,7 @@ package graft.streaming
 import java.io.ByteArrayInputStream
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.BloomFilter
@@ -45,7 +45,7 @@ object CorpusIngest {
     * Both `corpusPath` and `bloomPath` may live on any Hadoop filesystem
     * (each is resolved through its own scheme). Point `bloomPath` at the
     * checkpoint filesystem on a cluster: the bloom is a few MB read and
-    * re-written once per batch through a `.new`/`.old` rename protocol
+    * re-written once per batch through [[graft.sinks.Dfs.swap]]
     * ([[writeBloom]]), so a stateless driver restarting elsewhere picks
     * the state up exactly where the last completed batch left it.
     */
@@ -91,7 +91,7 @@ object CorpusIngest {
       .drop("__rn")
     val bloomFs = graft.sinks.Dfs.fs(spark, bloomPath)
     val stored = readBloom(bloomFs, bloomPath)
-    val corpusExists = pathExists(spark, corpusPath)
+    val corpusExists = graft.sinks.Dfs.fs(spark, corpusPath).exists(new HPath(corpusPath))
     val candidates = stored match {
       case None => withFp // first batch: no history at all
       case Some(_) if !corpusExists =>
@@ -120,24 +120,10 @@ object CorpusIngest {
       case Some(StoredBloom(i, b, _)) => (i, b)
       case None => Dedup.bloomSizing(expectedItems, fpp = 0.01)
     }
-    val delta = survivors
-      .agg(Dedup.bloomAggWithBits(xxhash64(col("text")), items, bits).as("bf"))
-      .head()
-      .getAs[Array[Byte]](0)
-    if (delta != null) {
-      val merged = stored match {
-        case None => delta
-        case Some(StoredBloom(_, _, cur)) =>
-          val f = BloomFilter.readFrom(new ByteArrayInputStream(cur))
-          f.mergeInPlace(BloomFilter.readFrom(new ByteArrayInputStream(delta)))
-          val out = new java.io.ByteArrayOutputStream()
-          f.writeTo(out)
-          out.toByteArray
-      }
-      // bloom BEFORE corpus append (see scaladoc), crash-safe swap
-      writeBloom(bloomFs, bloomPath, items, bits, merged)
+    // bloom BEFORE corpus append (see scaladoc); nothing to append
+    // when no row survived
+    if (mergeBloom(bloomFs, bloomPath, survivors, col("text"), items, bits, stored.map(_.filter)))
       survivors.write.mode(SaveMode.Append).parquet(corpusPath)
-    }
   }
 
   /** Per-batch accounting returned by [[ingestNearDupBatch]] and the
@@ -601,10 +587,7 @@ object CorpusIngest {
           // first bloom-fronted batch on this index: seed the filter
           // from the id column — one O(index) id-only scan, ONCE
           val (items, bits) = Dedup.bloomSizing(expectedItems, fpp = 0.01)
-          val seeded = indexIds
-            .agg(Dedup.bloomAggWithBits(xxhash64(col(idCol)), items, bits).as("bf"))
-            .head()
-            .getAs[Array[Byte]](0)
+          val seeded = bloomDelta(indexIds, col(idCol), items, bits)
           val bytes =
             if (seeded != null) seeded
             else { // empty index aggregates to null: start from an empty filter
@@ -631,20 +614,12 @@ object CorpusIngest {
     if (appended > 0) {
       bloomState.foreach { case (fs, bp, stored) =>
         // deltas are built to the sizing the state was CREATED with
-        // (recorded in the file header) so mergeInPlace always accepts
-        val delta = fresh
-          .agg(Dedup.bloomAggWithBits(xxhash64(col(idCol)), stored.items, stored.bits).as("bf"))
-          .head()
-          .getAs[Array[Byte]](0)
-        val f = BloomFilter.readFrom(new ByteArrayInputStream(stored.filter))
-        f.mergeInPlace(BloomFilter.readFrom(new ByteArrayInputStream(delta)))
-        val out = new java.io.ByteArrayOutputStream()
-        f.writeTo(out)
-        // bloom BEFORE the index append: a crash between the two leaves
+        // (recorded in the file header) so mergeInPlace always accepts.
+        // Bloom BEFORE the index append: a crash between the two leaves
         // an over-claiming filter, and over-claims are always confirmed
         // against the index — the safe direction (the reverse order
         // would re-append the crash window's rows on redelivery)
-        writeBloom(fs, bp, stored.items, stored.bits, out.toByteArray)
+        mergeBloom(fs, bp, fresh, col(idCol), stored.items, stored.bits, Some(stored.filter))
       }
       append(spark, table, fresh)
     }
@@ -903,7 +878,7 @@ object CorpusIngest {
     // happened — the redelivery is a full no-op. Heal any swap-crash
     // window before reading the marker.
     val modelFs = graft.sinks.Dfs.fs(spark, modelPath)
-    SketchIngest.heal(modelFs, new HPath(modelPath))
+    graft.sinks.Dfs.heal(modelFs, new HPath(modelPath))
     if (SketchIngest.committedBatch(modelFs, new HPath(modelPath)).exists(_ >= batchId))
       return CurateIngestStats(0L, 0L, 0L, 0L, replayed = true)
     val base = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
@@ -919,7 +894,7 @@ object CorpusIngest {
     )
     val nInput = uniq.count()
 
-    val modelExists = pathExists(spark, modelPath)
+    val modelExists = modelFs.exists(new HPath(modelPath))
     // stage 0: boilerplate strip against the at-rest segment counts as
     // of batch start (cold/empty model: nothing is frequent yet, the
     // pass is pure tokenize-and-rebuild normalization). boilerCmsWidth
@@ -1016,17 +991,6 @@ object CorpusIngest {
     */
   val CmsDepth = 4
 
-  /** Existence through Hadoop's FileSystem API — resolves against
-    * whatever filesystem the path's scheme names (HDFS/S3A/local), the
-    * same way Spark's own readers do. A driver-local `java.nio`
-    * existence check is always false for `hdfs://`/`s3a://` paths, which
-    * here would silently skip the dedup branch every batch.
-    */
-  private[streaming] def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Bloom-fronted corpus-ID membership gate (r19 — VERDICT r18 #3):
     * the non-exact ingest surfaces confirm replays/orphans by
     * anti-joining the batch against an id-column scan of the WHOLE
@@ -1067,7 +1031,8 @@ object CorpusIngest {
       distinctCorpusIds: Boolean = false
   ) {
     private val cCol = Option(corpusIdCol).getOrElse(idCol)
-    private def corpusExists: Boolean = pathExists(spark, corpusPath)
+    private def corpusExists: Boolean =
+      graft.sinks.Dfs.fs(spark, corpusPath).exists(new HPath(corpusPath))
     private val stored: Option[StoredBloom] =
       bloomPath.flatMap(bp => readBloom(graft.sinks.Dfs.fs(spark, bp), bp))
 
@@ -1117,22 +1082,8 @@ object CorpusIngest {
       val ids =
         if (adopt) appendedIds.select(col(idCol)).unionByName(corpusIds)
         else appendedIds.select(col(idCol))
-      val delta = ids
-        .agg(graft.ops.Dedup.bloomAggWithBits(xxhash64(col(idCol)), items, bits).as("bf"))
-        .head()
-        .getAs[Array[Byte]](0)
-      if (delta != null) {
-        val merged = stored match {
-          case None => delta
-          case Some(StoredBloom(_, _, cur)) =>
-            val f = BloomFilter.readFrom(new ByteArrayInputStream(cur))
-            f.mergeInPlace(BloomFilter.readFrom(new ByteArrayInputStream(delta)))
-            val out = new java.io.ByteArrayOutputStream()
-            f.writeTo(out)
-            out.toByteArray
-        }
-        writeBloom(graft.sinks.Dfs.fs(spark, bp), bp, items, bits, merged)
-      }
+      val fs = graft.sinks.Dfs.fs(spark, bp)
+      mergeBloom(fs, bp, ids, col(idCol), items, bits, stored.map(_.filter))
     }
   }
 
@@ -1144,15 +1095,12 @@ object CorpusIngest {
     * Recording the sizing is what keeps every future delta
     * merge-compatible with the state (see ingestBatch).
     *
-    * Written through the path's own Hadoop filesystem with a
-    * `.new`/`.old` rename protocol rather than an atomic-overwrite move
-    * (which the `FileSystem` API does not offer): the fully-written
-    * closed `.new` is promoted only after the live file is renamed away
-    * to `.old`, so the live path always names a COMPLETE version, and
-    * every crash window leaves either the previous version at `.old` or
-    * the next one at `.new` for [[readBloom]] to heal. Single-writer,
-    * like every swap protocol here: the one foreachBatch loop owns the
-    * state.
+    * Written through the path's own Hadoop filesystem: staged at
+    * `<path>.new` and replaced with [[graft.sinks.Dfs.swap]], healed by
+    * [[readBloom]]. The `.new` staging rolls a crashed swap forward: the
+    * next filter may over-claim the batch whose corpus append never
+    * ran, and an over-claiming bloom is always safe (positives are
+    * confirmed against the corpus).
     */
   private def writeBloom(
       fs: FileSystem,
@@ -1169,44 +1117,63 @@ object CorpusIngest {
     out.write(filter)
     out.flush()
     val p = new HPath(path)
-    val fresh = new HPath(path + ".new")
-    val old = new HPath(path + ".old")
+    val fresh = graft.sinks.Dfs.staged(p)
     if (p.getParent != null) fs.mkdirs(p.getParent)
     val os = fs.create(fresh, true)
     try os.write(bos.toByteArray)
     finally os.close()
-    if (fs.exists(p)) {
-      if (fs.exists(old)) fs.delete(old, false)
-      require(fs.rename(p, old), s"rename $p -> $old failed")
-    }
-    require(fs.rename(fresh, p), s"rename $fresh -> $p failed")
-    if (fs.exists(old)) fs.delete(old, false)
-    ()
+    graft.sinks.Dfs.swap(fs, p, fresh)
   }
 
-  /** Read the bloom state, healing any [[writeBloom]] crash window first.
-    * A missing live file with a `.new` beside it is a crash between the
-    * two renames — promote `.new` (it is complete by protocol order, and
-    * even though its batch's corpus append never ran, an over-claiming
-    * bloom is always safe: positives are confirmed against the corpus).
-    * The one case where `.new` completeness is NOT guaranteed is a crash
-    * during the very first write (no live file, no `.old` — nothing was
-    * ever renamed away), so a parse failure after THAT heal degrades to
-    * "no state yet"; a parse failure of a live file stays loud.
+  /** Build the delta of `keys` ([[bloomDelta]]), OR it into `current`
+    * (with no current filter the delta is the state) and [[writeBloom]]
+    * the result. `(items, bits)` must be the stored filter's sizing, or
+    * `mergeInPlace` throws. False, writing nothing, when `keys` is empty.
+    */
+  private def mergeBloom(
+      fs: FileSystem,
+      path: String,
+      keys: DataFrame,
+      key: Column,
+      items: Long,
+      bits: Long,
+      current: Option[Array[Byte]]
+  ): Boolean = {
+    val delta = bloomDelta(keys, key, items, bits)
+    if (delta == null) return false
+    val merged = current.fold(delta) { cur =>
+      val f = BloomFilter.readFrom(new ByteArrayInputStream(cur))
+      f.mergeInPlace(BloomFilter.readFrom(new ByteArrayInputStream(delta)))
+      val out = new java.io.ByteArrayOutputStream()
+      f.writeTo(out)
+      out.toByteArray
+    }
+    writeBloom(fs, path, items, bits, merged)
+    true
+  }
+
+  /** The serialized filter of the xxhash64 of `key` over the rows of
+    * `keys`, sized `(items, bits)`, in one aggregate job; null when
+    * `keys` is empty.
+    */
+  private def bloomDelta(keys: DataFrame, key: Column, items: Long, bits: Long): Array[Byte] =
+    keys
+      .agg(Dedup.bloomAggWithBits(xxhash64(key), items, bits).as("bf"))
+      .head()
+      .getAs[Array[Byte]](0)
+
+  /** Read the bloom state, healing any [[writeBloom]] crash window first
+    * ([[graft.sinks.Dfs.heal]]). A `.new` is complete by protocol order
+    * except after a crash during the very first write (no live file and
+    * no `.old`: nothing was ever retired), so a parse failure after THAT
+    * heal degrades to "no state yet"; a parse failure of a live file
+    * stays loud.
     */
   private def readBloom(fs: FileSystem, path: String): Option[StoredBloom] = {
     val p = new HPath(path)
-    val fresh = new HPath(path + ".new")
-    val old = new HPath(path + ".old")
-    var healedFirstWrite = false
-    if (!fs.exists(p)) {
-      if (fs.exists(fresh)) {
-        healedFirstWrite = !fs.exists(old)
-        if (fs.exists(old)) fs.delete(old, false)
-        require(fs.rename(fresh, p), s"rename $fresh -> $p failed")
-      } else if (fs.exists(old)) {
-        require(fs.rename(old, p), s"rename $old -> $p failed")
-      }
+    val healedFirstWrite = !fs.exists(p) && {
+      val firstWrite = !fs.exists(graft.sinks.Dfs.retired(p))
+      graft.sinks.Dfs.heal(fs, p) && firstWrite
     }
     if (!fs.exists(p)) None
     else {

@@ -92,7 +92,7 @@ object DriftMonitor {
   ): DataFrame = {
     // heal first: a readback between a crash and the next batch must
     // see the last complete version, not a missing live dir
-    SketchIngest.heal(
+    graft.sinks.Dfs.heal(
       graft.sinks.Dfs.fs(spark, curPath),
       new org.apache.hadoop.fs.Path(curPath)
     )
@@ -201,7 +201,7 @@ object DriftMonitor {
       curPath: String,
       psiThreshold: Double = 0.2
   ): DataFrame = {
-    SketchIngest.heal(
+    graft.sinks.Dfs.heal(
       graft.sinks.Dfs.fs(spark, curPath),
       new org.apache.hadoop.fs.Path(curPath)
     )

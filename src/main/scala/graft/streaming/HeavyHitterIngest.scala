@@ -81,7 +81,7 @@ object HeavyHitterIngest {
     */
   def readSummary(spark: SparkSession, path: String): DataFrame = {
     val fs = graft.sinks.Dfs.fs(spark, path)
-    SketchIngest.heal(fs, new org.apache.hadoop.fs.Path(path))
+    graft.sinks.Dfs.heal(fs, new org.apache.hadoop.fs.Path(path))
     spark.read.parquet(path)
   }
 }

@@ -53,7 +53,7 @@ object IndexIngest {
     val statsPath = s"$path/stats"
     val fs = Dfs.fs(spark, statsPath)
     val live = new HPath(statsPath)
-    SketchIngest.heal(fs, live)
+    Dfs.heal(fs, live)
     // stats commit last => marker proves the postings write happened too
     if (SketchIngest.committedBatch(fs, live).exists(_ >= batchId)) return false
 

@@ -13,10 +13,14 @@ import graft.sinks.Dfs
   * each micro-batch folds its rows into a batch histogram (map-side,
   * O(batch)), exact-long-merges it with the at-rest sketch (O(groups ×
   * bins) rows — KB-sized regardless of history), and swap-writes the
-  * result. Readers ([[graft.ops.Sketches.quantilesFromSketch]],
-  * [[graft.ops.Sketches.cdfFromSketch]]) always see a COMPLETE sketch:
-  * the live dir is replaced by the two-rename `.new`/`.old` protocol
-  * shared with the engine's other at-rest state.
+  * result with [[graft.sinks.Dfs.swap]]. Readers
+  * ([[graft.ops.Sketches.quantilesFromSketch]],
+  * [[graft.ops.Sketches.cdfFromSketch]]) of the live path see a
+  * COMPLETE sketch once any crashed swap is healed
+  * ([[graft.sinks.Dfs.heal]]).
+  * The new version is staged at `<path>.new`: it is fully written,
+  * marker included, before the live dir is retired, so a crash after
+  * the retire rolls forward to it rather than redoing the batch.
   *
   * Exactly-once under foreachBatch's at-least-once redelivery: the
   * committed batch id rides INSIDE the versioned dir (`_batch` control
@@ -24,10 +28,7 @@ import graft.sinks.Dfs
   * sketch and its progress marker swap atomically. A replayed batch id
   * ≤ the stored one is a no-op. Because merge is exact long addition,
   * the streamed sketch is bit-identical to a batch rebuild over the
-  * same rows (spec-pinned), and a crash in ANY rename window leaves
-  * either the previous complete version (healed from `.old`) or the
-  * next one (promoted from `.new` — complete by protocol order: it is
-  * fully written and closed before the live dir is retired).
+  * same rows (spec-pinned).
   *
   * Single-writer contract (as everywhere in this engine): one ingest
   * loop owns a sketch path.
@@ -126,9 +127,13 @@ object SketchIngest {
     val spark = batch.sparkSession
     val fs = Dfs.fs(spark, path)
     val live = new HPath(path)
-    heal(fs, live)
+    Dfs.heal(fs, live)
     val stored = committedBatch(fs, live)
     if (stored.exists(_ >= batchId)) return false
+    // every writer commits the marker before the swap, so a live dir
+    // without one is a first write promoted from a torn `.new`: no
+    // committed state, and merging onto it would count the batch twice
+    if (stored.isEmpty) Dfs.rmTree(fs, live)
 
     val batchCounts = fold(batch)
     // `finish` post-processes the MERGED table before it is committed —
@@ -147,16 +152,11 @@ object SketchIngest {
       } else batchCounts
     )
 
-    val fresh = new HPath(path + ".new")
+    val fresh = Dfs.staged(live)
     Dfs.rmTree(fs, fresh) // stray .new from a pre-swap crash: never acknowledged, rebuild
     merged.coalesce(1).write.parquet(fresh.toString)
     Dfs.writeSmall(fs, new HPath(fresh, "_batch"), batchId.toString)
-
-    val old = new HPath(path + ".old")
-    Dfs.rmTree(fs, old)
-    if (fs.exists(live)) Dfs.move(fs, live, old)
-    Dfs.move(fs, fresh, live)
-    Dfs.rmTree(fs, old)
+    Dfs.swap(fs, live, fresh)
     true
   }
 
@@ -177,24 +177,6 @@ object SketchIngest {
         ()
       }
       .start()
-
-  /** Restore a complete live dir after a crash mid-swap: a missing live
-    * dir with `.new` beside it promotes `.new` (complete by protocol
-    * order); missing live with only `.old` restores the previous
-    * version. No-op when the live dir exists.
-    */
-  def heal(fs: FileSystem, live: HPath): Unit = {
-    val fresh = new HPath(live.toString + ".new")
-    val old = new HPath(live.toString + ".old")
-    if (!fs.exists(live)) {
-      if (fs.exists(fresh)) {
-        Dfs.move(fs, fresh, live)
-        Dfs.rmTree(fs, old)
-      } else if (fs.exists(old)) {
-        Dfs.move(fs, old, live)
-      }
-    }
-  }
 
   /** The batch id the live sketch was committed at, if any. */
   def committedBatch(fs: FileSystem, live: HPath): Option[Long] = {

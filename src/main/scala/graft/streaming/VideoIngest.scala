@@ -404,7 +404,7 @@ object VideoIngest {
       batchId: Long
   ): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.sinks.Dfs.fs(spark, path)
     if (!fs.exists(p)) None
     else {
       val versions = fs
@@ -437,7 +437,7 @@ object VideoIngest {
   ): Unit = {
     frames.write.mode(SaveMode.Overwrite).parquet(s"$path/v=$batchId")
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.sinks.Dfs.fs(spark, path)
     val readVersion = fs
       .listStatus(p)
       .filter(_.isDirectory)

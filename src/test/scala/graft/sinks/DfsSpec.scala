@@ -1,6 +1,7 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSession
@@ -68,5 +69,39 @@ class DfsSpec extends AnyFunSuite {
     assert(!Dfs.existsSmall(fs, p), "never-acknowledged write must not surface")
     Dfs.writeSmall(fs, p, "16")
     assert(Dfs.readSmallString(fs, p) === "16")
+  }
+
+  /** A local filesystem whose FIRST rename carries out the move (the
+    * winning healer: another reader that found the same crashed swap)
+    * and then answers as the losing healer's rename does: `false`, or,
+    * with `rerun`, the real rename of the now-missing source, which on
+    * the local filesystem throws `FileNotFoundException`.
+    */
+  private final class LosingRenameFs(rerun: Boolean) extends RawLocalFileSystem {
+    private var lost = false
+    override def rename(src: Path, dst: Path): Boolean = {
+      val moved = super.rename(src, dst)
+      if (lost) moved
+      else {
+        lost = true
+        rerun && super.rename(src, dst)
+      }
+    }
+  }
+
+  test("heal that loses the rename to a racing healer returns with live restored (.old and .new)") {
+    for (suffix <- Seq(".old", ".new"); rerun <- Seq(false, true)) {
+      val dir = freshDir()
+      val fs = new LosingRenameFs(rerun)
+      fs.initialize(java.net.URI.create("file:///"), new Configuration())
+      val live = new Path(dir, "state")
+      val aside = new Path(dir, "state" + suffix)
+      val out = fs.create(new Path(aside, "part"), true)
+      out.write("v".getBytes("UTF-8")); out.close()
+      assert(Dfs.heal(fs, live), s"heal from $suffix must report the restore")
+      assert(fs.exists(new Path(live, "part")), s"live not restored from $suffix")
+      assert(!fs.exists(aside))
+      assert(!Dfs.heal(fs, live), "a second heal has nothing to do")
+    }
   }
 }

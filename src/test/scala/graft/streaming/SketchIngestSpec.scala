@@ -93,13 +93,13 @@ class SketchIngestSpec extends AnyFunSuite {
     val v2 = sketchMap(path)
     Dfs.rmTree(fs, new HPath(path + ".new"))
     fs.rename(live, new HPath(path + ".new")) // fake: v2 sits at .new, live absent
-    SketchIngest.heal(fs, live)
+    Dfs.heal(fs, live)
     assert(sketchMap(path) === v2)
     assert(SketchIngest.committedBatch(fs, live) === Some(1L))
 
     // window B: live retired to .old, .new already consumed: restore .old
     fs.rename(live, new HPath(path + ".old"))
-    SketchIngest.heal(fs, live)
+    Dfs.heal(fs, live)
     assert(sketchMap(path) === v2)
 
     // window C: stray complete .new beside an intact live (crash before
@@ -109,6 +109,26 @@ class SketchIngestSpec extends AnyFunSuite {
     assert(!SketchIngest.ingestSketchBatch(b2, 1L, "v", Seq("g"), lo, hi, bins, path))
     assert(sketchMap(path) === v2)
     assert(v1 !== v2)
+  }
+
+  test("torn first write: a promoted .new without its _batch marker is not committed state") {
+    val tmp = Files.createTempDirectory("skingest4").toString
+    val path = s"$tmp/sketch"
+    val fs = Dfs.fs(spark, path)
+    val live = new HPath(path)
+    val b1 = mkBatch(7, 300)
+    assert(SketchIngest.ingestSketchBatch(b1, 0L, "v", Seq("g"), lo, hi, bins, path))
+    val once = sketchMap(path)
+
+    // crash state of the FIRST write between its parquet write to .new
+    // and the marker: no live dir, no .old, a marker-less .new
+    val fresh = new HPath(path + ".new")
+    require(fs.rename(live, fresh))
+    require(fs.delete(new HPath(fresh, "_batch"), false))
+    // redelivery heals (promoting .new), then must apply b1 exactly once
+    assert(SketchIngest.ingestSketchBatch(b1, 0L, "v", Seq("g"), lo, hi, bins, path))
+    assert(sketchMap(path) === once)
+    assert(SketchIngest.committedBatch(fs, live) === Some(0L))
   }
 
   test("additive multi-measure view: streamed fact chunks == batch rebuild, replay no-op") {
