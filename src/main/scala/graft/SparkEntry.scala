@@ -330,7 +330,7 @@ object SparkEntry {
     // Dedup: 64-bit SimHash, banded candidates, hamming <= 16. Token
     // hash is the md5-derived 60-bit variant so DuckDB can replay the
     // whole pipeline hash-exactly (see Dedup.md5TokenHash; the xxhash64
-    // default is pinned bit-parity in PlansSpec instead).
+    // default is pinned bit-parity in HashExpressionsSpec instead).
     "q19_simhash_pairs" -> ((s, dir) => {
       Dedup
         .simHashPairs(t(s, dir, "documents"), "text", "doc_id", maxHamming = 16,

@@ -110,7 +110,7 @@ object Bpe {
     * merge — and each fold embeds its child column TWICE (seed + fold
     * input), so the tree is ~2^n nodes: past ~15 merges the DRIVER dies
     * building the plan, long before janino sees it. Kept as the executable
-    * spec of the apply semantics (BpeNativeApplySpec pins the native
+    * spec of the apply semantics (BpeApplyMergesSpec pins the native
     * expression bit-parity against it); every production path goes
     * through [[applyMergesNative]], whose cost is independent of the
     * merge count (verdict r14 #1 — a 30k-merge model is unusable here

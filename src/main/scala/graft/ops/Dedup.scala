@@ -93,7 +93,7 @@ object Dedup {
     * passes (q18 was round 1's slowest query; the k passes were why).
     * Signatures are bit-identical to the composed
     * `array_min(transform(hs, h => xxhash64(lit(i), h)))` form
-    * (PlansSpec pins this).
+    * (HashExpressionsSpec pins this).
     */
   def minHashSignatures(shingled: DataFrame, numHashes: Int): DataFrame =
     shingled.select(
@@ -111,27 +111,12 @@ object Dedup {
     * pair generation without a self-join.
     */
   private def pairCombos(ids: Column): Column =
-    // r20: native one-loop expression — the composed HOF chain below
+    // r20: native one-loop expression — the composed HOF chain it replaced
     // allocated a slice copy + filter array + transform array per anchor
     // element, interpreted (1.0–1.7 s of single-task CPU in the image
     // queries' coalesced reduce stages); bit-identical pair sets, parity
     // pinned in PairCombosSpec
     graft.plans.PairCombos.pairCombos(ids)
-
-  /** The composed HOF form [[pairCombos]] replaced — kept ONLY as the
-    * parity reference for PairCombosSpec.
-    */
-  private[graft] def pairCombosComposed(ids: Column): Column =
-    flatten(
-      transform(
-        sequence(lit(1), size(ids) - 1),
-        k =>
-          transform(
-            filter(slice(ids, k + 1, size(ids)), j => j > element_at(ids, k)),
-            j => struct(element_at(ids, k).as("i"), j.as("j"))
-          )
-      )
-    )
 
   /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
     * and key each band by its hash. Documents sharing any band key are
@@ -485,7 +470,7 @@ object Dedup {
     * the native [[graft.plans.SimHash64]] expression — one pass over the
     * token hashes instead of 64 separate aggregate folds (the whole cost
     * of this operator at sf0.1 in BENCH_r01); output bit-identical to
-    * the composed form (PlansSpec).
+    * the composed form (HashExpressionsSpec).
     */
   def simHashes(
       df: DataFrame,
@@ -510,7 +495,7 @@ object Dedup {
     * BOTH engines can compute bit-identically — md5 is the shared
     * primitive (same q21 trade: the oracle pins the full banding /
     * hamming / pairing dataflow; the xxhash64 default stays the
-    * production path, pinned bit-parity in PlansSpec).
+    * production path, pinned bit-parity in HashExpressionsSpec).
     *
     * Known entropy quirk (accepted): 15 hex chars give 60 bits, so
     * token-hash bits 60–63 are constant 0 and the vote fold pins
@@ -648,7 +633,7 @@ object Dedup {
     * projection for BOTH join sides — and only candidate pairs join the
     * raw vectors back for the exact-cosine verify. Each plane dot
     * accumulates left-to-right over doubles, matching both the composed
-    * fold ([[composedBandKeys]], pinned bit-identical in
+    * fold (pinned bit-identical in
     * HashExpressionsSpec) and the DuckDB oracle's `list_reduce` replay
     * (q21's hash-exact check depends on it).
     *
@@ -2031,31 +2016,6 @@ object Dedup {
   private[graft] def hyperplanes(dim: Int, n: Int, seed: Long): Seq[Seq[Double]] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(n)(Seq.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /** The pre-native composed formulation of the band keys (one boxed
-    * `aggregate(zip_with(...))` fold per plane), kept ONLY as the parity
-    * reference for [[graft.plans.HyperplaneBands]] in
-    * HashExpressionsSpec. Returns one `(band, bhash)` struct per band.
-    */
-  private[graft] def composedBandKeys(
-      vec: Column,
-      planes: Seq[Seq[Double]],
-      bitsPerBand: Int
-  ): Column = {
-    def dotPlane(p: Seq[Double]): Column =
-      aggregate(
-        zip_with(vec, typedLit(p), (x, w) => x.cast("double") * w),
-        lit(0.0),
-        (acc, v) => acc + v
-      )
-    val bandCols = (0 until planes.size / bitsPerBand).map { b =>
-      val key = (0 until bitsPerBand).foldLeft(lit(0L)) { (acc, k) =>
-        acc * 2 + when(dotPlane(planes(b * bitsPerBand + k)) > 0, 1L).otherwise(0L)
-      }
-      struct(lit(b).as("band"), key.as("bhash"))
-    }
-    array(bandCols: _*)
   }
 
   /** Substring-level exact duplication (the Lee et al. 2022

@@ -134,40 +134,10 @@ object Similarity {
     * it broke whole-stage codegen for every enclosing projection and
     * ran its floor fold interpreted per row; the expression runs one
     * primitive loop, bit-identically (CellOpsSpec parity pin against
-    * [[quantizeVecComposed]]).
+    * the composed form).
     */
   private[graft] def quantizeVec(vec: Column): Column =
     graft.plans.CellOps.quantizeVec(vec, TrainScale)
-
-  /** The composed form [[quantizeVec]] replaced — kept ONLY as the
-    * parity reference for CellOpsSpec.
-    */
-  private[graft] def quantizeVecComposed(vec: Column): Column =
-    // floor() returns LONG; cast back so the cosine/PQ expressions (which
-    // take array<double>) consume it — the values stay exact integers
-    transform(vec.cast("array<double>"), x => floor(x * lit(TrainScale)).cast("double"))
-
-  /** Squared L2 distance to a literal centroid (left fold, map-side). */
-  private def l2sq(a: Column, cent: Seq[Double]): Column =
-    aggregate(
-      zip_with(a, typedLit(cent), (x, y) => (x - y) * (x - y)),
-      lit(0.0),
-      (acc, v) => acc + v
-    )
-
-  /** Composed argmin over one subspace codebook — kept ONLY as the
-    * parity reference for the native [[graft.plans.PqCodes]] expression
-    * in HashExpressionsSpec (the [[kmeansCentroids]] scoredCells struct
-    * trick: max of (-dist, -code) = smallest distance, ties to the
-    * smallest code). The hot paths all use the native expression: the
-    * composed form allocates m*k boxed lambda frames per row.
-    */
-  private[graft] def pqComposedArgmin(sv: Column, cb: Seq[Seq[Double]]): Column = {
-    val scored = array(cb.zipWithIndex.map { case (cent, c) =>
-      struct((-l2sq(sv, cent)).as("negd"), lit(-c).as("negc"))
-    }: _*)
-    (-array_max(scored).getField("negc")).cast("int")
-  }
 
   /** Lloyd-train the m per-subspace codebooks JOINTLY: one frame of
     * (subspace, subvector) rows, one map-side argmin assignment + one
@@ -291,14 +261,6 @@ object Similarity {
     */
   def pqDecode(codes: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
     graft.plans.CellOps.pqReconstruct(codes, codebooks)
-
-  /** The composed form [[pqDecode]] replaced — kept ONLY as the parity
-    * reference for CellOpsSpec.
-    */
-  private[graft] def pqDecodeComposed(codes: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
-    concat(codebooks.zipWithIndex.map { case (cb, s) =>
-      typedLit(cb).apply(codes.getItem(s))
-    }: _*)
 
   /** PQ ANN with exact reranking — the standard two-stage shape: stage 1
     * scores full-precision queries against the RECONSTRUCTED corpus
@@ -1304,14 +1266,6 @@ object Similarity {
   // nProbe/nCells x (m / 4*dim) of the at-rest bytes.
   // ---------------------------------------------------------------
 
-  /** The coarse centroids as a map literal keyed by cent_id — the
-    * map-side per-row centroid lookup the residual encode/decode paths
-    * use (nCells x dim doubles: bytes-scale, same budget as every other
-    * centroid literal here).
-    */
-  private def centMapLit(cents: Seq[(Long, Seq[Double])]): Column =
-    typedLit(cents.toMap)
-
   /** `v - centroid(cent_id)` as a map-side projection over an assigned
     * frame — the residual the opt-in PQ mode quantizes (Jégou §IV:
     * residuals concentrate around 0 far more tightly than raw vectors,
@@ -1324,16 +1278,6 @@ object Similarity {
     */
   private def residualCol(vec: Column, centId: Column, cents: Seq[(Long, Seq[Double])]): Column =
     graft.plans.CellOps.residualVec(vec, centId, cents, TrainScale)
-
-  /** The composed form [[residualCol]] replaced — kept ONLY as the
-    * parity reference for CellOpsSpec.
-    */
-  private[graft] def residualColComposed(
-      vec: Column,
-      centId: Column,
-      cents: Seq[(Long, Seq[Double])]
-  ): Column =
-    zip_with(quantizeVecComposed(vec), element_at(centMapLit(cents), centId), (x, c) => x - c)
 
   /** Coarse-assign + PQ-encode in ONE map-side projection: (cid,
     * cent_id, codes). Residual-free default (codes quantize the raw

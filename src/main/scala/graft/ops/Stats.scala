@@ -62,28 +62,6 @@ object Stats {
     )
   }
 
-  /** The composed decimal(38,0) form [[pearsonMoments]] replaced — kept
-    * ONLY as the parity reference for MomentSumsSpec. Casts EACH FACTOR
-    * to decimal before multiplying: a native int/long product can
-    * silently wrap before the decimal cast sees it, while
-    * decimal(38,0)*decimal(38,0) promotes (matching DuckDB's integer
-    * promotion) — the moment discipline has to start at the factor.
-    */
-  private[graft] def pearsonMomentsComposed(df: DataFrame, cols: Seq[String]): DataFrame = {
-    require(cols.size >= 2, s"need at least 2 columns, got ${cols.size}")
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val singles = cols.flatMap { c =>
-      Seq(
-        sum(dec(col(c))).as(s"s_$c"),
-        sum(dec(col(c)) * dec(col(c))).as(s"ss_$c")
-      )
-    }
-    val crosses = unorderedPairs(cols).map { case (a, b) =>
-      sum(dec(col(a)) * dec(col(b))).as(s"sp_${a}_$b")
-    }
-    df.agg(count(lit(1)).as("n"), (singles ++ crosses): _*)
-  }
-
   /** The correlation grid from a 1-row [[pearsonMoments]] frame
     * (inline, at-rest, or streamed-maintained — all equal under exact
     * addition). One row in, C(C-1)/2 rows out: a tiny per-pair

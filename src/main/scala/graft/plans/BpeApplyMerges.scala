@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * O(len · nMerges).
   *
   * Semantics are [[graft.ops.Bpe.mergeAdjacent]]'s fold applied in rank
-  * order, EXACTLY (BpeNativeApplySpec pins bit-parity against the
+  * order, EXACTLY (BpeApplyMergesSpec pins bit-parity against the
   * composed form):
   *  - each merge pass is left-to-right non-overlapping ("aaa" under
   *    (a,a) → [aa, a]);
@@ -46,12 +45,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * O(len · nMerges) cost. Empty-string symbols are rejected outright:
   * the fold's merged symbol a+b would equal `a` and re-merge unboundedly.
   *
-  * Codegen: the same nullSafeEval through a reference object — no
-  * CodegenFallback row boxing, the enclosing stage stays in
-  * WholeStageCodegen (the [[MinHashSignature]] discipline).
+  * Codegen: [[NativeEval]].
   */
 case class BpeApplyMerges(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends UnaryExpression with NativeEval {
 
   require(
     merges.forall { case (a, b) => a.nonEmpty && b.nonEmpty },
@@ -198,16 +195,6 @@ case class BpeApplyMerges(child: Expression, merges: Seq[(String, String)])
     var o = 0
     while (o < len) { out(o) = cur(o); o += 1 }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

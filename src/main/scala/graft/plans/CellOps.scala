@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
@@ -19,7 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * zip_with), measured at ~2.5 ms CPU per corpus row in the r20
   * profile of q75's Lloyd-iteration jobs. Each expression here runs
   * the identical arithmetic as one primitive loop and stays inside
-  * WholeStageCodegen via the [[PqCodes]] reference-object pattern.
+  * WholeStageCodegen through the [[NativeEval]] bridge.
   *
   * Bit-exactness contracts (parity-pinned in CellOpsSpec against the
   * composed forms they replace):
@@ -139,12 +140,58 @@ private[plans] trait VecInput { self: Expression =>
     if (elemIsFloat) v.getFloat(i).toDouble else v.getDouble(i)
 }
 
+/** The one bridge from a null-safe native kernel into generated code.
+  * The generated code calls the expression's own `nullSafeEval`
+  * through a reference object, so one implementation serves the
+  * interpreted and the generated path: no CodegenFallback boxing of the
+  * input row, and the enclosing stage stays in WholeStageCodegen.
+  *
+  * Null flow is `nullSafeCodeGen`'s, over one child or two: a null
+  * child yields null without a call. The result is cast to the boxed
+  * `dataType` (Janino unboxes a primitive), and when the expression is
+  * `nullable` a null result sets `isNull` — CodegenFallback's rule — so
+  * a kernel that returns null on degenerate input never hands a fused
+  * consumer a null value flagged non-null. Both paths of every kernel
+  * are pinned in NativeKernelParitySpec.
+  */
+private[plans] trait NativeEval extends Expression {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("graftExpr", this)
+    val args = children.map(_.genCode(ctx))
+    val out = ctx.freshName("kernelOut")
+    val javaType = CodeGenerator.javaType(dataType)
+    val cast = s"(${CodeGenerator.boxedType(dataType)})"
+    val call = s"$ref.nullSafeEval(${args.map(_.value).mkString(", ")})"
+    if (nullable) {
+      val result =
+        s"""Object $out = $call;
+           |${ev.isNull} = $out == null;
+           |if (!${ev.isNull}) ${ev.value} = $cast $out;""".stripMargin
+      // each child is evaluated only while the ones before it are non-null
+      val body = children.zip(args).foldRight(result) { case ((c, a), inner) =>
+        s"${a.code}\n${ctx.nullSafeExec(c.nullable, a.isNull.toString)(inner)}"
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $body""")
+    } else {
+      ev.copy(
+        code = code"""
+          ${args.map(_.code.toString).mkString("\n")}
+          $javaType ${ev.value} = $cast $call;""",
+        isNull = FalseLiteral
+      )
+    }
+  }
+}
+
 /** `transform(vec.cast(array<double>), x => floor(x*scale).cast(double))`
   * as one primitive loop: floor(x·scale) → long → double per element,
   * null elements pass through null.
   */
 case class QuantizeVec(child: Expression, scale: Double)
-    extends UnaryExpression with VecInput {
+    extends UnaryExpression with VecInput with NativeEval {
 
   override protected def vecChild: Expression = child
 
@@ -168,15 +215,6 @@ case class QuantizeVec(child: Expression, scale: Double)
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -186,9 +224,11 @@ case class QuantizeVec(child: Expression, scale: Double)
   * argmax with the (best rounded cosine, then smallest cent_id)
   * tiebreak. Input is the QUANTIZED vector; width must equal the
   * centroid width (raises like the composed cosine's length require).
+  * A null vector yields null, where the composed `array_max` over null
+  * scores picks an arbitrary id.
   */
 case class NearestCell(child: Expression, cents: Seq[(Long, Seq[Double])])
-    extends UnaryExpression with VecInput {
+    extends UnaryExpression with VecInput with NativeEval {
 
   override protected def vecChild: Expression = child
 
@@ -241,25 +281,17 @@ case class NearestCell(child: Expression, cents: Seq[(Long, Seq[Double])])
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = ((java.lang.Long) $ref.nullSafeEval($c)).longValue();"
-    )
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 /** `slice(reverse(array_sort(scoredCells(v, cents))), 1, nProbe)`
   * mapped to cent_ids, as one primitive loop: the top-`nProbe` cells by
-  * (rounded cosine desc, cent_id asc), in that order.
+  * (rounded cosine desc, cent_id asc), in that order. A null vector
+  * yields null, as for [[NearestCell]].
   */
 case class TopCells(child: Expression, cents: Seq[(Long, Seq[Double])], nProbe: Int)
-    extends UnaryExpression with VecInput {
+    extends UnaryExpression with VecInput with NativeEval {
 
   require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
 
@@ -322,15 +354,6 @@ case class TopCells(child: Expression, cents: Seq[(Long, Seq[Double])], nProbe: 
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -344,7 +367,7 @@ case class TopCells(child: Expression, cents: Seq[(Long, Seq[Double])], nProbe: 
   * codes tables.
   */
 case class PqReconstruct(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression {
+    extends UnaryExpression with NativeEval {
 
   require(codebooks.nonEmpty && codebooks.head.nonEmpty, "codebooks must be non-empty")
   require(
@@ -404,18 +427,6 @@ case class PqReconstruct(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
     if (dec == null) null else new GenericArrayData(dec)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    )
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -429,7 +440,7 @@ case class PqReconstructResidual(
     right: Expression,
     codebooks: Seq[Seq[Seq[Double]]],
     cents: Seq[(Long, Seq[Double])]
-) extends BinaryExpression {
+) extends BinaryExpression with NativeEval {
 
   @transient private lazy val decoder = PqReconstruct(left, codebooks)
   @transient private lazy val centMap: Map[Long, Array[Double]] =
@@ -467,18 +478,6 @@ case class PqReconstructResidual(
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, b) => s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($a, $b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    )
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression,
       newRight: Expression
@@ -496,7 +495,7 @@ case class ResidualVec(
     right: Expression,
     cents: Seq[(Long, Seq[Double])],
     scale: Double
-) extends BinaryExpression with VecInput {
+) extends BinaryExpression with VecInput with NativeEval {
 
   override protected def vecChild: Expression = left
 
@@ -539,18 +538,6 @@ case class ResidualVec(
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, b) => s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($a, $b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    )
   }
 
   override protected def withNewChildrenInternal(

@@ -15,14 +15,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * row with zero allocation. Summation order matches the sequential
   * fold exactly (acc starts at 0.0, left-to-right), so results are
   * bit-identical to [[graft.functions.Fns.cosine]] — asserted in
-  * PlansSpec.
+  * SurfaceSpec.
   *
   * Native codegen (round 12): `doGenCode` emits a static call into
   * [[CosineSimilarity.compute]] — the same primitive loop the
   * interpreted path runs, but WITHOUT CodegenFallback's per-row
   * InternalRow boxing, and the enclosing Project/Filter stage stays
   * fused in WholeStageCodegen instead of falling out (plan-pinned in
-  * PlansSpec). Null if either side is null, mismatched lengths raise.
+  * HashExpressionsSpec). Null if either side is null, mismatched lengths
+  * raise; a null element reads as 0.0, and a zero vector gives NaN
+  * (the composed fold turns null there, and raises under ANSI).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {

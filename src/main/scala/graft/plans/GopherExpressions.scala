@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * element of every row walks an interpreted expression tree, and the
   * quality/repetition scorers ran four to six such folds per document.
   * Each expression here computes the identical arithmetic in ONE
-  * primitive loop per row and stays codegen-friendly via the
-  * reference-object pattern (same convention as [[Tokenize]]).
+  * primitive loop per row and reaches generated code through
+  * [[NativeEval]] (GramMass, which is not null-safe, keeps its own).
   *
   * Bit-exactness is parity-pinned in GopherExpressionsSpec against the
   * composed forms over the real corpus plus edge cases; all char
@@ -27,9 +27,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (codepoints), stopword hits (exact matches against `stopWords`), and
   * words containing at least one `[a-z]` byte (== `rlike("[a-z]")` —
   * no UTF-8 continuation/lead byte falls in the ascii a-z range).
-  * Null array → null struct (matches the composed forms' null flow).
+  * Null array → null struct (matches the composed forms' null flow). A
+  * null token counts as a word and as one distinct value, as in the
+  * composed form, but adds nothing to `char_sum`, where the composed
+  * `aggregate` turns null (Tokenize output never holds one).
   */
-case class WordStats(child: Expression, stopWords: Seq[String]) extends UnaryExpression {
+case class WordStats(child: Expression, stopWords: Seq[String])
+    extends UnaryExpression with NativeEval {
 
   override def dataType: DataType = StructType(
     Seq(
@@ -69,29 +73,22 @@ case class WordStats(child: Expression, stopWords: Seq[String]) extends UnaryExp
     while (i < n) {
       val t = toks.getUTF8String(i)
       seen.add(t)
-      charSum += t.numChars()
-      if (stopSet.contains(t)) stop += 1
-      val nb = t.numBytes()
-      var j = 0
-      var hasAlpha = false
-      while (j < nb && !hasAlpha) {
-        val b = t.getByte(j)
-        if (b >= 'a' && b <= 'z') hasAlpha = true
-        j += 1
+      if (t != null) {
+        charSum += t.numChars()
+        if (stopSet.contains(t)) stop += 1
+        val nb = t.numBytes()
+        var j = 0
+        var hasAlpha = false
+        while (j < nb && !hasAlpha) {
+          val b = t.getByte(j)
+          if (b >= 'a' && b <= 'z') hasAlpha = true
+          j += 1
+        }
+        if (hasAlpha) alpha += 1
       }
-      if (hasAlpha) alpha += 1
       i += 1
     }
     new GenericInternalRow(Array[Any](n, seen.size, charSum, stop, alpha))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.nullSafeEval($c);"
-    )
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -107,7 +104,7 @@ case class WordStats(child: Expression, stopWords: Seq[String]) extends UnaryExp
   * interpreted run-fold with one hash-counting pass. Null text → null
   * struct (composed form's null flow).
   */
-case class LineStats(child: Expression) extends UnaryExpression {
+case class LineStats(child: Expression) extends UnaryExpression with NativeEval {
 
   override def dataType: DataType = StructType(
     Seq(
@@ -168,15 +165,6 @@ case class LineStats(child: Expression) extends UnaryExpression {
     new GenericInternalRow(Array[Any](nLines, nLines - counts.size(), dupChars, totalChars))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.nullSafeEval($c);"
-    )
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -190,6 +178,8 @@ case class LineStats(child: Expression) extends UnaryExpression {
   * with one loop. Fewer than n tokens — or a NULL array, matching the
   * composed `when(size >= n, …).otherwise(empty)` flow — yields
   * (0, 0), so `eval` handles null itself and the result is never null.
+  * Grams join like `concat_ws`, as in the composed form: a null token
+  * is skipped.
   */
 case class GramMass(child: Expression, n: Int) extends UnaryExpression {
 
@@ -229,15 +219,17 @@ case class GramMass(child: Expression, n: Int) extends UnaryExpression {
     val cnt = toks.numElements()
     if (cnt < n) return zero
     val sep = UTF8String.fromString(" ")
+    val window = new Array[UTF8String](n)
     val counts = new java.util.HashMap[UTF8String, Array[Long]]()
     var i = 0
     while (i <= cnt - n) {
-      var gram = toks.getUTF8String(i)
-      var k = 1
+      var k = 0
       while (k < n) {
-        gram = UTF8String.concat(gram, sep, toks.getUTF8String(i + k))
+        window(k) = toks.getUTF8String(i + k)
         k += 1
       }
+      // concat_ws, as in the composed form: a null token is skipped
+      val gram = UTF8String.concatWs(sep, window: _*)
       val slot = counts.get(gram)
       if (slot == null) counts.put(gram, Array(1L, (gram.numChars() - (n - 1)).toLong))
       else slot(0) += 1L

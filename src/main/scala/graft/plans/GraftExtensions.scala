@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SQL surface for the engine's native expressions: registers
-  * `cosine_sim`, `minhash_signature`, `simhash64` in the function
-  * registry so pure-SQL users (`spark.sql`, JDBC/Thrift, notebooks) get
+  * `cosine_sim`, `minhash_signature`, `simhash64`, `tokenize`,
+  * `distinct_shingles` and `gram_hashes` in the function registry
+  * (integer arguments must be literals) so pure-SQL users (`spark.sql`, JDBC/Thrift, notebooks) get
   * the same codepaths as the Column API.
   *
   * Two entry points:

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantics); a null input null-propagates.
   */
 case class GramHashes(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeEval {
 
   require(k >= 1, "k must be positive")
 
@@ -73,21 +72,6 @@ case class GramHashes(child: Expression, k: Int)
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-
-  // native codegen (round 12): call the SAME nullSafeEval through a
-  // reference object - no CodegenFallback row boxing, and the
-  // enclosing stage stays in WholeStageCodegen (pinned in
-  // HashExpressionsSpec). One implementation serves both paths.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

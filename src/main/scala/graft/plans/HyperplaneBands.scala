@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
@@ -27,15 +26,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * HashExpressionsSpec; q21's hash-exact check depends on it). A null
   * vector null-propagates; a null ELEMENT poisons every dot (null > 0 is
   * false in the composed `when`), yielding all-zero keys — matched here.
-  * Codegen: `doGenCode` calls the same `nullSafeEval` through a
-  * reference object, so the enclosing stage stays whole-stage
-  * generated and one implementation serves both paths.
+  * A NaN dot is a 1 bit, as SQL's `NaN > 0` is true.
+  * Codegen: [[NativeEval]].
   */
 case class HyperplaneBands(
     child: Expression,
     planes: Seq[Seq[Double]],
     bitsPerBand: Int
-) extends UnaryExpression {
+) extends UnaryExpression with NativeEval {
 
   require(bitsPerBand > 0, "bitsPerBand must be positive")
   require(
@@ -91,28 +89,14 @@ case class HyperplaneBands(
       var key = 0L
       var k = 0
       while (k < bitsPerBand) {
-        key = key * 2 + (if (dots(b * bitsPerBand + k) > 0) 1L else 0L)
+        // SQL orders NaN above every number, so a NaN dot is a 1 bit
+        key = key * 2 + (if (!(dots(b * bitsPerBand + k) <= 0)) 1L else 0L)
         k += 1
       }
       keys(b) = key
       b += 1
     }
     new GenericArrayData(keys)
-  }
-
-
-  // native codegen (round 12): call the SAME nullSafeEval through a
-  // reference object - no CodegenFallback row boxing, and the
-  // enclosing stage stays in WholeStageCodegen (pinned in
-  // HashExpressionsSpec). One implementation serves both paths.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

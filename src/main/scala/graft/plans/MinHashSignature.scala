@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -22,7 +21,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * Parity: `XxHash64Function.hash` is exactly what the `xxhash64`
   * builtin evaluates, with the family index pre-hashed into the seed
   * the same way multi-arg xxhash64 chains it — bit-identical signatures
-  * to the composed form (asserted in PlansSpec), so bucket assignments
+  * to the composed form (asserted in HashExpressionsSpec), so bucket assignments
   * and the DedupSimilaritySpec recall pin carry over unchanged.
   *
   * Degenerate inputs follow the composed form too: an empty array
@@ -31,12 +30,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * chain leaves the running hash unchanged on a null argument). The one
   * deliberate divergence: a null INPUT null-propagates (SQL-idiomatic),
   * where the composed form emits an array of nulls as an artifact.
-  * Codegen: `doGenCode` calls the same `nullSafeEval` through a
-  * reference object, so the enclosing stage stays whole-stage
-  * generated and one implementation serves both paths.
+  * Codegen: [[NativeEval]].
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeEval {
 
   require(numHashes > 0, "numHashes must be positive")
 
@@ -85,21 +82,6 @@ case class MinHashSignature(child: Expression, numHashes: Int)
       e += 1
     }
     new GenericArrayData(mins)
-  }
-
-
-  // native codegen (round 12): call the SAME nullSafeEval through a
-  // reference object - no CodegenFallback row boxing, and the
-  // enclosing stage stays in WholeStageCodegen (pinned in
-  // HashExpressionsSpec). One implementation serves both paths.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
 
@@ -32,7 +31,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
   * `j > ids(k)` is null for a null operand and filter drops it); equal
   * elements pair with nothing (strict >); a null INPUT null-propagates.
   */
-case class PairCombos(child: Expression) extends UnaryExpression {
+case class PairCombos(child: Expression) extends UnaryExpression with NativeEval {
 
   private def elemType: DataType =
     child.dataType.asInstanceOf[ArrayType].elementType
@@ -99,19 +98,6 @@ case class PairCombos(child: Expression) extends UnaryExpression {
       p += 1
     }
     new GenericArrayData(out.toArray)
-  }
-
-  // native codegen: call the SAME nullSafeEval through a reference
-  // object — no CodegenFallback row boxing, the enclosing stage stays
-  // in WholeStageCodegen (the XorMinSignature convention)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
@@ -27,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * null-propagates.
   */
 case class PqCodes(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression {
+    extends UnaryExpression with NativeEval {
 
   require(codebooks.nonEmpty && codebooks.head.nonEmpty, "codebooks must be non-empty")
   require(
@@ -95,28 +94,6 @@ case class PqCodes(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
       s += 1
     }
     new GenericArrayData(codes)
-  }
-
-
-  // native codegen (round 12): call the SAME nullSafeEval through a
-  // reference object - no CodegenFallback row boxing, and the
-  // enclosing stage stays in WholeStageCodegen (pinned in
-  // HashExpressionsSpec). One implementation serves both paths.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        // nullSafeEval returns null for a too-short vector (the documented
-        // null-on-degenerate contract behind the nullable=true override);
-        // propagate that into ev.isNull or fused stages would dereference a
-        // null ArrayData with isNull=false.
-        s"""
-           |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);
-           |${ev.isNull} = ${ev.value} == null;
-         """.stripMargin
-    )
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * array per row, the whole cost of the SimHash operator (5.4 s at
   * sf0.1 in BENCH_r01). This expression makes ONE pass, updating 64
   * int counters per element; bit-identical output (asserted in
-  * PlansSpec against the composed form).
+  * HashExpressionsSpec against the composed form).
   *
   * Null elements are skipped; an empty input yields 0L (all votes tie
   * at 0, and `sum > 0` is false — same as the composed form).
@@ -40,7 +40,7 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
   // native codegen (round 12): a static call into the shared loop —
   // no CodegenFallback row boxing, and the enclosing stage stays in
-  // WholeStageCodegen (plan-pinned in PlansSpec)
+  // WholeStageCodegen (plan-pinned in HashExpressionsSpec)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(
       ctx,

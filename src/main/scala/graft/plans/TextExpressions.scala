@@ -4,7 +4,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ~5 s at sf0.1).
   */
 case class Tokenize(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeEval {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -62,21 +61,6 @@ case class Tokenize(child: Expression)
     new GenericArrayData(out.toArray)
   }
 
-
-  // native codegen (round 12): call the SAME nullSafeEval through a
-  // reference object - no CodegenFallback row boxing, and the
-  // enclosing stage stays in WholeStageCodegen (pinned in
-  // HashExpressionsSpec). One implementation serves both paths.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -86,10 +70,12 @@ case class Tokenize(child: Expression)
   * `array_distinct(zip_with-chain(slice...))` composition whose k-1
   * zips re-allocate the token array per gram size. Output order is
   * FIRST-OCCURRENCE order, identical to `array_distinct` over the
-  * in-order gram sequence (pinned in TextExpressionsSpec).
+  * in-order gram sequence (pinned in TextExpressionsSpec). A gram over
+  * a null token is dropped, as the composed `concat` + null filter
+  * drops it.
   */
 case class DistinctShingles(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeEval {
 
   require(n >= 1, "shingle size must be >= 1")
 
@@ -121,26 +107,11 @@ case class DistinctShingles(child: Expression, n: Int)
           gram = UTF8String.concat(gram, sep, toks.getUTF8String(i + k))
           k += 1
         }
-        if (seen.add(gram)) out += gram
+        if (gram != null && seen.add(gram)) out += gram
         i += 1
       }
     }
     new GenericArrayData(out.toArray)
-  }
-
-
-  // native codegen (round 12): call the SAME nullSafeEval through a
-  // reference object - no CodegenFallback row boxing, and the
-  // enclosing stage stays in WholeStageCodegen (pinned in
-  // HashExpressionsSpec). One implementation serves both paths.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

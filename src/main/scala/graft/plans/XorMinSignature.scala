@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -29,7 +28,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * yields all-null output), and a null INPUT null-propagates.
   */
 case class XorMinSignature(child: Expression, seeds: Seq[Long])
-    extends UnaryExpression {
+    extends UnaryExpression with NativeEval {
 
   require(seeds.nonEmpty, "seeds must be non-empty")
 
@@ -70,21 +69,6 @@ case class XorMinSignature(child: Expression, seeds: Seq[Long])
     }
     if (!any) return new GenericArrayData(Array.fill[Any](k)(null))
     new GenericArrayData(mins)
-  }
-
-
-  // native codegen (round 12): call the SAME nullSafeEval through a
-  // reference object - no CodegenFallback row boxing, and the
-  // enclosing stage stays in WholeStageCodegen (pinned in
-  // HashExpressionsSpec). One implementation serves both paths.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);"
-    )
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

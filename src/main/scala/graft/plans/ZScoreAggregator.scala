@@ -14,7 +14,7 @@ import graft.model.AnomalyPoint
   * stddev floored at 1e-3, anomaly-ratio cap, min-points guard) but as
   * an `Aggregator[IN, BUF, OUT]`, so it composes with `groupByKey.agg`
   * in batch AND with `mapGroupsWithState` in streaming where a window
-  * function cannot run. AnomalySpec asserts agreement with the window
+  * function cannot run. ZScoreAggregatorSpec asserts agreement with the window
   * implementation.
   *
   * Scale: the buffer is the (date, value) series of ONE key — daily

@@ -37,7 +37,7 @@ object Sinks {
     * THE layout lever for repeated 100 TB fact-to-fact joins (broadcast
     * covers small dims; bucketing covers big-big). `saveAsTable` is
     * required: bucket metadata lives in the catalog, not the files.
-    * SinksSpec proves the join and agg plans over two bucketed tables
+    * SurfaceSpec proves the join and agg plans over two bucketed tables
     * contain no Exchange.
     */
   def writeBucketed(

@@ -875,12 +875,13 @@ object CorpusIngest {
     val spark = batch.sparkSession
     // Marker first (scaladoc): the model commits last, so a stored
     // batch id ≥ ours proves corpus append AND model update both
-    // happened — the redelivery is a full no-op. Heal any swap-crash
-    // window before reading the marker.
-    val modelFs = graft.sinks.Dfs.fs(spark, modelPath)
-    graft.sinks.Dfs.heal(modelFs, new HPath(modelPath))
-    if (SketchIngest.committedBatch(modelFs, new HPath(modelPath)).exists(_ >= batchId))
+    // happened — the redelivery is a full no-op. The gates read only
+    // the committed model: a first write torn before its marker is no
+    // model at all.
+    val model = SketchIngest.readCommitted(spark, modelPath)
+    if (model.exists(_._1 >= batchId))
       return CurateIngestStats(0L, 0L, 0L, 0L, replayed = true)
+    val modelRows = model.map(_._2)
     val base = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // batch-level exact dedup FIRST (smallest-id keeper, the corpus
     // loop's rule) so stage-0/gate work and model counts see each raw
@@ -894,7 +895,6 @@ object CorpusIngest {
     )
     val nInput = uniq.count()
 
-    val modelExists = modelFs.exists(new HPath(modelPath))
     // stage 0: boilerplate strip against the at-rest segment counts as
     // of batch start (cold/empty model: nothing is frequent yet, the
     // pass is pure tokenize-and-rebuild normalization). boilerCmsWidth
@@ -906,19 +906,15 @@ object CorpusIngest {
     // (TextAnalysis.boilerFoldCms scaladoc).
     val stripped =
       if (boilerCmsWidth > 0) {
-        val cms =
-          if (modelExists)
-            spark.read.parquet(modelPath).filter(col("kind") === "boilcms")
-              .select(col("bucket"), col("n"))
-          else spark.range(0).select(col("id").as("bucket"), lit(0L).as("n"))
+        val cms = modelRows
+          .fold(spark.range(0).select(col("id").as("bucket"), lit(0L).as("n")))(
+            _.filter(col("kind") === "boilcms").select(col("bucket"), col("n")))
         graft.ops.TextAnalysis.stripBoilerplateFromCms(
           uniq, "text", "doc_id", segTokens, minDocsBoiler, cms, CmsDepth, boilerCmsWidth)
       } else {
-        val boilerModel =
-          if (modelExists)
-            spark.read.parquet(modelPath).filter(col("kind") === "boiler")
-              .select(col("seg"), col("n"))
-          else spark.range(0).select(lit("").as("seg"), lit(0L).as("n"))
+        val boilerModel = modelRows
+          .fold(spark.range(0).select(lit("").as("seg"), lit(0L).as("n")))(
+            _.filter(col("kind") === "boiler").select(col("seg"), col("n")))
         graft.ops.TextAnalysis
           .stripBoilerplateFromModel(uniq, "text", "doc_id", segTokens, minDocsBoiler, boilerModel)
       }
@@ -936,23 +932,20 @@ object CorpusIngest {
     val qualityPass = graft.ops.Materialize(clean.join(qualIds, Seq("doc_id")))
     val nQual = qualityPass.count()
 
-    val modelWarm = modelExists && {
-      val g = spark.read.parquet(modelPath)
+    val warmModel = modelRows.filter { m =>
+      val g = m
         .filter(col("kind") === "ctx")
         .agg(coalesce(sum(col("n")), lit(0L)))
         .head().getLong(0)
       g >= warmupGrams
     }
-    val gated =
-      if (!modelWarm) qualityPass
-      else {
-        val keepIds = graft.ops.Dsir
-          .bigramSurprisalFromModel(
-            qualityPass, spark.read.parquet(modelPath), "text", "doc_id", nBuckets)
-          .filter(col("avg_nll") <= maxAvgNll)
-          .select(col("doc_id"))
-        graft.ops.Materialize(qualityPass.join(keepIds, Seq("doc_id")))
-      }
+    val gated = warmModel.fold(qualityPass) { m =>
+      val keepIds = graft.ops.Dsir
+        .bigramSurprisalFromModel(qualityPass, m, "text", "doc_id", nBuckets)
+        .filter(col("avg_nll") <= maxAvgNll)
+        .select(col("doc_id"))
+      graft.ops.Materialize(qualityPass.join(keepIds, Seq("doc_id")))
+    }
     val nGated = gated.count()
 
     // corpus append (per-doc idempotent) BEFORE the marker-committed

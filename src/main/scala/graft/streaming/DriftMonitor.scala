@@ -90,21 +90,16 @@ object DriftMonitor {
       psiThreshold: Double = 0.2,
       jsdThreshold: Double = 0.1
   ): DataFrame = {
-    // heal first: a readback between a crash and the next batch must
-    // see the last complete version, not a missing live dir
-    graft.sinks.Dfs.heal(
-      graft.sinks.Dfs.fs(spark, curPath),
-      new org.apache.hadoop.fs.Path(curPath)
-    )
-    // the _batch marker is an underscore-prefixed control FILE inside
-    // the dir — parquet readers don't see it
-    driftFromCounts(
-      spark.read.parquet(refPath),
-      spark.read.parquet(curPath),
-      psiThreshold,
-      jsdThreshold
-    )
+    val ref = spark.read.parquet(refPath)
+    driftFromCounts(ref, committedCounts(spark, curPath, ref), psiThreshold, jsdThreshold)
   }
+
+  /** The committed current-window counts ([[SketchIngest.readCommitted]]
+    * heals a crashed swap first); an empty window, shaped like `ref`,
+    * while no batch has committed.
+    */
+  private def committedCounts(spark: SparkSession, curPath: String, ref: DataFrame): DataFrame =
+    SketchIngest.readCommitted(spark, curPath).fold(ref.limit(0))(_._2)
 
   /** [[drift]] from already-loaded (key, n) count tables — the testable
     * core, and the form a caller with its own count state composes.
@@ -201,15 +196,8 @@ object DriftMonitor {
       curPath: String,
       psiThreshold: Double = 0.2
   ): DataFrame = {
-    graft.sinks.Dfs.heal(
-      graft.sinks.Dfs.fs(spark, curPath),
-      new org.apache.hadoop.fs.Path(curPath)
-    )
-    groupedDriftFromCounts(
-      spark.read.parquet(refPath),
-      spark.read.parquet(curPath),
-      psiThreshold
-    )
+    val ref = spark.read.parquet(refPath)
+    groupedDriftFromCounts(ref, committedCounts(spark, curPath, ref), psiThreshold)
   }
 
   /** [[groupedDrift]] from loaded (group, key, n) count tables —

@@ -76,12 +76,12 @@ object HeavyHitterIngest {
       finish = m => mgPrune(m, itemCol, capacity)
     )
 
-  /** Snapshot read of the live summary (heals a mid-swap crash first,
-    * like every at-rest reader in the engine).
+  /** Snapshot read of the committed summary
+    * ([[SketchIngest.readCommitted]]: heals a mid-swap crash first).
+    * Fails while no batch has committed, as before the first write.
     */
-  def readSummary(spark: SparkSession, path: String): DataFrame = {
-    val fs = graft.sinks.Dfs.fs(spark, path)
-    graft.sinks.Dfs.heal(fs, new org.apache.hadoop.fs.Path(path))
-    spark.read.parquet(path)
-  }
+  def readSummary(spark: SparkSession, path: String): DataFrame =
+    SketchIngest.readCommitted(spark, path).map(_._2).getOrElse(
+      throw new IllegalStateException(s"no committed heavy-hitter summary at $path")
+    )
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Retrieval
-import graft.sinks.Dfs
 
 /** Exactly-once streaming maintenance of the at-rest BM25 index
   * ([[Retrieval]]): keep keyword search fresh while a corpus ingest
@@ -31,10 +29,10 @@ import graft.sinks.Dfs
   *     batch check up front makes redelivery a whole-batch no-op.
   *
   * Crash between (1) and (2): the postings dir for the batch exists
-  * but the marker doesn't — queries against the index see slightly
-  * stale stats (scores shift, no rows lost) until redelivery rewrites
-  * the identical postings and commits the stats. Deterministic
-  * convergence to the clean run's state in every window.
+  * but the marker doesn't — [[loadIndex]] leaves that batch out,
+  * postings and stats alike, until redelivery rewrites the identical
+  * postings and commits the stats. Deterministic convergence to the
+  * clean run's state in every window.
   */
 object IndexIngest {
 
@@ -51,11 +49,8 @@ object IndexIngest {
   ): Boolean = {
     val spark = batch.sparkSession
     val statsPath = s"$path/stats"
-    val fs = Dfs.fs(spark, statsPath)
-    val live = new HPath(statsPath)
-    Dfs.heal(fs, live)
     // stats commit last => marker proves the postings write happened too
-    if (SketchIngest.committedBatch(fs, live).exists(_ >= batchId)) return false
+    if (SketchIngest.readCommitted(spark, statsPath).exists(_._1 >= batchId)) return false
 
     Retrieval
       .invertedIndex(batch, textCol, idCol)
@@ -102,12 +97,18 @@ object IndexIngest {
       .start()
 
   /** Load the streamed index in [[Retrieval.bm25TopK]] form:
-    * (postings across all committed batches, 1-row stats).
+    * (postings across all committed batches, 1-row stats). Only
+    * committed state is read ([[SketchIngest.readCommitted]]): postings
+    * of a batch whose stats never committed are left out with them.
     */
   def loadIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val postings = spark.read.parquet(s"$path/postings").drop("batch_id")
-    val stats = spark.read
-      .parquet(s"$path/stats")
+    val committed = SketchIngest.readCommitted(spark, s"$path/stats")
+    val postings = spark.read
+      .parquet(s"$path/postings")
+      .filter(col("batch_id") <= committed.fold(-1L)(_._1))
+      .drop("batch_id")
+    val stats = committed
+      .fold(spark.range(0).select(lit("").as("kind"), lit(0L).as("n")))(_._2)
       .agg(
         sum(when(col("kind") === "n_docs", col("n"))).as("n_docs"),
         sum(when(col("kind") === "sum_dl", col("n"))).as("sum_dl")

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Sketches
@@ -15,9 +15,9 @@ import graft.sinks.Dfs
   * bins) rows — KB-sized regardless of history), and swap-writes the
   * result with [[graft.sinks.Dfs.swap]]. Readers
   * ([[graft.ops.Sketches.quantilesFromSketch]],
-  * [[graft.ops.Sketches.cdfFromSketch]]) of the live path see a
-  * COMPLETE sketch once any crashed swap is healed
-  * ([[graft.sinks.Dfs.heal]]).
+  * [[graft.ops.Sketches.cdfFromSketch]]) of a table loaded through
+  * [[readCommitted]] see a COMPLETE, committed sketch: a crashed swap
+  * is healed first ([[graft.sinks.Dfs.heal]]).
   * The new version is staged at `<path>.new`: it is fully written,
   * marker included, before the live dir is retired, so a crash after
   * the retire rolls forward to it rather than redoing the batch.
@@ -127,30 +127,24 @@ object SketchIngest {
     val spark = batch.sparkSession
     val fs = Dfs.fs(spark, path)
     val live = new HPath(path)
-    Dfs.heal(fs, live)
-    val stored = committedBatch(fs, live)
-    if (stored.exists(_ >= batchId)) return false
-    // every writer commits the marker before the swap, so a live dir
-    // without one is a first write promoted from a torn `.new`: no
-    // committed state, and merging onto it would count the batch twice
+    val stored = readCommitted(spark, path)
+    if (stored.exists(_._1 >= batchId)) return false
+    // merging onto an uncommitted first write would count it twice
     if (stored.isEmpty) Dfs.rmTree(fs, live)
 
     val batchCounts = fold(batch)
     // `finish` post-processes the MERGED table before it is committed —
     // e.g. HeavyHitterIngest's deterministic Misra-Gries prune keeping
     // the at-rest state bounded. Identity for plain additive state.
-    val merged = finish(
-      if (fs.exists(live)) {
-        val current = spark.read.parquet(path)
-        current
-          .unionByName(batchCounts)
-          .groupBy(keyCols.map(col): _*)
-          .agg(
-            sum(col(measureCols.head)).as(measureCols.head),
-            measureCols.tail.map(m => sum(col(m)).as(m)): _*
-          )
-      } else batchCounts
-    )
+    val merged = finish(stored.fold(batchCounts) { case (_, current) =>
+      current
+        .unionByName(batchCounts)
+        .groupBy(keyCols.map(col): _*)
+        .agg(
+          sum(col(measureCols.head)).as(measureCols.head),
+          measureCols.tail.map(m => sum(col(m)).as(m)): _*
+        )
+    })
 
     val fresh = Dfs.staged(live)
     Dfs.rmTree(fs, fresh) // stray .new from a pre-swap crash: never acknowledged, rebuild
@@ -177,6 +171,21 @@ object SketchIngest {
         ()
       }
       .start()
+
+  /** The committed table at `path` and the batch id it was committed
+    * at, after healing a crashed swap. None means no committed state:
+    * nothing at rest, or a first write that the heal promoted from a
+    * `.new` torn before its `_batch` marker landed (every writer
+    * commits the marker before the swap). The writer and every reader
+    * start here, so none of them sees the counts, or only part of the
+    * files, of a write that was never acknowledged.
+    */
+  def readCommitted(spark: SparkSession, path: String): Option[(Long, DataFrame)] = {
+    val fs = Dfs.fs(spark, path)
+    val live = new HPath(path)
+    Dfs.heal(fs, live)
+    committedBatch(fs, live).map(b => (b, spark.read.parquet(path)))
+  }
 
   /** The batch id the live sketch was committed at, if any. */
   def committedBatch(fs: FileSystem, live: HPath): Option[Long] = {

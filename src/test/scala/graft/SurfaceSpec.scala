@@ -198,12 +198,9 @@ class SurfaceSpec extends AnyFunSuite {
     val emb = sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings").limit(200)
     val pairs = emb.select($"vec_id".as("i"), $"embedding".as("a"))
       .crossJoin(emb.select($"vec_id".as("j"), $"embedding".as("b")).limit(50))
-    // fold-based reference formulation, built inline (Fns.cosine now
-    // delegates to the native expression)
-    def dot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-      aggregate(zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0), (acc, v) => acc + v)
-    val fold = dot($"a", $"b") / (sqrt(dot($"a", $"a")) * sqrt(dot($"b", $"b")))
+    // fold-based reference formulation (Fns.cosine delegates to the
+    // native expression)
+    val fold = graft.plans.ComposedForms.cosine($"a", $"b")
     val diff = pairs
       .select(fold.as("builtin"), CosineSimilarity.cosineSim($"a", $"b").as("native"))
       .filter(not($"builtin" <=> $"native"))

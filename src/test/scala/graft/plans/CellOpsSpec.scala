@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSession
-import graft.functions.Fns
 import graft.ops.Similarity
 
 /** Parity pins for the r20 native ANN kernels: each expression must be
@@ -26,17 +25,6 @@ class CellOpsSpec extends AnyFunSuite {
   private lazy val cents = Similarity.kmeansCentroids(vecs, "cv", "cid", 8, 2)
   private lazy val cbs = Similarity.pqTrain(vecs, "cv", "cid", 64, 8, 16, 2)
 
-  /** The composed scored-cell array the former literal paths used. */
-  private def scoredComposed(qvq: org.apache.spark.sql.Column) =
-    transform(
-      typedLit(cents.map { case (id, v) => (v, -id) }),
-      c =>
-        struct(
-          round(Fns.cosine(qvq, c.getField("_1")), 6).as("cs"),
-          c.getField("_2").as("negid")
-        )
-    )
-
   test("QuantizeVec == composed transform/floor form (incl. null elements)") {
     val base = emb.select(col("embedding").as("v"))
       .unionByName(
@@ -48,7 +36,7 @@ class CellOpsSpec extends AnyFunSuite {
     val mismatches = base
       .select(
         Similarity.quantizeVec(col("v")).as("native"),
-        Similarity.quantizeVecComposed(col("v")).as("composed")
+        ComposedForms.quantizeVec(col("v")).as("composed")
       )
       .filter(!(col("native") <=> col("composed")))
       .count()
@@ -60,7 +48,7 @@ class CellOpsSpec extends AnyFunSuite {
     val mismatches = q
       .select(
         CellOps.nearestCell(col("qvq"), cents).as("native"),
-        (-array_max(scoredComposed(col("qvq"))).getField("negid")).as("composed")
+        ComposedForms.nearestCell(col("qvq"), cents).as("composed")
       )
       .filter(!(col("native") <=> col("composed")))
       .count()
@@ -73,10 +61,7 @@ class CellOpsSpec extends AnyFunSuite {
       val mismatches = q
         .select(
           CellOps.topCells(col("qvq"), cents, nProbe).as("native"),
-          transform(
-            slice(reverse(array_sort(scoredComposed(col("qvq")))), 1, nProbe),
-            c => -c.getField("negid")
-          ).as("composed")
+          ComposedForms.topCells(col("qvq"), cents, nProbe).as("composed")
         )
         .filter(!(col("native") <=> col("composed")))
         .count()
@@ -100,7 +85,7 @@ class CellOpsSpec extends AnyFunSuite {
     val mismatches = codes
       .select(
         CellOps.pqReconstruct(col("codes"), cbs).as("native"),
-        Similarity.pqDecodeComposed(col("codes"), cbs).as("composed")
+        ComposedForms.pqDecode(col("codes"), cbs).as("composed")
       )
       .filter(!(col("native") <=> col("composed")))
       .count()
@@ -114,15 +99,10 @@ class CellOpsSpec extends AnyFunSuite {
       col("cent_id"),
       PqCodes.pqCodes(Similarity.quantizeVec(col("cv")), cbs).as("codes")
     )
-    val centMap = typedLit(cents.toMap)
     val mismatches = codes
       .select(
         CellOps.pqReconstructResidual(col("codes"), col("cent_id"), cbs, cents).as("native"),
-        zip_with(
-          element_at(centMap, col("cent_id")),
-          Similarity.pqDecodeComposed(col("codes"), cbs),
-          (c, r) => c + r
-        ).as("composed")
+        ComposedForms.pqDecodeResidual(col("codes"), col("cent_id"), cbs, cents).as("composed")
       )
       .filter(!(col("native") <=> col("composed")))
       .count()
@@ -142,7 +122,7 @@ class CellOpsSpec extends AnyFunSuite {
     val mismatches = assigned
       .select(
         CellOps.residualVec(col("cv"), col("cent_id"), cents, Similarity.TrainScale).as("native"),
-        Similarity.residualColComposed(col("cv"), col("cent_id"), cents).as("composed")
+        ComposedForms.residualVec(col("cv"), col("cent_id"), cents).as("composed")
       )
       .filter(!(col("native") <=> col("composed")))
       .count()
@@ -152,7 +132,7 @@ class CellOpsSpec extends AnyFunSuite {
   test("VecLongSum single-agg Lloyd means == composed two-groupBy floor means") {
     val assigned = Similarity.assignCells(vecs, cents).filter(col("cent_id").isNotNull)
     val composed = assigned
-      .select(col("cent_id"), posexplode(Similarity.quantizeVecComposed(col("cv"))).as(Seq("pos", "x")))
+      .select(col("cent_id"), posexplode(ComposedForms.quantizeVec(col("cv"))).as(Seq("pos", "x")))
       .groupBy(col("cent_id"), col("pos"))
       .agg(
         floor(sum(col("x").cast("long")).cast("double") / count(lit(1)).cast("double")).as("m")

@@ -46,75 +46,6 @@ class GopherExpressionsSpec extends AnyFunSuite {
     None
   ).toDF("text")
 
-  // ---- composed reference forms (the pre-r20 expressions, verbatim) ----
-
-  private def wordStatsComposed(toks: Column, stop: Seq[String]): Column =
-    struct(
-      size(toks).as("n_words"),
-      size(array_distinct(toks)).as("n_distinct"),
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).as("char_sum"),
-      size(filter(toks, t => t.isInCollection(stop))).as("stop_hits"),
-      size(filter(toks, t => t.rlike("[a-z]"))).as("alpha_hits")
-    )
-
-  private def lineStatsComposed(text: Column): Column = {
-    val lines = filter(split(text, "\n"), l => trim(l) =!= "")
-    val dupChars = aggregate(
-      array_sort(lines),
-      struct(lit(null).cast("string").as("prev"), lit(0).as("run"), lit(0L).as("tot")),
-      (acc, l) =>
-        struct(
-          l.as("prev"),
-          when(l === acc("prev"), acc("run") + 1).otherwise(lit(1)).as("run"),
-          (acc("tot") + coalesce(
-            when(
-              l === acc("prev"),
-              when(acc("run") === 1, length(l).cast("long") * 2L)
-                .otherwise(length(l).cast("long"))
-            ),
-            lit(0L)
-          )).as("tot")
-        ),
-      acc => acc("tot")
-    )
-    struct(
-      size(lines).as("n_lines"),
-      (size(lines) - size(array_distinct(lines))).as("n_dup_lines"),
-      dupChars.as("dup_chars"),
-      aggregate(lines, lit(0L), (acc, l) => acc + length(l)).as("total_chars")
-    )
-  }
-
-  private def gramMassComposed(toks: Column, n: Int): Column = {
-    val grams = when(
-      size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n), i => concat_ws(" ", slice(toks, i + 1, lit(n))))
-    ).otherwise(array().cast("array<string>"))
-    aggregate(
-      array_sort(grams),
-      struct(
-        lit(null).cast("string").as("prev"),
-        lit(0).as("run"),
-        lit(0L).as("best"),
-        lit(0L).as("dup")
-      ),
-      (acc, g) => {
-        val len = (length(g) - lit(n - 1)).cast("long")
-        val newRun = when(g === acc("prev"), acc("run") + 1).otherwise(lit(1))
-        struct(
-          g.as("prev"),
-          newRun.as("run"),
-          greatest(acc("best"), newRun.cast("long") * len).as("best"),
-          (acc("dup") + coalesce(
-            when(g === acc("prev"), when(acc("run") === 1, len * 2L).otherwise(len)),
-            lit(0L)
-          )).as("dup")
-        )
-      },
-      acc => struct(acc("best").as("best"), acc("dup").as("dup"))
-    )
-  }
-
   /** Field-by-field parity (a null native struct must equal a composed
     * struct whose every field is null — exactly how the ops consume
     * them), over every field name of the native struct.
@@ -138,7 +69,7 @@ class GopherExpressionsSpec extends AnyFunSuite {
       assertParity(
         d,
         GopherExpressions.wordStats(Fns.tokens(col("text")), stop),
-        wordStatsComposed(Fns.tokens(col("text")), stop),
+        ComposedForms.wordStats(Fns.tokens(col("text")), stop),
         Seq("n_words", "n_distinct", "char_sum", "stop_hits", "alpha_hits")
       )
     }
@@ -149,7 +80,7 @@ class GopherExpressionsSpec extends AnyFunSuite {
       assertParity(
         d,
         GopherExpressions.lineStats(col("text")),
-        lineStatsComposed(col("text")),
+        ComposedForms.lineStats(col("text")),
         Seq("n_lines", "n_dup_lines", "dup_chars", "total_chars")
       )
     }
@@ -160,7 +91,7 @@ class GopherExpressionsSpec extends AnyFunSuite {
       assertParity(
         d,
         GopherExpressions.gramMass(Fns.tokens(col("text")), n),
-        gramMassComposed(Fns.tokens(col("text")), n),
+        ComposedForms.gramMass(Fns.tokens(col("text")), n),
         Seq("best", "dup")
       )
     }

@@ -25,11 +25,7 @@ class HashExpressionsSpec extends AnyFunSuite {
       .select(col("doc_id"), array_distinct(Fns.shingles(col("toks"), 3)).as("shingles"))
       .filter(size(col("shingles")) > 0)
       .select(col("doc_id"), transform(col("shingles"), s => xxhash64(s)).as("hs"))
-    val composed = array(
-      (0 until numHashes).map(i =>
-        array_min(transform(col("hs"), h => Fns.hashFamily(h, i)))
-      ): _*
-    )
+    val composed = ComposedForms.minhashSignature(col("hs"), numHashes)
     val mismatches = based
       .select(
         col("doc_id"),
@@ -46,9 +42,7 @@ class HashExpressionsSpec extends AnyFunSuite {
       (1L, Some(Seq[Option[Long]]())),
       (2L, Some(Seq[Option[Long]](Some(7L), None)))
     ).toDF("id", "hs")
-    val edgeComposed = array(
-      (0 until 4).map(i => array_min(transform(col("hs"), h => Fns.hashFamily(h, i)))): _*
-    )
+    val edgeComposed = ComposedForms.minhashSignature(col("hs"), 4)
     val edgeMismatch = edge
       .select(
         MinHashSignature.minhashSignature(col("hs"), 4).as("native"),
@@ -73,9 +67,7 @@ class HashExpressionsSpec extends AnyFunSuite {
       .select(col("doc_id"), Fns.shingles(col("toks"), 3).as("shingles"))
       .filter(size(col("shingles")) > 0)
       .select(col("doc_id"), transform(col("shingles"), s => xxhash64(s)).as("hs"))
-    val composed = array(
-      seeds.map(sd => array_min(transform(col("hs"), h => h.bitwiseXOR(lit(sd))))): _*
-    )
+    val composed = ComposedForms.xorMinSignature(col("hs"), seeds)
     val mismatches = based
       .select(
         XorMinSignature.xorMinSignature(col("hs"), seeds).as("native"),
@@ -92,9 +84,7 @@ class HashExpressionsSpec extends AnyFunSuite {
       (3L, Some(Seq[Option[Long]](None)))
     ).toDF("id", "hs")
     val edgeSeeds = seeds.take(4)
-    val edgeComposed = array(
-      edgeSeeds.map(sd => array_min(transform(col("hs"), h => h.bitwiseXOR(lit(sd))))): _*
-    )
+    val edgeComposed = ComposedForms.xorMinSignature(col("hs"), edgeSeeds)
     val edgeMismatch = edge
       .select(
         XorMinSignature.xorMinSignature(col("hs"), edgeSeeds).as("native"),
@@ -117,9 +107,7 @@ class HashExpressionsSpec extends AnyFunSuite {
     val cbs: Seq[Seq[Seq[Double]]] =
       (0 until m).map(_ => (0 until 16).map(_ => Seq.fill(sub)(rnd.nextGaussian())))
     val v = col("embedding").cast("array<double>")
-    val composed = array((0 until m).map { s =>
-      graft.ops.Similarity.pqComposedArgmin(slice(v, s * sub + 1, sub), cbs(s))
-    }: _*)
+    val composed = ComposedForms.pqCodes(v, cbs)
     val mismatches = emb
       .select(PqCodes.pqCodes(v, cbs).as("native"), composed.as("composed"))
       .filter(!(col("native") <=> col("composed")))
@@ -141,17 +129,7 @@ class HashExpressionsSpec extends AnyFunSuite {
       col("doc_id"),
       transform(Fns.tokens(col("text")), t => xxhash64(t)).as("hs")
     )
-    val bitCols = (0 until 64).map { i =>
-      when(
-        aggregate(
-          col("hs"),
-          lit(0L),
-          (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)
-        ) > 0,
-        lit(1L)
-      ).otherwise(lit(0L))
-    }
-    val composed = bitCols.foldLeft(lit(0L))((acc, b) => shiftleft(acc, 1).bitwiseOR(b))
+    val composed = ComposedForms.simhash64(col("hs"))
     val mismatches = hashed
       .select(SimHash64.simhash64(col("hs")).as("native"), composed.as("composed"))
       .filter(!(col("native") <=> col("composed")))
@@ -163,7 +141,7 @@ class HashExpressionsSpec extends AnyFunSuite {
     val emb = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val planes = graft.ops.Dedup.hyperplanes(dim = 64, n = 16, seed = 42L)
     val composedKeys = transform(
-      graft.ops.Dedup.composedBandKeys(col("embedding"), planes, 4),
+      ComposedForms.bandKeys(col("embedding"), planes, 4),
       s => s.getField("bhash")
     )
     val mismatches = emb
@@ -224,13 +202,7 @@ class HashExpressionsSpec extends AnyFunSuite {
       .select(col("doc_id"), Fns.tokens(col("text")).as("words"))
       .filter(size(col("words")) >= k)
     val composed = words
-      .select(
-        col("doc_id"),
-        transform(
-          sequence(lit(0), size(col("words")) - k),
-          i => xxhash64(concat_ws(" ", slice(col("words"), i + 1, lit(k))))
-        ).as("g")
-      )
+      .select(col("doc_id"), ComposedForms.gramHashes(col("words"), k).as("g"))
     val native = words
       .select(col("doc_id"), graft.plans.GramHashes.gramHashes(col("words"), k).as("g"))
     assert(

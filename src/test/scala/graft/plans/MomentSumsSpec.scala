@@ -21,7 +21,7 @@ class MomentSumsSpec extends AnyFunSuite {
       cols: Seq[String]
   ): Unit = {
     val got = Stats.pearsonMoments(df, cols)
-    val want = Stats.pearsonMomentsComposed(df, cols)
+    val want = ComposedForms.pearsonMoments(df, cols)
     assert(got.schema === want.schema, "moment frame schema diverged")
     assert(got.collect().toSeq === want.collect().toSeq, "moment values diverged")
   }

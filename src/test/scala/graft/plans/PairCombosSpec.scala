@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSession
 
 /** Parity pins for the r20 native PairCombos expression against the
-  * composed HOF form it replaced ([[graft.ops.Dedup.pairCombosComposed]])
+  * composed HOF form it replaced ([[ComposedForms.pairCombos]])
   * — every banding dedup operator's candidate generation rides on this
   * being bit-identical.
   */
@@ -19,7 +19,7 @@ class PairCombosSpec extends AnyFunSuite {
       .select(explode(PairCombos.pairCombos(col("ids"))).as("p"))
       .select(col("p.i").as("i"), col("p.j").as("j"))
     val composed = df
-      .select(explode(graft.ops.Dedup.pairCombosComposed(col("ids"))).as("p"))
+      .select(explode(ComposedForms.pairCombos(col("ids"))).as("p"))
       .select(col("p.i").as("i"), col("p.j").as("j"))
     assert(native.collect().toSeq.sortBy(_.toString) ===
       composed.collect().toSeq.sortBy(_.toString))
@@ -53,7 +53,7 @@ class PairCombosSpec extends AnyFunSuite {
         s.getField("_2").as("h64"))).as("ids"))
     val native = df.select(explode(PairCombos.pairCombos(col("ids"))).as("p"))
       .select(col("p.i.doc_id"), col("p.i.h64"), col("p.j.doc_id"), col("p.j.h64"))
-    val composed = df.select(explode(graft.ops.Dedup.pairCombosComposed(col("ids"))).as("p"))
+    val composed = df.select(explode(ComposedForms.pairCombos(col("ids"))).as("p"))
       .select(col("p.i.doc_id"), col("p.i.h64"), col("p.j.doc_id"), col("p.j.h64"))
     assert(native.collect().toSeq.sortBy(_.toString) ===
       composed.collect().toSeq.sortBy(_.toString))
@@ -67,7 +67,7 @@ class PairCombosSpec extends AnyFunSuite {
         s.getField("_2").as("phash"))).as("ids"))
     val native = df.select(explode(PairCombos.pairCombos(col("ids"))).as("p"))
       .select(col("p.i.doc_id"), col("p.j.doc_id"), col("p.i.phash"), col("p.j.phash"))
-    val composed = df.select(explode(graft.ops.Dedup.pairCombosComposed(col("ids"))).as("p"))
+    val composed = df.select(explode(ComposedForms.pairCombos(col("ids"))).as("p"))
       .select(col("p.i.doc_id"), col("p.j.doc_id"), col("p.i.phash"), col("p.j.phash"))
     assert(native.collect().toSeq.sortBy(_.toString) ===
       composed.collect().toSeq.sortBy(_.toString))
@@ -101,7 +101,7 @@ class PairCombosSpec extends AnyFunSuite {
     val native = postings.select(explode(PairCombos.pairCombos(col("ids"))).as("p"))
       .select(col("p.i.doc_id"), col("p.i.h64"), col("p.j.doc_id"), col("p.j.h64"))
     val composed = postings.select(
-      explode(graft.ops.Dedup.pairCombosComposed(col("ids"))).as("p"))
+      explode(ComposedForms.pairCombos(col("ids"))).as("p"))
       .select(col("p.i.doc_id"), col("p.i.h64"), col("p.j.doc_id"), col("p.j.h64"))
     assert(native.collect().toSeq.sortBy(_.toString) ===
       composed.collect().toSeq.sortBy(_.toString))

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSession
-import graft.functions.Fns
 
 /** Parity pins for the native text expressions against the composed
   * built-in forms they replaced, over the real corpus (CJK included)
@@ -17,17 +16,11 @@ class TextExpressionsSpec extends AnyFunSuite {
   private lazy val docs =
     graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "documents")
 
-  private def tokensComposed(text: org.apache.spark.sql.Column) =
-    filter(
-      split(regexp_replace(lower(text), "[^a-z0-9]+", " "), " "),
-      t => t =!= ""
-    )
-
   test("Tokenize == composed regexp_replace/split/filter on the real corpus") {
     val mismatches = docs
       .select(
         TextExpressions.tokenize(col("text")).as("native"),
-        tokensComposed(col("text")).as("composed")
+        ComposedForms.tokens(col("text")).as("composed")
       )
       .filter(!(col("native") <=> col("composed")))
       .count()
@@ -46,7 +39,7 @@ class TextExpressionsSpec extends AnyFunSuite {
     val mismatches = df
       .select(
         TextExpressions.tokenize(col("text")).as("native"),
-        tokensComposed(col("text")).as("composed")
+        ComposedForms.tokens(col("text")).as("composed")
       )
       .filter(!(col("native") <=> col("composed")))
       .count()
@@ -59,7 +52,7 @@ class TextExpressionsSpec extends AnyFunSuite {
         .select(TextExpressions.tokenize(col("text")).as("toks"))
         .select(
           TextExpressions.distinctShingles(col("toks"), n).as("native"),
-          array_distinct(Fns.shingles(col("toks"), n)).as("composed")
+          ComposedForms.distinctShingles(col("toks"), n).as("composed")
         )
         .filter(!(col("native") <=> col("composed")))
         .count()

@@ -109,7 +109,7 @@ class CdcStreamSpec extends AnyFunSuite {
       .select("key_value", "event_id").as[(String, String)].collect().toSet
     assert(full.size === 12)
 
-    // simulate a crash between swapDir's two moves: one bucket exists
+    // simulate a crash between Dfs.swap's two moves: one bucket exists
     // only as .old
     val root = new java.io.File(statePath)
     val victim = root.listFiles.filter(_.getName.startsWith("bucket=")).head

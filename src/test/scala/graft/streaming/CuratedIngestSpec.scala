@@ -218,4 +218,21 @@ class CuratedIngestSpec extends AnyFunSuite {
     assert(spark.read.parquet(corpus).collect().toSet === cleanCorpus)
     assert(modelMap(model) === cleanModel)
   }
+
+  test("torn first model write: the gates read no model, not the uncommitted counts") {
+    val tmp = Files.createTempDirectory("curated_torn").toString
+    val (corpus, bloom, model) = (s"$tmp/corpus", s"$tmp/bloom", s"$tmp/model")
+    // a first model write that crashed before its _batch marker: a ctx
+    // mass far past warmup would arm the perplexity gate
+    Seq(("ctx", 0L, null: String, 1000000L)).toDF("kind", "bucket", "seg", "n")
+      .coalesce(1).write.parquet(s"$model.new")
+    val b0 = (1L to 30L).map(i => good(i, s"tok$i")).toDF("doc_id", "text")
+    val s0 = CorpusIngest.ingestCuratedBatch(
+      b0, 0L, corpus, bloom, model,
+      minQuality = 0.5, maxAvgNll = 6.0, nBuckets = 1024,
+      warmupGrams = 50L, expectedItems = 10000L)
+    // cold start, as with no model at all: only the quality gate runs
+    assert(!s0.replayed && s0.gated === s0.qualityPass && s0.gated > 0L)
+    assert(!modelMap(model).get(("ctx", 0L, null)).contains(1000000L))
+  }
 }

@@ -127,4 +127,30 @@ class DriftMonitorSpec extends AnyFunSuite {
       assert(afterTwo.getBoolean(5), "skewed stream must trip the PSI alert")
     } finally q.stop()
   }
+
+  test("torn first write: drift reads an empty window, not the uncommitted counts") {
+    val tmp = Files.createTempDirectory("drifttorn").toString
+    DriftMonitor.writeReference(events(1, 100, 5), "event_type", s"$tmp/ref")
+    // the first ingest crashed after its parquet landed in .new, before
+    // the _batch marker: nothing is committed
+    events(2, 50, 40).groupBy($"event_type").agg(count(lit(1)).as("n"))
+      .coalesce(1).write.parquet(s"$tmp/cur.new")
+    val row = DriftMonitor.drift(spark, s"$tmp/ref", s"$tmp/cur").collect().head
+    assert(row.getLong(2) === 0L, "cur_n must not count the uncommitted write")
+    assert(row.isNullAt(3) && row.isNullAt(5))
+    // the redelivered batch commits alone
+    assert(DriftMonitor.ingestDriftBatch(events(2, 50, 40), 0L, "event_type", s"$tmp/cur"))
+    assert(DriftMonitor.drift(spark, s"$tmp/ref", s"$tmp/cur").collect().head.getLong(2) === 50L)
+  }
+
+  test("torn first write: groupedDrift reads an empty window, not the uncommitted counts") {
+    val grp = Files.createTempDirectory("drifttorngrp").toString
+    DriftMonitor.writeGroupedReference(
+      events(1, 100, 5).withColumn("source", lit("s1")), "source", "event_type", s"$grp/ref")
+    events(2, 50, 40).withColumn("source", lit("s1"))
+      .groupBy($"source", $"event_type").agg(count(lit(1)).as("n"))
+      .coalesce(1).write.parquet(s"$grp/cur.new")
+    val rows = DriftMonitor.groupedDrift(spark, s"$grp/ref", s"$grp/cur").collect()
+    assert(rows.nonEmpty && rows.forall(_.getLong(3) === 0L), rows.mkString(", "))
+  }
 }

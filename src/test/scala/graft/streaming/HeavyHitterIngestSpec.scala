@@ -76,4 +76,15 @@ class HeavyHitterIngestSpec extends AnyFunSuite {
       .as[(String, Long)].collect().toMap
     assert(small === Map("a" -> 10L, "b" -> 7L, "c" -> 5L, "d" -> 3L, "e" -> 3L))
   }
+
+  test("torn first write: readSummary refuses the uncommitted summary; redelivery commits") {
+    val tmp = Files.createTempDirectory("hhtorn").toString
+    val path = s"$tmp/hh"
+    // parquet landed in .new, the _batch marker did not
+    Seq(("t_1", 999L)).toDF("item", "n").coalesce(1).write.parquet(s"$path.new")
+    val err = intercept[IllegalStateException](HeavyHitterIngest.readSummary(spark, path))
+    assert(err.getMessage.contains("no committed"))
+    assert(HeavyHitterIngest.ingestHeavyHitterBatch(Seq("t_1", "t_1").toDF("item"), 0L, "item", 8, path))
+    assert(HeavyHitterIngest.readSummary(spark, path).as[(String, Long)].collect().toSeq === Seq(("t_1", 2L)))
+  }
 }

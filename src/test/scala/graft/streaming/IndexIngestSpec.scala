@@ -74,4 +74,28 @@ class IndexIngestSpec extends AnyFunSuite {
     assert(st.collect().toSeq === Retrieval.indexStats(full).collect().toSeq)
     assert(queryTop(post, st) === queryTop(full, Retrieval.indexStats(full)))
   }
+
+  test("loadIndex reads committed batches only: torn first stats write, uncommitted postings") {
+    val tmp = Files.createTempDirectory("bm25torn").toString + "/idx"
+    // batch 0 crashed after its postings and its stats parquet landed,
+    // before the stats _batch marker: nothing is committed
+    Retrieval.invertedIndex(corpus.filter($"doc_id" <= 3), "text", "doc_id")
+      .write.parquet(s"$tmp/postings/batch_id=0")
+    IndexIngest.statsFold("text", "doc_id")(corpus.filter($"doc_id" <= 3))
+      .coalesce(1).write.parquet(s"$tmp/stats.new")
+    val (post0, st0) = IndexIngest.loadIndex(spark, tmp)
+    assert(post0.count() === 0L)
+    assert(st0.collect().toSeq.map(r => (Option(r.get(0)), Option(r.get(1)))) === Seq((None, None)))
+
+    // redelivery commits batch 0; batch 1 then crashes between its
+    // postings write and its stats commit
+    assert(IndexIngest.ingestBm25Batch(corpus.filter($"doc_id" <= 3), 0L, "text", "doc_id", tmp))
+    Retrieval.invertedIndex(corpus.filter($"doc_id" > 3), "text", "doc_id")
+      .write.mode("overwrite").parquet(s"$tmp/postings/batch_id=1")
+    val (post, st) = IndexIngest.loadIndex(spark, tmp)
+    val committed = Retrieval.invertedIndex(corpus.filter($"doc_id" <= 3), "text", "doc_id")
+    assert(post.orderBy("token", "doc_id").collect().toSeq ===
+      committed.orderBy("token", "doc_id").collect().toSeq)
+    assert(st.collect().toSeq === Retrieval.indexStats(committed).collect().toSeq)
+  }
 }
