@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Plan auditor: prints the formatted physical plan of each query so
   * scan pruning (PushedFilters/ReadSchema), join strategies and
-  * WholeStageCodegen spans can be reviewed. `runMain graft.Explain
+  * WholeStageCodegen spans can be reviewed. Each query runs once first,
+  * through the same QueryExecution that is printed: an adaptive plan
+  * is final (`isFinalPlan=true`, its codegen stages in place) only
+  * after it ran. `runMain graft.Explain
   * [names...]`; `SPARK_GRAFT_CPUS` sets the local parallelism (default
   * 4), as for [[Verify]].
   */
@@ -17,7 +21,10 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n===================== $n =====================")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      val qe = df.queryExecution
+      SQLExecution.withNewExecutionId(qe)(qe.executedPlan.execute().foreach(_ => ()))
+      df.explain("formatted")
     }
     spark.stop()
   }

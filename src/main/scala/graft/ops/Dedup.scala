@@ -755,15 +755,14 @@ object Dedup {
     * `history` — the cross-ingestion dedup a continuously-growing corpus
     * needs (dedup each day's crawl against everything already kept).
     *
-    * A Bloom filter over the history's xxhash64 fingerprints
-    * (`bloom_filter_agg`, sized by `expectedHistoryItems`/`fpp`) is
-    * collected once and probed MAP-SIDE on the new batch: rows the
-    * filter rejects are DEFINITELY new (no false negatives) and never
-    * shuffle; only the bloom-positive sliver — true dupes plus an `fpp`
-    * fraction of false positives — pays the exact anti-join against
-    * history. Output is exact (the anti-join confirms every bloom hit),
-    * which is why the driver oracle (q56) can pin it hash-exact against
-    * a plain NOT IN.
+    * A Bloom filter over the history's xxhash64 texts (`bloom_filter_agg`,
+    * sized by `expectedHistoryItems`/`fpp`) is collected once, then the
+    * membership check is [[bloomAbsent]], the one the streaming ingests'
+    * `CorpusIngest.CorpusIdGate` runs: rows the filter rejects are
+    * DEFINITELY new and never shuffle; only the bloom-positive sliver
+    * (true dupes plus an `fpp` fraction of false positives) pays the
+    * exact anti-join against history. Output is exact, which is why the
+    * driver oracle (q56) can pin it hash-exact against a plain NOT IN.
     *
     * Scale notes (100 TB): the filter is bounded by its bit sizing
     * (`optimalNumOfBits(expectedHistoryItems, fpp)`), not the data —
@@ -772,10 +771,7 @@ object Dedup {
     * defaults 4M items / 8 MiB: raise them for a billion-doc corpus, or
     * dedup against a partitioned history with one filter per
     * partition; an undersized filter degrades GRACEFULLY to more
-    * false positives, never to wrong output). The anti-join's left side
-    * is only the bloom-positive sliver, so the shuffle is O(dupes), not
-    * O(batch); the history side prunes to matching fingerprint
-    * partitions under AQE.
+    * false positives, never to wrong output).
     */
   def incrementalExact(
       newBatch: DataFrame,
@@ -786,29 +782,16 @@ object Dedup {
       fpp: Double = 0.01
   ): DataFrame = {
     val fp = md5(col(textCol))
-    val histFp = history.select(fp.as("fingerprint"))
+    val out = Seq(col(idCol).as("doc_id"), fp.as("fingerprint"))
     val bloomBytes = history
       .agg(bloomAgg(xxhash64(col(textCol)), expectedHistoryItems, fpp).as("bf"))
       .head()
       .getAs[Array[Byte]](0)
-    if (bloomBytes == null) {
-      // empty history aggregates to a null filter: everything is new
-      return newBatch.select(col(idCol).as("doc_id"), fp.as("fingerprint"))
-    }
-    val tagged = Materialize(
-      newBatch.select(
-        col(idCol).as("doc_id"),
-        fp.as("fingerprint"),
-        bloomProbe(bloomBytes, xxhash64(col(textCol))).as("maybe")
-      )
-    ) // feeds both branches: scan + hashes once
-    val definiteNew = tagged.filter(!col("maybe")).select(col("doc_id"), col("fingerprint"))
-    val confirmedNew = tagged
-      .filter(col("maybe"))
-      .select(col("doc_id"), col("fingerprint"))
-      .join(histFp, Seq("fingerprint"), "left_anti")
-      .select(col("doc_id"), col("fingerprint"))
-    definiteNew.unionByName(confirmedNew)
+    // empty history aggregates to a null filter: everything is new
+    if (bloomBytes == null) newBatch.select(out: _*)
+    else
+      bloomAbsent(newBatch, out, col(textCol), Some(bloomBytes),
+        history.select(fp.as("fingerprint")), "fingerprint")._1
   }
 
   /** Shared builders for Spark's UNREGISTERED internal bloom expressions
@@ -925,9 +908,10 @@ object Dedup {
       rows: DataFrame,
       table: String,
       nBuckets: Int,
-      props: Map[String, String]
+      props: Map[String, String],
+      bucketCol: String = "bkey"
   ): Unit =
-    graft.sinks.Sinks.writeBucketedWithProps(rows, table, Seq("bkey"), nBuckets, props)
+    graft.sinks.Sinks.writeBucketedWithProps(rows, table, Seq(bucketCol), nBuckets, props)
 
   /** Append a batch's band rows — the steady-state ingest path: indexing
     * the day's batch is O(batch), never a corpus rewrite; probes see
@@ -935,7 +919,9 @@ object Dedup {
     * a bucket count: `nBuckets` only applies when this append CREATES
     * the table, an existing index keeps the count its catalog entry
     * records ([[tableNumBuckets]]). `validate` is the family's contract
-    * check against the existing index.
+    * check against the existing index; `bucketCol` the column the table
+    * is bucketed by (`bkey` for the band indexes, `gram` for the
+    * gram-count index).
     */
   private def appendBandIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -943,7 +929,8 @@ object Dedup {
       rows: Int => DataFrame,
       nBuckets: Int,
       props: Map[String, String],
-      validate: => Unit
+      validate: => Unit,
+      bucketCol: String = "bkey"
   ): Unit = {
     // a crashed staged publish leaves the index only at __retire —
     // restore it so the existence check below sees it (dropping into the
@@ -953,7 +940,7 @@ object Dedup {
       // first append CREATES the table: staged publish stamps the
       // contract props before any data is visible (ADVICE r16 — the
       // create-then-ALTER window let a crash leave a props-less index)
-      writeBandIndex(rows(nBuckets), table, nBuckets, props)
+      writeBandIndex(rows(nBuckets), table, nBuckets, props, bucketCol)
     else {
       // heal BEFORE validating: a legacy no-props index caught in a
       // compaction crash window would otherwise fail the validation's
@@ -962,7 +949,7 @@ object Dedup {
       graft.sinks.Sinks.recoverBucketedSwap(spark, table)
       validate
       val n = tableNumBuckets(spark, table)
-      graft.sinks.Sinks.appendBucketed(rows(n), table, Seq("bkey"), n)
+      graft.sinks.Sinks.appendBucketed(rows(n), table, Seq(bucketCol), n)
     }
   }
 
@@ -1998,7 +1985,7 @@ object Dedup {
       dropSameId, VideoSource)
 
   /** Map-side membership probe against a serialized bloom filter. */
-  private[graft] def bloomProbe(bloomBytes: Array[Byte], value: Column): Column =
+  private def bloomProbe(bloomBytes: Array[Byte], value: Column): Column =
     GraftColumnBridge.column(
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         org.apache.spark.sql.catalyst.expressions.Literal(
@@ -2008,6 +1995,40 @@ object Dedup {
         GraftColumnBridge.expression(value)
       )
     )
+
+  /** The bloom-fronted membership check: the rows of `batch`, projected
+    * to `cols`, whose `key` is not in `stored`. A map-side probe of
+    * `bloom` over `xxhash64(bloomKey)` tags each row in ONE pinning job,
+    * which also counts the rows and the bloom-positives; only the
+    * positives anti-join `stored`, and `stored` is not even planned
+    * when there are none. Without a filter (`bloom = None`) every row
+    * is a positive. Returns (absent rows, batch rows, positives): the
+    * absent rows are the pinned negatives when nothing was positive,
+    * else a lazy union with the confirmed positives. Exact either way —
+    * a false positive costs a confirm, never the answer.
+    */
+  private[graft] def bloomAbsent(
+      batch: DataFrame,
+      cols: Seq[Column],
+      bloomKey: Column,
+      bloom: Option[Array[Byte]],
+      stored: => DataFrame,
+      key: String
+  ): (DataFrame, Long, Long) = {
+    val maybe = "__maybe"
+    val obs = Observation()
+    val tagged = Materialize(
+      batch
+        .select(cols :+ bloom.fold(lit(true))(b => bloomProbe(b, xxhash64(bloomKey))).as(maybe): _*)
+        .observe(obs, count(lit(1)).as("n"), count_if(col(maybe)).as("maybe")))
+    val m = obs.get
+    val (n, positives) = (m("n").asInstanceOf[Long], m("maybe").asInstanceOf[Long])
+    val definite = tagged.filter(!col(maybe)).drop(maybe)
+    if (positives == 0L) (definite, n, 0L)
+    else (
+      definite.unionByName(tagged.filter(col(maybe)).drop(maybe).join(stored, Seq(key), "left_anti")),
+      n, positives)
+  }
 
   /** The seeded hyperplane family shared by the native expression, the
     * composed-form parity pin, and the DuckDB oracle replay
@@ -2446,16 +2467,6 @@ object Dedup {
       .groupBy(col("gram"))
       .agg(count(lit(1)).as("cnt"))
 
-  private def setGramIndexProps(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      k: Int
-  ): Unit =
-    spark.sql(
-      s"ALTER TABLE ${graft.sinks.Sinks.parseIdent(spark, table).quotedString} " +
-        s"SET TBLPROPERTIES ('$GramTokensProp'='$k')"
-    )
-
   private def gramIndexTokens(spark: org.apache.spark.sql.SparkSession, table: String): Int =
     spark.sessionState.catalog
       .getTableMetadata(graft.sinks.Sinks.parseIdent(spark, table))
@@ -2491,14 +2502,11 @@ object Dedup {
     // fallback (gramIndexTokens throws), so the old write-then-ALTER
     // crash window left an index every later touch refused — now
     // unrepresentable
-    graft.sinks.Sinks.writeBucketedWithProps(
-      gramIndexRows(corpus, textCol, idCol, gramTokens),
-      table,
-      Seq("gram"),
-      nBuckets,
-      Map(GramTokensProp -> gramTokens.toString)
-    )
+    writeBandIndex(gramIndexRows(corpus, textCol, idCol, gramTokens), table, nBuckets,
+      gramIndexProps(gramTokens), bucketCol = "gram")
   }
+
+  private def gramIndexProps(k: Int) = Map(GramTokensProp -> k.toString)
 
   /** Append a batch's partial gram counts (O(batch); creates the index
     * when absent with `nBuckets`, validates the recorded gram length and
@@ -2520,26 +2528,17 @@ object Dedup {
       nBuckets: Int = 64
   ): Unit = {
     val spark = batch.sparkSession
-    graft.sinks.Sinks.recoverStagedPublish(spark, table)
-    val existed = spark.catalog.tableExists(table)
-    if (!existed)
-      graft.sinks.Sinks.writeBucketedWithProps(
-        gramIndexRows(batch, textCol, idCol, gramTokens),
-        table, Seq("gram"), nBuckets, Map(GramTokensProp -> gramTokens.toString))
-    else {
-      graft.sinks.Sinks.recoverBucketedSwap(spark, table)
-      val k = gramIndexTokens(spark, table)
-      require(
-        k == gramTokens,
-        s"$table is a k=$k gram index; appending k=$gramTokens grams would corrupt counts"
-      )
-      graft.sinks.Sinks.appendBucketed(
-        gramIndexRows(batch, textCol, idCol, k),
-        table,
-        Seq("gram"),
-        tableNumBuckets(spark, table)
-      )
-    }
+    // gram rows do not depend on the bucket count: the table is
+    // bucketed by the gram hash itself
+    appendBandIndex(
+      spark, table, _ => gramIndexRows(batch, textCol, idCol, gramTokens), nBuckets,
+      gramIndexProps(gramTokens), {
+        val k = gramIndexTokens(spark, table)
+        require(
+          k == gramTokens,
+          s"$table is a k=$k gram index; appending k=$gramTokens grams would corrupt counts")
+      },
+      bucketCol = "gram")
   }
 
   /** Fold the gram index's accumulated per-append partial counts into

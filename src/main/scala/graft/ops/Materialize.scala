@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** One knob for how the engine pins iterative / multiply-read
   * intermediates (LSH shingle sets, index builds, ANN probe cells,
@@ -81,5 +82,14 @@ object Materialize {
         } else df.checkpoint(eager = true)
       case None => df.localCheckpoint(eager = true)
     }
+  }
+
+  /** [[apply]] and the row count, taken by an observation in the same
+    * job — no second pass over the pinned blocks.
+    */
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val pinned = apply(df.observe(obs, count(lit(1)).as("n")))
+    (pinned, obs.get("n").asInstanceOf[Long])
   }
 }

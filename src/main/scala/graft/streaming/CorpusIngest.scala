@@ -4,11 +4,12 @@ import java.io.ByteArrayInputStream
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 
 /** Streaming corpus ingest with cross-batch exact dedup: each
   * micro-batch of documents is deduped against everything already kept
@@ -16,20 +17,23 @@ import graft.ops.Dedup
   * corpus where replayed deliveries and recrawled documents never land
   * twice.
   *
-  * The cross-batch check is the [[Dedup.incrementalExact]] design at
-  * streaming cadence WITHOUT the O(history)-per-batch trap: the Bloom
-  * filter over history is maintained INCREMENTALLY (each batch
-  * aggregates a same-sized filter over its survivors and ORs it into the
-  * stored one — O(batch) work), so only bloom-positive rows (true dupes
-  * + fpp false positives) ever touch the corpus-side anti-join.
+  * Every ingest here decides "which of this batch's ids are already
+  * stored" through ONE check, [[CorpusIdGate]]: a bloom filter over the
+  * stored ids, maintained INCREMENTALLY (each batch ORs a same-sized
+  * filter over its appended ids into the stored one — O(batch) work),
+  * answers bloom-negative rows with no corpus read at all; only
+  * bloom-positive rows (true dupes + fpp false positives) anti-join the
+  * stored ids. The exact ingest ([[ingestBatch]]), the span ingest, the
+  * PQ/IVF-PQ codes ingests and the four near-dup ingests
+  * ([[NearDupIngest]]) all run it.
   *
   * Crash safety: the bloom is updated and atomically swapped BEFORE the
-  * corpus append. A crash between the two replays the batch with a
-  * filter that over-claims membership — those rows are bloom-positive,
-  * the anti-join against the corpus proves them absent, and they append
-  * exactly once. The reverse order would lose them silently (a
-  * bloom-negative replay of an already-appended row would re-append).
-  * False positives are always confirmed; false negatives cannot occur.
+  * append. A crash between the two replays the batch with a filter that
+  * over-claims membership — those rows are bloom-positive, the
+  * anti-join proves them absent, and they append exactly once. The
+  * reverse order would lose them silently (a bloom-negative replay of an
+  * already-appended row would re-append). False positives are always
+  * confirmed; false negatives cannot occur.
   */
 object CorpusIngest {
 
@@ -63,9 +67,10 @@ object CorpusIngest {
       }
       .start()
 
-  /** One micro-batch: in-batch dedup, bloom prefilter, corpus anti-join
-    * confirm, bloom swap, corpus append. Exposed for batch-mode reuse
-    * and the spec's streamed==batch comparison.
+  /** One micro-batch: in-batch dedup, [[CorpusIdGate]] corpus check,
+    * bloom swap, corpus append. Exposed for batch-mode reuse and the
+    * spec's streamed==batch comparison. The bloom is keyed on
+    * `xxhash64(text)`, the corpus check on the fingerprint.
     */
   def ingestBatch(
       batch: DataFrame,
@@ -74,57 +79,33 @@ object CorpusIngest {
       expectedItems: Long
   ): Unit = {
     val spark = batch.sparkSession
-    // identity contract (round 18 — ADVICE r17's null-vec_id finding
-    // generalized): the fingerprint IS this loop's identity, and a null
-    // text fingerprints to null — it would pass the bloom's maybe-path
-    // but never match the corpus anti-join (null keys don't join), so
-    // pre-fix a null-text row re-appended on EVERY delivery
-    val contractKept = batch.filter(col("text").isNotNull)
-    // in-batch dedup, deterministic keeper (smallest doc_id)
-    val wFp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("fingerprint"))
-      .orderBy(col("doc_id"))
-    val withFp = contractKept
-      .select(col("doc_id"), md5(col("text")).as("fingerprint"), col("text"))
-      .withColumn("__rn", row_number().over(wFp))
+    val gate = new CorpusIdGate(
+      spark, corpusIds(spark, corpusPath)(_.select(col("fingerprint"), col("text"))),
+      "fingerprint", Some(bloomPath), expectedItems, bloomKey = Some("text"))
+    // identity contract: the fingerprint IS this loop's identity, and a
+    // null text fingerprints to null, which never matches the corpus
+    // anti-join — such a row would re-append on every delivery
+    val (survivors, n) = gate.absent(fingerprinted(batch.filter(col("text").isNotNull)))
+    if (n > 0) {
+      gate.update(survivors) // bloom BEFORE the append (see the scaladoc)
+      survivors.write.mode(SaveMode.Append).parquet(corpusPath)
+    }
+  }
+
+  /** In-batch exact dedup: one row per fingerprint `fp`, the smallest
+    * doc_id keeping it — deterministic under redelivery, and the rule
+    * every text ingest here shares.
+    */
+  private def smallestIdPerText(df: DataFrame, fp: Column): DataFrame =
+    df.withColumn("__rn", row_number().over(Window.partitionBy(fp).orderBy(col("doc_id"))))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    val bloomFs = graft.sinks.Dfs.fs(spark, bloomPath)
-    val stored = readBloom(bloomFs, bloomPath)
-    val corpusExists = graft.sinks.Dfs.fs(spark, corpusPath).exists(new HPath(corpusPath))
-    val candidates = stored match {
-      case None => withFp // first batch: no history at all
-      case Some(_) if !corpusExists =>
-        withFp // bloom swapped but append crashed before creating the corpus
-      case Some(StoredBloom(_, _, bytes)) =>
-        val tagged = withFp.withColumn("maybe", Dedup.bloomProbe(bytes, xxhash64(col("text"))))
-        val definite = tagged.filter(!col("maybe")).drop("maybe")
-        val confirmed = tagged
-          .filter(col("maybe"))
-          .drop("maybe")
-          .join(
-            spark.read.parquet(corpusPath).select(col("fingerprint")),
-            Seq("fingerprint"),
-            "left_anti"
-          )
-        definite.unionByName(confirmed).select(col("doc_id"), col("fingerprint"), col("text"))
-    }
-    // survivors feed two jobs (bloom delta + append); pin the plan result
-    val survivors = graft.ops.Materialize(candidates)
-    // the delta MUST match the stored filter's sizing or mergeInPlace
-    // throws (IncompatibleMergeException): the bloom file records its
-    // own (items, bits) header, so deltas are always built to the
-    // sizing the state was CREATED with — even across builds whose
-    // default sizing formula changed
-    val (items, bits) = stored match {
-      case Some(StoredBloom(i, b, _)) => (i, b)
-      case None => Dedup.bloomSizing(expectedItems, fpp = 0.01)
-    }
-    // bloom BEFORE corpus append (see scaladoc); nothing to append
-    // when no row survived
-    if (mergeBloom(bloomFs, bloomPath, survivors, col("text"), items, bits, stored.map(_.filter)))
-      survivors.write.mode(SaveMode.Append).parquet(corpusPath)
-  }
+
+  /** (doc_id, fingerprint, text) corpus rows of `docs`, one per text. */
+  private def fingerprinted(docs: DataFrame): DataFrame =
+    smallestIdPerText(
+      docs.select(col("doc_id"), md5(col("text")).as("fingerprint"), col("text")),
+      col("fingerprint"))
 
   /** Per-batch accounting returned by [[ingestNearDupBatch]] and the
     * image/video/semantic ingest analogues: rows that survived
@@ -239,15 +220,8 @@ object CorpusIngest {
           val valid = b
             .select(col("doc_id"), col("text"))
             .filter(col("doc_id").isNotNull && col("text").isNotNull)
-          // in-batch exact dedup, deterministic keeper (smallest doc_id);
-          // its losers count as near-dups
-          val wFp = org.apache.spark.sql.expressions.Window
-            .partitionBy(md5(col("text")))
-            .orderBy(col("doc_id"))
-          val exactKept = valid
-            .withColumn("__rn", row_number().over(wFp))
-            .filter(col("__rn") === 1)
-            .drop("__rn")
+          // in-batch exact dedup; its losers count as near-dups
+          val exactKept = smallestIdPerText(valid, md5(col("text")))
           val validCnt = valid.count()
           NearDupIngest.Admitted(exactKept, validCnt, validCnt)
         },
@@ -423,20 +397,15 @@ object CorpusIngest {
     * Crash safety: `foreachBatch` redelivers a completed batch when a
     * crash lands between the append and the checkpoint commit, and a
     * codes append is not idempotent — so replayed ids must never
-    * re-append. The guard is BLOOM-FRONTED like [[dedupedIngest]]'s:
-    * a few-MB bloom over already-indexed ids lives beside the stream's
-    * checkpoint (`<checkpoint>/graft-id-bloom`, same self-describing
-    * `.new`/`.old` swap file as the exact-ingest state). Bloom-negative
-    * ids are DEFINITELY fresh — a map-side filter, no index read at
-    * all — so the common no-replay batch touches only its own rows;
-    * only suspected replays (true dupes + fpp false positives)
-    * anti-join the index's id column. The bloom is OR-updated and
-    * swapped BEFORE the append (a crash between the two over-claims,
-    * and over-claims are always confirmed against the index — the safe
-    * direction; false negatives cannot occur). First bloom-fronted
-    * batch against a pre-existing index seeds the filter from the
-    * index's id column: one id-only index scan, ONCE, after which the
-    * maintenance is O(batch) per batch.
+    * re-append. The guard is the [[CorpusIdGate]] every ingest here
+    * runs, over the index's `cid` column: a few-MB bloom over
+    * already-indexed ids lives beside the stream's checkpoint
+    * (`<checkpoint>/graft-id-bloom`). Bloom-negative ids are DEFINITELY
+    * fresh — the common no-replay batch reads no index file; only
+    * suspected replays anti-join the index's id column. The first
+    * bloom-fronted batch against a pre-existing index adopts it: that
+    * batch anti-joins the whole id column and seeds the filter from it,
+    * ONCE, after which the maintenance is O(batch) per batch.
     *
     * Single-writer contract (same as every swap protocol here): the
     * foreachBatch loop owns both the index and its bloom. Appending to
@@ -546,10 +515,12 @@ object CorpusIngest {
     stats
   }
 
-  /** The shared codes-index micro-batch: in-batch id dedup, bloom-front
-    * (or full-index) replay guard, bloom swap, frozen-quantizer append.
-    * `append` is the index-flavor append ([[graft.ops.Similarity.appendToPqIndex]]
-    * or [[graft.ops.Similarity.appendToIvfPqIndex]]).
+  /** The shared codes-index micro-batch: in-batch id dedup, the
+    * [[CorpusIdGate]] check against the index's ids (without a
+    * `bloomPath`, a plain anti-join of the whole id column), bloom swap,
+    * frozen-quantizer append. `append` is the index-flavor append
+    * ([[graft.ops.Similarity.appendToPqIndex]] or
+    * [[graft.ops.Similarity.appendToIvfPqIndex]]).
     */
   private def ingestCodesBatch(
       batch: DataFrame,
@@ -567,72 +538,29 @@ object CorpusIngest {
       s"$table does not exist — bootstrap the index with $bootstrapFn on a seed corpus first"
     )
     // ids identify vectors (the id IS the index key): null ids are
-    // contract rejections (round 18 — they skip every id-keyed
-    // anti-join, so pre-fix they re-appended per delivery); one row per
-    // id in-batch; two different payloads under one id is a caller bug
-    // and the survivor is arbitrary, same as any keyed upsert sink
-    val rawCnt = batch.count()
-    val validBatch = batch.filter(col(idCol).isNotNull)
-    val unique = validBatch.dropDuplicates(Seq(idCol))
-    val indexIds = spark.table(table).select(col("cid").as(idCol))
-    val (fresh, bloomState) = bloomPath match {
-      case None =>
-        // bloomless batch mode: every batch anti-joins the full index
-        // id column — O(index) read bytes per batch
-        (graft.ops.Materialize(unique.join(indexIds, Seq(idCol), "left_anti")),
-          None)
-      case Some(bp) =>
-        val fs = graft.sinks.Dfs.fs(spark, bp)
-        val stored = readBloom(fs, bp).getOrElse {
-          // first bloom-fronted batch on this index: seed the filter
-          // from the id column — one O(index) id-only scan, ONCE
-          val (items, bits) = Dedup.bloomSizing(expectedItems, fpp = 0.01)
-          val seeded = bloomDelta(indexIds, col(idCol), items, bits)
-          val bytes =
-            if (seeded != null) seeded
-            else { // empty index aggregates to null: start from an empty filter
-              val out = new java.io.ByteArrayOutputStream()
-              BloomFilter.create(items, bits).writeTo(out)
-              out.toByteArray
-            }
-          StoredBloom(items, bits, bytes)
-        }
-        val tagged = graft.ops.Materialize(
-          unique.withColumn("__maybe", Dedup.bloomProbe(stored.filter, xxhash64(col(idCol))))
-        ) // feeds both branches + the suspect count: hash and scan once
-        val definite = tagged.filter(!col("__maybe")).drop("__maybe")
-        val suspects = tagged.filter(col("__maybe")).drop("__maybe")
-        val confirmed =
-          // the index's id column is read ONLY when the bloom suspects a
-          // replay; the common all-fresh batch never touches the index
-          if (suspects.isEmpty) suspects
-          else suspects.join(indexIds, Seq(idCol), "left_anti")
-        (graft.ops.Materialize(definite.unionByName(confirmed)),
-          Some((fs, bp, stored)))
-    }
-    val appended = fresh.count()
+    // contract rejections (they skip every id-keyed anti-join, so they
+    // would re-append per delivery); one row per id in-batch; two
+    // different payloads under one id is a caller bug and the survivor
+    // is arbitrary, same as any keyed upsert sink
+    val counts = batch.agg(count(lit(1)), count(col(idCol))).head()
+    val (rawCnt, validCnt) = (counts.getLong(0), counts.getLong(1))
+    val gate = new CorpusIdGate(
+      spark, StoredIds(() => true, () => spark.table(table).select(col("cid").as(idCol))),
+      idCol, bloomPath, expectedItems)
+    val (fresh, appended) =
+      gate.absent(batch.filter(col(idCol).isNotNull).dropDuplicates(Seq(idCol)))
     if (appended > 0) {
-      bloomState.foreach { case (fs, bp, stored) =>
-        // deltas are built to the sizing the state was CREATED with
-        // (recorded in the file header) so mergeInPlace always accepts.
-        // Bloom BEFORE the index append: a crash between the two leaves
-        // an over-claiming filter, and over-claims are always confirmed
-        // against the index — the safe direction (the reverse order
-        // would re-append the crash window's rows on redelivery)
-        mergeBloom(fs, bp, fresh, col(idCol), stored.items, stored.bits, Some(stored.filter))
-      }
+      gate.update(fresh)
       append(spark, table, fresh)
     }
-    val validCnt = validBatch.count()
     PqIngestStats(appended, validCnt - appended, rawCnt - validCnt)
   }
 
   /** Streaming SUBSTRING-dedup ingest — the Lee et al. family at
     * streaming cadence: each micro-batch is (1) exact-deduped in-batch
-    * and against the corpus (fingerprint anti-join — compose with the
-    * bloom prefilter of [[ingestBatch]] if the corpus-side scan ever
-    * dominates), (2) span-scored against the at-rest gram index
-    * ([[Dedup.incrementalDuplicateSpans]]: corpus-total counts =
+    * and against the corpus ([[CorpusIdGate]] on the fingerprint,
+    * bloom-fronted when `idBloomPath` is set), (2) span-scored against
+    * the at-rest gram index ([[Dedup.incrementalDuplicateSpans]]: corpus-total counts =
     * index history + in-batch, O(batch) shuffle), and (3) docs whose
     * duplicated-token fraction stays within `maxDupFrac` are appended
     * to the corpus, then their grams to the index.
@@ -695,28 +623,17 @@ object CorpusIngest {
       idBloomItems: Long = 1000000L
   ): SpanIngestStats = {
     val spark = batch.sparkSession
-    // bloom-fronted corpus-fingerprint gate (r19 — see [[CorpusIdGate]]):
-    // this loop's PRIMARY replay check is the per-batch corpus
-    // anti-join; with a path configured it stops scanning the corpus in
-    // the steady no-replay state
-    val gate = new CorpusIdGate(spark, corpusPath, "fingerprint", idBloomPath, idBloomItems)
-    // identity contract (round 18): a null text fingerprints to null,
-    // which never matches the corpus anti-join — pre-fix such a row
-    // re-appended on every delivery. Contract rejection, counted.
-    val rawCnt = batch.count()
-    val validBatch = batch.filter(col("text").isNotNull)
-    val rejected = rawCnt - validBatch.count()
-    // (1) in-batch exact dedup (deterministic keeper) + corpus replay filter
-    val wFp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("fingerprint"))
-      .orderBy(col("doc_id"))
-    val withFp = validBatch
-      .select(col("doc_id"), md5(col("text")).as("fingerprint"), col("text"))
-      .withColumn("__rn", row_number().over(wFp))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    val fresh = graft.ops.Materialize(gate.absent(withFp))
-    val freshCnt = fresh.count()
+    val gate = new CorpusIdGate(
+      spark, corpusIds(spark, corpusPath)(_.select(col("fingerprint"))),
+      "fingerprint", idBloomPath, idBloomItems)
+    // identity contract: a null text fingerprints to null, which never
+    // matches the corpus anti-join — such a row would re-append on every
+    // delivery. Contract rejection, counted (both counts in one job).
+    val counts = batch.agg(count(lit(1)), count(col("text"))).head()
+    val rejected = counts.getLong(0) - counts.getLong(1)
+    // (1) in-batch exact dedup + corpus replay filter
+    val withFp = fingerprinted(batch.filter(col("text").isNotNull))
+    val (fresh, freshCnt) = gate.absent(withFp)
     val replays = withFp.count() - freshCnt
     if (freshCnt == 0) return SpanIngestStats(0, 0, replays, rejected)
     // (2) duplicated-token fraction vs (kept corpus ∪ this batch)
@@ -727,7 +644,7 @@ object CorpusIngest {
       else // first batch: history is empty, counts are in-batch only
         Dedup.duplicateSpans(fresh, "text", "doc_id", gramTokens, minCount)
     val dupPerDoc = spans.groupBy(col("doc_id")).agg(sum(col("span_tokens")).as("dup_tokens"))
-    val kept = graft.ops.Materialize(
+    val (kept, keptCnt) = Materialize.counted(
       fresh
         .withColumn("__n", size(graft.functions.Fns.tokens(col("text"))).cast("long"))
         .join(dupPerDoc, Seq("doc_id"), "left")
@@ -737,13 +654,12 @@ object CorpusIngest {
         )
         .select(col("doc_id"), col("fingerprint"), col("text"))
     )
-    val keptCnt = kept.count()
     // (3) corpus, then (4) the kept docs' grams — see the ordering contract
     if (keptCnt > 0) {
       // bloom BEFORE the corpus append (the over-claiming direction —
       // see [[CorpusIdGate]]); only KEPT fingerprints enter the filter,
       // matching exactly what the corpus will hold
-      gate.update(kept.select(col("fingerprint")))
+      gate.update(kept)
       kept.write.mode(SaveMode.Append).parquet(corpusPath)
       Dedup.appendToGramIndex(kept, "text", "doc_id", gramIndexTable, gramTokens, nBuckets)
     }
@@ -780,7 +696,7 @@ object CorpusIngest {
     * every bigram at the ln(B) prior, which would gate on nothing but
     * length; once warm, docs with fewer than 2 tokens carry no bigram
     * evidence and are dropped by the gate) — then (3) the
-    * bloom-fronted exact-dedup corpus append ([[ingestBatch]], on the
+    * exact-dedup corpus append ([[ingestBatch]], on the
     * CLEANED text, so docs differing only in boilerplate dedup) and
     * (4) the model update: [[graft.ops.Dsir.surprisalFold]] over the
     * gated docs PLUS [[graft.ops.TextAnalysis.boilerFold]] over the
@@ -883,17 +799,11 @@ object CorpusIngest {
       return CurateIngestStats(0L, 0L, 0L, 0L, replayed = true)
     val modelRows = model.map(_._2)
     val base = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    // batch-level exact dedup FIRST (smallest-id keeper, the corpus
-    // loop's rule) so stage-0/gate work and model counts see each raw
-    // text once; docs differing only in boilerplate converge AFTER the
-    // strip and are caught by the corpus append's fingerprint dedup
-    val wFp = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col("text")))
-      .orderBy(col("doc_id"))
-    val uniq = graft.ops.Materialize(
-      base.withColumn("__rn", row_number().over(wFp)).filter(col("__rn") === 1).drop("__rn")
-    )
-    val nInput = uniq.count()
+    // batch-level exact dedup FIRST (the corpus loop's keeper) so
+    // stage-0/gate work and model counts see each raw text once; docs
+    // differing only in boilerplate converge AFTER the strip and are
+    // caught by the corpus append's fingerprint dedup
+    val (uniq, nInput) = Materialize.counted(smallestIdPerText(base, md5(col("text"))))
 
     // stage 0: boilerplate strip against the at-rest segment counts as
     // of batch start (cold/empty model: nothing is frequent yet, the
@@ -984,99 +894,85 @@ object CorpusIngest {
     */
   val CmsDepth = 4
 
-  /** Bloom-fronted corpus-ID membership gate (r19 — VERDICT r18 #3):
-    * the non-exact ingest surfaces confirm replays/orphans by
-    * anti-joining the batch against an id-column scan of the WHOLE
-    * corpus every micro-batch; at 100 TB that scan dominates
-    * steady-state batch cost while answering "absent" for almost every
-    * row. This gate fronts the scan with the exact-ingest bloom
-    * template ([[ingestBatch]]): a stored filter over the corpus's ids
-    * answers bloom-NEGATIVE rows (the common no-replay case) with no
-    * corpus read at all; bloom-POSITIVE rows fall through to today's
-    * exact anti-join (a false positive costs a scan, never
-    * correctness). `bloomPath = None` keeps the legacy exact-only
-    * behavior bit-for-bit.
+  /** Where a [[CorpusIdGate]] confirms membership: whether anything is
+    * stored yet, and the stored rows projected to the gate's id column
+    * and bloom key — read only when a check needs them.
+    */
+  private[streaming] final case class StoredIds(exists: () => Boolean, rows: () => DataFrame)
+
+  /** [[StoredIds]] of a parquet corpus, its rows projected by `ids`. */
+  private[streaming] def corpusIds(spark: SparkSession, corpusPath: String)(
+      ids: DataFrame => DataFrame): StoredIds =
+    StoredIds(
+      () => graft.sinks.Dfs.fs(spark, corpusPath).exists(new HPath(corpusPath)),
+      () => ids(spark.read.parquet(corpusPath)))
+
+  /** Bloom-fronted membership gate — the one place an ingest decides
+    * which of a batch's ids are already stored. A stored filter over
+    * the stored ids answers bloom-NEGATIVE rows (the common no-replay
+    * case) with no read of the stored rows at all; bloom-POSITIVE rows
+    * fall through to the exact anti-join ([[Dedup.bloomAbsent]]; a
+    * false positive costs a scan, never correctness). Without a
+    * `bloomPath`, or before the first filter is written, every row
+    * takes the anti-join. `bloomKey` names the column whose xxhash64 the
+    * filter holds when it is not the id column itself.
     *
     * Crash-consistency direction: [[update]] must run BEFORE the
-    * corpus append (the index-before-corpus over-claiming rule). A
-    * crash between the bloom swap and the append leaves a false
-    * positive — absorbed by the exact confirm; the reverse order would
-    * leave a corpus-present id bloom-negative, i.e. a silent duplicate
-    * on redelivery. Adoption: the first [[update]] against an existing
-    * corpus seeds the filter from the corpus's own id column (one
-    * full id scan, once per adopted corpus), so pre-bloom ids can
-    * never read as false negatives.
+    * append (the index-before-corpus over-claiming rule). A crash
+    * between the bloom swap and the append leaves a false positive —
+    * absorbed by the exact confirm; the reverse order would leave a
+    * stored id bloom-negative, i.e. a silent duplicate on redelivery.
+    * Adoption: the first [[update]] against existing stored rows seeds
+    * the filter from them too (one full id scan, once per adopted
+    * corpus or index), so ids stored before the bloom can never read as
+    * false negatives.
     *
     * Single-writer, like every swap protocol here: the one
     * foreachBatch loop owns the state.
     */
   private[streaming] final class CorpusIdGate(
       spark: SparkSession,
-      corpusPath: String,
+      stored: StoredIds,
       idCol: String,
       bloomPath: Option[String],
       expectedItems: Long,
-      // the corpus may store the id under a different name / at a finer
-      // grain (video: frame rows keyed video_id, probed by clip id) —
-      // `corpusIdCol` names the stored column, `distinctCorpusIds`
-      // keeps the finer-grain case's exact-confirm scan deduplicated
-      corpusIdCol: String = null,
-      distinctCorpusIds: Boolean = false
+      bloomKey: Option[String] = None
   ) {
-    private val cCol = Option(corpusIdCol).getOrElse(idCol)
-    private def corpusExists: Boolean =
-      graft.sinks.Dfs.fs(spark, corpusPath).exists(new HPath(corpusPath))
-    private val stored: Option[StoredBloom] =
+    private val key = bloomKey.getOrElse(idCol)
+    private val bloom: Option[StoredBloom] =
       bloomPath.flatMap(bp => readBloom(graft.sinks.Dfs.fs(spark, bp), bp))
 
-    private def corpusIds: DataFrame = {
-      val ids = spark.read.parquet(corpusPath).select(col(cCol).as(idCol))
-      if (distinctCorpusIds) ids.distinct() else ids
-    }
-
-    private def plainAnti(df: DataFrame): DataFrame =
-      df.join(corpusIds, Seq(idCol), "left_anti")
-
-    /** Rows of `df` whose id is NOT in the corpus — exact at every
-      * configuration (the bloom only decides whether the corpus scan
-      * happens, never the answer). The input is pinned once; an empty
-      * input or an all-bloom-negative batch returns without
-      * constructing the corpus read at all.
+    /** The rows of `df` whose id is NOT stored, pinned, and their count
+      * — exact at every configuration (the bloom only decides whether
+      * the stored rows are read, never the answer). The pinning job
+      * alone when no row is bloom-positive; the anti-join's jobs on top
+      * when some are.
       */
-    def absent(df: DataFrame): DataFrame = {
-      if (!corpusExists) return df
-      val pinned = graft.ops.Materialize(df)
-      if (pinned.isEmpty) return pinned
-      stored match {
-        case None => plainAnti(pinned)
-        case Some(StoredBloom(_, _, bytes)) =>
-          val tagged = graft.ops.Materialize(
-            pinned.withColumn("__maybe", graft.ops.Dedup.bloomProbe(bytes, xxhash64(col(idCol))))
-          )
-          val nMaybe = tagged.filter(col("__maybe")).count()
-          val definite = tagged.filter(!col("__maybe")).drop("__maybe")
-          if (nMaybe == 0L) definite
-          else definite.unionByName(plainAnti(tagged.filter(col("__maybe")).drop("__maybe")))
+    def absent(df: DataFrame): (DataFrame, Long) =
+      if (!stored.exists()) Materialize.counted(df)
+      else {
+        val (rows, n, positives) = Dedup.bloomAbsent(
+          df, df.columns.toSeq.map(col), col(key), bloom.map(_.filter), stored.rows(), idCol)
+        if (positives == 0L) (rows, n) else Materialize.counted(rows)
       }
-    }
 
-    /** Merge the ids this batch appends into the filter and swap —
-      * call BEFORE the corpus append (see the class note on ordering).
-      * First update against a pre-existing corpus additionally folds
-      * the corpus's current ids in (adoption). No-op without a
-      * bloomPath or when nothing appends.
+    /** Merge the bloom keys of the rows this batch appends into the
+      * filter and swap — call BEFORE the append (see the class note on
+      * ordering). The first update against existing stored rows also
+      * folds their keys in (adoption). No-op without a bloomPath or
+      * when nothing appends.
       */
-    def update(appendedIds: DataFrame): Unit = bloomPath.foreach { bp =>
-      val (items, bits) = stored match {
-        case Some(StoredBloom(i, b, _)) => (i, b)
-        case None => graft.ops.Dedup.bloomSizing(expectedItems, fpp = 0.01)
-      }
-      val adopt = stored.isEmpty && corpusExists
-      val ids =
-        if (adopt) appendedIds.select(col(idCol)).unionByName(corpusIds)
-        else appendedIds.select(col(idCol))
-      val fs = graft.sinks.Dfs.fs(spark, bp)
-      mergeBloom(fs, bp, ids, col(idCol), items, bits, stored.map(_.filter))
+    def update(appended: DataFrame): Unit = bloomPath.foreach { bp =>
+      // the sizing the state was CREATED with (its file header), even
+      // across builds whose default sizing changed: mergeInPlace only
+      // accepts a delta of the same sizing
+      val (items, bits) =
+        bloom.fold(Dedup.bloomSizing(expectedItems, fpp = 0.01))(b => (b.items, b.bits))
+      val keys = appended.select(col(key))
+      val adopt = bloom.isEmpty && stored.exists()
+      mergeBloom(graft.sinks.Dfs.fs(spark, bp), bp,
+        if (adopt) keys.unionByName(stored.rows().select(col(key))) else keys,
+        col(key), items, bits, bloom.map(_.filter))
     }
   }
 
@@ -1086,7 +982,7 @@ object CorpusIngest {
 
   /** Self-describing bloom file: [magic, items, bits, serialized filter].
     * Recording the sizing is what keeps every future delta
-    * merge-compatible with the state (see ingestBatch).
+    * merge-compatible with the state ([[CorpusIdGate.update]]).
     *
     * Written through the path's own Hadoop filesystem: staged at
     * `<path>.new` and replaced with [[graft.sinks.Dfs.swap]], healed by
@@ -1118,10 +1014,11 @@ object CorpusIngest {
     graft.sinks.Dfs.swap(fs, p, fresh)
   }
 
-  /** Build the delta of `keys` ([[bloomDelta]]), OR it into `current`
-    * (with no current filter the delta is the state) and [[writeBloom]]
-    * the result. `(items, bits)` must be the stored filter's sizing, or
-    * `mergeInPlace` throws. False, writing nothing, when `keys` is empty.
+  /** OR the filter of `xxhash64(key)` over `keys` (one aggregate job)
+    * into `current` — with no current filter it is the state — and
+    * [[writeBloom]] the result. `(items, bits)` must be the stored
+    * filter's sizing, or `mergeInPlace` throws. Writes nothing when
+    * `keys` is empty.
     */
   private def mergeBloom(
       fs: FileSystem,
@@ -1131,29 +1028,19 @@ object CorpusIngest {
       items: Long,
       bits: Long,
       current: Option[Array[Byte]]
-  ): Boolean = {
-    val delta = bloomDelta(keys, key, items, bits)
-    if (delta == null) return false
-    val merged = current.fold(delta) { cur =>
+  ): Unit = {
+    val delta = keys
+      .agg(Dedup.bloomAggWithBits(xxhash64(key), items, bits).as("bf"))
+      .head()
+      .getAs[Array[Byte]](0)
+    if (delta != null) writeBloom(fs, path, items, bits, current.fold(delta) { cur =>
       val f = BloomFilter.readFrom(new ByteArrayInputStream(cur))
       f.mergeInPlace(BloomFilter.readFrom(new ByteArrayInputStream(delta)))
       val out = new java.io.ByteArrayOutputStream()
       f.writeTo(out)
       out.toByteArray
-    }
-    writeBloom(fs, path, items, bits, merged)
-    true
+    })
   }
-
-  /** The serialized filter of the xxhash64 of `key` over the rows of
-    * `keys`, sized `(items, bits)`, in one aggregate job; null when
-    * `keys` is empty.
-    */
-  private def bloomDelta(keys: DataFrame, key: Column, items: Long, bits: Long): Array[Byte] =
-    keys
-      .agg(Dedup.bloomAggWithBits(xxhash64(key), items, bits).as("bf"))
-      .head()
-      .getAs[Array[Byte]](0)
 
   /** Read the bloom state, healing any [[writeBloom]] crash window first
     * ([[graft.sinks.Dfs.heal]]). A `.new` is complete by protocol order

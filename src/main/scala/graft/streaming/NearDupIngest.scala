@@ -105,8 +105,10 @@ private[streaming] object NearDupIngest {
     // configured, the membership check stops scanning the corpus id
     // column in the steady no-replay state
     val gate = new CorpusIdGate(
-      spark, corpusPath, id, idBloomPath, idBloomItems,
-      corpusIdCol = spec.corpusIdCol.orNull, distinctCorpusIds = spec.corpusIdCol.isDefined)
+      spark,
+      CorpusIngest.corpusIds(spark, corpusPath)(c =>
+        spec.corpusIdCol.fold(c.select(col(id)))(cc => c.select(col(cc).as(id)).distinct())),
+      id, idBloomPath, idBloomItems)
     val rawCnt = batch.count()
     val admitted = spec.admit(batch)
     // the indexable flag is computed once, pinned with the keeper's
@@ -148,10 +150,11 @@ private[streaming] object NearDupIngest {
     // under their own id, missing from the corpus) and fresh
     // unindexable units; a corpus-present unindexable unit is a replay
     val replayed = batchKept.join(replayIds, Seq(id), "left_semi")
-    val healing = Materialize(gate.absent(
+    val (healing, healingCnt) = gate.absent(
       if (unindexableCnt == 0L) replayed
-      else replayed.unionByName(fresh.filter(!col(Indexable)))))
-    val (healingCnt, unindexableAppends) = counts(healing)
+      else replayed.unionByName(fresh.filter(!col(Indexable))))
+    val unindexableAppends =
+      if (unindexableCnt == 0L) 0L else healing.filter(!col(Indexable)).count()
     val unindexableReplays = unindexableCnt - unindexableAppends
     if (freshCnt - unindexableCnt + healingCnt > 0) {
       val toCorpus = indexable(fresh).unionByName(healing)

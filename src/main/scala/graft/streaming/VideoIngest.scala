@@ -340,10 +340,10 @@ object VideoIngest {
         // same stored filter as the step-4 gate, probed on video_id
         // (r19: bloom-negative incompletes park without a corpus scan)
         val staleGate = new CorpusIngest.CorpusIdGate(
-          spark, corpusPath, "video_id", idBloomPath, idBloomItems,
-          corpusIdCol = "video_id", distinctCorpusIds = true)
-        val park = Materialize(staleGate.absent(incompleteAll))
-        (park, incompleteCnt - park.count())
+          spark, CorpusIngest.corpusIds(spark, corpusPath)(_.select(col("video_id")).distinct()),
+          "video_id", idBloomPath, idBloomItems)
+        val (park, parkCnt) = staleGate.absent(incompleteAll)
+        (park, incompleteCnt - parkCnt)
       }
     // age bound (round 18 — verdict r17 #1): a clip still incomplete
     // more than maxAgeBatches after its FIRST frame arrived is evicted

@@ -122,6 +122,44 @@ class CorpusIdGateSpec extends AnyFunSuite {
     spark.sql("DROP TABLE idgate_gram_idx")
   }
 
+  test("exact ingest: an all-bloom-negative batch reads no corpus file; a replay " +
+    "of it is confirmed against the corpus") {
+    val tmp = Files.createTempDirectory("idgate_ex").toString
+    val (corpus, bloom) = (s"$tmp/c", s"$tmp/ex.bloom")
+    CorpusIngest.ingestBatch(Seq((1L, "first text")).toDF("doc_id", "text"), corpus, bloom, 1000L)
+    val saved = poisonParquetDir(corpus)
+    val fresh = Seq((2L, "second text"), (3L, "third text")).toDF("doc_id", "text")
+    CorpusIngest.ingestBatch(fresh, corpus, bloom, 1000L)
+    restoreParquetDir(saved)
+    CorpusIngest.ingestBatch(fresh, corpus, bloom, 1000L)
+    assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect().sorted.toSeq ===
+      Seq(1L, 2L, 3L))
+  }
+
+  test("PQ codes ingest: an all-bloom-negative batch reads no index file") {
+    import graft.ops.Similarity
+    val tmp = Files.createTempDirectory("idgate_pq").toString
+    val bp = Some(s"$tmp/pq.bloom")
+    val idx = "idgate_pq_idx"
+    val emb = graft.sources.Tables
+      .load(spark, "/root/testdata/sf0.001", "embeddings")
+      .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
+    Similarity.writePqIndex(emb.filter($"vec_id" < 100), "embedding", "vec_id", idx, dim = 64,
+      m = 8, kCodes = 32, lloydIters = 1)
+    CorpusIngest.ingestPqBatch(emb.filter($"vec_id" >= 100 && $"vec_id" < 150), idx, bloomPath = bp)
+    // the codes table's files only: the frozen codebooks the append
+    // encodes with live in their own table
+    val loc = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(idx)).location.getPath
+    val saved = poisonParquetDir(loc)
+    val s = CorpusIngest.ingestPqBatch(
+      emb.filter($"vec_id" >= 150 && $"vec_id" < 200), idx, bloomPath = bp)
+    restoreParquetDir(saved)
+    assert(s === CorpusIngest.PqIngestStats(appended = 50L, replays = 0L))
+    assert(spark.table(idx).count() === 200L)
+    spark.sql(s"DROP TABLE $idx")
+  }
+
   test("over-claiming direction: a bloom updated whose corpus append crashed only " +
     "costs the exact confirm — rows still ingest, nothing is silently dropped") {
     val tmp = Files.createTempDirectory("idgate_oc").toString
@@ -131,7 +169,8 @@ class CorpusIdGateSpec extends AnyFunSuite {
     CorpusIngest.ingestNearDupBatch(b1, s"$tmp/c", "idgate_oc_idx", idBloomPath = bp)
     // simulate the crash window: the gate's update ran for ids {8, 9}
     // but their corpus append never did
-    val gate = new CorpusIngest.CorpusIdGate(spark, s"$tmp/c", "doc_id", bp, 1000000L)
+    val gate = new CorpusIngest.CorpusIdGate(
+      spark, CorpusIngest.corpusIds(spark, s"$tmp/c")(_.select("doc_id")), "doc_id", bp, 1000000L)
     gate.update(Seq(8L, 9L).toDF("doc_id"))
     // their delivery now: bloom-positive, exact confirm says ABSENT —
     // the batch must keep them (an under-claiming direction would have

@@ -363,6 +363,29 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect().toSet === Set(10L, 11L))
   }
 
+  test("exact ingest adopts a corpus written without its bloom: a fresh bloom path " +
+    "appends only new texts and the written filter covers the stored ones") {
+    val tmp = Files.createTempDirectory("corpus_adopt").toString
+    val corpus = s"$tmp/corpus"
+    CorpusIngest.ingestBatch(
+      Seq((1L, "stored text")).toDF("doc_id", "text"), corpus, s"$tmp/old.bin", 1000L)
+    // same corpus, a bloom path that holds nothing yet (lost, or the
+    // loop moved its state): the stored text must still read as present
+    val bloom = s"$tmp/fresh.bin"
+    CorpusIngest.ingestBatch(
+      Seq((2L, "stored text"), (3L, "new text")).toDF("doc_id", "text"), corpus, bloom, 1000L)
+    val got = spark.read.parquet(corpus).select("doc_id", "text").as[(Long, String)].collect()
+    assert(got.sorted.toSeq === Seq((1L, "stored text"), (3L, "new text")))
+    // the file is [magic, items, bits, filter], keyed on xxhash64(text)
+    val bytes = Files.readAllBytes(Paths.get(bloom))
+    val filter = org.apache.spark.util.sketch.BloomFilter
+      .readFrom(new java.io.ByteArrayInputStream(bytes, 20, bytes.length - 20))
+    Seq("stored text", "new text").foreach { t =>
+      val h = spark.range(1).select(xxhash64(lit(t))).as[Long].head()
+      assert(filter.mightContainLong(h), s"the adopted filter must cover '$t'")
+    }
+  }
+
   test("ingest auto-compacts the index when files-per-bucket crosses the cadence threshold") {
     val tmp = Files.createTempDirectory("cadence").toString
     val corpus = s"$tmp/corpus"
