@@ -551,7 +551,7 @@ object Soak {
         val st = graft.streaming.VideoIngest.ingestVideoBatch(
           withExpFrom(whole)(whole), s"$dir/corpus", idx, compactFanout = 0,
           pendingPath = Some(s"$dir/pending"), batchId = batchId)
-        st.deferred // == 200*m: proves the backlog held through the run
+        st.extra("deferred") // == 200*m: proves the backlog held through the run
       }
     }.toMap
 

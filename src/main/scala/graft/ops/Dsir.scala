@@ -167,7 +167,7 @@ object Dsir {
   /** [[bucketLogRatios]] from pre-aggregated `(bucket, n)` count
     * tables — the at-rest model form. Count tables are exact-addition
     * mergeable, so they stream via
-    * `SketchIngest.countIngest(..., modelFold(...), Seq("bucket"), ...)`
+    * `SketchIngest.ingestCountBatch(..., modelFold(...), Seq("bucket"), ...)`
     * and a model over a growing corpus is maintained O(batch) per
     * batch; scoring composes via [[importanceWeightsFromModels]].
     */
@@ -198,7 +198,7 @@ object Dsir {
   }
 
   /** The micro-batch fold maintaining an at-rest `(bucket, n)` gram
-    * model under `SketchIngest.countIngest` (keys = Seq("bucket")).
+    * model under `SketchIngest.ingestCountBatch` (keys = Seq("bucket")).
     */
   def modelFold(textCol: String, idCol: String, nBuckets: Int): DataFrame => DataFrame =
     b => gramBuckets(b, textCol, idCol, nBuckets).groupBy("bucket").agg(count(lit(1)).as("n"))

@@ -127,7 +127,7 @@ object Pca {
   /** The model's at-rest row form: one (i, j, n) row per Gram cell,
     * (i, −1, n) per column sum, (−1, −1, n) for the count — a single
     * keyed LONG-count table whose merge is exact addition, so
-    * [[graft.streaming.SketchIngest.countIngest]] maintains it
+    * [[graft.streaming.SketchIngest.ingestCountBatch]] maintains it
     * exactly-once from streamed vector batches and a fit from the
     * at-rest table equals a batch fit BIT-IDENTICALLY (spec-pinned).
     */

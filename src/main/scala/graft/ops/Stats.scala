@@ -188,7 +188,7 @@ object Stats {
 
   /** [[tokenEntropy]] from an already-built (`groupCol`, token, n)
     * count table — e.g. one continuously maintained by
-    * `SketchIngest.countIngest` (addition-mergeable, so the streamed
+    * `SketchIngest.ingestCountBatch` (addition-mergeable, so the streamed
     * table is bit-identical to a batch rebuild and this read gives the
     * same entropies; spec-pinned). Keep the keyed table bounded
     * (hashed/bounded vocabularies) per the `SketchIngest` contract.
@@ -225,7 +225,7 @@ object Stats {
     pmiFromCounts(df.groupBy(col(xCol), col(yCol)).agg(count(lit(1)).as("n")), xCol, yCol)
 
   /** [[pmiGrid]] from an already-built (`xCol`, `yCol`, n) joint-count
-    * table — the at-rest form: a `SketchIngest.countIngest` loop keeps
+    * table — the at-rest form: a `SketchIngest.ingestCountBatch` loop keeps
     * the (bounded) grid live, and this read derives marginals, total,
     * and PMI from the tiny table alone, never touching the corpus.
     * Addition-mergeable counts ⇒ streamed == batch bit-identically

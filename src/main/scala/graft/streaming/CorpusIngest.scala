@@ -3,7 +3,7 @@ package graft.streaming
 import java.io.ByteArrayInputStream
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -43,8 +43,54 @@ object CorpusIngest {
   def fileDocStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema("doc_id BIGINT, text STRING").parquet(dir)
 
-  /** Start the deduped-ingest sink. Corpus rows: (doc_id, fingerprint,
-    * text), fingerprint-unique across the whole stream history.
+  /** Per-batch accounting every corpus ingest here returns, in the unit
+    * the ingest keys on (document, vector or clip):
+    *  - `kept`: units appended;
+    *  - `dropped`: units dropped as duplicates of kept units or by a
+    *    gate — which ones is the ingest's to say;
+    *  - `replays`: units already stored (at-least-once redelivery);
+    *  - `rejected`: input rows the identity contract refused before any
+    *    dedup ran (a null id, or a null key that never matches an
+    *    anti-join and would re-append on every delivery);
+    *  - `extra`: the family's own counters, always the same keys for one
+    *    family: video's `deferred`, `staleDropped` and `agedOut`
+    *    ([[VideoIngest]]), curated's stage counts
+    *    ([[ingestCuratedBatch]]); empty elsewhere.
+    * Each batch function's scaladoc says which rows its ledger sums to.
+    */
+  final case class IngestLedger(
+      kept: Long,
+      dropped: Long,
+      replays: Long,
+      rejected: Long,
+      extra: Map[String, Long] = Map.empty
+  )
+
+  /** Stream `source` through one corpus ingest: each micro-batch and its
+    * batch id go to `ingest` (an `ingest*Batch` call) inside
+    * `foreachBatch`, and the returned ledger to `onStats` — the one
+    * place a batch's ledger leaves the loop. `foreachBatch` plus a
+    * replay-safe batch function is the whole sink contract: the batch
+    * functions are idempotent under redelivery, each stated on its own
+    * scaladoc, and the query is their single writer.
+    *
+    * `onStats` runs inside the batch, after all of its writes; a
+    * throwing callback fails the batch, so alert emission shares the
+    * loop's at-least-once semantics (a redelivered batch reports
+    * again).
+    */
+  def start(source: DataFrame, checkpoint: String, onStats: IngestLedger => Unit = _ => ())(
+      ingest: (DataFrame, Long) => IngestLedger): StreamingQuery =
+    source.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => onStats(ingest(batch, batchId)) }
+      .start()
+
+  /** Deduped corpus ingest, one micro-batch: in-batch dedup,
+    * [[CorpusIdGate]] corpus check, bloom swap, corpus append. Corpus
+    * rows: (doc_id, fingerprint, text), fingerprint-unique across the
+    * whole stream history. The bloom is keyed on `xxhash64(text)`, the
+    * corpus check on the fingerprint.
     *
     * Both `corpusPath` and `bloomPath` may live on any Hadoop filesystem
     * (each is resolved through its own scheme). Point `bloomPath` at the
@@ -52,32 +98,17 @@ object CorpusIngest {
     * re-written once per batch through [[graft.sinks.Dfs.swap]]
     * ([[writeBloom]]), so a stateless driver restarting elsewhere picks
     * the state up exactly where the last completed batch left it.
-    */
-  def dedupedIngest(
-      docs: DataFrame,
-      corpusPath: String,
-      bloomPath: String,
-      checkpoint: String,
-      expectedItems: Long = 10000000L
-  ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch, corpusPath, bloomPath, expectedItems)
-      }
-      .start()
-
-  /** One micro-batch: in-batch dedup, [[CorpusIdGate]] corpus check,
-    * bloom swap, corpus append. Exposed for batch-mode reuse and the
-    * spec's streamed==batch comparison. The bloom is keyed on
-    * `xxhash64(text)`, the corpus check on the fingerprint.
+    *
+    * Ledger: `kept` texts appended, `dropped` in-batch duplicate texts,
+    * `replays` texts the corpus holds, `rejected` null texts; the four
+    * sum to the batch's rows.
     */
   def ingestBatch(
       batch: DataFrame,
       corpusPath: String,
       bloomPath: String,
       expectedItems: Long
-  ): Unit = {
+  ): IngestLedger = {
     val spark = batch.sparkSession
     val gate = new CorpusIdGate(
       spark, corpusIds(spark, corpusPath)(_.select(col("fingerprint"), col("text"))),
@@ -85,11 +116,43 @@ object CorpusIngest {
     // identity contract: the fingerprint IS this loop's identity, and a
     // null text fingerprints to null, which never matches the corpus
     // anti-join — such a row would re-append on every delivery
-    val (survivors, n) = gate.absent(fingerprinted(batch.filter(col("text").isNotNull)))
-    if (n > 0) {
-      gate.update(survivors) // bloom BEFORE the append (see the scaladoc)
-      survivors.write.mode(SaveMode.Append).parquet(corpusPath)
+    val c = gatedAppend(batch, col("text").isNotNull, fingerprinted, gate,
+      _.write.mode(SaveMode.Append).parquet(corpusPath))
+    IngestLedger(c.kept, c.valid - c.units, c.units - c.kept, c.raw - c.valid)
+  }
+
+  /** What [[gatedAppend]] counted: batch rows, rows passing the identity
+    * contract, units left by the in-batch keeper, units the gate found
+    * absent, units appended.
+    */
+  private final case class GateCounts(raw: Long, valid: Long, units: Long, fresh: Long, kept: Long)
+
+  /** The gated append behind the exact, span and codes ingests: the
+    * identity-contract filter `valid`, the in-batch keeper `keep`, the
+    * [[CorpusIdGate]] check, the family `step` from the absent units to
+    * the ones to append (and their count), then the bloom swap BEFORE
+    * `append` (see [[CorpusIdGate]]). No job runs just to count rows:
+    * the raw and valid counts are an observation on the gate's pinning
+    * job, and the unit count is the number of rows the gate saw.
+    */
+  private def gatedAppend(
+      batch: DataFrame,
+      valid: Column,
+      keep: DataFrame => DataFrame,
+      gate: CorpusIdGate,
+      append: DataFrame => Unit,
+      step: (DataFrame, Long) => (DataFrame, Long) = (fresh, n) => (fresh, n)
+  ): GateCounts = {
+    val obs = Observation()
+    val (fresh, freshCnt, units) = gate.absent(keep(
+      batch.observe(obs, count(lit(1)).as("raw"), count_if(valid).as("valid")).filter(valid)))
+    val (kept, keptCnt) = if (freshCnt == 0L) (fresh, 0L) else step(fresh, freshCnt)
+    if (keptCnt > 0L) {
+      gate.update(kept)
+      append(kept)
     }
+    val m = obs.get
+    GateCounts(m("raw").asInstanceOf[Long], m("valid").asInstanceOf[Long], units, freshCnt, keptCnt)
   }
 
   /** In-batch exact dedup: one row per fingerprint `fp`, the smallest
@@ -107,92 +170,30 @@ object CorpusIngest {
       docs.select(col("doc_id"), md5(col("text")).as("fingerprint"), col("text")),
       col("fingerprint"))
 
-  /** Per-batch accounting returned by [[ingestNearDupBatch]] and the
-    * image/video/semantic ingest analogues: rows that survived
-    * (`kept`), rows dropped as duplicates — exact in-batch, near
-    * in-batch, or near-dup vs the corpus (`nearDups`) — replays whose
-    * id was already indexed, or unindexable rows the corpus already
-    * holds ([[NearDupIngest]]; `replays`), rows REJECTED by the
-    * identity contract before any dedup ran (`rejected` — null id, or
-    * an in-batch duplicate id where the id is the identity; round 17,
-    * ADVICE r16: these used to surface inside `nearDups`; null vec_id
-    * in the semantic ingest lands here too, ADVICE r17), and three
-    * [[VideoIngest]]-only clip counters: `deferred` (clips parked in
-    * the pending store awaiting frame completeness), `staleDropped`
-    * (round 18, verdict r17 #5 — PARTIAL redeliveries of clips the
-    * corpus already holds, dropped at the completeness gate; split out
-    * of `replays` because a source re-sending fragments of completed
-    * clips is a misbehaving-source signal, while `replays` is benign
-    * at-least-once redelivery), and `agedOut` (round 18, verdict r17
-    * #1 — clips EVICTED from the pending store for out-waiting
-    * `pendingMaxAgeBatches`; nonzero means a source is parking clips
-    * it never completes).
-    *
-    * LEDGER: for the row-unit ingests (text/semantic/image),
-    * `kept + nearDups + replays + rejected == batch.count()`. For
-    * [[VideoIngest]] the stats are CLIP-unit
-    * (`kept + nearDups + replays` covers the complete clips processed
-    * this batch; `staleDropped` and `agedOut` count the clips the gate
-    * withheld for good; `deferred` counts clips still pending) while
-    * `rejected` stays in FRAME units — see its scaladoc.
-    */
-  final case class NearDupIngestStats(
-      kept: Long,
-      nearDups: Long,
-      replays: Long,
-      rejected: Long = 0L,
-      deferred: Long = 0L,
-      staleDropped: Long = 0L,
-      agedOut: Long = 0L
-  )
-
-  /** Streaming NEAR-dup ingest — "dedup today's crawl against the whole
-    * corpus" at streaming cadence: each micro-batch is (1) exact+near
-    * deduped within itself, (2) probed against the at-rest MinHash index
-    * ([[Dedup.incrementalNearDups]] — reads only the band buckets the
-    * batch hashes into, never the whole index), and (3) the survivors are
-    * appended to BOTH the index ([[Dedup.appendToMinHashIndex]], O(batch))
-    * and the text corpus. The corpus only ever accretes docs that are not
-    * near-duplicates of anything kept before them. Docs with fewer than
-    * `shingleSize` tokens have no gram set and never index.
+  /** NEAR-dup corpus ingest, one micro-batch — "dedup today's crawl
+    * against the whole corpus" at streaming cadence: each micro-batch is
+    * (1) exact+near deduped within itself, (2) probed against the
+    * at-rest MinHash index ([[Dedup.incrementalNearDups]] — reads only
+    * the band buckets the batch hashes into, never the whole index), and
+    * (3) the survivors are appended to BOTH the index
+    * ([[Dedup.appendToMinHashIndex]], O(batch)) and the text corpus. The
+    * corpus only ever accretes docs that are not near-duplicates of
+    * anything kept before them. Docs with fewer than `shingleSize`
+    * tokens have no gram set and never index.
     *
     * Replay safety (at-least-once delivery → exactly-once corpus) is the
     * [[NearDupIngest]] loop's: index before corpus, a same-id probe hit
     * is a replay confirmed against the corpus, crash-window orphans
     * append to the corpus only.
-    */
-  def nearDupIngest(
-      docs: DataFrame,
-      corpusPath: String,
-      indexTable: String,
-      checkpoint: String,
-      shingleSize: Int = 3,
-      numHashes: Int = 32,
-      bands: Int = 8,
-      threshold: Double = 0.5,
-      nBuckets: Int = 64,
-      compactFanout: Int = 16,
-      onStats: NearDupIngestStats => Unit = _ => (),
-      idBloomPath: Option[String] = None,
-      idBloomItems: Long = 1000000L
-  ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onStats(ingestNearDupBatch(
-          batch, corpusPath, indexTable, shingleSize, numHashes, bands, threshold, nBuckets,
-          compactFanout, idBloomPath, idBloomItems))
-        ()
-      }
-      .start()
-
-  /** One near-dup-ingest micro-batch (see [[nearDupIngest]]). Exposed for
-    * batch-mode reuse and the spec's streamed==batch comparison.
     *
     * `compactFanout` is the auto-compaction cadence ([[NearDupIngest]]):
     * without it the steady-state ingest appends one file-set per batch
     * forever — probe latency and LIST cost grow linearly until the index
     * is an N-files-per-bucket small-file swamp. `<= 0` disables.
+    *
+    * Ledger ([[NearDupIngest]]): `dropped` counts exact in-batch, near
+    * in-batch and near-vs-corpus duplicates; `rejected` null ids and
+    * null texts; `kept + dropped + replays + rejected == batch.count()`.
     */
   def ingestNearDupBatch(
       batch: DataFrame,
@@ -206,7 +207,7 @@ object CorpusIngest {
       compactFanout: Int = 16,
       idBloomPath: Option[String] = None,
       idBloomItems: Long = 1000000L
-  ): NearDupIngestStats = {
+  ): IngestLedger = {
     val spark = batch.sparkSession
     NearDupIngest.ingestBatch(batch, corpusPath, indexTable, compactFanout,
       idBloomPath, idBloomItems, NearDupIngest.Spec(
@@ -243,55 +244,28 @@ object CorpusIngest {
       ))
   }
 
-  /** Streaming SEMANTIC-dedup ingest — [[nearDupIngest]]'s embedding
-    * analogue, completing the at-rest/streaming matrix for the last
-    * dedup modality: each micro-batch of (vec_id, embedding) rows is
-    * (1) near-deduped within itself (hyperplane-LSH pairs + greedy
-    * min-id keeper — covers exact copies too, cosine 1), (2) probed
-    * against the at-rest embedding-LSH index
-    * ([[Dedup.incrementalSemanticNearDups]] — reads only the band
+  /** SEMANTIC-dedup corpus ingest, one micro-batch —
+    * [[ingestNearDupBatch]]'s embedding analogue, completing the
+    * at-rest/streaming matrix for the last dedup modality: each
+    * micro-batch of (vec_id, embedding) rows is (1) near-deduped within
+    * itself (hyperplane-LSH pairs + greedy min-id keeper — covers exact
+    * copies too, cosine 1), (2) probed against the at-rest embedding-LSH
+    * index ([[Dedup.incrementalSemanticNearDups]] — reads only the band
     * buckets the batch hashes into, verification is the EXACT cosine of
     * the stored vectors), and (3) survivors are appended to BOTH the
     * index ([[Dedup.appendToEmbeddingLshIndex]], O(batch)) and the
     * vector corpus.
     *
     * Replay safety is the [[NearDupIngest]] loop's, like
-    * [[nearDupIngest]]'s; every admitted vector indexes.
+    * [[ingestNearDupBatch]]'s; every admitted vector indexes.
+    * `compactFanout` is the same cadence-guarded index compaction.
     *
     * SIZING: `bitsPerBand` follows the constant-bucket rule
     * ([[Dedup.embeddingNearDupPairs]] scaladoc) against the CORPUS the
     * index will grow to, not the batch.
-    */
-  def semanticDedupIngest(
-      vecs: DataFrame,
-      corpusPath: String,
-      indexTable: String,
-      checkpoint: String,
-      dim: Int,
-      bands: Int = 4,
-      bitsPerBand: Int = 4,
-      seed: Long = 42L,
-      threshold: Double = 0.9,
-      nBuckets: Int = 64,
-      compactFanout: Int = 16,
-      onStats: NearDupIngestStats => Unit = _ => (),
-      idBloomPath: Option[String] = None,
-      idBloomItems: Long = 1000000L
-  ): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onStats(ingestSemanticBatch(
-          batch, corpusPath, indexTable, dim, bands, bitsPerBand, seed, threshold,
-          nBuckets, compactFanout, idBloomPath, idBloomItems))
-        ()
-      }
-      .start()
-
-  /** One semantic-ingest micro-batch (see [[semanticDedupIngest]]).
-    * Exposed for batch-mode reuse and the spec's streamed==batch
-    * comparison. `compactFanout` is the same cadence-guarded index
-    * compaction as [[ingestNearDupBatch]]'s.
+    *
+    * Ledger: as [[ingestNearDupBatch]]'s; `rejected` counts null ids,
+    * in-batch duplicate ids and degenerate embeddings.
     */
   def ingestSemanticBatch(
       batch: DataFrame,
@@ -306,7 +280,7 @@ object CorpusIngest {
       compactFanout: Int = 16,
       idBloomPath: Option[String] = None,
       idBloomItems: Long = 1000000L
-  ): NearDupIngestStats = {
+  ): IngestLedger = {
     val spark = batch.sparkSession
     NearDupIngest.ingestBatch(batch, corpusPath, indexTable, compactFanout,
       idBloomPath, idBloomItems, NearDupIngest.Spec(
@@ -346,43 +320,19 @@ object CorpusIngest {
       ))
   }
 
-  /** Per-batch accounting returned by [[ingestSpanBatch]]: docs kept,
-    * docs dropped for exceeding the duplicated-token bar, replays
-    * (fingerprints already in the corpus), and `rejected` (round 18):
-    * null-text rows, whose null fingerprint — this loop's identity —
-    * never matches the corpus anti-join, so pre-fix they re-appended
-    * on every delivery. `kept + dropped + replays + rejected` counts
-    * the post-in-batch-dedup rows plus rejections.
-    */
-  final case class SpanIngestStats(
-      kept: Long,
-      dropped: Long,
-      replays: Long,
-      rejected: Long = 0L)
-
   /** File-based embedding stream (locally testable source: parquet
     * files of (vec_id, embedding) dropped into a directory) — the
-    * [[pqIndexIngest]] source.
+    * source of the PQ/IVF-PQ codes ingests.
     */
   def fileVecStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema("vec_id BIGINT, embedding ARRAY<DOUBLE>").parquet(dir)
 
-  /** Per-batch accounting from [[ingestPqBatch]]: vectors appended to
-    * the index, replays — every valid input row that did NOT append,
-    * i.e. in-batch duplicate ids plus ids the index already holds —
-    * and `rejected` (round 18): null-id rows, which the id IS the
-    * index key for, so they can never be replay-detected (null keys
-    * don't join) and pre-fix re-appended on every delivery.
-    * `appended + replays + rejected == batch.count()`.
-    */
-  final case class PqIngestStats(appended: Long, replays: Long, rejected: Long = 0L)
-
-  /** Streaming ANN-index ingest: each micro-batch of embeddings is
-    * encoded with the at-rest PQ index's FROZEN codebooks
-    * ([[graft.ops.Similarity.appendToPqIndex]]) and appended — a
-    * continuously-growing searchable index where every append is
-    * O(batch) and a fresh session can probe the up-to-the-last-batch
-    * state from the table name alone.
+  /** ANN-index ingest, one micro-batch: the embeddings are encoded with
+    * the at-rest PQ index's FROZEN codebooks
+    * ([[graft.ops.Similarity.appendToPqIndex]]) and appended — streamed
+    * through [[start]], a continuously-growing searchable index where
+    * every append is O(batch) and a fresh session can probe the
+    * up-to-the-last-batch state from the table name alone.
     *
     * Bootstrap contract: the index must already exist
     * ([[graft.ops.Similarity.writePqIndex]] on a representative seed
@@ -398,45 +348,30 @@ object CorpusIngest {
     * crash lands between the append and the checkpoint commit, and a
     * codes append is not idempotent — so replayed ids must never
     * re-append. The guard is the [[CorpusIdGate]] every ingest here
-    * runs, over the index's `cid` column: a few-MB bloom over
-    * already-indexed ids lives beside the stream's checkpoint
-    * (`<checkpoint>/graft-id-bloom`). Bloom-negative ids are DEFINITELY
-    * fresh — the common no-replay batch reads no index file; only
-    * suspected replays anti-join the index's id column. The first
-    * bloom-fronted batch against a pre-existing index adopts it: that
-    * batch anti-joins the whole id column and seeds the filter from it,
-    * ONCE, after which the maintenance is O(batch) per batch.
+    * runs, over the index's `cid` column. Streamed, keep its few-MB
+    * bloom over already-indexed ids beside the stream's checkpoint:
+    * `bloomPath = Some(s"<checkpoint>/graft-id-bloom")`. Bloom-negative
+    * ids are DEFINITELY fresh — the common no-replay batch reads no
+    * index file; only suspected replays anti-join the index's id column.
+    * The first bloom-fronted batch against a pre-existing index adopts
+    * it: that batch anti-joins the whole id column and seeds the filter
+    * from it, ONCE, after which the maintenance is O(batch) per batch.
+    * `bloomPath = None` drops the bloom front and anti-joins the full
+    * index id column (correct for one-off batch use on an index nothing
+    * is streaming into).
     *
     * Single-writer contract (same as every swap protocol here): the
     * foreachBatch loop owns both the index and its bloom. Appending to
-    * the index around the loop (e.g. batch-mode [[ingestPqBatch]] with
-    * `bloomPath = None`, or a direct `appendToPqIndex`) leaves the
-    * bloom under-claiming those ids, which un-guards THEIR replays —
-    * don't mix writers on a live streamed index.
-    */
-  def pqIndexIngest(
-      vecs: DataFrame,
-      table: String,
-      checkpoint: String,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id",
-      expectedItems: Long = 10000000L,
-      onStats: PqIngestStats => Unit = _ => ()
-  ): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onStats(ingestPqBatch(batch, table, vecCol, idCol,
-          bloomPath = Some(s"$checkpoint/graft-id-bloom"), expectedItems = expectedItems))
-        ()
-      }
-      .start()
-
-  /** One micro-batch of [[pqIndexIngest]]; exposed for batch-mode reuse
-    * and the spec's streamed==rebuild comparison. `bloomPath = None`
-    * drops the bloom front and anti-joins the full index id column
-    * (correct for one-off batch use on an index nothing is streaming
-    * into; see the single-writer contract above).
+    * the index around the loop (e.g. a batch-mode call with
+    * `bloomPath = None`, or a direct `appendToPqIndex`) leaves the bloom
+    * under-claiming those ids, which un-guards THEIR replays — don't mix
+    * writers on a live streamed index.
+    *
+    * Ledger: `kept` vectors appended; `replays` every valid row that did
+    * NOT append — in-batch duplicate ids plus ids the index already
+    * holds; `rejected` null-id rows (the id IS the index key: null keys
+    * don't join, so they could never be replay-detected); `dropped` is
+    * 0. `kept + replays + rejected == batch.count()`.
     */
   def ingestPqBatch(
       batch: DataFrame,
@@ -445,57 +380,35 @@ object CorpusIngest {
       idCol: String = "vec_id",
       bloomPath: Option[String] = None,
       expectedItems: Long = 10000000L
-  ): PqIngestStats =
+  ): IngestLedger =
     ingestCodesBatch(batch, table, vecCol, idCol, bloomPath, expectedItems,
       graft.ops.Similarity.appendToPqIndex(_, _, _, vecCol, idCol), "writePqIndex")
 
-  /** Streaming IVF-PQ index ingest — [[pqIndexIngest]]'s contract over
-    * the BUCKETED composition index: each micro-batch is coarse-assigned
-    * and encoded with the index's frozen quantizers
+  /** IVF-PQ index ingest, one micro-batch — [[ingestPqBatch]]'s
+    * contract over the BUCKETED composition index: the batch is
+    * coarse-assigned and encoded with the index's frozen quantizers
     * ([[graft.ops.Similarity.appendToIvfPqIndex]]) and bucket-appended,
     * so probe-side bucket pruning keeps holding as the index grows
     * (spec-pinned: `SelectedBucketsCount` stays < nCells on a
     * fresh-session probe after streamed appends). Same bloom-fronted
-    * replay guard, same single-writer contract, same bootstrap rule
-    * (the index must exist — [[graft.ops.Similarity.writeIvfPqIndex]]
-    * on a representative seed corpus).
+    * replay guard (streamed: the bloom at `<checkpoint>/graft-id-bloom`),
+    * same single-writer contract, same ledger, same bootstrap rule (the
+    * index must exist — [[graft.ops.Similarity.writeIvfPqIndex]] on a
+    * representative seed corpus).
     *
     * Invariant (spec-pinned): after any prefix of batches, the codes
     * table equals `assignAndEncode(seed ∪ streamed-so-far)` under the
     * frozen quantizers — bit-identical to a batch rebuild.
     *
     * `compactFanout` is the same auto-compaction cadence as
-    * [[nearDupIngest]]: each bucket-append lands one file-set per
-    * batch, and without between-batch compaction probe latency and
-    * LIST cost grow linearly until the index is a small-file swamp.
-    * When files-per-bucket ([[graft.sinks.Sinks.bucketFileFanout]] —
-    * one flat LIST, no data read) exceeds the threshold after a
-    * batch's append, the batch ends with a
-    * [[graft.sinks.Sinks.compactBucketed]] pass — safe inline because
-    * this loop IS the index's single writer. `<= 0` disables.
-    */
-  def ivfPqIndexIngest(
-      vecs: DataFrame,
-      table: String,
-      checkpoint: String,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id",
-      expectedItems: Long = 10000000L,
-      compactFanout: Int = 16,
-      onStats: PqIngestStats => Unit = _ => ()
-  ): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onStats(ingestIvfPqBatch(batch, table, vecCol, idCol,
-          bloomPath = Some(s"$checkpoint/graft-id-bloom"), expectedItems = expectedItems,
-          compactFanout = compactFanout))
-        ()
-      }
-      .start()
-
-  /** One micro-batch of [[ivfPqIndexIngest]]; exposed for batch-mode
-    * reuse and the spec's streamed==rebuild comparison.
+    * [[ingestNearDupBatch]] (pass 16 on a streamed index): each
+    * bucket-append lands one file-set per batch, and without
+    * between-batch compaction probe latency and LIST cost grow linearly
+    * until the index is a small-file swamp. When files-per-bucket
+    * ([[graft.sinks.Sinks.bucketFileFanout]] — one flat LIST, no data
+    * read) exceeds the threshold after a batch's append, the batch ends
+    * with a [[graft.sinks.Sinks.compactBucketed]] pass — safe inline
+    * because the loop IS the index's single writer. `<= 0` disables.
     */
   def ingestIvfPqBatch(
       batch: DataFrame,
@@ -505,20 +418,20 @@ object CorpusIngest {
       bloomPath: Option[String] = None,
       expectedItems: Long = 10000000L,
       compactFanout: Int = 0
-  ): PqIngestStats = {
+  ): IngestLedger = {
     val stats = ingestCodesBatch(batch, table, vecCol, idCol, bloomPath, expectedItems,
       graft.ops.Similarity.appendToIvfPqIndex(_, _, _, vecCol, idCol), "writeIvfPqIndex")
     val spark = batch.sparkSession
-    if (compactFanout > 0 && stats.appended > 0 &&
+    if (compactFanout > 0 && stats.kept > 0 &&
       graft.sinks.Sinks.bucketFileFanout(spark, table) > compactFanout)
       graft.sinks.Sinks.compactBucketed(spark, table)
     stats
   }
 
-  /** The shared codes-index micro-batch: in-batch id dedup, the
-    * [[CorpusIdGate]] check against the index's ids (without a
-    * `bloomPath`, a plain anti-join of the whole id column), bloom swap,
-    * frozen-quantizer append. `append` is the index-flavor append
+  /** The shared codes-index micro-batch on [[gatedAppend]]: in-batch id
+    * dedup, the [[CorpusIdGate]] check against the index's ids (without
+    * a `bloomPath`, a plain anti-join of the whole id column), bloom
+    * swap, frozen-quantizer append. `append` is the index-flavor append
     * ([[graft.ops.Similarity.appendToPqIndex]] or
     * [[graft.ops.Similarity.appendToIvfPqIndex]]).
     */
@@ -531,37 +444,32 @@ object CorpusIngest {
       expectedItems: Long,
       append: (SparkSession, String, DataFrame) => Unit,
       bootstrapFn: String
-  ): PqIngestStats = {
+  ): IngestLedger = {
     val spark = batch.sparkSession
     require(
       spark.catalog.tableExists(table),
       s"$table does not exist — bootstrap the index with $bootstrapFn on a seed corpus first"
     )
+    val gate = new CorpusIdGate(
+      spark, StoredIds(() => true, () => spark.table(table).select(col("cid").as(idCol))),
+      idCol, bloomPath, expectedItems)
     // ids identify vectors (the id IS the index key): null ids are
     // contract rejections (they skip every id-keyed anti-join, so they
     // would re-append per delivery); one row per id in-batch; two
     // different payloads under one id is a caller bug and the survivor
     // is arbitrary, same as any keyed upsert sink
-    val counts = batch.agg(count(lit(1)), count(col(idCol))).head()
-    val (rawCnt, validCnt) = (counts.getLong(0), counts.getLong(1))
-    val gate = new CorpusIdGate(
-      spark, StoredIds(() => true, () => spark.table(table).select(col("cid").as(idCol))),
-      idCol, bloomPath, expectedItems)
-    val (fresh, appended) =
-      gate.absent(batch.filter(col(idCol).isNotNull).dropDuplicates(Seq(idCol)))
-    if (appended > 0) {
-      gate.update(fresh)
-      append(spark, table, fresh)
-    }
-    PqIngestStats(appended, validCnt - appended, rawCnt - validCnt)
+    val c = gatedAppend(batch, col(idCol).isNotNull, _.dropDuplicates(Seq(idCol)), gate,
+      append(spark, table, _))
+    IngestLedger(c.kept, 0L, c.valid - c.kept, c.raw - c.valid)
   }
 
-  /** Streaming SUBSTRING-dedup ingest — the Lee et al. family at
-    * streaming cadence: each micro-batch is (1) exact-deduped in-batch
-    * and against the corpus ([[CorpusIdGate]] on the fingerprint,
-    * bloom-fronted when `idBloomPath` is set), (2) span-scored against
-    * the at-rest gram index ([[Dedup.incrementalDuplicateSpans]]: corpus-total counts =
-    * index history + in-batch, O(batch) shuffle), and (3) docs whose
+  /** SUBSTRING-dedup corpus ingest, one micro-batch — the Lee et al.
+    * family at streaming cadence: each micro-batch is (1) exact-deduped
+    * in-batch and against the corpus ([[CorpusIdGate]] on the
+    * fingerprint, bloom-fronted when `idBloomPath` is set), (2)
+    * span-scored against the at-rest gram index
+    * ([[Dedup.incrementalDuplicateSpans]]: corpus-total counts = index
+    * history + in-batch, O(batch) shuffle), and (3) docs whose
     * duplicated-token fraction stays within `maxDupFrac` are appended
     * to the corpus, then their grams to the index.
     *
@@ -584,32 +492,12 @@ object CorpusIngest {
     *    duplicate text survives; no unique document is ever wrongly
     *    dropped, which is what the reverse order would do), and
     *    `writeGramIndex(corpus)` heals the undercount exactly.
-    */
-  def spanDedupIngest(
-      docs: DataFrame,
-      corpusPath: String,
-      gramIndexTable: String,
-      checkpoint: String,
-      gramTokens: Int = 8,
-      minCount: Int = 2,
-      maxDupFrac: Double = 0.5,
-      nBuckets: Int = 64,
-      onStats: SpanIngestStats => Unit = _ => (),
-      idBloomPath: Option[String] = None,
-      idBloomItems: Long = 1000000L
-  ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onStats(ingestSpanBatch(
-          batch, corpusPath, gramIndexTable, gramTokens, minCount, maxDupFrac, nBuckets,
-          idBloomPath, idBloomItems))
-        ()
-      }
-      .start()
-
-  /** One micro-batch of [[spanDedupIngest]]; exposed for batch-mode
-    * reuse and the spec's streamed==batch comparison.
+    *
+    * Ledger: `kept` docs appended, `dropped` docs over the
+    * duplicated-token bar, `replays` fingerprints the corpus holds,
+    * `rejected` null texts (a null fingerprint never matches the corpus
+    * anti-join). In-batch exact duplicates are not counted: the four sum
+    * to the rows left by the in-batch dedup plus the rejections.
     */
   def ingestSpanBatch(
       batch: DataFrame,
@@ -621,67 +509,42 @@ object CorpusIngest {
       nBuckets: Int = 64,
       idBloomPath: Option[String] = None,
       idBloomItems: Long = 1000000L
-  ): SpanIngestStats = {
+  ): IngestLedger = {
     val spark = batch.sparkSession
     val gate = new CorpusIdGate(
       spark, corpusIds(spark, corpusPath)(_.select(col("fingerprint"))),
       "fingerprint", idBloomPath, idBloomItems)
-    // identity contract: a null text fingerprints to null, which never
-    // matches the corpus anti-join — such a row would re-append on every
-    // delivery. Contract rejection, counted (both counts in one job).
-    val counts = batch.agg(count(lit(1)), count(col("text"))).head()
-    val rejected = counts.getLong(0) - counts.getLong(1)
-    // (1) in-batch exact dedup + corpus replay filter
-    val withFp = fingerprinted(batch.filter(col("text").isNotNull))
-    val (fresh, freshCnt) = gate.absent(withFp)
-    val replays = withFp.count() - freshCnt
-    if (freshCnt == 0) return SpanIngestStats(0, 0, replays, rejected)
-    // (2) duplicated-token fraction vs (kept corpus ∪ this batch)
-    val spans =
-      if (spark.catalog.tableExists(gramIndexTable))
-        Dedup.incrementalDuplicateSpans(
-          spark, fresh, gramIndexTable, "text", "doc_id", minCount)
-      else // first batch: history is empty, counts are in-batch only
-        Dedup.duplicateSpans(fresh, "text", "doc_id", gramTokens, minCount)
-    val dupPerDoc = spans.groupBy(col("doc_id")).agg(sum(col("span_tokens")).as("dup_tokens"))
-    val (kept, keptCnt) = Materialize.counted(
-      fresh
-        .withColumn("__n", size(graft.functions.Fns.tokens(col("text"))).cast("long"))
-        .join(dupPerDoc, Seq("doc_id"), "left")
-        .filter(
-          col("dup_tokens").isNull || col("__n") === 0L ||
-            col("dup_tokens").cast("double") / col("__n") <= maxDupFrac
-        )
-        .select(col("doc_id"), col("fingerprint"), col("text"))
-    )
-    // (3) corpus, then (4) the kept docs' grams — see the ordering contract
-    if (keptCnt > 0) {
-      // bloom BEFORE the corpus append (the over-claiming direction —
-      // see [[CorpusIdGate]]); only KEPT fingerprints enter the filter,
-      // matching exactly what the corpus will hold
-      gate.update(kept)
-      kept.write.mode(SaveMode.Append).parquet(corpusPath)
-      Dedup.appendToGramIndex(kept, "text", "doc_id", gramIndexTable, gramTokens, nBuckets)
-    }
-    SpanIngestStats(keptCnt, freshCnt - keptCnt, replays, rejected)
+    val c = gatedAppend(batch, col("text").isNotNull, fingerprinted, gate,
+      // corpus, then the kept docs' grams — see the ordering contract
+      append = { kept =>
+        kept.write.mode(SaveMode.Append).parquet(corpusPath)
+        Dedup.appendToGramIndex(kept, "text", "doc_id", gramIndexTable, gramTokens, nBuckets)
+      },
+      // duplicated-token fraction vs (kept corpus ∪ this batch)
+      step = { (fresh, _) =>
+        val spans =
+          if (spark.catalog.tableExists(gramIndexTable))
+            Dedup.incrementalDuplicateSpans(
+              spark, fresh, gramIndexTable, "text", "doc_id", minCount)
+          else // first batch: history is empty, counts are in-batch only
+            Dedup.duplicateSpans(fresh, "text", "doc_id", gramTokens, minCount)
+        val dupPerDoc = spans.groupBy(col("doc_id")).agg(sum(col("span_tokens")).as("dup_tokens"))
+        Materialize.counted(
+          fresh
+            .withColumn("__n", size(graft.functions.Fns.tokens(col("text"))).cast("long"))
+            .join(dupPerDoc, Seq("doc_id"), "left")
+            .filter(
+              col("dup_tokens").isNull || col("__n") === 0L ||
+                col("dup_tokens").cast("double") / col("__n") <= maxDupFrac
+            )
+            .select(col("doc_id"), col("fingerprint"), col("text")))
+      })
+    IngestLedger(c.kept, c.fresh - c.kept, c.units - c.fresh, c.raw - c.valid)
   }
 
-  /** Per-batch accounting for [[curatedIngest]]. `replayed = true`
-    * marks a batch recognized as fully committed (model marker ≥
-    * batchId) and skipped as a whole — the counts are then zero, not
-    * re-derived.
-    */
-  final case class CurateIngestStats(
-      input: Long,
-      boilerPass: Long,
-      qualityPass: Long,
-      gated: Long,
-      replayed: Boolean = false
-  )
-
-  /** Curation-gated corpus ingest — the streaming form of the full
-    * `Curation` pipeline over the exactly-once corpus loop: per
-    * micro-batch (0) boilerplate stripping
+  /** Curation-gated corpus ingest, one micro-batch — the streaming form
+    * of the full `Curation` pipeline over the exactly-once corpus loop:
+    * per micro-batch (0) boilerplate stripping
     * ([[graft.ops.TextAnalysis.stripBoilerplateFromModel]]) against
     * the AT-REST segment-count model (cold model = nothing frequent
     * yet, so stage 0 degrades to the same tokenize-and-rebuild
@@ -718,7 +581,9 @@ object CorpusIngest {
     * model marker is checked FIRST — the model commits LAST, so a
     * stored marker ≥ the delivered batch id PROVES the entire batch
     * (corpus append included) already ran, and the redelivery returns
-    * as a full no-op. That check is what closes the one divergence
+    * as a full no-op. Streamed through [[start]], `batchId` is the
+    * stream's own batch id; batch-mode callers pass strictly increasing
+    * ids. That check is what closes the one divergence
     * window a gate-re-evaluation replay would have: a crash after the
     * model commit but before the streaming checkpoint commit would
     * otherwise re-gate against the ALREADY-UPDATED model (which may
@@ -739,37 +604,13 @@ object CorpusIngest {
     * absorbed the first attempt), so stream-fit is the price of the
     * replay-deterministic loop; with dedup upstream the two fits
     * converge.
-    */
-  def curatedIngest(
-      docs: DataFrame,
-      corpusPath: String,
-      bloomPath: String,
-      modelPath: String,
-      checkpoint: String,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      minQuality: Double = 0.5,
-      maxAvgNll: Double = 9.0,
-      nBuckets: Int = 4096,
-      warmupGrams: Long = 10000L,
-      expectedItems: Long = 10000000L,
-      segTokens: Int = 8,
-      minDocsBoiler: Int = 50,
-      boilerCmsWidth: Int = 0,
-      onStats: CurateIngestStats => Unit = _ => ()
-  ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onStats(ingestCuratedBatch(batch, batchId, corpusPath, bloomPath, modelPath,
-          textCol, idCol, minQuality, maxAvgNll, nBuckets, warmupGrams, expectedItems,
-          segTokens, minDocsBoiler, boilerCmsWidth))
-        ()
-      }
-      .start()
-
-  /** One micro-batch of [[curatedIngest]]; exposed for batch-mode reuse
-    * and the spec's replay/warmup/crash pins.
+    *
+    * Ledger: `kept`/`dropped`/`replays`/`rejected` are the corpus
+    * append's ([[ingestBatch]] over the gated docs). `extra` holds the
+    * stages: `input` (texts after the in-batch dedup), `boilerPass`,
+    * `qualityPass`, `gated`, and `replayed` — 1 for a batch the marker
+    * proved fully committed and skipped as a whole, whose counts are
+    * then zero, not re-derived.
     */
   def ingestCuratedBatch(
       batch: DataFrame,
@@ -787,7 +628,7 @@ object CorpusIngest {
       segTokens: Int = 8,
       minDocsBoiler: Int = 50,
       boilerCmsWidth: Int = 0
-  ): CurateIngestStats = {
+  ): IngestLedger = {
     val spark = batch.sparkSession
     // Marker first (scaladoc): the model commits last, so a stored
     // batch id ≥ ours proves corpus append AND model update both
@@ -796,7 +637,7 @@ object CorpusIngest {
     // model at all.
     val model = SketchIngest.readCommitted(spark, modelPath)
     if (model.exists(_._1 >= batchId))
-      return CurateIngestStats(0L, 0L, 0L, 0L, replayed = true)
+      return IngestLedger(0L, 0L, 0L, 0L, curatedStages(0L, 0L, 0L, 0L, replayed = 1L))
     val modelRows = model.map(_._2)
     val base = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // batch-level exact dedup FIRST (the corpus loop's keeper) so
@@ -856,11 +697,12 @@ object CorpusIngest {
         .select(col("doc_id"))
       graft.ops.Materialize(qualityPass.join(keepIds, Seq("doc_id")))
     }
-    val nGated = gated.count()
 
     // corpus append (per-doc idempotent) BEFORE the marker-committed
-    // model update — see the determinism note in the scaladoc
-    ingestBatch(gated, corpusPath, bloomPath, expectedItems)
+    // model update — see the determinism note in the scaladoc; its
+    // ledger accounts for every gated doc, so it also counts them
+    val corpus = ingestBatch(gated, corpusPath, bloomPath, expectedItems)
+    val nGated = corpus.kept + corpus.dropped + corpus.replays + corpus.rejected
     // model update, one table + one marker: surprisal counts from the
     // gated CLEAN docs (null seg), boiler segment counts from the
     // batch's raw post-dedup input (pre-gates — the batch pipeline's
@@ -886,8 +728,14 @@ object CorpusIngest {
       Seq("kind", "bucket", "seg"),
       modelPath
     )
-    CurateIngestStats(nInput, nBoiler, nQual, nGated)
+    corpus.copy(extra = curatedStages(nInput, nBoiler, nQual, nGated, replayed = 0L))
   }
+
+  private def curatedStages(
+      input: Long, boilerPass: Long, qualityPass: Long, gated: Long, replayed: Long
+  ): Map[String, Long] =
+    Map("input" -> input, "boilerPass" -> boilerPass, "qualityPass" -> qualityPass,
+      "gated" -> gated, "replayed" -> replayed)
 
   /** Count-min depth for the bounded boiler model (width is the knob;
     * 4 rows is the standard accuracy/size point).
@@ -942,18 +790,24 @@ object CorpusIngest {
     private val bloom: Option[StoredBloom] =
       bloomPath.flatMap(bp => readBloom(graft.sinks.Dfs.fs(spark, bp), bp))
 
-    /** The rows of `df` whose id is NOT stored, pinned, and their count
-      * — exact at every configuration (the bloom only decides whether
-      * the stored rows are read, never the answer). The pinning job
-      * alone when no row is bloom-positive; the anti-join's jobs on top
-      * when some are.
+    /** The rows of `df` whose id is NOT stored, pinned, their count, and
+      * the number of rows of `df` — exact at every configuration (the
+      * bloom only decides whether the stored rows are read, never the
+      * answer). The pinning job alone when no row is bloom-positive; the
+      * anti-join's jobs on top when some are.
       */
-    def absent(df: DataFrame): (DataFrame, Long) =
-      if (!stored.exists()) Materialize.counted(df)
-      else {
+    def absent(df: DataFrame): (DataFrame, Long, Long) =
+      if (!stored.exists()) {
+        val (rows, n) = Materialize.counted(df)
+        (rows, n, n)
+      } else {
         val (rows, n, positives) = Dedup.bloomAbsent(
           df, df.columns.toSeq.map(col), col(key), bloom.map(_.filter), stored.rows(), idCol)
-        if (positives == 0L) (rows, n) else Materialize.counted(rows)
+        if (positives == 0L) (rows, n, n)
+        else {
+          val (confirmed, absentCnt) = Materialize.counted(rows)
+          (confirmed, absentCnt, n)
+        }
       }
 
     /** Merge the bloom keys of the rows this batch appends into the

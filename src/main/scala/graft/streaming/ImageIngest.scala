@@ -2,14 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.{Dedup, ImageHash, Materialize}
-import graft.streaming.CorpusIngest.NearDupIngestStats
+import graft.streaming.CorpusIngest.IngestLedger
 
 /** Streaming perceptual-image dedup ingest (round 14; hash-family
   * parameterized in round 16 — verdict r15 #4) — the image analogue of
-  * [[CorpusIngest.semanticDedupIngest]], completing the
+  * [[CorpusIngest.ingestSemanticBatch]], completing the
   * at-rest/streaming matrix for BOTH perceptual-hash modalities: each
   * micro-batch of (doc_id, media) rows is (1) near-deduped within
   * itself (band pairs + greedy min-id keeper — exact re-encodes land
@@ -44,39 +43,17 @@ import graft.streaming.CorpusIngest.NearDupIngestStats
   * under another copy's hash. Rows without a doc_id — and the losers
   * of the in-batch id dedup — are rejected up-front and surface in the
   * stats as `rejected` (round 17, ADVICE r16: previously they were
-  * silently folded into `nearDups`), not errored: an id-keyed,
+  * silently folded into the near-dups), not errored: an id-keyed,
   * replay-idempotent ingest cannot represent identity-less rows —
   * same-id replay detection and the corpus anti-join both key on
   * doc_id. The returned ledger sums to the raw batch size:
-  * `kept + nearDups + replays + rejected == batch.count()`.
+  * `kept + dropped + replays + rejected == batch.count()`, `dropped`
+  * counting near-dups in-batch and against the index.
   */
 object ImageIngest {
 
-  /** Start the ingest loop over a (doc_id, media) stream. */
-  def imageDedupIngest(
-      media: DataFrame,
-      corpusPath: String,
-      indexTable: String,
-      checkpoint: String,
-      family: ImageHash.Family = ImageHash.DHash64,
-      maxHamming: Option[Int] = None,
-      nBuckets: Int = 64,
-      compactFanout: Int = 16,
-      onStats: CorpusIngest.NearDupIngestStats => Unit = _ => (),
-      idBloomPath: Option[String] = None,
-      idBloomItems: Long = 1000000L
-  ): StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onStats(ingestImageBatch(batch, corpusPath, indexTable, family, maxHamming, nBuckets,
-          compactFanout, idBloomPath, idBloomItems))
-        ()
-      }
-      .start()
-
-  /** One image-ingest micro-batch (see [[imageDedupIngest]]). Exposed
-    * for batch-mode reuse and the spec's streamed==batch comparison.
+  /** One image-ingest micro-batch of a (doc_id, media) stream (see the
+    * object scaladoc); stream it through [[CorpusIngest.start]].
     * `maxHamming` None → the family's default bar (dHash 10, pHash 24
     * — the same ~9%-of-bits tolerance).
     */
@@ -90,7 +67,7 @@ object ImageIngest {
       compactFanout: Int = 16,
       idBloomPath: Option[String] = None,
       idBloomItems: Long = 1000000L
-  ): NearDupIngestStats = {
+  ): IngestLedger = {
     val spark = batch.sparkSession
     val bar = maxHamming.getOrElse(family.defaultMaxHamming)
     val hc = family.hashCol

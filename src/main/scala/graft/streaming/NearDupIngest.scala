@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Materialize
-import graft.streaming.CorpusIngest.{CorpusIdGate, NearDupIngestStats}
+import graft.streaming.CorpusIngest.{CorpusIdGate, IngestLedger}
 
 /** The one micro-batch loop behind the four index-probe near-dup
   * ingests — text ([[CorpusIngest.ingestNearDupBatch]]), semantic
@@ -47,8 +47,10 @@ import graft.streaming.CorpusIngest.{CorpusIdGate, NearDupIngestStats}
   * between-batch compaction is the maintenance window the swap
   * protocol assumes. `<= 0` disables.
   *
-  * LEDGER: `kept + nearDups + replays == considered` (the units the
-  * admit step counts) and `rejected == batch rows − valid rows`.
+  * LEDGER ([[CorpusIngest.IngestLedger]]): `dropped` counts the
+  * in-batch and vs-index near-dups (exact in-batch copies included),
+  * `kept + dropped + replays == considered` (the units the admit step
+  * counts) and `rejected == batch rows − valid rows`.
   */
 private[streaming] object NearDupIngest {
 
@@ -56,7 +58,7 @@ private[streaming] object NearDupIngest {
     * unit id carrying its signature and corpus payload (pin it when the
     * signature is expensive — it is read by pairing and the keeper
     * join); `valid`, the batch rows that pass the identity contract; and
-    * `considered`, the units the kept/nearDups/replays ledger splits.
+    * `considered`, the units the kept/dropped/replays ledger splits.
     */
   final case class Admitted(units: DataFrame, valid: Long, considered: Long)
 
@@ -98,7 +100,7 @@ private[streaming] object NearDupIngest {
       idBloomPath: Option[String],
       idBloomItems: Long,
       spec: Spec
-  ): NearDupIngestStats = {
+  ): IngestLedger = {
     val spark = batch.sparkSession
     val id = spec.idCol
     // bloom-fronted corpus-id gate (see [[CorpusIdGate]]): with a path
@@ -150,7 +152,7 @@ private[streaming] object NearDupIngest {
     // under their own id, missing from the corpus) and fresh
     // unindexable units; a corpus-present unindexable unit is a replay
     val replayed = batchKept.join(replayIds, Seq(id), "left_semi")
-    val (healing, healingCnt) = gate.absent(
+    val (healing, healingCnt, _) = gate.absent(
       if (unindexableCnt == 0L) replayed
       else replayed.unionByName(fresh.filter(!col(Indexable))))
     val unindexableAppends =
@@ -169,9 +171,9 @@ private[streaming] object NearDupIngest {
       graft.sinks.Sinks.bucketFileFanout(spark, indexTable) > compactFanout)
       spec.compact()
     val replayCnt = replayIds.count()
-    NearDupIngestStats(
+    IngestLedger(
       kept = freshCnt - unindexableReplays,
-      nearDups = admitted.considered - freshCnt - replayCnt,
+      dropped = admitted.considered - freshCnt - replayCnt,
       replays = replayCnt + unindexableReplays,
       rejected = rawCnt - admitted.valid
     )

@@ -154,24 +154,6 @@ object SketchIngest {
     true
   }
 
-  /** Streaming loop over [[ingestCountBatch]] — the generic
-    * keyed-count companion to [[sketchIngest]].
-    */
-  def countIngest(
-      rows: DataFrame,
-      fold: DataFrame => DataFrame,
-      keyCols: Seq[String],
-      path: String,
-      checkpoint: String
-  ): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestCountBatch(batch, batchId, fold, keyCols, path)
-        ()
-      }
-      .start()
-
   /** The committed table at `path` and the batch id it was committed
     * at, after healing a crashed swap. None means no committed state:
     * nothing at rest, or a first write that the heal promoted from a

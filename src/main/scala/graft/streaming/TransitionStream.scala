@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * n, first of batch n+1) is emitted exactly once — the case a naive
   * per-batch `lead()` silently drops. Downstream
   * `groupBy(from_type, to_type).count()` (or
-  * [[SketchIngest.countIngest]] with that fold, for an at-rest
+  * [[SketchIngest.ingestCountBatch]] with that fold, for an at-rest
   * continuously-maintained matrix) reproduces the batch operator's
   * counts.
   *

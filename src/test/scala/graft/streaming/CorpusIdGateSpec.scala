@@ -59,8 +59,8 @@ class CorpusIdGateSpec extends AnyFunSuite {
     // bloomed and bloom-less loops side by side: ledgers must agree
     val s1b = ingest(b1, s"$tmp/cb", "idgate_nd_b", bp)
     val s1p = ingest(b1, s"$tmp/cp", "idgate_nd_p", None)
-    assert((s1b.kept, s1b.nearDups, s1b.replays, s1b.rejected) ===
-      ((s1p.kept, s1p.nearDups, s1p.replays, s1p.rejected)))
+    assert((s1b.kept, s1b.dropped, s1b.replays, s1b.rejected) ===
+      ((s1p.kept, s1p.dropped, s1p.replays, s1p.rejected)))
 
     // poison the bloomed corpus: any scan of it now fails loudly
     val saved = poisonParquetDir(s"$tmp/cb")
@@ -70,15 +70,15 @@ class CorpusIdGateSpec extends AnyFunSuite {
     // restore the poisoned files so later reads see real parquet again
     restoreParquetDir(saved)
     val s2p = ingest(b2, s"$tmp/cp", "idgate_nd_p", None)
-    assert((s2b.kept, s2b.nearDups, s2b.replays) === ((s2p.kept, s2p.nearDups, s2p.replays)))
+    assert((s2b.kept, s2b.dropped, s2b.replays) === ((s2p.kept, s2p.dropped, s2p.replays)))
 
     // redelivery of b2: the unshingleable doc is bloom-POSITIVE now and
     // must take the exact confirm (replay, no re-append) — both loops
     // read identically
     val s3b = ingest(b2, s"$tmp/cb", "idgate_nd_b", bp)
     val s3p = ingest(b2, s"$tmp/cp", "idgate_nd_p", None)
-    assert((s3b.kept, s3b.nearDups, s3b.replays, s3b.rejected) ===
-      ((s3p.kept, s3p.nearDups, s3p.replays, s3p.rejected)))
+    assert((s3b.kept, s3b.dropped, s3b.replays, s3b.rejected) ===
+      ((s3p.kept, s3p.dropped, s3p.replays, s3p.rejected)))
     assert(s3b.replays === 2L)
     // doc 1 replays via the index; doc 2's restored fingerprint rides in
     // the restored file — corpus contents equal across the two loops
@@ -155,7 +155,7 @@ class CorpusIdGateSpec extends AnyFunSuite {
     val s = CorpusIngest.ingestPqBatch(
       emb.filter($"vec_id" >= 150 && $"vec_id" < 200), idx, bloomPath = bp)
     restoreParquetDir(saved)
-    assert(s === CorpusIngest.PqIngestStats(appended = 50L, replays = 0L))
+    assert(s === CorpusIngest.IngestLedger(kept = 50L, dropped = 0L, replays = 0L, rejected = 0L))
     assert(spark.table(idx).count() === 200L)
     spark.sql(s"DROP TABLE $idx")
   }

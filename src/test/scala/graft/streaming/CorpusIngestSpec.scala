@@ -26,12 +26,17 @@ class CorpusIngestSpec extends AnyFunSuite {
     val batch2 = Seq((4L, "beta text"), (5L, "gamma text")).toDF("doc_id", "text")
 
     batch1.coalesce(1).write.mode("append").parquet(srcDir)
-    val q = CorpusIngest.dedupedIngest(
-      CorpusIngest.fileDocStream(spark, srcDir), corpus, bloom, s"$tmp/ckpt", expectedItems = 1000L)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[CorpusIngest.IngestLedger]
+    val q = CorpusIngest.start(CorpusIngest.fileDocStream(spark, srcDir), s"$tmp/ckpt",
+      s => seen.synchronized { seen += s; () })(
+      (b, _) => CorpusIngest.ingestBatch(b, corpus, bloom, expectedItems = 1000L))
     q.processAllAvailable()
     batch2.coalesce(1).write.mode("append").parquet(srcDir)
     q.processAllAvailable()
     q.stop()
+    assert(seen.synchronized(seen.toList) === List(
+      CorpusIngest.IngestLedger(kept = 2L, dropped = 1L, replays = 0L, rejected = 0L),
+      CorpusIngest.IngestLedger(kept = 1L, dropped = 0L, replays = 1L, rejected = 0L)))
 
     val got = spark.read.parquet(corpus)
     // in-batch dup (doc 3) and cross-batch dup (doc 4) dropped; keeper is min doc_id
@@ -41,8 +46,8 @@ class CorpusIngestSpec extends AnyFunSuite {
 
     // at-least-once: a fresh checkpoint redelivers EVERY file; corpus
     // content must not change (bloom + anti-join drop all of it)
-    val q2 = CorpusIngest.dedupedIngest(
-      CorpusIngest.fileDocStream(spark, srcDir), corpus, bloom, s"$tmp/ckpt2", expectedItems = 1000L)
+    val q2 = CorpusIngest.start(CorpusIngest.fileDocStream(spark, srcDir), s"$tmp/ckpt2")(
+      (b, _) => CorpusIngest.ingestBatch(b, corpus, bloom, expectedItems = 1000L))
     q2.processAllAvailable()
     q2.stop()
     assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect().toSet === Set(1L, 2L, 5L))
@@ -88,15 +93,15 @@ class CorpusIngestSpec extends AnyFunSuite {
     val idx = "graft_ndup_stream_idx"
 
     ndBatch1.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
-    val q = CorpusIngest.nearDupIngest(
-      CorpusIngest.fileDocStream(spark, srcDir), corpus, idx, s"$tmp/ckpt")
+    val q = CorpusIngest.start(CorpusIngest.fileDocStream(spark, srcDir), s"$tmp/ckpt")(
+      (b, _) => CorpusIngest.ingestNearDupBatch(b, corpus, idx))
     q.processAllAvailable()
     q.stop()
 
     // restart: a NEW query on the SAME checkpoint picks up batch 2 only
     ndBatch2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
-    val q2 = CorpusIngest.nearDupIngest(
-      CorpusIngest.fileDocStream(spark, srcDir), corpus, idx, s"$tmp/ckpt")
+    val q2 = CorpusIngest.start(CorpusIngest.fileDocStream(spark, srcDir), s"$tmp/ckpt")(
+      (b, _) => CorpusIngest.ingestNearDupBatch(b, corpus, idx))
     q2.processAllAvailable()
     q2.stop()
 
@@ -109,9 +114,9 @@ class CorpusIngestSpec extends AnyFunSuite {
     val corpusB = s"$tmp/corpusB"
     val idxB = "graft_ndup_batch_idx"
     val s1 = CorpusIngest.ingestNearDupBatch(ndBatch1.toDF("doc_id", "text"), corpusB, idxB)
-    assert(s1 === CorpusIngest.NearDupIngestStats(kept = 2, nearDups = 1, replays = 0))
+    assert(s1 === CorpusIngest.IngestLedger(kept = 2, dropped = 1, replays = 0, rejected = 0))
     val s2 = CorpusIngest.ingestNearDupBatch(ndBatch2.toDF("doc_id", "text"), corpusB, idxB)
-    assert(s2 === CorpusIngest.NearDupIngestStats(kept = 1, nearDups = 2, replays = 0))
+    assert(s2 === CorpusIngest.IngestLedger(kept = 1, dropped = 2, replays = 0, rejected = 0))
     val batched = spark.read.parquet(corpusB).select("doc_id").as[Long].collect().toSet
     assert(batched === streamed)
 
@@ -120,8 +125,8 @@ class CorpusIngestSpec extends AnyFunSuite {
     // the corpus confirms them present -> nothing appends anywhere
     val idxRows = spark.table(idx).count()
     val corpusRows = spark.read.parquet(corpus).count()
-    val q3 = CorpusIngest.nearDupIngest(
-      CorpusIngest.fileDocStream(spark, srcDir), corpus, idx, s"$tmp/ckpt2")
+    val q3 = CorpusIngest.start(CorpusIngest.fileDocStream(spark, srcDir), s"$tmp/ckpt2")(
+      (b, _) => CorpusIngest.ingestNearDupBatch(b, corpus, idx))
     q3.processAllAvailable()
     q3.stop()
     assert(spark.read.parquet(corpus).count() === corpusRows)
@@ -173,24 +178,22 @@ class CorpusIngestSpec extends AnyFunSuite {
     val semBatch2 = Seq((4L, v4), (5L, v5)).toDF("vec_id", "embedding")
 
     semBatch1.coalesce(1).write.mode("append").parquet(srcDir)
-    // round 18: every streaming ingest loop surfaces its ledger via
-    // onStats (the batch APIs return stats; foreachBatch used to
-    // swallow them) — collect and assert the semantic loop's here
-    val seen = scala.collection.mutable.ArrayBuffer
-      .empty[CorpusIngest.NearDupIngestStats]
-    val q = CorpusIngest.semanticDedupIngest(
-      CorpusIngest.fileVecStream(spark, srcDir), corpus, idx, s"$tmp/ckpt",
-      dim = 8, nBuckets = 8, onStats = s => seen.synchronized { seen += s; () })
+    // the stream's one starter surfaces each batch's ledger via onStats
+    // (foreachBatch would otherwise swallow it) — collect and assert the
+    // semantic loop's here
+    val seen = scala.collection.mutable.ArrayBuffer.empty[CorpusIngest.IngestLedger]
+    val q = CorpusIngest.start(CorpusIngest.fileVecStream(spark, srcDir), s"$tmp/ckpt",
+      s => seen.synchronized { seen += s; () })(
+      (b, _) => CorpusIngest.ingestSemanticBatch(b, corpus, idx, dim = 8, nBuckets = 8))
     q.processAllAvailable()
     q.stop()
     assert(seen.synchronized(seen.toList) ===
-      List(CorpusIngest.NearDupIngestStats(kept = 2, nearDups = 1, replays = 0)),
+      List(CorpusIngest.IngestLedger(kept = 2, dropped = 1, replays = 0, rejected = 0)),
       "the streaming operator sees the same ledger the batch API returns")
     // restart: a NEW query on the SAME checkpoint picks up batch 2 only
     semBatch2.coalesce(1).write.mode("append").parquet(srcDir)
-    val q2 = CorpusIngest.semanticDedupIngest(
-      CorpusIngest.fileVecStream(spark, srcDir), corpus, idx, s"$tmp/ckpt",
-      dim = 8, nBuckets = 8)
+    val q2 = CorpusIngest.start(CorpusIngest.fileVecStream(spark, srcDir), s"$tmp/ckpt")(
+      (b, _) => CorpusIngest.ingestSemanticBatch(b, corpus, idx, dim = 8, nBuckets = 8))
     q2.processAllAvailable()
     q2.stop()
 
@@ -203,9 +206,9 @@ class CorpusIngestSpec extends AnyFunSuite {
     val corpusB = s"$tmp/corpusB"
     val idxB = "graft_sem_batch_idx"
     val s1 = CorpusIngest.ingestSemanticBatch(semBatch1, corpusB, idxB, dim = 8, nBuckets = 8)
-    assert(s1 === CorpusIngest.NearDupIngestStats(kept = 2, nearDups = 1, replays = 0))
+    assert(s1 === CorpusIngest.IngestLedger(kept = 2, dropped = 1, replays = 0, rejected = 0))
     val s2 = CorpusIngest.ingestSemanticBatch(semBatch2, corpusB, idxB, dim = 8, nBuckets = 8)
-    assert(s2 === CorpusIngest.NearDupIngestStats(kept = 1, nearDups = 1, replays = 0))
+    assert(s2 === CorpusIngest.IngestLedger(kept = 1, dropped = 1, replays = 0, rejected = 0))
     assert(spark.read.parquet(corpusB).select("vec_id").as[Long].collect().toSet === streamed)
 
     // LEDGER (round 17 — the ImageIngest ADVICE r16 fix applied here):
@@ -217,8 +220,8 @@ class CorpusIngestSpec extends AnyFunSuite {
     // arbitrary-keeper id-dedup retains
     val dupBatch = Seq((6L, v3.map(-_)), (6L, v5.map(-_))).toDF("vec_id", "embedding")
     val sl = CorpusIngest.ingestSemanticBatch(dupBatch, corpusB, idxB, dim = 8, nBuckets = 8)
-    assert((sl.kept, sl.nearDups, sl.replays, sl.rejected) === ((1L, 0L, 0L, 1L)))
-    assert(sl.kept + sl.nearDups + sl.replays + sl.rejected === dupBatch.count())
+    assert((sl.kept, sl.dropped, sl.replays, sl.rejected) === ((1L, 0L, 0L, 1L)))
+    assert(sl.kept + sl.dropped + sl.replays + sl.rejected === dupBatch.count())
 
     // a NULL vec_id is the same contract rejection (ADVICE r17): null
     // keys don't join, so pre-fix the row skipped every id-keyed
@@ -230,7 +233,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     Seq(1, 2).foreach { _ =>
       val sn = CorpusIngest.ingestSemanticBatch(nullBatch, corpusB, idxB, dim = 8,
         nBuckets = 8)
-      assert((sn.kept, sn.nearDups, sn.replays, sn.rejected) === ((0L, 0L, 0L, 1L)))
+      assert((sn.kept, sn.dropped, sn.replays, sn.rejected) === ((0L, 0L, 0L, 1L)))
     }
     assert(spark.read.parquet(corpusB).count() === corpusRowsBefore,
       "a null-id row must never reach the corpus")
@@ -266,10 +269,10 @@ class CorpusIngestSpec extends AnyFunSuite {
     }
     val corpusBefore3 = spark.read.parquet(corpusB).count()
     val d1 = CorpusIngest.ingestSemanticBatch(degDf, corpusB, idxB, dim = 8, nBuckets = 8)
-    assert((d1.kept, d1.nearDups, d1.replays, d1.rejected) === ((1L, 0L, 0L, 3L)),
+    assert((d1.kept, d1.dropped, d1.replays, d1.rejected) === ((1L, 0L, 0L, 3L)),
       "null/wrong-width/null-element embeddings are contract rejections")
     val d2 = CorpusIngest.ingestSemanticBatch(degDf, corpusB, idxB, dim = 8, nBuckets = 8)
-    assert((d2.kept, d2.nearDups, d2.replays, d2.rejected) === ((0L, 0L, 1L, 3L)),
+    assert((d2.kept, d2.dropped, d2.replays, d2.rejected) === ((0L, 0L, 1L, 3L)),
       "on redelivery the clean row replays; degenerate rows stay rejected")
     assert(spark.read.parquet(corpusB).count() === corpusBefore3 + 1L,
       "degenerate-embedding rows must never re-append to the corpus")
@@ -289,9 +292,8 @@ class CorpusIngestSpec extends AnyFunSuite {
     // survivors hit their own index entries and confirm against the
     // corpus; nothing appends anywhere
     val idxRows = spark.table(idx).count()
-    val q3 = CorpusIngest.semanticDedupIngest(
-      CorpusIngest.fileVecStream(spark, srcDir), corpus, idx, s"$tmp/ckpt2",
-      dim = 8, nBuckets = 8)
+    val q3 = CorpusIngest.start(CorpusIngest.fileVecStream(spark, srcDir), s"$tmp/ckpt2")(
+      (b, _) => CorpusIngest.ingestSemanticBatch(b, corpus, idx, dim = 8, nBuckets = 8))
     q3.processAllAvailable()
     q3.stop()
     assert(spark.read.parquet(corpus).count() === 3)
@@ -345,7 +347,8 @@ class CorpusIngestSpec extends AnyFunSuite {
     val bloom = s"$tmp/bloom.bin"
     val batch = Seq((10L, "delta text"), (11L, "epsilon text")).toDF("doc_id", "text")
 
-    CorpusIngest.ingestBatch(batch, corpus, bloom, expectedItems = 1000L)
+    assert(CorpusIngest.ingestBatch(batch, corpus, bloom, expectedItems = 1000L) ===
+      CorpusIngest.IngestLedger(kept = 2L, dropped = 0L, replays = 0L, rejected = 0L))
     // simulate the crash window: bloom persisted, corpus append lost
     def deleteRec(f: java.io.File): Unit = {
       Option(f.listFiles).foreach(_.foreach(deleteRec)); f.delete(): Unit
@@ -355,11 +358,12 @@ class CorpusIngestSpec extends AnyFunSuite {
 
     // replay: every row is bloom-positive but the corpus can't confirm
     // membership -> rows append (no silent loss)
-    CorpusIngest.ingestBatch(batch, corpus, bloom, expectedItems = 1000L)
+    assert(CorpusIngest.ingestBatch(batch, corpus, bloom, expectedItems = 1000L).kept === 2L)
     assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect().toSet === Set(10L, 11L))
 
     // and a THIRD delivery with the corpus intact drops everything
-    CorpusIngest.ingestBatch(batch, corpus, bloom, expectedItems = 1000L)
+    assert(CorpusIngest.ingestBatch(batch, corpus, bloom, expectedItems = 1000L) ===
+      CorpusIngest.IngestLedger(kept = 0L, dropped = 0L, replays = 2L, rejected = 0L))
     assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect().toSet === Set(10L, 11L))
   }
 
@@ -407,7 +411,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     // all same-id hits, nothing new lands in the corpus
     val s = CorpusIngest.ingestNearDupBatch(
       docs(0 until 3), corpus, idx, nBuckets = 4, compactFanout = 0)
-    assert(s === CorpusIngest.NearDupIngestStats(kept = 0, nearDups = 0, replays = 3))
+    assert(s === CorpusIngest.IngestLedger(kept = 0, dropped = 0, replays = 3, rejected = 0))
     assert(spark.read.parquet(corpus).count() === 9)
     spark.sql(s"DROP TABLE IF EXISTS $idx")
   }
@@ -471,13 +475,13 @@ class CorpusIngestSpec extends AnyFunSuite {
     val idx = "graft_span_stream_idx"
 
     spanBatch1.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
-    val q = CorpusIngest.spanDedupIngest(
-      CorpusIngest.fileDocStream(spark, srcDir), corpus, idx, s"$tmp/ckpt", gramTokens = 4)
+    val q = CorpusIngest.start(CorpusIngest.fileDocStream(spark, srcDir), s"$tmp/ckpt")(
+      (b, _) => CorpusIngest.ingestSpanBatch(b, corpus, idx, gramTokens = 4))
     q.processAllAvailable()
     q.stop()
     spanBatch2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
-    val q2 = CorpusIngest.spanDedupIngest(
-      CorpusIngest.fileDocStream(spark, srcDir), corpus, idx, s"$tmp/ckpt", gramTokens = 4)
+    val q2 = CorpusIngest.start(CorpusIngest.fileDocStream(spark, srcDir), s"$tmp/ckpt")(
+      (b, _) => CorpusIngest.ingestSpanBatch(b, corpus, idx, gramTokens = 4))
     q2.processAllAvailable()
     q2.stop()
     assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect().toSet
@@ -486,8 +490,8 @@ class CorpusIngestSpec extends AnyFunSuite {
     // full redelivery on a fresh checkpoint: replays filtered, the
     // dropped doc re-drops against unchanged history, nothing appends
     val before = spark.table(idx).agg(sum("cnt")).as[Long].head()
-    val q3 = CorpusIngest.spanDedupIngest(
-      CorpusIngest.fileDocStream(spark, srcDir), corpus, idx, s"$tmp/ckpt2", gramTokens = 4)
+    val q3 = CorpusIngest.start(CorpusIngest.fileDocStream(spark, srcDir), s"$tmp/ckpt2")(
+      (b, _) => CorpusIngest.ingestSpanBatch(b, corpus, idx, gramTokens = 4))
     q3.processAllAvailable()
     q3.stop()
     assert(spark.read.parquet(corpus).count() === 4)
@@ -506,10 +510,10 @@ class CorpusIngestSpec extends AnyFunSuite {
     val idxB = "graft_span_batch_idx"
     val s1 = CorpusIngest.ingestSpanBatch(
       spanBatch1.toDF("doc_id", "text"), corpusB, idxB, gramTokens = 4)
-    assert(s1 === CorpusIngest.SpanIngestStats(kept = 3, dropped = 0, replays = 0))
+    assert(s1 === CorpusIngest.IngestLedger(kept = 3, dropped = 0, replays = 0, rejected = 0))
     val s2 = CorpusIngest.ingestSpanBatch(
       spanBatch2.toDF("doc_id", "text"), corpusB, idxB, gramTokens = 4)
-    assert(s2 === CorpusIngest.SpanIngestStats(kept = 1, dropped = 1, replays = 1))
+    assert(s2 === CorpusIngest.IngestLedger(kept = 1, dropped = 1, replays = 1, rejected = 0))
     assert(spark.read.parquet(corpusB).select("doc_id").as[Long].collect().toSet
       === Set(1L, 2L, 3L, 5L))
     Seq(idx, "graft_span_rebuilt_idx", idxB).foreach(t => spark.sql(s"DROP TABLE $t"))
@@ -536,7 +540,8 @@ class CorpusIngestSpec extends AnyFunSuite {
     val b2 = emb.filter($"vec_id" >= 300 && $"vec_id" < 400)
       .unionByName(emb.filter($"vec_id" === 350))
     b1.coalesce(1).write.mode("append").parquet(srcDir)
-    val q = CorpusIngest.pqIndexIngest(CorpusIngest.fileVecStream(spark, srcDir), idx, s"$tmp/ckpt")
+    val q = CorpusIngest.start(CorpusIngest.fileVecStream(spark, srcDir), s"$tmp/ckpt")(
+      (b, _) => CorpusIngest.ingestPqBatch(b, idx, bloomPath = Some(s"$tmp/ckpt/graft-id-bloom")))
     q.processAllAvailable()
     b2.coalesce(1).write.mode("append").parquet(srcDir)
     q.processAllAvailable()
@@ -554,7 +559,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     // full redelivery under a fresh checkpoint: every id is a replay,
     // nothing re-appends (the batch-level stats agree)
     val stats = CorpusIngest.ingestPqBatch(b1, idx)
-    assert(stats === CorpusIngest.PqIngestStats(appended = 0L, replays = 120L))
+    assert(stats === CorpusIngest.IngestLedger(kept = 0L, dropped = 0L, replays = 120L, rejected = 0L))
     assert(spark.table(idx).count() === union.count())
 
     // a fresh session-style probe over the streamed index ranks all 5
@@ -591,8 +596,9 @@ class CorpusIngestSpec extends AnyFunSuite {
     val b2 = emb.filter($"vec_id" >= 300 && $"vec_id" < 400)
       .unionByName(emb.filter($"vec_id" === 350))
     b1.coalesce(1).write.mode("append").parquet(srcDir)
-    val q = CorpusIngest.ivfPqIndexIngest(
-      CorpusIngest.fileVecStream(spark, srcDir), idx, s"$tmp/ckpt")
+    val q = CorpusIngest.start(CorpusIngest.fileVecStream(spark, srcDir), s"$tmp/ckpt")(
+      (b, _) => CorpusIngest.ingestIvfPqBatch(
+        b, idx, bloomPath = Some(s"$tmp/ckpt/graft-id-bloom"), compactFanout = 16))
     q.processAllAvailable()
     b2.coalesce(1).write.mode("append").parquet(srcDir)
     q.processAllAvailable()
@@ -625,13 +631,13 @@ class CorpusIngestSpec extends AnyFunSuite {
     // suspect is confirmed present, nothing re-appends
     val bp = s"$tmp/ckpt/graft-id-bloom"
     val stats = CorpusIngest.ingestIvfPqBatch(b1, idx, bloomPath = Some(bp))
-    assert(stats === CorpusIngest.PqIngestStats(appended = 0L, replays = 120L))
+    assert(stats === CorpusIngest.IngestLedger(kept = 0L, dropped = 0L, replays = 120L, rejected = 0L))
     assert(spark.table(idx).count() === union.count())
 
     // mixed redelivery: replayed ids drop, fresh ids ALL land
     val b3 = emb.filter($"vec_id" >= 350 && $"vec_id" < 450)
     val s3 = CorpusIngest.ingestIvfPqBatch(b3, idx, bloomPath = Some(bp))
-    assert(s3 === CorpusIngest.PqIngestStats(appended = 50L, replays = 50L))
+    assert(s3 === CorpusIngest.IngestLedger(kept = 50L, dropped = 0L, replays = 50L, rejected = 0L))
     assert(spark.table(idx).count() === union.count() + 50L)
 
     // auto-compaction cadence: several appends have stacked one file-set
@@ -641,7 +647,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(fanoutBefore > 1.0, s"appends should have stacked files, fanout=$fanoutBefore")
     val b4 = emb.filter($"vec_id" >= 450)
     val s4 = CorpusIngest.ingestIvfPqBatch(b4, idx, bloomPath = Some(bp), compactFanout = 1)
-    assert(s4.appended === 50L)
+    assert(s4.kept === 50L)
     assert(graft.sinks.Sinks.bucketFileFanout(spark, idx) < fanoutBefore,
       "cadence-triggered compaction did not reduce files-per-bucket")
     val gotAll = spark.table(idx).select($"cid", $"cent_id", $"codes")
@@ -673,8 +679,10 @@ class CorpusIngestSpec extends AnyFunSuite {
     // re-append on EVERY delivery pre-fix — deliver it twice
     val exBatch = Seq((1L, Option("solo text here")), (9L, Option.empty[String]))
       .toDF("doc_id", "text")
-    CorpusIngest.ingestBatch(exBatch, s"$tmp/exc", s"$tmp/exbloom.bin", 1000L)
-    CorpusIngest.ingestBatch(exBatch, s"$tmp/exc", s"$tmp/exbloom.bin", 1000L)
+    assert(CorpusIngest.ingestBatch(exBatch, s"$tmp/exc", s"$tmp/exbloom.bin", 1000L) ===
+      CorpusIngest.IngestLedger(kept = 1L, dropped = 0L, replays = 0L, rejected = 1L))
+    assert(CorpusIngest.ingestBatch(exBatch, s"$tmp/exc", s"$tmp/exbloom.bin", 1000L) ===
+      CorpusIngest.IngestLedger(kept = 0L, dropped = 0L, replays = 1L, rejected = 1L))
     assert(spark.read.parquet(s"$tmp/exc").count() === 1L,
       "null-text row must never reach the exact corpus")
 
@@ -689,15 +697,15 @@ class CorpusIngestSpec extends AnyFunSuite {
       (Option(3L), Option.empty[String])
     ).toDF("doc_id", "text")
     val n1 = CorpusIngest.ingestNearDupBatch(ndBatch, s"$tmp/ndc", "graft_nullid_nd_idx")
-    assert((n1.kept, n1.nearDups, n1.replays, n1.rejected) === ((2L, 0L, 0L, 2L)))
-    assert(n1.kept + n1.nearDups + n1.replays + n1.rejected === ndBatch.count())
+    assert((n1.kept, n1.dropped, n1.replays, n1.rejected) === ((2L, 0L, 0L, 2L)))
+    assert(n1.kept + n1.dropped + n1.replays + n1.rejected === ndBatch.count())
     val ndRows = spark.read.parquet(s"$tmp/ndc").count()
     assert(spark.read.parquet(s"$tmp/ndc").select("doc_id").as[Long].collect().toSet
       === Set(1L, 2L))
     val n2 = CorpusIngest.ingestNearDupBatch(ndBatch, s"$tmp/ndc", "graft_nullid_nd_idx")
     assert((n2.kept, n2.replays, n2.rejected) === ((0L, 2L, 2L)),
       "indexed doc replays via same-id hit; the shingle-less doc via the corpus anti-join")
-    assert(n2.kept + n2.nearDups + n2.replays + n2.rejected === ndBatch.count())
+    assert(n2.kept + n2.dropped + n2.replays + n2.rejected === ndBatch.count())
     assert(spark.read.parquet(s"$tmp/ndc").count() === ndRows,
       "neither the null rows nor the shingle-less doc re-append")
     assert(spark.table("graft_nullid_nd_idx").filter($"doc_id".isNull).count() === 0L)
@@ -732,9 +740,9 @@ class CorpusIngestSpec extends AnyFunSuite {
       transform(sequence(lit(0), lit(7)), d => lit(0.5)).as("embedding"))
       .unionByName(seed.limit(1).select(lit(null).cast("long").as("vec_id"), $"embedding"))
     val p1 = CorpusIngest.ingestPqBatch(pqBatch, "graft_nullid_pq_idx")
-    assert(p1 === CorpusIngest.PqIngestStats(appended = 1L, replays = 0L, rejected = 1L))
+    assert(p1 === CorpusIngest.IngestLedger(kept = 1L, dropped = 0L, replays = 0L, rejected = 1L))
     val p2 = CorpusIngest.ingestPqBatch(pqBatch, "graft_nullid_pq_idx")
-    assert(p2 === CorpusIngest.PqIngestStats(appended = 0L, replays = 1L, rejected = 1L))
+    assert(p2 === CorpusIngest.IngestLedger(kept = 0L, dropped = 0L, replays = 1L, rejected = 1L))
     assert(spark.table("graft_nullid_pq_idx").count() === idxRows0 + 1L)
     assert(spark.table("graft_nullid_pq_idx").filter($"cid".isNull).count() === 0L)
     spark.sql("DROP TABLE graft_nullid_pq_idx")
@@ -756,10 +764,10 @@ class CorpusIngestSpec extends AnyFunSuite {
     Similarity.writePqIndex(seed, "embedding", "vec_id", "pq_bloom_idx_a", dim = 64,
       m = 8, kCodes = 32, lloydIters = 1)
     val s1 = CorpusIngest.ingestPqBatch(b1, "pq_bloom_idx_a", bloomPath = Some(bp))
-    assert(s1 === CorpusIngest.PqIngestStats(appended = 100L, replays = 0L))
+    assert(s1 === CorpusIngest.IngestLedger(kept = 100L, dropped = 0L, replays = 0L, rejected = 0L))
     // redelivery through the bloom: suspects confirmed PRESENT, no append
     val s2 = CorpusIngest.ingestPqBatch(b1, "pq_bloom_idx_a", bloomPath = Some(bp))
-    assert(s2 === CorpusIngest.PqIngestStats(appended = 0L, replays = 100L))
+    assert(s2 === CorpusIngest.IngestLedger(kept = 0L, dropped = 0L, replays = 100L, rejected = 0L))
 
     // the crash window (bloom swapped, append lost) leaves a bloom that
     // OVER-claims: reuse the same bloom against index B, which holds the
@@ -768,7 +776,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     Similarity.writePqIndex(seed, "embedding", "vec_id", "pq_bloom_idx_b", dim = 64,
       m = 8, kCodes = 32, lloydIters = 1)
     val s3 = CorpusIngest.ingestPqBatch(b1, "pq_bloom_idx_b", bloomPath = Some(bp))
-    assert(s3 === CorpusIngest.PqIngestStats(appended = 100L, replays = 0L))
+    assert(s3 === CorpusIngest.IngestLedger(kept = 100L, dropped = 0L, replays = 0L, rejected = 0L))
     assert(spark.table("pq_bloom_idx_b").count() === 200L)
     Seq("pq_bloom_idx_a", "pq_bloom_idx_b").foreach(t => spark.sql(s"DROP TABLE $t"))
   }

@@ -23,6 +23,16 @@ class CuratedIngestSpec extends AnyFunSuite {
   private def good(id: Long, tag: String) =
     (id, s"the quick brown fox jumps over the lazy dog $tag")
 
+  /** The curated ledger's stage counts (its `extra`). */
+  private def stages(
+      input: Long, boilerPass: Long, qualityPass: Long, gated: Long, replayed: Long = 0L
+  ): Map[String, Long] =
+    Map("input" -> input, "boilerPass" -> boilerPass, "qualityPass" -> qualityPass,
+      "gated" -> gated, "replayed" -> replayed)
+
+  private def ledger(kept: Long, extra: Map[String, Long], replays: Long = 0L) =
+    CorpusIngest.IngestLedger(kept, dropped = 0L, replays = replays, rejected = 0L, extra)
+
   /** Model table as a comparable map: (kind, bucket, seg) -> n. */
   private def modelMap(path: String): Map[(String, Long, String), Long] =
     spark.read.parquet(path).collect().map { r =>
@@ -61,7 +71,7 @@ class CuratedIngestSpec extends AnyFunSuite {
     val b0 = ((1L to 40L).map(i => good(i, s"tok$i")) :+
       (90L, Seq.fill(10)("spam").mkString(" "))).toDF("doc_id", "text")
     val s0 = run(b0, 0L)
-    assert(s0 === CorpusIngest.CurateIngestStats(41L, 41L, 40L, 40L))
+    assert(s0 === ledger(40L, stages(41L, 41L, 40L, 40L)))
     assert(spark.read.parquet(corpus).count() === 40L)
     val model0 = modelMap(model)
     // one keyed table carries both model kinds: surprisal counts (null
@@ -80,7 +90,7 @@ class CuratedIngestSpec extends AnyFunSuite {
     val b1 = Seq(good(50L, "tokNEW"), (91L, "zxq1 wvy2 rrt3 pps4 kkm5 lln6 oop7 qqr8 sst9 uuv0"))
       .toDF("doc_id", "text")
     val s1 = run(b1, 1L)
-    assert(s1 === CorpusIngest.CurateIngestStats(2L, 2L, 2L, 1L))
+    assert(s1 === ledger(1L, stages(2L, 2L, 2L, 1L)))
     assert(spark.read.parquet(corpus).count() === 41L)
     val model1 = modelMap(model)
     assert(model1.values.sum > model0.values.sum)
@@ -92,14 +102,15 @@ class CuratedIngestSpec extends AnyFunSuite {
     // set and append docs a clean run never kept), corpus and model
     // stay untouched
     val s1r = run(b1, 1L)
-    assert(s1r === CorpusIngest.CurateIngestStats(0L, 0L, 0L, 0L, replayed = true))
+    assert(s1r === ledger(0L, stages(0L, 0L, 0L, 0L, replayed = 1L)))
     assert(spark.read.parquet(corpus).count() === 41L)
     assert(modelMap(model) === model1)
 
     // batch 2 resubmits an already-ingested doc: corpus keeps one copy,
     // but the stream-fit model counts it again (documented trade)
     val s2 = run(Seq(good(60L, "tok1")).toDF("doc_id", "text"), 2L)
-    assert(s2.gated === 1L)
+    assert(s2.extra("gated") === 1L)
+    assert(s2 === ledger(0L, stages(1L, 1L, 1L, 1L), replays = 1L))
     assert(spark.read.parquet(corpus).count() === 41L) // same text as doc 1
     val model2 = modelMap(model)
     assert(model2.values.sum > model1.values.sum)
@@ -110,7 +121,7 @@ class CuratedIngestSpec extends AnyFunSuite {
     // makes it a no-op instead
     val corpusBefore = spark.read.parquet(corpus).collect().toSet
     val s0r = run(b0, 0L)
-    assert(s0r.replayed && s0r.gated === 0L)
+    assert(s0r.extra("replayed") === 1L && s0r.extra("gated") === 0L)
     assert(spark.read.parquet(corpus).collect().toSet === corpusBefore)
     assert(modelMap(model) === model2)
 
@@ -134,7 +145,7 @@ class CuratedIngestSpec extends AnyFunSuite {
       .map(i => (i, s"begin legal unique body number$i words"))
       .toDF("doc_id", "text")
     val s0 = run(b0, 0L)
-    assert(s0 === CorpusIngest.CurateIngestStats(5L, 5L, 5L, 5L))
+    assert(s0 === ledger(5L, stages(5L, 5L, 5L, 5L)))
     assert(
       spark.read.parquet(corpus).filter(col("text").startsWith("begin legal")).count() === 5L)
 
@@ -145,7 +156,7 @@ class CuratedIngestSpec extends AnyFunSuite {
       (11L, "begin legal")
     ).toDF("doc_id", "text")
     val s1 = run(b1, 1L)
-    assert(s1 === CorpusIngest.CurateIngestStats(2L, 1L, 1L, 1L))
+    assert(s1 === ledger(1L, stages(2L, 1L, 1L, 1L)))
     val doc10 = spark.read.parquet(corpus)
       .filter(col("doc_id") === 10L).head().getAs[String]("text")
     assert(doc10 === "totally fresh content here")
@@ -164,7 +175,7 @@ class CuratedIngestSpec extends AnyFunSuite {
     val b0 = (1L to 5L)
       .map(i => (i, s"begin legal unique body number$i words"))
       .toDF("doc_id", "text")
-    assert(run(b0, 0L) === CorpusIngest.CurateIngestStats(5L, 5L, 5L, 5L))
+    assert(run(b0, 0L) === ledger(5L, stages(5L, 5L, 5L, 5L)))
     // the model holds BOUNDED cells, not segments: every boilcms bucket
     // is inside depth*width and there are no exact-segment rows
     val cells = spark.read.parquet(model).filter(col("kind") === "boilcms")
@@ -178,7 +189,7 @@ class CuratedIngestSpec extends AnyFunSuite {
       (11L, "begin legal")
     ).toDF("doc_id", "text")
     val s1 = run(b1, 1L)
-    assert(s1 === CorpusIngest.CurateIngestStats(2L, 1L, 1L, 1L))
+    assert(s1 === ledger(1L, stages(2L, 1L, 1L, 1L)))
     val doc10 = spark.read.parquet(corpus)
       .filter(col("doc_id") === 10L).head().getAs[String]("text")
     assert(doc10 === "totally fresh content here")
@@ -214,7 +225,7 @@ class CuratedIngestSpec extends AnyFunSuite {
     // nothing, and the model commit completes — final state identical
     // to the uninterrupted run
     val s1r = run(b1, 1L)
-    assert(!s1r.replayed && s1r.gated === 2L)
+    assert(s1r.extra("replayed") === 0L && s1r.extra("gated") === 2L)
     assert(spark.read.parquet(corpus).collect().toSet === cleanCorpus)
     assert(modelMap(model) === cleanModel)
   }
@@ -232,7 +243,48 @@ class CuratedIngestSpec extends AnyFunSuite {
       minQuality = 0.5, maxAvgNll = 6.0, nBuckets = 1024,
       warmupGrams = 50L, expectedItems = 10000L)
     // cold start, as with no model at all: only the quality gate runs
-    assert(!s0.replayed && s0.gated === s0.qualityPass && s0.gated > 0L)
+    assert(s0.extra("replayed") === 0L && s0.extra("gated") === s0.extra("qualityPass") &&
+      s0.extra("gated") > 0L)
     assert(!modelMap(model).get(("ctx", 0L, null)).contains(1000000L))
+  }
+
+  test("streamed loop: start hands each batch the stream's batch id; a restart on the " +
+    "same checkpoint leaves corpus, model and ledgers equal to the batch-mode run") {
+    val tmp = Files.createTempDirectory("curated_stream").toString
+    val src = s"$tmp/src"
+    def run(dir: String)(batch: org.apache.spark.sql.DataFrame, id: Long) =
+      CorpusIngest.ingestCuratedBatch(
+        batch, id, s"$dir/corpus", s"$dir/bloom", s"$dir/model",
+        minQuality = 0.5, maxAvgNll = 6.0, nBuckets = 1024,
+        warmupGrams = 50L, expectedItems = 10000L)
+    val b0 = ((1L to 40L).map(i => good(i, s"tok$i")) :+
+      (90L, Seq.fill(10)("spam").mkString(" "))).toDF("doc_id", "text")
+    val b1 = Seq(good(50L, "tokNEW"), (91L, "zxq1 wvy2 rrt3 pps4 kkm5 lln6 oop7 qqr8 sst9 uuv0"),
+      good(60L, "tok1")).toDF("doc_id", "text")
+
+    // batch 0 through one query, batch 1 through a NEW query on the SAME
+    // checkpoint: the stream numbers them 0 and 1, the model markers
+    val seen = scala.collection.mutable.ArrayBuffer.empty[CorpusIngest.IngestLedger]
+    def stream(): Unit = {
+      val q = CorpusIngest.start(CorpusIngest.fileDocStream(spark, src), s"$tmp/ckpt",
+        s => seen.synchronized { seen += s; () })(run(s"$tmp/s"))
+      try q.processAllAvailable() finally q.stop()
+    }
+    b0.coalesce(1).write.mode("append").parquet(src)
+    stream()
+    b1.coalesce(1).write.mode("append").parquet(src)
+    stream()
+
+    val batched = Seq(run(s"$tmp/b")(b0, 0L), run(s"$tmp/b")(b1, 1L))
+    assert(seen.synchronized(seen.toList) === batched)
+    // batch 1 ran warm: the perplexity gate dropped the token salad
+    assert(batched.map(_.extra("gated")) === Seq(40L, 2L))
+    def corpusRows(dir: String) =
+      spark.read.parquet(s"$dir/corpus").select("doc_id", "text").as[(Long, String)]
+        .collect().toSet
+    assert(corpusRows(s"$tmp/s") === corpusRows(s"$tmp/b"))
+    assert(corpusRows(s"$tmp/s").size === 41)
+    assert(modelMap(s"$tmp/s/model") === modelMap(s"$tmp/b/model"))
+    assert(SketchIngest.readCommitted(spark, s"$tmp/s/model").map(_._1) === Some(1L))
   }
 }

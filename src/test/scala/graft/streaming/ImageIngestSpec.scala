@@ -31,7 +31,7 @@ class ImageIngestSpec extends AnyFunSuite {
 
     // batch 1: 0 and 97 are near-dups (keep min id 0); 1 is fresh
     val s1 = ImageIngest.ingestImageBatch(synth(Seq(0L, 97L, 1L)), corpus, "img_ingest_idx")
-    assert((s1.kept, s1.nearDups, s1.replays) === ((2L, 1L, 0L)))
+    assert((s1.kept, s1.dropped, s1.replays) === ((2L, 1L, 0L)))
     assert(corpusIds(corpus) === Set(0L, 1L))
 
     // batch 2: 194 is a near-dup of indexed 0; 0 is a replay; 2 is
@@ -39,7 +39,7 @@ class ImageIngestSpec extends AnyFunSuite {
     val b2 = synth(Seq(194L, 0L, 2L))
       .unionByName(Seq((999L, "not an image".getBytes("UTF-8"))).toDF("doc_id", "media"))
     val s2 = ImageIngest.ingestImageBatch(b2, corpus, "img_ingest_idx")
-    assert((s2.kept, s2.nearDups, s2.replays) === ((2L, 1L, 1L)))
+    assert((s2.kept, s2.dropped, s2.replays) === ((2L, 1L, 1L)))
     assert(corpusIds(corpus) === Set(0L, 1L, 2L, 999L))
     // the index holds only decodable keepers
     assert(spark.table("img_ingest_idx").select($"doc_id").distinct()
@@ -70,14 +70,14 @@ class ImageIngestSpec extends AnyFunSuite {
 
     val s1 = ImageIngest.ingestImageBatch(
       synthWide(Seq(0L, 97L, 1L)), corpus, "img_phash_ingest_idx", ImageHash.PHash256)
-    assert((s1.kept, s1.nearDups, s1.replays) === ((2L, 1L, 0L)))
+    assert((s1.kept, s1.dropped, s1.replays) === ((2L, 1L, 0L)))
     assert(corpusIds(corpus) === Set(0L, 1L))
 
     val b2 = synthWide(Seq(194L, 0L, 2L))
       .unionByName(Seq((999L, "not an image".getBytes("UTF-8"))).toDF("doc_id", "media"))
     val s2 = ImageIngest.ingestImageBatch(b2, corpus, "img_phash_ingest_idx",
       ImageHash.PHash256)
-    assert((s2.kept, s2.nearDups, s2.replays) === ((2L, 1L, 1L)))
+    assert((s2.kept, s2.dropped, s2.replays) === ((2L, 1L, 1L)))
     assert(corpusIds(corpus) === Set(0L, 1L, 2L, 999L))
     assert(spark.table("img_phash_ingest_idx").select($"doc_id").distinct()
       .as[Long].collect().toSet === Set(0L, 1L, 2L))
@@ -114,9 +114,8 @@ class ImageIngestSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS img_phash_stream_idx")
     val b1 = synthWide(Seq(0L, 97L, 1L))
     b1.write.parquet(src)
-    val q = ImageIngest.imageDedupIngest(
-      spark.readStream.schema(b1.schema).parquet(src),
-      corpus, "img_phash_stream_idx", s"$tmp/ckpt", ImageHash.PHash256)
+    val q = CorpusIngest.start(spark.readStream.schema(b1.schema).parquet(src), s"$tmp/ckpt")(
+      (b, _) => ImageIngest.ingestImageBatch(b, corpus, "img_phash_stream_idx", ImageHash.PHash256))
     try {
       q.processAllAvailable()
       assert(corpusIds(corpus) === Set(0L, 1L))
@@ -151,14 +150,14 @@ class ImageIngestSpec extends AnyFunSuite {
     // confirm -> they append to the CORPUS only; the undecodable row is
     // absent from the corpus, so it appends again as a keep
     val s = ImageIngest.ingestImageBatch(batch, corpus, "img_crash_idx")
-    assert((s.kept, s.nearDups, s.replays) === ((1L, 1L, 2L)))
+    assert((s.kept, s.dropped, s.replays) === ((1L, 1L, 2L)))
     assert(corpusIds(corpus) === Set(0L, 1L, 999L))
     assert(spark.read.parquet(corpus).count() === 3L)
     assert(spark.table("img_crash_idx").count() === idxRows)
 
     // third delivery with everything intact: appends nothing anywhere
     val s3 = ImageIngest.ingestImageBatch(batch, corpus, "img_crash_idx")
-    assert((s3.kept, s3.nearDups, s3.replays) === ((0L, 1L, 3L)))
+    assert((s3.kept, s3.dropped, s3.replays) === ((0L, 1L, 3L)))
     assert(spark.read.parquet(corpus).count() === 3L)
     assert(spark.table("img_crash_idx").count() === idxRows)
     spark.sql("DROP TABLE img_crash_idx")
@@ -179,8 +178,8 @@ class ImageIngestSpec extends AnyFunSuite {
     // (the id-less row and the losing duplicate id) surface as
     // `rejected`, NOT as phantom near-dups, and the ledger sums to the
     // raw batch size
-    assert((s.kept, s.nearDups, s.replays, s.rejected) === ((1L, 0L, 0L, 2L)))
-    assert(s.kept + s.nearDups + s.replays + s.rejected === 3L)
+    assert((s.kept, s.dropped, s.replays, s.rejected) === ((1L, 0L, 0L, 2L)))
+    assert(s.kept + s.dropped + s.replays + s.rejected === 3L)
     val stored = spark.read.parquet(corpus)
     assert(stored.count() === 1L, "one keeper for doc_id 5; the id-less row is rejected")
     // the determinism contract (ADVICE r15): whichever copy won, the
@@ -200,9 +199,8 @@ class ImageIngestSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS img_stream_idx")
     val b1 = synth(Seq(0L, 97L, 1L))
     b1.write.parquet(src)
-    val q = ImageIngest.imageDedupIngest(
-      spark.readStream.schema(b1.schema).parquet(src),
-      corpus, "img_stream_idx", s"$tmp/ckpt")
+    val q = CorpusIngest.start(spark.readStream.schema(b1.schema).parquet(src), s"$tmp/ckpt")(
+      (b, _) => ImageIngest.ingestImageBatch(b, corpus, "img_stream_idx"))
     try {
       q.processAllAvailable()
       assert(corpusIds(corpus) === Set(0L, 1L))

@@ -57,7 +57,7 @@ class VideoIngestSpec extends AnyFunSuite {
 
     // batch 1: 0 and 23 are the same class (keep min id 0); 1 is fresh
     val s1 = VideoIngest.ingestVideoBatch(vid(Seq(0L, 23L, 1L)), corpus, "vid_ingest_idx")
-    assert((s1.kept, s1.nearDups, s1.replays) === ((2L, 1L, 0L)))
+    assert((s1.kept, s1.dropped, s1.replays) === ((2L, 1L, 0L)))
     assert(corpusClips(corpus) === Set(0L, 1L))
 
     // batch 2: 46 is a near-dup of indexed 0; 0 is a replay; 2 is
@@ -66,7 +66,7 @@ class VideoIngestSpec extends AnyFunSuite {
     val oneFrame = vid(Seq(999L)).filter($"frame_idx" === 0)
     val b2 = vid(Seq(46L, 0L, 2L)).unionByName(oneFrame)
     val s2 = VideoIngest.ingestVideoBatch(b2, corpus, "vid_ingest_idx")
-    assert((s2.kept, s2.nearDups, s2.replays) === ((2L, 1L, 1L)))
+    assert((s2.kept, s2.dropped, s2.replays) === ((2L, 1L, 1L)))
     assert(corpusClips(corpus) === Set(0L, 1L, 2L, 999L))
     assert(spark.table("vid_ingest_idx").select($"doc_id").distinct()
       .as[Long].collect().toSet === Set(0L, 1L, 2L))
@@ -143,11 +143,11 @@ class VideoIngestSpec extends AnyFunSuite {
     val sw1 = VideoIngest.ingestVideoBatch(
       withExp(whole)(whole), s"$tmp/wholeCorpus", "vid_whole_idx",
       pendingPath = Some(s"$tmp/wholePending"), batchId = 0L)
-    assert((sw1.kept, sw1.deferred) === ((2L, 0L)))
+    assert((sw1.kept, sw1.extra("deferred")) === ((2L, 0L)))
     val sw2 = VideoIngest.ingestVideoBatch(
       withExp(vid(Seq(46L)))(vid(Seq(46L))), s"$tmp/wholeCorpus", "vid_whole_idx",
       pendingPath = Some(s"$tmp/wholePending"), batchId = 1L)
-    assert(sw2.nearDups === 1L, "whole delivery: 46 is a near-dup of indexed 0")
+    assert(sw2.dropped === 1L, "whole delivery: 46 is a near-dup of indexed 0")
 
     // SPLIT variant: clip 0 arrives as 3+3 frames across two batches
     // (with the pre-r17 behavior batch 1 would index clip 0's PARTIAL
@@ -158,17 +158,17 @@ class VideoIngestSpec extends AnyFunSuite {
     val s0 = VideoIngest.ingestVideoBatch(
       b0, s"$tmp/splitCorpus", "vid_split_idx",
       pendingPath = Some(s"$tmp/splitPending"), batchId = 0L)
-    assert((s0.kept, s0.nearDups, s0.replays, s0.deferred) === ((1L, 0L, 0L, 1L)))
+    assert((s0.kept, s0.dropped, s0.replays, s0.extra("deferred")) === ((1L, 0L, 0L, 1L)))
     assert(corpusClips(s"$tmp/splitCorpus") === Set(1L), "split clip 0 is parked, not indexed")
     val b1 = withExp(whole)(vid(Seq(0L)).filter($"frame_idx" >= 3))
     val s1 = VideoIngest.ingestVideoBatch(
       b1, s"$tmp/splitCorpus", "vid_split_idx",
       pendingPath = Some(s"$tmp/splitPending"), batchId = 1L)
-    assert((s1.kept, s1.deferred) === ((1L, 0L)), "clip 0 completed and processed")
+    assert((s1.kept, s1.extra("deferred")) === ((1L, 0L)), "clip 0 completed and processed")
     val s2 = VideoIngest.ingestVideoBatch(
       withExp(vid(Seq(46L)))(vid(Seq(46L))), s"$tmp/splitCorpus", "vid_split_idx",
       pendingPath = Some(s"$tmp/splitPending"), batchId = 2L)
-    assert(s2.nearDups === 1L, "split delivery: 46 still found as a near-dup of 0")
+    assert(s2.dropped === 1L, "split delivery: 46 still found as a near-dup of 0")
 
     // both variants converge to the same corpus and index
     def frameSet(p: String): Set[(Long, Int)] =
@@ -215,19 +215,19 @@ class VideoIngestSpec extends AnyFunSuite {
     val s0 = VideoIngest.ingestVideoBatch(
       withExp(whole)(whole.filter($"frame_idx" < 3)), s"$tmp/corpus", "vid_gap_idx",
       pendingPath = Some(s"$tmp/pending"), batchId = 0L)
-    assert((s0.kept, s0.deferred) === ((0L, 1L)))
+    assert((s0.kept, s0.extra("deferred")) === ((0L, 1L)))
     // batch 1: a GAP for clip 0 (only clip 1 arrives) — the parked
     // frames must carry forward, recounted as deferred
     val s1 = VideoIngest.ingestVideoBatch(
       withExp(other)(other), s"$tmp/corpus", "vid_gap_idx",
       pendingPath = Some(s"$tmp/pending"), batchId = 1L)
-    assert((s1.kept, s1.deferred) === ((1L, 1L)))
+    assert((s1.kept, s1.extra("deferred")) === ((1L, 1L)))
     assert(corpusClips(s"$tmp/corpus") === Set(1L))
     // batch 2: the second half completes clip 0 across the gap
     val s2 = VideoIngest.ingestVideoBatch(
       withExp(whole)(whole.filter($"frame_idx" >= 3)), s"$tmp/corpus", "vid_gap_idx",
       pendingPath = Some(s"$tmp/pending"), batchId = 2L)
-    assert((s2.kept, s2.deferred) === ((1L, 0L)))
+    assert((s2.kept, s2.extra("deferred")) === ((1L, 0L)))
     assert(corpusClips(s"$tmp/corpus") === Set(0L, 1L))
     assert(spark.read.parquet(s"$tmp/corpus").filter($"video_id" === 0L).count() === 6L,
       "all six frames of the gap-split clip landed")
@@ -268,7 +268,7 @@ class VideoIngestSpec extends AnyFunSuite {
     val s = VideoIngest.ingestVideoBatch(
       whole.withColumn("expected_frames", lit(null).cast("long")),
       s"$tmp/corpus", "vid_loud_idx", pendingPath = Some(s"$tmp/pending"), batchId = 1L)
-    assert((s.kept, s.deferred) === ((1L, 0L)))
+    assert((s.kept, s.extra("deferred")) === ((1L, 0L)))
     spark.sql("DROP TABLE IF EXISTS vid_loud_idx")
   }
 
@@ -280,15 +280,15 @@ class VideoIngestSpec extends AnyFunSuite {
     // batch 0: the whole clip completes and is indexed + stored
     val s0 = VideoIngest.ingestVideoBatch(withExp(whole)(whole), s"$tmp/corpus",
       "vid_stale_idx", pendingPath = Some(s"$tmp/pending"), batchId = 0L)
-    assert((s0.kept, s0.deferred) === ((1L, 0L)))
+    assert((s0.kept, s0.extra("deferred")) === ((1L, 0L)))
     // batch 1: an at-least-once source redelivers only HALF the clip —
     // its missing frames will never arrive (the clip completed long
     // ago); parking it would leave `deferred` nonzero forever
     val s1 = VideoIngest.ingestVideoBatch(
       withExp(whole)(whole.filter($"frame_idx" < 3)), s"$tmp/corpus",
       "vid_stale_idx", pendingPath = Some(s"$tmp/pending"), batchId = 1L)
-    assert(s1.deferred === 0L, "stale fragment must not park")
-    assert(s1.staleDropped === 1L, "dropped at the gate, on the misbehaving-source counter")
+    assert(s1.extra("deferred") === 0L, "stale fragment must not park")
+    assert(s1.extra("staleDropped") === 1L, "dropped at the gate, on the misbehaving-source counter")
     assert(s1.replays === 0L,
       "NOT a replay: an operator watching replays must not see fragment redelivery " +
         "as benign whole-clip redelivery")
@@ -301,7 +301,7 @@ class VideoIngestSpec extends AnyFunSuite {
     // batch 2: deferred stays drained on subsequent batches
     val s2 = VideoIngest.ingestVideoBatch(withExp(vid(Seq(1L)))(vid(Seq(1L))),
       s"$tmp/corpus", "vid_stale_idx", pendingPath = Some(s"$tmp/pending"), batchId = 2L)
-    assert((s2.kept, s2.deferred) === ((1L, 0L)))
+    assert((s2.kept, s2.extra("deferred")) === ((1L, 0L)))
     spark.sql("DROP TABLE vid_stale_idx")
   }
 
@@ -318,27 +318,27 @@ class VideoIngestSpec extends AnyFunSuite {
     val s0 = VideoIngest.ingestVideoBatch(
       withExp(whole)(whole.filter($"frame_idx" < 3)), s"$tmp/corpus", "vid_age_idx",
       pendingPath = Some(s"$tmp/pending"), batchId = 0L, pendingMaxAgeBatches = age)
-    assert((s0.kept, s0.deferred, s0.agedOut) === ((0L, 1L, 0L)))
+    assert((s0.kept, s0.extra("deferred"), s0.extra("agedOut")) === ((0L, 1L, 0L)))
     // gap batches: ages 1 and 2 are both WITHIN the bound (breach is >, not >=)
     val s1 = gap(1L, 1L)
-    assert((s1.kept, s1.deferred, s1.agedOut) === ((1L, 1L, 0L)))
+    assert((s1.kept, s1.extra("deferred"), s1.extra("agedOut")) === ((1L, 1L, 0L)))
     val s2 = gap(2L, 2L)
-    assert((s2.kept, s2.deferred, s2.agedOut) === ((1L, 1L, 0L)))
+    assert((s2.kept, s2.extra("deferred"), s2.extra("agedOut")) === ((1L, 1L, 0L)))
     // batch 3: age 3 > 2 — evicted, the pending store drains, agedOut is loud
     val s3 = gap(3L, 3L)
-    assert((s3.kept, s3.deferred, s3.agedOut) === ((1L, 0L, 1L)))
-    assert(s3.staleDropped === 0L, "eviction is its own signal, not a stale fragment")
+    assert((s3.kept, s3.extra("deferred"), s3.extra("agedOut")) === ((1L, 0L, 1L)))
+    assert(s3.extra("staleDropped") === 0L, "eviction is its own signal, not a stale fragment")
     assert(corpusClips(s"$tmp/corpus") === Set(1L, 2L, 3L),
       "an evicted partial never reaches corpus or index")
     // the ledger still closes: every batch's complete clips are fully
     // accounted and the evicted clip appears exactly once, in agedOut
-    assert(Seq(s0, s1, s2, s3).map(s => s.kept + s.nearDups + s.replays).sum === 3L)
+    assert(Seq(s0, s1, s2, s3).map(s => s.kept + s.dropped + s.replays).sum === 3L)
     // a later WHOLE redelivery of the evicted clip ingests normally —
     // eviction lost nothing the source can still provide
     val s4 = VideoIngest.ingestVideoBatch(
       withExp(whole)(whole), s"$tmp/corpus", "vid_age_idx",
       pendingPath = Some(s"$tmp/pending"), batchId = 4L, pendingMaxAgeBatches = age)
-    assert((s4.kept, s4.deferred, s4.agedOut) === ((1L, 0L, 0L)))
+    assert((s4.kept, s4.extra("deferred"), s4.extra("agedOut")) === ((1L, 0L, 0L)))
     assert(corpusClips(s"$tmp/corpus") === Set(0L, 1L, 2L, 3L))
     spark.sql("DROP TABLE vid_age_idx")
   }
@@ -365,18 +365,18 @@ class VideoIngestSpec extends AnyFunSuite {
     // cannot prove it completed, so the stale-fragment rule cannot fire
     // and the fragment PARKS (the documented residual)
     val s1 = ingest(whole.filter($"frame_idx" < 3), whole, 1L)
-    assert((s1.deferred, s1.staleDropped, s1.replays) === ((1L, 0L, 0L)))
+    assert((s1.extra("deferred"), s1.extra("staleDropped"), s1.replays) === ((1L, 0L, 0L)))
     // batch 2: a gap batch — still parked, within the bound; without
     // the bound this clip would sit invisible in `deferred` forever
     val s2 = ingest(vid(Seq(1L)), vid(Seq(1L)), 2L)
-    assert((s2.deferred, s2.agedOut) === ((1L, 0L)))
+    assert((s2.extra("deferred"), s2.extra("agedOut")) === ((1L, 0L)))
     // batch 3: age 2 > 1 — the permanently-parked residual SURFACES
     val s3 = ingest(vid(Seq(2L)), vid(Seq(2L)), 3L)
-    assert((s3.deferred, s3.agedOut) === ((0L, 1L)))
+    assert((s3.extra("deferred"), s3.extra("agedOut")) === ((0L, 1L)))
     // whole redelivery resolves: same-id replay, corpus-only heal,
     // never re-indexed (the round-17 replay protocol end to end)
     val s4 = ingest(whole, whole, 4L)
-    assert((s4.replays, s4.kept, s4.deferred) === ((1L, 0L, 0L)),
+    assert((s4.replays, s4.kept, s4.extra("deferred")) === ((1L, 0L, 0L)),
       s"whole redelivery must replay-absorb, got $s4")
     assert(spark.read.parquet(s"$tmp/corpus").filter($"video_id" === 0L).count() ===
       whole.count(), "the crash-window clip healed into the corpus whole")
@@ -396,7 +396,7 @@ class VideoIngestSpec extends AnyFunSuite {
     val s0 = VideoIngest.ingestVideoBatch(
       withExp(whole)(whole.filter($"frame_idx" < 3)), s"$tmp/corpus", "vid_keep_idx",
       pendingPath = Some(s"$tmp/pending"), batchId = 0L)
-    assert(s0.deferred === 1L)
+    assert(s0.extra("deferred") === 1L)
     // batch 1: the source REDELIVERS frame 1 with DIFFERENT bytes
     // (another clip's decodable frame) alongside the completing half —
     // the union+dropDuplicates keeper this replaces kept an arbitrary
@@ -405,7 +405,7 @@ class VideoIngestSpec extends AnyFunSuite {
     val b1 = withExp(whole)(tampered.unionByName(whole.filter($"frame_idx" >= 3)))
     val s1 = VideoIngest.ingestVideoBatch(b1, s"$tmp/corpus", "vid_keep_idx",
       pendingPath = Some(s"$tmp/pending"), batchId = 1L)
-    assert((s1.kept, s1.deferred) === ((1L, 0L)), "clip completed")
+    assert((s1.kept, s1.extra("deferred")) === ((1L, 0L)), "clip completed")
     val storedFrame1 = spark.read.parquet(s"$tmp/corpus")
       .filter($"video_id" === 0L && $"frame_idx" === 1)
       .select($"media").as[Array[Byte]].head()
@@ -431,7 +431,7 @@ class VideoIngestSpec extends AnyFunSuite {
     // defaults to text) before any maintenance could stamp it — now the
     // loop adopts its own index up front and keeps working
     val s = VideoIngest.ingestVideoBatch(vid(Seq(46L, 1L)), s"$tmp/corpus", "vid_legacy_idx")
-    assert((s.kept, s.nearDups) === ((1L, 1L)), "46 found as a near-dup of indexed 0")
+    assert((s.kept, s.dropped) === ((1L, 1L)), "46 found as a near-dup of indexed 0")
     val props = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("vid_legacy_idx"))
       .properties
@@ -448,7 +448,7 @@ class VideoIngestSpec extends AnyFunSuite {
     val batch = good.unionByName(nullId).unionByName(dupFrame)
     val s = VideoIngest.ingestVideoBatch(batch, s"$tmp/corpus", "vid_ledger_idx")
     assert(s.rejected === 3L, "2 id-less rows + 1 duplicate frame")
-    assert((s.kept, s.nearDups, s.replays) === ((2L, 0L, 0L)))
+    assert((s.kept, s.dropped, s.replays) === ((2L, 0L, 0L)))
     assert(s.rejected + good.count() === batch.count(), "frame ledger closes")
     spark.sql("DROP TABLE vid_ledger_idx")
   }
@@ -462,12 +462,11 @@ class VideoIngestSpec extends AnyFunSuite {
     val b1 = withExp(whole)(
       vid(Seq(0L)).filter($"frame_idx" < 3).unionByName(vid(Seq(1L))))
     b1.write.parquet(src)
-    val seen = scala.collection.mutable.ArrayBuffer
-      .empty[graft.streaming.CorpusIngest.NearDupIngestStats]
-    val q = VideoIngest.videoDedupIngest(
-      spark.readStream.schema(b1.schema).parquet(src),
-      corpus, "vid_ss_idx", s"$tmp/ckpt", pendingPath = Some(s"$tmp/pending"),
-      onStats = s => seen.synchronized { seen += s; () })
+    val seen = scala.collection.mutable.ArrayBuffer.empty[CorpusIngest.IngestLedger]
+    val q = CorpusIngest.start(spark.readStream.schema(b1.schema).parquet(src), s"$tmp/ckpt",
+      s => seen.synchronized { seen += s; () })(
+      (b, id) => VideoIngest.ingestVideoBatch(
+        b, corpus, "vid_ss_idx", pendingPath = Some(s"$tmp/pending"), batchId = id))
     try {
       q.processAllAvailable()
       assert(corpusClips(corpus) === Set(1L), "split clip 0 parked")
@@ -481,7 +480,7 @@ class VideoIngestSpec extends AnyFunSuite {
       // the STREAMING operator saw the ledger, not just batch callers:
       // batch 0 parked one clip, batch 1 drained it (round 18 — the
       // alert counters only matter if the loop surfaces them)
-      assert(seen.synchronized(seen.map(_.deferred).toSeq) === Seq(1L, 0L))
+      assert(seen.synchronized(seen.map(_.extra("deferred")).toSeq) === Seq(1L, 0L))
       assert(seen.synchronized(seen.map(_.kept).sum) === 2L)
     } finally q.stop()
     spark.sql("DROP TABLE vid_ss_idx")
@@ -493,9 +492,8 @@ class VideoIngestSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS vid_stream_idx")
     val b1 = vid(Seq(0L, 23L, 1L))
     b1.write.parquet(src)
-    val q = VideoIngest.videoDedupIngest(
-      spark.readStream.schema(b1.schema).parquet(src),
-      corpus, "vid_stream_idx", s"$tmp/ckpt")
+    val q = CorpusIngest.start(spark.readStream.schema(b1.schema).parquet(src), s"$tmp/ckpt")(
+      (b, id) => VideoIngest.ingestVideoBatch(b, corpus, "vid_stream_idx", batchId = id))
     try {
       q.processAllAvailable()
       assert(corpusClips(corpus) === Set(0L, 1L))
