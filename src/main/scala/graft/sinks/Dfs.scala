@@ -2,9 +2,15 @@ package graft.sinks
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.Try
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetReadSupport}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Hadoop `FileSystem` helpers and the engine's one crash-safe replace
   * protocol for at-rest state: SCD2 state buckets and root, compacted
@@ -167,4 +173,47 @@ object Dfs {
   def listDirs(fs: FileSystem, root: Path): Seq[Path] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).filter(_.isDirectory).map(_.getPath).toIndexedSeq
+
+  /** Read the parquet directories `dirs` with the Spark schema stored in
+    * the footer of their first data file (the
+    * `org.apache.spark.sql.parquet.row.metadata` key every Spark writer
+    * sets): a driver-side footer read, where `spark.read.parquet` runs a
+    * schema-inference job. Spark's inference without schema merging
+    * also reads one file's footer, so the schema is the same. It infers
+    * instead when `spark.sql.parquet.mergeSchema` is on, no data file is
+    * found or the footer lacks the key.
+    *
+    * The footer is read now, the data when the frame runs: a data file
+    * deleted after its listing here fails with a missing-file error,
+    * in this call or in the query.
+    */
+  def readParquet(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    val schema =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else firstDataFile(spark, dirs).flatMap(footerSchema(spark, _))
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dirs: _*)
+  }
+
+  /** The first file Spark would read under `dirs`, in listing order. */
+  private def firstDataFile(spark: SparkSession, dirs: Seq[String]): Option[Path] = {
+    val hadoop = conf(spark)
+    dirs.iterator.flatMap { d =>
+      val dir = new Path(d)
+      val fs = dir.getFileSystem(hadoop)
+      if (!fs.exists(dir)) Iterator.empty
+      else
+        fs.listStatus(dir).iterator.filter { st =>
+          val n = st.getPath.getName
+          st.isFile && !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
+        }.map(_.getPath)
+    }.nextOption()
+  }
+
+  private def footerSchema(spark: SparkSession, file: Path): Option[StructType] = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(file, conf(spark)), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    Option(footer.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+  }
 }

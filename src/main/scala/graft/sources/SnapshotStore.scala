@@ -18,7 +18,9 @@ import graft.sinks.Dfs
   *
   * Every listing, move and delete goes through the Hadoop `FileSystem`
   * resolved from `root` ([[Dfs]]), so `file:`, `hdfs:` and `s3a:` roots
-  * work like bare local paths.
+  * work like bare local paths. A version is read with the Spark schema
+  * in one data file's parquet footer ([[Dfs.readParquet]]), so building
+  * a read frame runs no schema-inference job.
   */
 object SnapshotStore {
 
@@ -80,15 +82,15 @@ object SnapshotStore {
     * `app/app.py:176-178`, made deterministic by explicit versions).
     */
   def readLatest(spark: SparkSession, root: String): Option[DataFrame] =
-    versionsOf(root).lastOption.map(v => spark.read.parquet(s"$root/v=$v"))
+    versionsOf(root).lastOption.map(readVersion(spark, root, _))
 
   /** Time travel: read an explicit version. */
   def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
-    spark.read.parquet(s"$root/v=$version")
+    Dfs.readParquet(spark, Seq(s"$root/v=$version"))
 
   /** The previous version relative to latest — the diff input pair. */
   def readPrevious(spark: SparkSession, root: String): Option[DataFrame] = {
     val vs = versionsOf(root)
-    if (vs.length < 2) None else Some(spark.read.parquet(s"$root/v=${vs(vs.length - 2)}"))
+    if (vs.length < 2) None else Some(readVersion(spark, root, vs(vs.length - 2)))
   }
 }

@@ -266,15 +266,23 @@ object CdcStream {
     * rows. Recovery itself stays where the writer runs
     * ([[applyBatchToState]] calls [[recoverState]] before each batch).
     *
-    * Consistency window: the dir listing here is eager but Spark scans
-    * the files lazily, so a swap that COMPLETES between planning and
-    * execution can delete files the plan selected — the query fails with
-    * a missing-file error. That failure is transient and honest: retry
-    * the read. Do NOT "fix" it with `spark.sql.files.ignoreMissingFiles`
-    * — that turns the same race into a silently EMPTY bucket (missing
-    * rows, no error). Readers needing stronger isolation under a live
-    * writer belong on a snapshot-isolated table format (Delta/Iceberg),
-    * where this whole swap protocol is a transactional `replaceWhere`.
+    * The frame is built with the schema stored in one bucket file's
+    * parquet footer ([[graft.sinks.Dfs.readParquet]]), so building it
+    * runs no job; with no bucket dir at all the root is read with
+    * Spark's inference.
+    *
+    * Consistency window: the dir listing and the footer read here are
+    * eager but Spark scans the files lazily, so a swap that COMPLETES
+    * between this call and execution can delete files the plan selected
+    * — the query fails with a missing-file error. A swap that deletes
+    * the footer's file before the footer is read fails this call with
+    * the same error, and it surfaces: no fallback to inference or to an
+    * empty schema. That failure is transient and honest: retry the read.
+    * Do NOT "fix" it with `spark.sql.files.ignoreMissingFiles` — that
+    * turns the same race into a silently EMPTY bucket (missing rows, no
+    * error). Readers needing stronger isolation under a live writer
+    * belong on a snapshot-isolated table format (Delta/Iceberg), where
+    * this whole swap protocol is a transactional `replaceWhere`.
     */
   def readState(spark: SparkSession, statePath: String): DataFrame = {
     // root-level .old fallback (mid-[[rebucketState]] crash): pure, like
@@ -292,7 +300,7 @@ object CdcStream {
       case d if !live.contains(d.getName.stripSuffix(Dfs.RetiredSuffix)) => d.toString
     }
     if (readable.isEmpty) spark.read.parquet(rootDir).drop("bucket")
-    else spark.read.parquet(readable.toIndexedSeq: _*).drop("bucket")
+    else Dfs.readParquet(spark, readable).drop("bucket")
   }
 
   /** Re-bucket a state table to a new modulus — grow a 16-bucket table

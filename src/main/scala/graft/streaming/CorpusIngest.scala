@@ -669,19 +669,17 @@ object CorpusIngest {
         graft.ops.TextAnalysis
           .stripBoilerplateFromModel(uniq, "text", "doc_id", segTokens, minDocsBoiler, boilerModel)
       }
-    val clean = graft.ops.Materialize(
+    val (clean, nBoiler) = Materialize.counted(
       stripped
         .filter(col("clean_text").isNotNull)
         .select(col("doc_id"), col("clean_text").as("text"))
     )
-    val nBoiler = clean.count()
 
     val qualIds = graft.ops.TextAnalysis
       .quality(clean, "text", "doc_id")
       .filter(col("quality") >= minQuality)
       .select(col("doc_id"))
-    val qualityPass = graft.ops.Materialize(clean.join(qualIds, Seq("doc_id")))
-    val nQual = qualityPass.count()
+    val (qualityPass, nQual) = Materialize.counted(clean.join(qualIds, Seq("doc_id")))
 
     val warmModel = modelRows.filter { m =>
       val g = m

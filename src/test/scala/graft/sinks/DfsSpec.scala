@@ -104,4 +104,42 @@ class DfsSpec extends AnyFunSuite {
       assert(!Dfs.heal(fs, live), "a second heal has nothing to do")
     }
   }
+
+  /** A frame whose data file's footer holds no Spark schema key. */
+  private def writeFooterWithoutSparkKey(dir: Path): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType("message m { required int64 id; optional binary s (UTF8); }")
+    val w = ExampleParquetWriter.builder(new Path(dir, "part-0.parquet")).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("id", 7L).append("s", "x"))
+    finally w.close()
+  }
+
+  test("readParquet takes the footer schema, equal to Spark's inference, and infers without it") {
+    val dir = new Path(freshDir(), "t")
+    val df = spark.range(3).selectExpr("id", "cast(id as string) s", "map('k', id) m", "current_timestamp() ts")
+    df.write.parquet(dir.toString)
+    val read = Dfs.readParquet(spark, Seq(dir.toString))
+    assert(read.schema === spark.read.parquet(dir.toString).schema)
+    assert(read.count() === 3)
+    val bare = new Path(freshDir(), "bare")
+    writeFooterWithoutSparkKey(bare)
+    assert(Dfs.readParquet(spark, Seq(bare.toString)).schema === spark.read.parquet(bare.toString).schema)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try assert(Dfs.readParquet(spark, Seq(dir.toString)).schema === read.schema)
+    finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("readParquet: a data file deleted after the call fails the query, never an empty frame") {
+    val dir = new Path(freshDir(), "t")
+    spark.range(3).coalesce(1).write.parquet(dir.toString)
+    val read = Dfs.readParquet(spark, Seq(dir.toString))
+    val fs = Dfs.fs(spark, dir.toString)
+    fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-")).foreach(fs.delete(_, false))
+    val e = intercept[Exception](read.count())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[java.io.FileNotFoundException] || String.valueOf(t.getMessage).contains("FILE_NOT_EXIST")),
+      e.toString)
+  }
 }

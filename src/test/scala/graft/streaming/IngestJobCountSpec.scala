@@ -28,7 +28,7 @@ class IngestJobCountSpec extends AnyFunSuite {
     "span/first" -> 13, "span/steady" -> 14, "span/replay" -> 5,
     "pq/first" -> 9, "pq/steady" -> 7, "pq/replay" -> 3,
     "ivfpq/first" -> 10, "ivfpq/steady" -> 8, "ivfpq/replay" -> 3,
-    "curated/first" -> 20, "curated/steady" -> 33, "curated/replay" -> 1,
+    "curated/first" -> 16, "curated/steady" -> 29, "curated/replay" -> 1,
     "neardup/first" -> 20, "neardup/steady" -> 28, "neardup/replay" -> 35)
 
   /** Counts the jobs of each named call, in order, then checks them. */
