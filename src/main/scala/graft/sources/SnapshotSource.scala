@@ -35,8 +35,15 @@ object SnapshotSource {
 
   final case class Snapshot(df: DataFrame, keyColumn: String)
 
-  /** Largest single file [[read]] parses on the driver (8 MiB). */
-  private val LocalParseMaxBytes = 8L << 20
+  /** Largest single file [[read]] parses on the driver (4 MiB). The
+    * driver-side parse gives a one-partition frame, so the diff and the
+    * store run on one core; from ~6 MB on Spark's reader, which splits
+    * the file, is as fast or faster. `ParseSizeProbe` (read, diff and
+    * publish, store of an upload-shaped sheet, local[4], median of 10,
+    * driver-side over Spark's reader): 0.47x at 156 KB, 0.81x at 4.1 MB,
+    * 1.02x at 6.2 MB, 1.11x at 7.8 MB.
+    */
+  private val LocalParseMaxBytes = 4L << 20
 
   /** Header auto-detect (reference `app/app.py:609-614`): among the
     * first 3 rows, the header is the first containing a cell with
@@ -129,13 +136,11 @@ object SnapshotSource {
     val records = localRecords(spark, path)
     val skip = headerRow.getOrElse(localHeaderRow(spark, records))
     val cells = cellsOf(spark, records)
-    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
     // skip == 0 is the header=true reader (raw header cells); skip > 0
-    // the re-labelled headerless one (trimmed cells, an empty one "null")
-    val header =
-      if (skip == 0) records.headOption.getOrElse(Array.empty[String])
-      else cells(records.take(skip + 1).last).map(c => String.valueOf(c).trim)
-    val names = CSVUtils.makeSafeHeader(header, caseSensitive, csvOptions(spark))
+    // the re-labelled headerless one (trimmed cells)
+    val names =
+      if (skip == 0) safeHeader(spark, records.headOption.getOrElse(Array.empty[String]))
+      else trimmedHeader(spark, cells(records.take(skip + 1).last))
     val keep = keptColumns(names.toSeq)
     val rows = records.drop(skip + 1).map { r =>
       val c = cells(r)
@@ -144,6 +149,20 @@ object SnapshotSource {
     val schema = StructType(keep.map(i => StructField(names(i), StringType)))
     Snapshot(spark.createDataFrame(rows.asJava, schema).coalesce(1), names(keep.head))
   }
+
+  /** Column names from a header row, made safe as Spark's `header=true`
+    * reader makes them: an empty cell is named `_c<i>`, and names that
+    * repeat (case-insensitively unless the session is case-sensitive)
+    * get their position appended.
+    */
+  private def safeHeader(spark: SparkSession, cells: Array[String]): Array[String] =
+    CSVUtils.makeSafeHeader(cells, spark.sessionState.conf.caseSensitiveAnalysis, csvOptions(spark))
+
+  /** [[safeHeader]] of a header row found after a junk prefix, each
+    * cell trimmed first (a whitespace-only cell is then empty).
+    */
+  private def trimmedHeader(spark: SparkSession, cells: Array[String]): Array[String] =
+    safeHeader(spark, cells.map(c => if (c == null) null else c.trim))
 
   /** Spark's `trim` (spaces only), then empty/NaN/NULL -> null. */
   private def normalized(v: String): String =
@@ -174,8 +193,8 @@ object SnapshotSource {
         // re-read with the detected header: drop the first `skip` rows by
         // reading headerless and re-labeling from the detected header row
         val noHeader = spark.read.option("header", "false").csv(path)
-        val headerVals = noHeader.limit(skip + 1).collect().last.toSeq.map(String.valueOf)
-        val named = noHeader.toDF(headerVals.map(_.trim): _*)
+        val headerRow = noHeader.limit(skip + 1).collect().last
+        val named = noHeader.toDF(trimmedHeader(spark, Array.tabulate(headerRow.length)(headerRow.getString)).toSeq: _*)
         // POSITIONAL prefix drop (not a value-based exceptAll, which
         // would remove a matching data row from anywhere in the file):
         // per-file row position = row_number over (input_file_name,

@@ -79,6 +79,12 @@ class SnapshotParseParitySpec extends AnyFunSuite {
     assert(s.df.columns.toSeq === Seq("Company", "Date", "_c2", "v3", "V4", "v5"))
   }
 
+  test("after a junk prefix: empty, whitespace-only and duplicate header names") {
+    val s = assertParity("Report,,,,,\nCompany,Date,Q1,Q1,  ,\nacme,x,1,2,3,4\nbeta,y,5,6,7,8\n")
+    assert(s.df.columns.toSeq === Seq("Company", "Date", "Q12", "Q13", "_c4", "_c5"))
+    assert(rows(s) === Set(Seq("acme", "x", "1", "2", "3", "4"), Seq("beta", "y", "5", "6", "7", "8")))
+  }
+
   test("ragged rows, shorter and longer than the header") {
     val s = assertParity("Company,Date,a,b\nacme,2024-01-01\nbeta,2024-01-02,1,2,3,4\ngamma,2024-01-03,5\n")
     assert(rows(s) === Set(
@@ -134,6 +140,15 @@ class SnapshotParseParitySpec extends AnyFunSuite {
     val small = SnapshotSource.read(spark, p)
     assert(leaves(small) === Seq("LocalRelation"))
     assert(small.df.rdd.getNumPartitions === 1)
+    // 4 MiB is the largest file parsed on the driver
+    val row = "acme,2024-01-01,1\n"
+    val header = "Company,Date,v\n"
+    val n = ((4 << 20) - header.length) / row.length
+    val fits = header + row * n
+    assert(leaves(SnapshotSource.read(spark, writeCsv(fits))) === Seq("LocalRelation"))
+    val over = SnapshotSource.read(spark, writeCsv(fits + row))
+    assert(!leaves(over).contains("LocalRelation"))
+    assert(over.df.count() === n + 1)
     val dir = Files.createTempDirectory("parity_dir")
     Files.writeString(dir.resolve("a.csv"), "Company,Date,v\nacme,2024-01-01,1\n")
     val fromDir = SnapshotSource.read(spark, dir.toString)
